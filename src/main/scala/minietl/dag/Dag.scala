@@ -4,13 +4,17 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import minietl.pipeline.RunCaches
+
 /** Graph-shaped pipelines (reference: mini_etl/core/dag.py:80-416).
   *
   * The reference DAG executor materializes every node's full output in a
   * dict (dag.py:324) — losing the streaming property it was built for. Here
   * the DAG compiles to DataFrame composition: node "outputs" are lazy
-  * DataFrames, Catalyst plans the whole graph at once, and only multi-sink
-  * fan-out persists anything (one cache insert instead of N recomputes).
+  * DataFrames and Catalyst plans the whole graph at once. During [[run]]
+  * a frame read by several nodes is cached once instead of recomputed per
+  * reader, and transform inputs follow the pipeline's stage-input rule
+  * ([[minietl.pipeline.RunCaches.stage]]); [[frame]] persists nothing.
   *
   * Two reference stubs are implemented for real:
   *  - MergeStrategy.UNION ("concat + dedupe", declared dag.py:60 but never
@@ -130,20 +134,19 @@ final class PipelineDAG {
   }
 
   /** Compile every node to its (lazy) output frame(s), keyed by node id and
-    * output port. `persistFanOut` caches frames consumed by more than one
-    * downstream node — wanted when sinks will execute, unwanted when the
-    * caller only embeds one frame into a larger plan.
+    * output port. Inside a run scope, frames consumed by more than one
+    * downstream node are cached for the run and transform inputs go through
+    * the stage-input rule; outside one (embedding via [[frame]]) nothing is
+    * persisted.
     */
-  private def compile(spark: SparkSession, persistFanOut: Boolean)
-      : (mutable.Map[String, Map[String, DataFrame]], Seq[DataFrame]) = {
+  private def compile(spark: SparkSession): mutable.Map[String, Map[String, DataFrame]] = {
     // frame-only compilation tolerates missing sinks / unconsumed outputs
     val errs = validate().filterNot(e => e.contains("sink") || e.contains("no outputs"))
     require(errs.isEmpty, s"invalid DAG: ${errs.mkString("; ")}")
 
     val out = mutable.Map.empty[String, Map[String, DataFrame]]
-    val cached = mutable.ListBuffer.empty[DataFrame]
-    def maybePersist(id: String, df: DataFrame): DataFrame =
-      if (persistFanOut && outputsOf(id).size > 1) { cached += df; df.persist() } else df
+    def fanOut(id: String, df: DataFrame): DataFrame =
+      if (outputsOf(id).size > 1) RunCaches.cacheForRun(df) else df
 
     def inputFrame(id: String): DataFrame = {
       val Seq((from, port)) = inputsOf(id)
@@ -153,9 +156,9 @@ final class PipelineDAG {
     topologicalOrder.foreach { id =>
       nodes(id) match {
         case SourceNode(f) =>
-          out(id) = Map("" -> maybePersist(id, f(spark)))
+          out(id) = Map("" -> fanOut(id, f(spark)))
         case TransformNode(f) =>
-          out(id) = Map("" -> maybePersist(id, f(inputFrame(id))))
+          out(id) = Map("" -> fanOut(id, RunCaches.stage(inputFrame(id))(f)))
         case MergeNode(strategy) =>
           val ins = inputsOf(id).map { case (f, p) => out(f)(p) }
           val merged = strategy match {
@@ -166,16 +169,15 @@ final class PipelineDAG {
             case MergeStrategy.Join(keys, joinType) =>
               ins.reduce((a, b) => a.join(b, keys, joinType))
           }
-          out(id) = Map("" -> maybePersist(id, merged))
+          out(id) = Map("" -> fanOut(id, merged))
         case BranchNode(pred) =>
-          val in = inputFrame(id)
           // both splits read the same upstream; cache it once when executing
-          val src = if (persistFanOut) { cached += in; in.persist() } else in
+          val src = RunCaches.cacheForRun(inputFrame(id))
           out(id) = Map("true" -> src.filter(pred), "false" -> src.filter(!pred))
         case SinkNode(_) => ()
       }
     }
-    (out, cached.toSeq)
+    out
   }
 
   /** One node's lazy output frame without executing any sink — lets a DAG be
@@ -188,7 +190,7 @@ final class PipelineDAG {
       case Array(i, p) => (i, p)
       case _ => throw new IllegalArgumentException(s"bad node ref: $nodeId")
     }
-    compile(spark, persistFanOut = false)._1
+    compile(spark)
       .getOrElse(id, throw new IllegalArgumentException(s"unknown node: $id"))
       .getOrElse(port, throw new IllegalArgumentException(s"unknown port '$port' on $id"))
   }
@@ -200,34 +202,27 @@ final class PipelineDAG {
   def run(spark: SparkSession): Map[String, Long] = {
     val errs = validate()
     require(errs.isEmpty, s"invalid DAG: ${errs.mkString("; ")}")
-    // RunCaches scope covers COMPILE as well as the sink actions: the eager
-    // stage closures (semantic_decontaminate, lm_surprise) checkpoint their
-    // intermediates at composition time, so registration happens inside
-    // compile() — the scope must already be open there, and must release
-    // only after every sink has consumed the data
-    minietl.pipeline.RunCaches.scoped {
-      val (out, cached) = compile(spark, persistFanOut = true)
+    // RunCaches scope covers COMPILE as well as the sink actions: fan-out
+    // caches, kept transform inputs and the eager stage closures'
+    // checkpoints (semantic_decontaminate, lm_surprise) are all tracked
+    // inside compile(), so the scope must already be open there; it
+    // releases them after every sink has consumed the data, or threw
+    RunCaches.scoped {
+      val out = compile(spark)
 
       def inputFrame(id: String): DataFrame = {
         val Seq((from, port)) = inputsOf(id)
         out(from)(port)
       }
 
-      try {
-        nodes.collect { case (id, SinkNode(f)) =>
-          val obs = org.apache.spark.sql.Observation(
-            s"dag_${id}_${java.util.UUID.randomUUID().toString.take(8)}")
-          val observed = inputFrame(id).observe(obs,
-            org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-          f(observed)
-          id -> obs.get("rows").asInstanceOf[Long]
-        }.toMap
-      } finally {
-        // release exactly the frames that were persisted — even when a sink
-        // throws (the `out` values for a branch are its uncached filter
-        // children; unpersisting those would miss the parent's cache entry)
-        cached.foreach(df => { df.unpersist(); () })
-      }
+      nodes.collect { case (id, SinkNode(f)) =>
+        val obs = org.apache.spark.sql.Observation(
+          s"dag_${id}_${java.util.UUID.randomUUID().toString.take(8)}")
+        val observed = inputFrame(id).observe(obs,
+          org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
+        f(observed)
+        id -> obs.get("rows").asInstanceOf[Long]
+      }.toMap
     }
   }
 

@@ -500,7 +500,9 @@ object Winnow {
     // session parallelism), so a production corpus keeps its thousands of
     // partitions and only the per-round inflation is folded back (narrow
     // coalesce — no shuffle, parallelism never drops below the cores).
-    val capParts = math.max(df.rdd.getNumPartitions,
+    // The count is read off the planned physical plan: `df.rdd` would run
+    // the input's shuffle stages under AQE just to count partitions.
+    val capParts = math.max(minietl.ops.Partitioning.plannedPartitions(df),
       df.sparkSession.sparkContext.defaultParallelism)
     var cur = df
     var curOwned = false // never release the caller's frame

@@ -40,6 +40,31 @@ object Partitioning {
   def byRange(n: Int, keys: Seq[String]): Ops.Op =
     df => df.repartitionByRange(n, keys.map(col): _*)
 
-  /** Current partition count (for tests / introspection). */
+  /** Current partition count (for tests / introspection). Under AQE this
+    * runs the frame's shuffle stages; [[plannedPartitions]] does not.
+    */
   def partitionCount(df: DataFrame): Int = df.rdd.getNumPartitions
+
+  /** Partition count of `df`'s physical plan as planned before adaptive
+    * execution starts, read off the plan without running a job. A stated
+    * output partitioning gives its count directly (an exchange, a
+    * repartition, a coalesce), a file scan its file splits, an RDD or cache
+    * scan the partitions it reads, a union the sum of its children, and any
+    * other operator the largest of its children. AQE may later coalesce an
+    * exchange to fewer partitions, so for a shuffled frame this is an upper
+    * bound on [[partitionCount]].
+    */
+  def plannedPartitions(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution._
+    def of(p: SparkPlan): Int = p match {
+      case a: adaptive.AdaptiveSparkPlanExec => of(a.executedPlan)
+      case _ if p.outputPartitioning.numPartitions > 0 => p.outputPartitioning.numPartitions
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      case s: RDDScanExec => s.rdd.getNumPartitions
+      case s: columnar.InMemoryTableScanExec => of(s.relation.cachedPlan)
+      case u: UnionExec => u.children.map(of).sum
+      case _ => p.children.map(of).maxOption.getOrElse(1)
+    }
+    of(df.queryExecution.executedPlan)
+  }
 }

@@ -33,11 +33,19 @@ object ErrorMode {
 }
 
 /** A linear source → transformers → sink pipeline over one DataFrame
-  * (reference: mini_etl/core/pipeline.py:19-278). Lazy by construction:
-  * nothing executes until the sink's write action pulls, exactly like the
-  * reference's generator chain — except the "chunk stream" is a partitioned
-  * DataFrame and the chain is one Catalyst plan (fused by codegen, optimized
-  * globally).
+  * (reference: mini_etl/core/pipeline.py:19-278). Lazy by construction,
+  * like the reference's generator chain — except the "chunk stream" is a
+  * partitioned DataFrame: a chain of lazy stages is one Catalyst plan
+  * (fused by codegen, optimized globally) that the sink's write action
+  * pulls.
+  *
+  * Some stages run a Spark job while the pipeline is built (dedup stages,
+  * LM surprise scores, temperature-sample fractions). Inside [[run]], each
+  * stage's input is cached lazily and kept for the run only when the
+  * stage's own jobs filled it (the rule is in [[RunCaches.stage]]), so those
+  * jobs and the sink read the upstream stages once instead of recomputing
+  * them from the scan per job; the lazy stages between two kept inputs
+  * still fuse into one plan. [[frame]] outside a run persists nothing.
   *
   * Row counting uses `Dataset.observe`: the count is collected as a metric
   * of the sink's own action — no second pass over the data, which matters
@@ -83,10 +91,12 @@ final class Pipeline private (
 
   /** Per-stage progress hook (reference: core/pipeline.py:85-98 progress
     * callbacks, honestly mapped): fires as each transformer's plan fragment
-    * is COMPOSED — Spark then executes the whole chain as one fused action,
-    * so there is no per-stage execution moment to observe (that is the
-    * point of declaring the plan). Analysis-time failures (bad column, bad
-    * expression) are attributed to their stage via [[withOnError]].
+    * is COMPOSED, before the stage's closure runs. A lazy stage executes
+    * later, fused into the next job that reads it; a stage that runs its
+    * own jobs (dedup, LM scores, sampling fractions) executes them inside
+    * the closure, on its cached input during [[run]]. Analysis-time
+    * failures (bad column, bad expression) are attributed to their stage
+    * via [[withOnError]].
     */
   def withOnStage(f: Pipeline.StageContext => Unit): Pipeline = copied(onStage = Some(f))
 
@@ -116,7 +126,8 @@ final class Pipeline private (
     * and for embedding a pipeline as a stage of a larger plan. Stage hooks
     * fire here, in order; a stage that fails to compose reports through
     * [[withOnError]] with its context, then rethrows for the error-mode
-    * policy in [[run]].
+    * policy in [[run]]. Inside a run scope each stage's input goes through
+    * [[RunCaches.stage]]; outside one nothing is persisted.
     */
   def frame(spark: SparkSession): DataFrame = {
     val src = source.getOrElse(throw new IllegalStateException("pipeline has no source"))(spark)
@@ -124,7 +135,7 @@ final class Pipeline private (
       case (df, ((label, t), i)) =>
         val ctx = Pipeline.StageContext(i, label)
         onStage.foreach(_(ctx))
-        try t(df)
+        try RunCaches.stage(df)(t)
         catch {
           case e: Throwable => onError.foreach(_(ctx, e)); throw e
         }
@@ -153,9 +164,9 @@ final class Pipeline private (
                                exception: Exception): Unit = lm.unregister(this)
       })
     }
-    // run scope: stage closures that must checkpoint an intermediate
-    // (semantic_decontaminate's flagged ids, lm_surprise's scores) register
-    // the handle; released here once the sink action has consumed the data,
+    // run scope: kept stage inputs and the intermediates stage closures
+    // checkpoint (semantic_decontaminate's flagged ids, lm_surprise's
+    // scores) are released here once the sink action has consumed the data,
     // so a config-driven run leaves no session-lifetime cache pins
     RunCaches.scoped {
       try {

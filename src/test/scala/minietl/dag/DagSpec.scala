@@ -105,4 +105,26 @@ class DagSpec extends AnyFunSuite with SparkTestBase {
     val viz = dag.visualize()
     assert(viz.contains("SOURCE") && viz.contains("TRANSFORM") && viz.contains("SINK"))
   }
+
+  test("a run caches fan-out and eager transform inputs for the run only") {
+    spark.catalog.clearCache() // isolate from earlier suites in this JVM
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val acc = spark.sparkContext.longAccumulator("rows_evaluated")
+    val bump = udf { (_: Long) => acc.add(1); true }.asNondeterministic()
+    val dag = new PipelineDAG()
+      .addSource("o", _ => orders.filter(bump(col("id"))))
+      // an eager job on the transform's input, like the dedup stages
+      .addTransform("t", df => { df.count(); df.withColumn("x", lit(1)) })
+      .addSink("s1", df => { df.count(); () })
+      .addSink("s2", df => { df.count(); () })
+      .connect("o", "t").connect("t", "s1").connect("t", "s2")
+    assert(dag.run(spark) === Map("s1" -> 3L, "s2" -> 3L))
+    // the transform's job and both sinks read the source rows once
+    assert(acc.value === 3L)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === pinned)
+    // embedding compiles without a run scope and persists nothing
+    assert(dag.frame(spark, "t").count() === 3L)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

@@ -1,6 +1,7 @@
 package minietl.ops
 
 import minietl.SparkTestBase
+import org.apache.spark.JobCounter.jobsDuring
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,5 +36,37 @@ class PartitioningSpec extends AnyFunSuite with SparkTestBase {
       case Array((_, hi1), (lo2, _)) => assert(hi1 < lo2)
       case _ => ()
     }
+  }
+
+  test("plannedPartitions reads the partition count off the plan without a job") {
+    val dir = java.nio.file.Files.createTempDirectory("minietl-parts").resolve("t").toString
+    df.repartition(3).write.parquet(dir)
+    val scan = spark.read.parquet(dir)
+    val frames = Seq(
+      scan,
+      scan.repartition(6),
+      scan.filter($"k" > 2).select("id"),
+      scan.union(scan.repartition(5)),
+      df.coalesce(2))
+    frames.foreach { f =>
+      val (est, jobs) = jobsDuring(spark.sparkContext) {
+        Partitioning.plannedPartitions(f)
+      }
+      assert(jobs === 0)
+      assert(est === Partitioning.partitionCount(f))
+    }
+    // a shuffled frame: partitionCount runs the shuffle under AQE (the
+    // span fixpoint's old partition cap did exactly this); the estimate
+    // runs nothing and bounds the coalesced count from above
+    val grouped = df.groupBy("k").count()
+    val (est, jobs) = jobsDuring(spark.sparkContext) {
+      Partitioning.plannedPartitions(grouped)
+    }
+    assert(jobs === 0)
+    assert(est === spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val (actual, probeJobs) = jobsDuring(spark.sparkContext) {
+      Partitioning.partitionCount(grouped)
+    }
+    assert(probeJobs >= 1 && actual <= est)
   }
 }

@@ -5,7 +5,9 @@ import java.nio.file.Files
 import minietl.SparkTestBase
 import minietl.io.{Readers, Writers}
 import minietl.schema.{ColumnSpec, TableSchema}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 
 class PipelineSpec extends AnyFunSuite with SparkTestBase {
@@ -142,5 +144,98 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val b = new Pipeline("c").setSource(_ => sample).setSink(df => { df.count(); () })
     assert(b.copy().run(spark).rows === 100)
     intercept[IllegalStateException](b.clear().run(spark))
+  }
+
+  // ------------------------------------------------ run-scoped stage inputs
+
+  private def corpus =
+    (1 to 60).map { i =>
+      (i.toLong, Seq("web", "books", "code")((i - 1) % 3),
+        (1 to 12).map(j => s"w${(i * j) % 17}").mkString(" "))
+    }.toDF("doc_id", "source", "text")
+
+  /** A stage that bumps `acc` once per row it evaluates. */
+  private def counted(acc: LongAccumulator): DataFrame => DataFrame = {
+    val bump = udf { (_: Long) => acc.add(1); true }.asNondeterministic()
+    df => df.filter(bump(col("doc_id")))
+  }
+
+  /** The YAML `lm_surprise` stage: eager bigram-surprise scores joined back. */
+  private val lmSurprise: DataFrame => DataFrame = df =>
+    df.join(minietl.text.LmScore.bigramSurpriseEager(df, "doc_id", "text"),
+      Seq("doc_id"), "left")
+
+  private def eagerPipeline(name: String, src: DataFrame, acc: LongAccumulator): PipelineBuilder =
+    new PipelineBuilder(name)
+      .fromDataFrame(src)
+      .add(counted(acc), "count_rows")
+      .add(lmSurprise, "lm_surprise")
+      .temperatureSample("doc_id", "source", 0.8)
+
+  private def cacheState = (spark.sharedState.cacheManager.isEmpty,
+    spark.sparkContext.getPersistentRDDs.keySet)
+
+  test("a run evaluates each upstream row once across the eager stages and the sink") {
+    val acc = spark.sparkContext.longAccumulator("rows_evaluated")
+    val p = eagerPipeline("once", corpus, acc).toNoop().build()
+    val stats = p.run(spark)
+    // lm_surprise's checkpoint job and temperature_sample's fraction job
+    // read the cached stage inputs, and so does the sink
+    assert(acc.value === 60L)
+    // the same rows as the uncached composition
+    assert(stats.rows === p.frame(spark).count())
+    assert(stats.rows > 0 && stats.rows < 60)
+  }
+
+  test("a run leaves the CacheManager and persistent RDDs as it found them, also on failure") {
+    spark.catalog.clearCache() // isolate from earlier suites in this JVM
+    val before = cacheState
+    assert(before._1)
+    val acc = spark.sparkContext.longAccumulator
+    eagerPipeline("ok", corpus, acc).toNoop().build().run(spark)
+    assert(cacheState === before)
+
+    val failingSink: DataFrame => Unit = df => { df.count(); throw new IllegalStateException("sink down") }
+    intercept[IllegalStateException](
+      eagerPipeline("raise", corpus, acc).toSink(failingSink).build().run(spark))
+    assert(cacheState === before)
+
+    // a stage that throws after an eager stage kept its input
+    intercept[IllegalStateException](
+      eagerPipeline("stage", corpus, acc)
+        .add((_: DataFrame) => throw new IllegalStateException("stage down"), "boom")
+        .toNoop().build().run(spark))
+    assert(cacheState === before)
+
+    val logged = eagerPipeline("log", corpus, acc).toSink(failingSink)
+      .withErrorMode(ErrorMode.Log).build().run(spark)
+    assert(logged.errors === 1)
+    assert(cacheState === before)
+  }
+
+  test("frame outside a run persists nothing") {
+    spark.catalog.clearCache()
+    val before = cacheState
+    val f = new PipelineBuilder("embed")
+      .fromDataFrame(corpus)
+      .add(df => { df.count(); df }, "eager")
+      .temperatureSample("doc_id", "source", 0.8)
+      .build().frame(spark)
+    assert(cacheState === before)
+    assert(f.count() > 0)
+    assert(cacheState === before)
+  }
+
+  test("a caller's localCheckpointed source stays readable after a run") {
+    val src = corpus.localCheckpoint()
+    val expected = src.collect().toSet
+    // minhash_dedup registers a persisted signature frame whose plan reads
+    // src; lm_surprise keeps its cached input, also over src
+    new PipelineBuilder("lc")
+      .fromDataFrame(src)
+      .add(df => minietl.dedup.Dedup.minhashDedup(df, "text", "doc_id"), "minhash_dedup")
+      .add(lmSurprise, "lm_surprise")
+      .toNoop().build().run(spark)
+    assert(src.collect().toSet === expected)
   }
 }
