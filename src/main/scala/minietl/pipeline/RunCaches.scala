@@ -103,19 +103,22 @@ object RunCaches {
   /** Release a frame's storage now: `Dataset.unpersist` for a frame held in
     * the CacheManager; for a checkpointed frame (its data lives as a
     * persisted RDD in the `LogicalRDD` at its plan root, invisible to the
-    * CacheManager) that RDD, unless it is already released. Public for
-    * iterative operators that truncate lineage with rolling
+    * CacheManager) that RDD, unless it is already released, and without
+    * the lineage warning `RDD.unpersist` logs for a local checkpoint.
+    * Public for iterative operators that truncate lineage with rolling
     * localCheckpoints and must free the superseded checkpoint's blocks
-    * themselves (the connected-components loop).
+    * themselves (the connected-components loop), and for the streaming
+    * ingest loop's per-batch checkpoint.
     */
   def releaseNow(df: DataFrame): Unit =
     if (df.storageLevel != StorageLevel.NONE) { df.unpersist(); () }
-    else checkpoint(df).foreach(_.unpersist(false))
+    else checkpoint(df).foreach(org.apache.spark.minietl.RddRelease.release)
 
   /** The stored RDD at the root of a checkpointed frame's plan, if any. */
   private def checkpoint(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed match {
-      case lr: LogicalRDD if lr.rdd.getStorageLevel != StorageLevel.NONE => Some(lr.rdd)
+      case lr: LogicalRDD if lr.rdd.sparkContext.getPersistentRDDs.contains(lr.rdd.id) =>
+        Some(lr.rdd)
       case _ => None
     }
 

@@ -1,8 +1,9 @@
 package minietl.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Structured Streaming surface.
   *
@@ -294,11 +295,33 @@ object Streaming {
     * was admitted and the next batch dedups against it. foreachBatch runs
     * batches sequentially, so the read-check-append cycle is race-free.
     *
+    * JOIN DIRECTION is the steady-state contract (digest ≫ batch after
+    * enough drains). A direct `batch ANTI JOIN digest` can only build the
+    * right side, so at steady state it would hash the whole history per
+    * batch. Instead each batch probes the digest with
+    * `digest LEFT SEMI JOIN batch fingerprints`: the digest is streamed
+    * once, the batch side is built (broadcast at any batch size that
+    * broadcasts), and the probe result is bounded by the batch. The
+    * admitted rows are `batch.dropDuplicates(fpCol) LEFT ANTI JOIN probe`.
+    * Neither join input is `distinct`ed: a semi join emits each digest row
+    * at most once whatever the build side holds, and an anti join drops
+    * the same rows whatever its right side's multiplicity. Deduplicating
+    * the digest would shuffle the whole history every batch; compaction
+    * owns digest hygiene. HistoryJoinDirectionSpec pins the executed plan.
+    *
     * Scale notes: the digest holds one row per admitted fingerprint —
-    * periodically compact it (or store it bucketed by fpCol) so the
-    * per-batch anti-join plans a digest-side scan, not a small-files
-    * storm; the anti-join itself is re-planned per batch and broadcasts
-    * or shuffles by size as usual.
+    * compact it between drains ([[compactHistory]]) so the probe scans a
+    * few right-sized files, not one small file per batch. Its schema is
+    * checked once when the query starts (a digest without `fpCol`, or
+    * with another type for it, throws an IllegalStateException naming the
+    * directory and the column), and every micro-batch then reads it with
+    * that known schema, without a schema-inference job. The admitted rows
+    * are materialized once with an eager `localCheckpoint` and both writes
+    * read it: the sink, then the digest delta. A checkpoint rather than
+    * `persist()`: adaptive execution sizes the checkpoint's final stage
+    * from its data (one partition for a small batch, so one file per
+    * output), while a cached plan keeps all `spark.sql.shuffle.partitions`
+    * partitions and writes that many small files twice per batch.
     *
     * REPLAY SAFETY (exactly-once under crash/restart): the digest is a
     * per-batch-keyed parquet layout (`historyDir/batch=<id>`), and each
@@ -320,7 +343,10 @@ object Streaming {
       stream: DataFrame, fpCol: String, historyDir: String,
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow())(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    val fpSchema = StructType(Seq(stream.schema(fpCol).copy(nullable = true)))
+    val digest = new DigestReader(historyDir)
+    digest.check(stream.sparkSession, fpSchema)
     stream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
@@ -329,38 +355,20 @@ object Streaming {
         val spark = batch.sparkSession
         requireNoCompactionDebris(spark, historyDir)
         dropBatchDelta(spark, historyDir, batchId)
-        val hist =
-          try spark.read.parquet(historyDir).select(fpCol)
-          catch {
-            // first batch: no digest yet — empty frame with the right schema
-            // (an interrupted compaction cannot masquerade as this case:
-            // the debris check above fails first)
-            case _: org.apache.spark.sql.AnalysisException => batch.select(fpCol).limit(0)
-          }
-        // JOIN DIRECTION is the steady-state contract (digest ≫ batch after
-        // enough drains): a direct `batch ANTI JOIN digest` can only ever
-        // build/broadcast the DIGEST side (anti joins build right), so at
-        // steady state it would hash the whole history per batch. Instead the
-        // digest is STREAMED once through an inner join whose build side is
-        // the (small, distinct) batch fingerprint set, and only the matched
-        // fingerprints — bounded by batch size — feed the anti join. The
-        // digest is also never `.distinct()`ed here: multiplicity cannot
-        // change the matched set, and deduplicating it would shuffle the
-        // full history every batch (compaction owns digest hygiene).
-        // HistoryJoinDirectionSpec pins the executed plan.
-        val batchFps = batch.select(fpCol).where(col(fpCol).isNotNull).distinct()
-        val dupFps = hist.join(batchFps, Seq(fpCol)).select(fpCol).distinct()
-        val fresh = batch
-          .join(dupFps, Seq(fpCol), "left_anti")
-          .dropDuplicates(fpCol)
-          .persist()
+        // digest streamed, batch fingerprints built (see JOIN DIRECTION)
+        val probe = digest.read(spark, fpSchema)
+          .join(batch.select(fpCol).where(col(fpCol).isNotNull), Seq(fpCol), "left_semi")
+        val fresh = batch.dropDuplicates(fpCol)
+          .join(probe, Seq(fpCol), "left_anti")
+          .localCheckpoint()
         try {
           sink(fresh, batchId)
           fresh.select(fpCol).write.mode("overwrite")
             .parquet(batchOutputPath(historyDir, batchId))
-        } finally { fresh.unpersist(); () }
+        } finally minietl.pipeline.RunCaches.releaseNow(fresh)
       }
       .start()
+  }
 
   /** The batchId-keyed subdirectory (`dir/batch=<id>`) used for idempotent
     * per-micro-batch writes — both by the ingest-dedup digests and as the
@@ -379,6 +387,57 @@ object Streaming {
   private def dropBatchDelta(spark: SparkSession, dir: String, batchId: Long): Unit = {
     val p = new org.apache.hadoop.fs.Path(batchOutputPath(dir, batchId))
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true); ()
+  }
+
+  /** Reads one ingest-dedup loop's parquet digest at `dir` with a known
+    * schema; one instance per query. A missing directory, or one without
+    * data files, is no history yet: an empty frame. The first [[check]]
+    * (or [[read]]) that finds data files compares their schema with
+    * `expected` and throws an IllegalStateException naming the directory
+    * and the column when a column is missing or has another type. Such a
+    * digest was recorded under another fingerprint column or hash family;
+    * read as-is it would match nothing and re-admit every duplicate. Later
+    * reads skip the check: every later delta is written by the same query.
+    */
+  private final class DigestReader(dir: String) {
+    private var checked = false
+
+    def check(spark: SparkSession, expected: StructType): Unit =
+      if (!checked) {
+        if (frame(spark, expected).inputFiles.nonEmpty) {
+          val found = spark.read.parquet(dir).schema
+          expected.foreach { f =>
+            found.find(_.name == f.name) match {
+              case None =>
+                throw new IllegalStateException(
+                  s"ingest-dedup digest $dir has no column `${f.name}` (it has " +
+                    s"${found.fieldNames.mkString(", ")}): it was recorded by a " +
+                    "loop with another fingerprint; point this loop at a new digest")
+              case Some(g) if !DataType.equalsStructurally(g.dataType, f.dataType,
+                  ignoreNullability = true) =>
+                throw new IllegalStateException(
+                  s"ingest-dedup digest $dir stores column `${f.name}` as " +
+                    s"${g.dataType.sql}, this loop computes ${f.dataType.sql}: it " +
+                    "was recorded by a loop with another fingerprint or hash " +
+                    "family; point this loop at a new digest")
+              case _ => ()
+            }
+          }
+        }
+        checked = true
+      }
+
+    def read(spark: SparkSession, expected: StructType): DataFrame = {
+      check(spark, expected)
+      frame(spark, expected)
+    }
+
+    private def frame(spark: SparkSession, expected: StructType): DataFrame = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+        spark.read.schema(expected).parquet(dir).select(expected.fieldNames.map(col): _*)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), expected)
+    }
   }
 
   /** The NEAR-duplicate twin of [[dedupAndRecordHistory]]: per
@@ -450,6 +509,10 @@ object Streaming {
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     require(Set("collision", "estimate", "exact")(crossBatch),
       s"crossBatch must be collision, estimate or exact, got '$crossBatch'")
+    val bandsDigest = new DigestReader(
+      if (crossBatch == "collision") historyDir else s"$historyDir/bands")
+    val payloadDigest = new DigestReader(
+      if (crossBatch == "exact") s"$historyDir/shingles" else s"$historyDir/sigs")
     stream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
@@ -499,16 +562,10 @@ object Streaming {
           .join(withinDeduped.select(col(idCol).as("id")), Seq("id"), "left_semi")
           .select(col("id").as("__id"), col("band"), col("key"))
         try {
-          def emptyLike(df: DataFrame): DataFrame = df.limit(0)
           if (!verified) {
             // collision mode: digest = flat (band, key); any-band collision
             // with history drops the row (see scaladoc dial)
-            val hist =
-              try spark.read.parquet(historyDir).select("band", "key")
-              catch {
-                case _: org.apache.spark.sql.AnalysisException =>
-                  emptyLike(survivorBands.select("band", "key"))
-              }
+            val hist = bandsDigest.read(spark, survivorBands.select("band", "key").schema)
             // digest STREAMED, batch bands built (same join-direction
             // contract as dedupAndRecordHistory — a semi join with the
             // digest on the right could only build the digest side, and a
@@ -544,19 +601,10 @@ object Streaming {
             val payloadCol = if (exact) "sh" else "sig"
             val payload = base.select(col("id"),
               (if (exact) col("hsh") else col("sig")).as("__pay"))
-            val histBands =
-              try spark.read.parquet(bandsDir)
-              catch {
-                case _: org.apache.spark.sql.AnalysisException =>
-                  emptyLike(survivorBands
-                    .select(col("band"), col("key"), col("__id").as("id")))
-              }
-            val histPayload =
-              try spark.read.parquet(payloadDir)
-              catch {
-                case _: org.apache.spark.sql.AnalysisException =>
-                  emptyLike(payload.select(col("id"), col("__pay").as(payloadCol)))
-              }
+            val histBands = bandsDigest.read(spark, survivorBands
+              .select(col("band"), col("key"), col("__id").as("id")).schema)
+            val histPayload = payloadDigest.read(spark,
+              payload.select(col("id"), col("__pay").as(payloadCol)).schema)
             def similar(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
               if (exact) minietl.functions.vec.jaccardSorted(a, b) >= threshold
               else Dedup.minhashEstimate(a, b) >= threshold
@@ -626,6 +674,7 @@ object Streaming {
     require(Set("image", "audio")(kind), s"kind must be image or audio, got '$kind'")
     require(maxDist >= 0 && maxDist <= 3,
       s"maxDist must be 0 (exact) or 1..3 (4x14-bit banded Hamming), got $maxDist")
+    val digest = new DigestReader(historyDir)
     stream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
@@ -662,27 +711,16 @@ object Streaming {
               withHash.select(col(idCol), col("__mh")), "__mh", maxDist,
               maxBucketSize)
           // (2) cross-history: digest streamed, batch built
-          def emptyDigest(cols: DataFrame): DataFrame = cols.limit(0)
           val dupIds =
             if (maxDist == 0) {
-              val hist =
-                try spark.read.parquet(historyDir).select("hash")
-                catch {
-                  case _: org.apache.spark.sql.AnalysisException =>
-                    emptyDigest(withHash.select(col("__mh").as("hash")))
-                }
+              val hist = digest.read(spark, withHash.select(col("__mh").as("hash")).schema)
               hist.join(
                 within.where(col("__mh").isNotNull)
                   .select(col(idCol).as("__id"), col("__mh").as("hash")),
                 Seq("hash")).select("__id").distinct()
             } else {
-              val hist =
-                try spark.read.parquet(historyDir).select("band", "key", "hash")
-                catch {
-                  case _: org.apache.spark.sql.AnalysisException =>
-                    emptyDigest(bandsOf(withHash)
-                      .select(col("band"), col("key"), col("__mh").as("hash")))
-                }
+              val hist = digest.read(spark, bandsOf(withHash)
+                .select(col("band"), col("key"), col("__mh").as("hash")).schema)
               hist.join(bandsOf(within), Seq("band", "key"))
                 .where(expr(s"bit_count(hash ^ __mh) <= $maxDist"))
                 .select("__id").distinct()

@@ -278,6 +278,154 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       === Seq("a", "b", "c"))
   }
 
+  test("dedupAndRecordHistory runs a small micro-batch in at most 6 jobs " +
+    "and writes one file per output") {
+    val dir = Files.createTempDirectory("minietl-dedup-jobs")
+    val in = s"$dir/in"
+    val hist = s"$dir/digest"
+    val out = s"$dir/sink"
+    // a parquet source, as the YAML ingest loop reads: a file source's size
+    // statistics let the planner broadcast the batch side up front
+    def stage(name: String, rows: Seq[(Long, String)]): java.io.File = {
+      rows.toDF("id", "fp").coalesce(1).write.parquet(s"$dir/$name")
+      new java.io.File(s"$dir/$name").listFiles().filter(_.getName.endsWith(".parquet")).head
+    }
+    def land(file: java.io.File, name: String): Unit = {
+      Files.move(file.toPath, java.nio.file.Paths.get(in, s"$name.parquet")); ()
+    }
+    Files.createDirectories(java.nio.file.Paths.get(in))
+    // batch 0 starts the digest; batch 1 is the steady state: 150 rows
+    // with within-batch and cross-batch duplicates
+    land(stage("first", Seq((1L, "fp1"), (2L, "fp2"))), "first")
+    val steady = stage("steady", (1 to 150).map(i => (100L + i, s"fp${i % 120}")))
+    val q = Streaming.dedupAndRecordHistory(
+      spark.readStream.schema("id LONG, fp STRING").parquet(in), "fp", hist,
+      s"$dir/chk", trigger = Trigger.ProcessingTime(0)) { (batch, bid) =>
+      batch.write.mode("overwrite").parquet(Streaming.batchOutputPath(out, bid))
+    }
+    try {
+      q.processAllAvailable()
+      // landing a file is a rename, so every job counted is the batch's
+      val (_, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext) {
+        land(steady, "steady")
+        q.processAllAvailable()
+      }
+      assert(jobs <= 6, s"one micro-batch ran $jobs jobs")
+      assert(parquetFilesUnder(Streaming.batchOutputPath(out, 1L)) === 1)
+      assert(parquetFilesUnder(Streaming.batchOutputPath(hist, 1L)) === 1)
+      // fp0..fp119 are new except fp1 and fp2, which batch 0 admitted
+      assert(spark.read.parquet(Streaming.batchOutputPath(out, 1L)).count() === 118L)
+    } finally q.stop()
+  }
+
+  test("dedupAndRecordHistory admits one row per fingerprint across null, " +
+    "within-batch and cross-batch duplicates") {
+    val dir = Files.createTempDirectory("minietl-dedup-mixed")
+    val in = s"$dir/in"
+    val hist = s"$dir/digest"
+    val out = s"$dir/sink"
+    def drain(rows: Seq[(Long, String)]): Unit = {
+      // one file per drain: a single-partition micro-batch, so the row kept
+      // for a duplicated fingerprint is the first in the file
+      rows.toDF("id", "fp").coalesce(1).write.mode("append").parquet(in)
+      val q = Streaming.dedupAndRecordHistory(
+        spark.readStream.schema("id LONG, fp STRING").parquet(in),
+        "fp", hist, s"$dir/chk") { (batch, bid) =>
+        batch.write.mode("overwrite").parquet(Streaming.batchOutputPath(out, bid))
+      }
+      try q.processAllAvailable() finally q.stop()
+    }
+    drain(Seq((1L, "a"), (2L, null), (3L, "b"), (4L, "b"), (5L, null), (6L, "c")))
+    drain(Seq((7L, "a"), (8L, null), (9L, "d"), (10L, "d"), (11L, "c"),
+      (12L, null), (13L, "e")))
+    // pinned from the loop's earlier inner-join plan: null fingerprints
+    // never match history, and each batch admits and records one of them
+    val sunk = spark.read.parquet(out).select("batch", "id", "fp")
+      .as[(Int, Long, Option[String])].collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(sunk === Seq((0, 1L, Some("a")), (0, 2L, None), (0, 3L, Some("b")),
+      (0, 6L, Some("c")), (1, 8L, None), (1, 9L, Some("d")), (1, 13L, Some("e"))))
+    val digest = spark.read.parquet(hist).select("batch", "fp")
+      .as[(Int, Option[String])].collect().sorted.toSeq
+    assert(digest === Seq((0, None), (0, Some("a")), (0, Some("b")), (0, Some("c")),
+      (1, None), (1, Some("d")), (1, Some("e"))))
+  }
+
+  test("dedupAndRecordHistory refuses a digest without its fingerprint " +
+    "column at query start") {
+    val dir = Files.createTempDirectory("minietl-dedup-wrongdigest")
+    val in = s"$dir/in"
+    val out = s"$dir/sink"
+    Seq((1L, "a")).toDF("id", "fp").coalesce(1).write.parquet(in)
+    def start(hist: String) =
+      Streaming.dedupAndRecordHistory(
+        spark.readStream.schema("id LONG, fp STRING").parquet(in),
+        "fp", hist, s"$dir/chk") { (batch, bid) =>
+        batch.write.mode("overwrite").parquet(Streaming.batchOutputPath(out, bid))
+      }
+    // a digest recorded under another fingerprint column (a `columns:` loop
+    // writes `__fp`), and one whose column has the wrong type
+    val renamed = s"$dir/digest_renamed"
+    Seq("x").toDF("__fp").write.parquet(Streaming.batchOutputPath(renamed, 99L))
+    val retyped = s"$dir/digest_retyped"
+    Seq(1L).toDF("fp").write.parquet(Streaming.batchOutputPath(retyped, 99L))
+    Seq(renamed, retyped).foreach { hist =>
+      val e = intercept[IllegalStateException](start(hist))
+      assert(e.getMessage.contains(hist) && e.getMessage.contains("`fp`"),
+        e.getMessage)
+    }
+    assert(!new java.io.File(out).exists(), "the sink was written")
+  }
+
+  test("dedupAndRecordHistory treats an existing empty digest directory as " +
+    "the first batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("minietl-dedup-emptydigest")
+    val hist = s"$dir/digest"
+    Files.createDirectories(java.nio.file.Paths.get(hist))
+    val admitted = scala.collection.mutable.ArrayBuffer.empty[String]
+    val input = MemoryStream[(Long, String)]
+    val q = Streaming.dedupAndRecordHistory(
+      input.toDF().toDF("id", "fp"), "fp", hist, s"$dir/chk",
+      trigger = Trigger.ProcessingTime(0)) { (batch, _) =>
+      admitted ++= batch.select("fp").as[String].collect(); ()
+    }
+    try {
+      input.addData((1L, "a"), (2L, "b"), (3L, "a"))
+      q.processAllAvailable()
+      assert(admitted.sorted.toSeq === Seq("a", "b"))
+      assert(spark.read.parquet(hist).select("fp").as[String].collect().sorted.toSeq
+        === Seq("a", "b"))
+    } finally q.stop()
+  }
+
+  test("nearDupDedupAndRecordHistory refuses a band digest of another hash " +
+    "family") {
+    val dir = Files.createTempDirectory("minietl-neardup-family")
+    val in = s"$dir/in"
+    val hist = s"$dir/bands"
+    val out = s"$dir/sink"
+    def drain(rows: Seq[(Long, String)], portable: Boolean): Unit = {
+      rows.toDF("id", "text").coalesce(1).write.mode("append").parquet(in)
+      val q = Streaming.nearDupDedupAndRecordHistory(
+        spark.readStream.schema("id LONG, text STRING").parquet(in),
+        "id", "text", hist, s"$dir/chk", portable = portable) { (batch, bid) =>
+        batch.write.mode("overwrite").parquet(Streaming.batchOutputPath(out, bid))
+      }
+      try q.processAllAvailable() finally q.stop()
+    }
+    // the portable family keys each band by its raw lanes (an array), the
+    // production family by one folded long: the digest cannot be reused
+    drain(Seq((1L, "alpha beta gamma delta epsilon")), portable = true)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      drain(Seq((2L, "zeta eta theta iota kappa")), portable = false))
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case ise: IllegalStateException => ise }
+    assert(cause.exists(c => c.getMessage.contains(hist) && c.getMessage.contains("`key`")),
+      s"expected the named digest error, got $e")
+    assert(!new java.io.File(Streaming.batchOutputPath(out, 1L)).exists(),
+      "the sink was written")
+  }
+
   test("nearDupDedupAndRecordHistory drops near-dups within and across batches") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("minietl-neardup-hist")
