@@ -1383,9 +1383,13 @@ object Config {
 
   private val streamSourceTypes = Set("csv", "json", "jsonl", "parquet", "orc")
   private val streamSinkTypes = Set("csv", "json", "jsonl", "parquet", "orc", "memory")
+  /** The self-maintaining ingest-dedup stages: each compiles to one of
+    * the `Streaming` history loops, the stream's terminal sink.
+    */
+  private val HistoryStageTypes =
+    Set("dedup_history", "neardup_history", "media_hash_history")
   private val streamStageTypes =
-    Set("window_agg", "session_agg", "dedup", "dedup_history",
-      "neardup_history", "media_hash_history")
+    Set("window_agg", "session_agg", "dedup") ++ HistoryStageTypes
 
   /** Batch transformer types that apply verbatim to an unbounded frame:
     * scan-side, stateless, no global sort/window/aggregate. (The stateful
@@ -1504,7 +1508,7 @@ object Config {
         case "dedup" =>
           (if (s.options.contains("keys")) Nil else Seq(s"$at: missing 'keys'")) ++
             (if (c.watermark.isEmpty) Seq(s"$at: requires a 'watermark' block") else Nil)
-        case "dedup_history" | "neardup_history" | "media_hash_history" =>
+        case t if HistoryStageTypes(t) =>
           // the self-maintaining ingest-dedup loops (Streaming
           // .dedupAndRecordHistory / .nearDupDedupAndRecordHistory): drop
           // rows that duplicate the parquet digest at 'history' (or
@@ -1512,14 +1516,12 @@ object Config {
           // append their fingerprints/bands — so the digest grows by
           // exactly what was admitted. foreachBatch under the hood, hence
           // the shared structural constraints.
-          val historyTypes =
-            Set("dedup_history", "neardup_history", "media_hash_history")
           val shared =
             (if (s.options.contains("history")) Nil
              else Seq(s"$at: missing 'history' (parquet digest path)")) ++
-              (if (c.stages.count(t => historyTypes(t.typ)) > 1)
+              (if (c.stages.count(t => HistoryStageTypes(t.typ)) > 1)
                  Seq(s"$at: at most one history-dedup stage per stream")
-               else if (!historyTypes(c.stages.last.typ))
+               else if (!HistoryStageTypes(c.stages.last.typ))
                  Seq(s"$at: must be the LAST stage (it couples the sink write " +
                    "with recording the admitted digest rows per micro-batch)")
                else Nil) ++
@@ -1649,6 +1651,16 @@ object Config {
         s"neardup_history verify: unknown mode '$other'")
     }
 
+  /** The `max_dist` of a `media_hash_history` stage (default 2). */
+  private def mediaMaxDist(dh: ComponentConfig): Int =
+    dh.options.get("max_dist").map(_.toString.toDouble.toInt).getOrElse(2)
+
+  /** The digest column of a `dedup_history` stage: its `key`, or `__fp`
+    * when the fingerprint is derived from `columns`.
+    */
+  private def historyFpCol(dh: ComponentConfig): String =
+    dh.options.get("key").map(_.toString).getOrElse("__fp")
+
   /** StreamConfig → assembled [[StreamPipeline]]. Fails on validation
     * errors. The source is `readStream` over the declared schema; stages
     * fold left over the unbounded frame; the sink is `writeStream` with the
@@ -1678,11 +1690,9 @@ object Config {
     // dedup_history / neardup_history are not frame transforms — they
     // compile to the terminal foreachBatch sink below; everything before
     // them folds as usual
-    val historyTypes =
-      Set("dedup_history", "neardup_history", "media_hash_history")
-    val dedupHist = c.stages.find(t => historyTypes(t.typ))
+    val dedupHist = c.stages.find(t => HistoryStageTypes(t.typ))
     val stageFns: Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] =
-      c.stages.filterNot(t => historyTypes(t.typ)).map { s =>
+      c.stages.filterNot(t => HistoryStageTypes(t.typ)).map { s =>
         s.typ match {
           case "window_agg" => s.options.get("slide") match {
             case Some(slide) => df => Streaming.slidingAggWatermarked(df, wmCol,
@@ -1747,8 +1757,7 @@ object Config {
               minietl.streaming.Streaming.mediaHashDedupAndRecordHistory(
                 base, str(dh.options, "id"), str(dh.options, "content"),
                 kind = str(dh.options, "kind").toLowerCase,
-                maxDist = dh.options.get("max_dist")
-                  .map(_.toString.toDouble.toInt).getOrElse(2),
+                maxDist = mediaMaxDist(dh),
                 historyDir, checkpoint,
                 trigger = trigger) { (fresh, bid) => writeBatch(None)(fresh, bid) }
             case "neardup_history" =>
@@ -1769,14 +1778,15 @@ object Config {
               // so (null,"a") / ("a",null) would collide and a lone null
               // column would collapse with the empty string, silently
               // over-deduplicating. Dropped again before the sink write.
-              val (fpCol, prepared, derived) = dh.options.get("key") match {
-                case Some(k) => (k.toString, base, false)
+              val fpCol = historyFpCol(dh)
+              val (prepared, derived) = dh.options.get("key") match {
+                case Some(_) => (base, false)
                 case None =>
                   val cols = strSeq(dh.options("columns"))
                   val json = org.apache.spark.sql.functions.to_json(
                     org.apache.spark.sql.functions.struct(cols.map(col): _*),
                     java.util.Collections.singletonMap("ignoreNullFields", "false"))
-                  ("__fp", base.withColumn("__fp", md5(json.cast("binary"))), true)
+                  (base.withColumn(fpCol, md5(json.cast("binary"))), true)
               }
               minietl.streaming.Streaming.dedupAndRecordHistory(
                 prepared, fpCol, historyDir, checkpoint, trigger) {
@@ -1808,31 +1818,15 @@ object Config {
       .filter(_.options.get("compact_after").exists(_.toString.toBoolean))
       .map { dh =>
         val historyDir = str(dh.options, "history")
-        // (dir, distinct-cols) per sub-digest: the verified near-dup
-        // layouts have TWO (bands + sigs/shingles); the others one flat
-        // table
-        val targets: Seq[(String, Seq[String])] = dh.typ match {
-          case "neardup_history" => crossBatchMode(dh) match {
-            case "estimate" =>
-              Seq((s"$historyDir/bands", Seq("band", "key", "id")),
-                (s"$historyDir/sigs", Seq("id", "sig")))
-            case "exact" =>
-              Seq((s"$historyDir/bands", Seq("band", "key", "id")),
-                (s"$historyDir/shingles", Seq("id", "sh")))
-            case _ => Seq((historyDir, Seq("band", "key")))
-          }
-          case "media_hash_history" =>
-            val exact = dh.options.get("max_dist")
-              .exists(_.toString.toDouble.toInt == 0)
-            Seq((historyDir,
-              if (exact) Seq("hash") else Seq("band", "key", "hash")))
-          case _ => Seq((historyDir,
-            Seq(dh.options.get("key").map(_.toString).getOrElse("__fp"))))
+        // every digest table the loop writes (the verified near-dup modes
+        // write two), as the loop itself defines them
+        val digests = dh.typ match {
+          case "neardup_history" => Streaming.nearDupDigests(historyDir, crossBatchMode(dh))
+          case "media_hash_history" => Streaming.mediaDigests(historyDir, mediaMaxDist(dh))
+          case _ => Streaming.exactDigests(historyDir, historyFpCol(dh))
         }
         (spark: org.apache.spark.sql.SparkSession) => {
-          targets.foreach { case (d, cols) =>
-            minietl.streaming.Streaming.compactHistoryCols(spark, d, cols)
-          }
+          digests.foreach(t => Streaming.compactHistoryCols(spark, t.dir, t.columns))
           ()
         }
       }

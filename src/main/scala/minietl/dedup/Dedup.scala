@@ -150,9 +150,9 @@ object Dedup {
     * family (engine-replayable, slower md5); xxhash64 otherwise. NOT
     * persisted here — the caller owns persist/release: the public pair
     * entries persist + register with RunCaches; the streaming ingest loop
-    * persists per micro-batch and releases at batch end, so one batch's
-    * shingle hashing never runs twice (within-batch dedup AND digest
-    * banding both read this frame).
+    * checkpoints it once per micro-batch, so one batch's shingle hashing
+    * never runs twice (within-batch dedup AND digest banding both read
+    * this frame).
     */
   private[minietl] def minhashBase(df: DataFrame, textCol: String, idCol: String,
                                    shingleN: Int, k: Int, seed: Long,

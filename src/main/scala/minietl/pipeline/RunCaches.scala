@@ -8,7 +8,8 @@ import org.apache.spark.storage.StorageLevel
   * when the run ends.
   *
   * The run paths — `Pipeline.run` (what a YAML config runs) and `Dag.run` —
-  * open a scope for the duration of the run. Three kinds of frame join it:
+  * open a scope for the duration of the run, and the streaming ingest-dedup
+  * loops open one per micro-batch. Three kinds of frame join it:
   *
   *  - '''Stage inputs''' ([[stage]]). Stage closures that run an eager job
   *    while the pipeline is built (minhash/span dedup, LM surprise scores,
@@ -36,13 +37,14 @@ import org.apache.spark.storage.StorageLevel
   * at the root of its plan, which is unpersisted once.
   *
   * With no scope open — library callers composing frames, `Pipeline.frame`
-  * for embedding, streaming micro-batches — nothing here persists anything
-  * and [[register]] is a no-op; callers manage their own caches. ThreadLocal
-  * because a batch run composes and executes on one driver thread; scopes
-  * nest innermost-wins (an embedded `run` inside a stage releases its own
+  * for embedding, micro-batches of a plain streaming sink — nothing here
+  * persists anything and [[register]] is a no-op; callers manage their own
+  * caches. ThreadLocal because a run composes and executes on one driver
+  * thread (a micro-batch on its stream's thread); scopes nest
+  * innermost-wins (an embedded `run` inside a stage releases its own
   * frames when it finishes, so embedding composes via `Pipeline.frame`).
-  * Streaming stage closures execute on the stream's micro-batch thread
-  * where no scope is open, by design: the streamable stage set is scan-side
+  * Streaming stage closures are applied once to the unbounded frame, where
+  * no scope is open, by design: the streamable stage set is scan-side
   * stateless and never checkpoints.
   */
 object RunCaches {
@@ -107,8 +109,7 @@ object RunCaches {
     * the lineage warning `RDD.unpersist` logs for a local checkpoint.
     * Public for iterative operators that truncate lineage with rolling
     * localCheckpoints and must free the superseded checkpoint's blocks
-    * themselves (the connected-components loop), and for the streaming
-    * ingest loop's per-batch checkpoint.
+    * themselves (the connected-components loop).
     */
   def releaseNow(df: DataFrame): Unit =
     if (df.storageLevel != StorageLevel.NONE) { df.unpersist(); () }

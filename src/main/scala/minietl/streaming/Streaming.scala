@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import minietl.pipeline.RunCaches
+
 /** Structured Streaming surface.
   *
   * The reference's "streaming" is bounded chunked iteration (SURVEY §1.1);
@@ -290,54 +292,12 @@ object Streaming {
     * leaves to the caller: per micro-batch, drop rows whose `fpCol`
     * already exists in the parquet digest at `historyDir` (or earlier in
     * the same batch — keep-any, deterministic for byte-identical
-    * duplicate payloads), hand the survivors to `sink`, then APPEND their
-    * fingerprints to the digest — so the history grows exactly by what
-    * was admitted and the next batch dedups against it. foreachBatch runs
-    * batches sequentially, so the read-check-append cycle is race-free.
-    *
-    * JOIN DIRECTION is the steady-state contract (digest ≫ batch after
-    * enough drains). A direct `batch ANTI JOIN digest` can only build the
-    * right side, so at steady state it would hash the whole history per
-    * batch. Instead each batch probes the digest with
-    * `digest LEFT SEMI JOIN batch fingerprints`: the digest is streamed
-    * once, the batch side is built (broadcast at any batch size that
-    * broadcasts), and the probe result is bounded by the batch. The
-    * admitted rows are `batch.dropDuplicates(fpCol) LEFT ANTI JOIN probe`.
-    * Neither join input is `distinct`ed: a semi join emits each digest row
-    * at most once whatever the build side holds, and an anti join drops
-    * the same rows whatever its right side's multiplicity. Deduplicating
-    * the digest would shuffle the whole history every batch; compaction
-    * owns digest hygiene. HistoryJoinDirectionSpec pins the executed plan.
-    *
-    * Scale notes: the digest holds one row per admitted fingerprint —
-    * compact it between drains ([[compactHistory]]) so the probe scans a
-    * few right-sized files, not one small file per batch. Its schema is
-    * checked once when the query starts (a digest without `fpCol`, or
-    * with another type for it, throws an IllegalStateException naming the
-    * directory and the column), and every micro-batch then reads it with
-    * that known schema, without a schema-inference job. The admitted rows
-    * are materialized once with an eager `localCheckpoint` and both writes
-    * read it: the sink, then the digest delta. A checkpoint rather than
-    * `persist()`: adaptive execution sizes the checkpoint's final stage
-    * from its data (one partition for a small batch, so one file per
-    * output), while a cached plan keeps all `spark.sql.shuffle.partitions`
-    * partitions and writes that many small files twice per batch.
-    *
-    * REPLAY SAFETY (exactly-once under crash/restart): the digest is a
-    * per-batch-keyed parquet layout (`historyDir/batch=<id>`), and each
-    * batch (a) first DELETES its own delta dir — discarding any partial
-    * write a crashed prior attempt of the same batchId left behind —
-    * then (b) recomputes `fresh` against the committed batches only, and
-    * (c) writes its delta with overwrite. A replayed batch therefore
-    * reproduces the exact same `fresh` set and converges the digest to
-    * the same state no matter where the previous attempt died. The SINK
-    * must uphold its half of the contract: it receives `batchId`
-    * precisely so it can write idempotently (the standard foreachBatch
-    * recipe — e.g. [[batchOutputPath]] + overwrite); an append-only sink
-    * degrades to at-least-once for the batch that crashed between the
-    * sink write and the digest append. Reading the digest directory
-    * yields an extra `batch` partition column — digest consumers should
-    * select the fingerprint columns explicitly (this function does).
+    * duplicate payloads), hand the survivors to `sink`, then append their
+    * fingerprints to the digest, so the history grows exactly by what was
+    * admitted. The probe's semi join is itself the duplicate set. Null
+    * fingerprints never match history; each batch admits and records one.
+    * The digest's schema is checked when the query starts. Replay safety,
+    * join direction and release: see `admitAgainstHistory`.
     */
   def dedupAndRecordHistory(
       stream: DataFrame, fpCol: String, historyDir: String,
@@ -345,29 +305,173 @@ object Streaming {
       trigger: Trigger = Trigger.AvailableNow())(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val fpSchema = StructType(Seq(stream.schema(fpCol).copy(nullable = true)))
-    val digest = new DigestReader(historyDir)
-    digest.check(stream.sparkSession, fpSchema)
+    admitAgainstHistory(stream, exactDigests(historyDir, fpCol), checkpoint, trigger,
+      sink, startSchemas = Seq(fpSchema)) { batch =>
+      Admission(batch.dropDuplicates(fpCol), fpCol,
+        keys = batch.select(fpCol).where(col(fpCol).isNotNull),
+        records = fresh => Seq(fresh.select(fpCol)))
+    }
+  }
+
+  /** A digest directory of an ingest-dedup loop and the columns it stores,
+    * in order. The layout functions below are the one definition of each
+    * loop's digest: the loops write with it and `compact_after` compacts
+    * with it.
+    */
+  private[minietl] final case class DigestTable(dir: String, columns: Seq[String])
+
+  /** [[dedupAndRecordHistory]]'s digest: the admitted fingerprints. */
+  private[minietl] def exactDigests(historyDir: String, fpCol: String): Seq[DigestTable] =
+    Seq(DigestTable(historyDir, Seq(fpCol)))
+
+  /** [[nearDupDedupAndRecordHistory]]'s digest per `crossBatch` mode: flat
+    * (band, key) rows in collision mode; (band, key, id) rows under
+    * `bands` plus one payload row per admitted doc in the verified modes
+    * (`sigs` for estimate, `shingles` for exact).
+    */
+  private[minietl] def nearDupDigests(historyDir: String, crossBatch: String): Seq[DigestTable] =
+    crossBatch match {
+      case "collision" => Seq(DigestTable(historyDir, Seq("band", "key")))
+      case mode =>
+        val (sub, payload) = if (mode == "exact") ("shingles", "sh") else ("sigs", "sig")
+        Seq(DigestTable(s"$historyDir/bands", Seq("band", "key", "id")),
+          DigestTable(s"$historyDir/$sub", Seq("id", payload)))
+    }
+
+  /** [[mediaHashDedupAndRecordHistory]]'s digest: the 8-byte hash at
+    * `maxDist` 0, else (band, key, hash) rows.
+    */
+  private[minietl] def mediaDigests(historyDir: String, maxDist: Int): Seq[DigestTable] =
+    Seq(DigestTable(historyDir, if (maxDist == 0) Seq("hash") else Seq("band", "key", "hash")))
+
+  /** What one micro-batch of an ingest-dedup loop admits and records; the
+    * loop derives it from the batch, and [[admitAgainstHistory]] runs it.
+    *
+    *  - `within`: the batch after within-batch dedup. Its columns beyond
+    *    the batch's own are internal and never reach the sink.
+    *  - `idCol`: the column of `within` that a duplicate is dropped by.
+    *  - `keys`: the probe's build side. The probe joins it with the first
+    *    digest on the columns both have. With an `__id` column (the
+    *    `idCol` value the key belongs to) the probe is an inner join whose
+    *    `verify`-ed rows name the duplicates. Without one, the keys are
+    *    `idCol` values and the probe is a semi join whose rows are the
+    *    duplicates themselves.
+    *  - `verify`: matched probe rows, and the other digests, to the rows
+    *    that really are duplicates.
+    *  - `records`: admitted rows to one delta per digest table, columns in
+    *    the table's order (renamed to its column names).
+    */
+  private final case class Admission(
+      within: DataFrame, idCol: String, keys: DataFrame,
+      records: DataFrame => Seq[DataFrame],
+      verify: (DataFrame, Seq[DataFrame]) => DataFrame = (matched, _) => matched)
+
+  /** The per-micro-batch kernel behind the three ingest-dedup loops: one
+    * `foreachBatch` query that, per batch, admits the rows of
+    * `admission(batch)` that no digest in `digests` already holds, hands
+    * them to `sink`, and records them. foreachBatch runs batches
+    * sequentially, so the read-check-append cycle is race-free.
+    *
+    * JOIN DIRECTION is the steady-state contract (digest ≫ batch after
+    * enough drains). A join can only build one side, and `batch ANTI JOIN
+    * digest` can build only the right, so at steady state it would hash
+    * the whole history per batch. Instead the probe is `digest JOIN keys`:
+    * the digest is streamed once, the batch keys are built (broadcast at
+    * any batch size that broadcasts), and the probe result is bounded by
+    * the batch. The admitted rows are `within LEFT ANTI JOIN probe`.
+    * Neither join input is `distinct`ed: a semi join emits each digest row
+    * at most once whatever the build side holds, and an anti join drops
+    * the same rows whatever its right side's multiplicity. Deduplicating
+    * the digest would shuffle the whole history every batch; compaction
+    * owns digest hygiene ([[compactHistoryCols]] between drains, so the
+    * probe scans a few right-sized files, not one small file per batch).
+    * HistoryJoinDirectionSpec pins the executed plans.
+    *
+    * Each digest is read through its [[DigestReader]] with the schema of
+    * the loop's own records, without a schema-inference job; `startSchemas`
+    * are checked before the query starts, the rest at the first batch.
+    *
+    * The admitted rows are materialized once ([[materialize]], an eager
+    * `localCheckpoint`), and the sink and every digest delta read them.
+    * Adaptive execution sizes the checkpoint's final stage from its data
+    * (one partition for a small batch, so one file per output), while a
+    * `persist()`ed plan keeps all `spark.sql.shuffle.partitions`
+    * partitions and writes that many small files per output. A loop's
+    * shared intermediate (the near-dup signature base, the media hashes)
+    * is materialized the same way. A checkpoint costs its own jobs once; a
+    * cache is filled by the query stages that first read it, and adaptive
+    * execution runs a fill job for each cached read it plans before the
+    * fill is done (a near-dup batch ran 34 jobs with a cached base, 17
+    * with a checkpointed one).
+    *
+    * RELEASE: each batch runs in one `RunCaches.scoped` scope. Every frame
+    * the batch materializes, and every frame the operators it calls cache
+    * and `RunCaches.register`, is released when the batch ends, also when
+    * it throws, so a drain leaves no cache pins behind.
+    *
+    * REPLAY SAFETY (exactly-once under crash/restart): every digest is a
+    * per-batch-keyed parquet layout (`dir/batch=<id>`), and each batch (a)
+    * refuses to run next to an interrupted compaction, (b) DELETES its own
+    * deltas, discarding any partial write a crashed prior attempt of the
+    * same batchId left behind, (c) recomputes the admitted rows against
+    * the committed batches only, and (d) writes its deltas with
+    * overwrite. A replayed batch therefore reproduces the same admitted
+    * rows and converges the digest to the same state no matter where the
+    * previous attempt died. The SINK must uphold its half: it receives
+    * `batchId` precisely so it can write idempotently (the standard
+    * foreachBatch recipe, [[batchOutputPath]] + overwrite); an append-only
+    * sink degrades to at-least-once for a batch that crashed between the
+    * sink write and the digest writes. Reading a digest directory yields
+    * an extra `batch` partition column, so digest consumers select their
+    * columns explicitly (the kernel does).
+    */
+  private def admitAgainstHistory(
+      stream: DataFrame, digests: Seq[DigestTable], checkpoint: String,
+      trigger: Trigger, sink: (DataFrame, Long) => Unit,
+      startSchemas: Seq[StructType] = Nil)(
+      admission: DataFrame => Admission): org.apache.spark.sql.streaming.StreamingQuery = {
+    val readers = digests.map(t => new DigestReader(t.dir))
+    readers.zip(startSchemas).foreach { case (r, s) => r.check(stream.sparkSession, s) }
     stream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        requireNoCompactionDebris(spark, historyDir)
-        dropBatchDelta(spark, historyDir, batchId)
-        // digest streamed, batch fingerprints built (see JOIN DIRECTION)
-        val probe = digest.read(spark, fpSchema)
-          .join(batch.select(fpCol).where(col(fpCol).isNotNull), Seq(fpCol), "left_semi")
-        val fresh = batch.dropDuplicates(fpCol)
-          .join(probe, Seq(fpCol), "left_anti")
-          .localCheckpoint()
-        try {
-          sink(fresh, batchId)
-          fresh.select(fpCol).write.mode("overwrite")
-            .parquet(batchOutputPath(historyDir, batchId))
-        } finally minietl.pipeline.RunCaches.releaseNow(fresh)
+        digests.foreach(t => requireNoCompactionDebris(spark, t.dir))
+        digests.foreach(t => dropBatchDelta(spark, t.dir, batchId))
+        RunCaches.scoped {
+          val a = admission(batch)
+          def deltas(rows: DataFrame): Seq[DataFrame] =
+            a.records(rows).zip(digests).map { case (r, t) => r.toDF(t.columns: _*) }
+          val history = readers.zip(deltas(a.within)).map { case (r, d) =>
+            r.read(spark, StructType(d.schema.map(_.copy(nullable = true))))
+          }
+          val on = a.keys.columns.filter(history.head.columns.contains).toSeq
+          val dups =
+            if (a.keys.columns.contains("__id"))
+              a.verify(history.head.join(a.keys, on), history.tail).select("__id")
+            else history.head.join(a.keys, on, "left_semi").select(col(on.head).as("__id"))
+          val fresh = materialize(
+            a.within.join(dups, a.within(a.idCol) === dups("__id"), "left_anti"))
+          sink(fresh.drop(fresh.columns.filterNot(batch.columns.contains): _*), batchId)
+          deltas(fresh).zip(digests).foreach { case (d, t) =>
+            d.write.mode("overwrite").parquet(batchOutputPath(t.dir, batchId))
+          }
+        }
       }
       .start()
+  }
+
+  /** `df` computed once, for the rest of the current run scope: an eager
+    * `localCheckpoint` registered with `RunCaches`. Its consumers read the
+    * stored rows with their statistics, and adaptive execution sized its
+    * final stage.
+    */
+  private def materialize(df: DataFrame): DataFrame = {
+    val stored = df.localCheckpoint()
+    RunCaches.register(stored)
+    stored
   }
 
   /** The batchId-keyed subdirectory (`dir/batch=<id>`) used for idempotent
@@ -444,10 +548,11 @@ object Streaming {
     * micro-batch, (1) drop within-batch near-duplicates with the full
     * verified batch semantics ([[minietl.dedup.Dedup.minhashDedup]]:
     * banded MinHash-LSH candidates, exact-Jaccard ≥ `threshold` verify,
-    * keep-min-id), then (2) drop every survivor whose signature collides
-    * with the historical BAND DIGEST in any band, hand the remainder to
-    * `sink`, and (3) append the admitted documents' (band, key) rows to
-    * the digest.
+    * keep-min-id), then (2) drop every survivor whose band keys collide
+    * with the historical BAND DIGEST, hand the remainder to `sink`, and
+    * (3) record the admitted documents' bands. One signature base per
+    * batch (shingle hashes and the k-lane signature, materialized once)
+    * feeds the within-batch pass, the band keys and the payloads.
     *
     * `portable = true` swaps the whole hash family to the replayable
     * variants (md5-60-bit shingle hashes, raw-slice band keys —
@@ -462,11 +567,12 @@ object Streaming {
     * drop-precision dial; the layouts are not interchangeable, pick a
     * mode per digest and keep it:
     *  - `"collision"` (default): the digest stores 16 bytes per band per
-    *    admitted doc, never text or shingles, so a historical match
-    *    cannot re-verify similarity. The standard recall/precision dial
-    *    of banded LSH: P(collision) ≈ 1-(1-j^r)^b for true Jaccard j
-    *    with r = k/bands rows per band; size k/bands so that false drops
-    *    (j ≪ threshold colliding anyway) are acceptably rare.
+    *    admitted doc, never text or shingles, and a collision in any band
+    *    drops the row: a historical match cannot re-verify similarity.
+    *    The standard recall/precision dial of banded LSH: P(collision) ≈
+    *    1-(1-j^r)^b for true Jaccard j with r = k/bands rows per band;
+    *    size k/bands so that false drops (j ≪ threshold colliding anyway)
+    *    are acceptably rare.
     *  - `"estimate"`: the digest also stores each admitted doc's k-lane
     *    MinHash signature (~k×8 bytes per doc, still never text) under
     *    `historyDir/sigs`, band rows under `historyDir/bands`; band
@@ -481,22 +587,8 @@ object Streaming {
     *    exact Jaccard over the hash sets — the identical decision rule
     *    the within-batch pass applies, at the price of the largest
     *    digest of the three.
-    * Within-batch semantics stay exact in every mode.
-    *
-    * Scale shape per batch: signature + banding are scan-side; one
-    * shuffle for the within-batch bucket self-join; the history check is
-    * a (band, key) semi-join against the digest (broadcast or shuffled by
-    * size); digest growth is bands × admitted rows. Compact the digest
-    * between drains with [[compactHistoryCols]]. foreachBatch runs
-    * batches sequentially, so read-check-append is race-free.
-    *
-    * REPLAY SAFETY: same contract as [[dedupAndRecordHistory]] — every
-    * digest dir (flat band digest, or bands + sigs/shingles in the
-    * verified modes) is written as batchId-keyed deltas (`…/batch=<id>`,
-    * delete-then-overwrite), so a crashed batch replays to the identical admitted
-    * set and digest state; the sink receives `batchId` and must write
-    * idempotently by it ([[batchOutputPath]]) for end-to-end
-    * exactly-once.
+    * Within-batch semantics stay exact in every mode. Replay safety, join
+    * direction and release: see `admitAgainstHistory`.
     */
   def nearDupDedupAndRecordHistory(
       stream: DataFrame, idCol: String, textCol: String,
@@ -509,161 +601,66 @@ object Streaming {
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     require(Set("collision", "estimate", "exact")(crossBatch),
       s"crossBatch must be collision, estimate or exact, got '$crossBatch'")
-    val bandsDigest = new DigestReader(
-      if (crossBatch == "collision") historyDir else s"$historyDir/bands")
-    val payloadDigest = new DigestReader(
-      if (crossBatch == "exact") s"$historyDir/shingles" else s"$historyDir/sigs")
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val verified = crossBatch != "collision"
-        val exact = crossBatch == "exact"
-        val bandsDir = s"$historyDir/bands"
-        val payloadDir = if (exact) s"$historyDir/shingles" else s"$historyDir/sigs"
-        requireNoCompactionDebris(spark, historyDir)
-        if (verified) {
-          requireNoCompactionDebris(spark, bandsDir)
-          requireNoCompactionDebris(spark, payloadDir)
-          dropBatchDelta(spark, bandsDir, batchId)
-          dropBatchDelta(spark, payloadDir, batchId)
-        } else dropBatchDelta(spark, historyDir, batchId)
-        import minietl.dedup.Dedup
-        // ONE signature computation per batch (guide §1.2 — don't compute
-        // things twice): the (id, hsh, sig) base is persisted once and
-        // feeds BOTH the within-batch dedup pass and the digest
-        // banding/payloads. The previous shape recomputed the shingle
-        // hashes + k-lane signature from the text a second time for the
-        // digest bands (and a third time for the "exact" payload) — at the
-        // portable md5 family that hashing is the dominant per-batch
-        // compute. Values are identical by construction (same text, same
-        // hash family, same k/seed), so the admitted set and digest are
-        // byte-identical; seed stays the dedup pass's own default so the
-        // digest bands are the family the within-batch pass used.
-        val base = Dedup.minhashBase(batch, textCol, idCol, shingleN, k,
-          seed = 42L, portable).persist()
-        // (1) within-batch: full verified near-dup semantics. `portable`
-        // swaps the whole hash family to the md5-60-bit / slice-band
-        // variants so an independent engine can replay the ENTIRE loop —
-        // Dedup.nearDupHistoryOracleSql generates that SQL, and
-        // q_stream_neardup_history hash-gates it per round.
-        val dupWithin = Dedup.minhashPairsFromSigBase(
-            base, bands, k, threshold, Dedup.DefaultMaxBucket, portable)
-          .select(col("id_b").as("__dup")).distinct()
-        val withinDeduped = batch
-          .join(dupWithin, batch(idCol) === col("__dup"), "left_anti")
-        // (id, band, key) of ALL batch docs (slim proxy rows off the cached
-        // base — recomputing the explode is cheap; the hashing is not);
-        // survivors filter by semi-join where needed
-        val bandsAll = Dedup.bandRows(base, bands, k, portable)
-        val survivorBands = bandsAll
-          .join(withinDeduped.select(col(idCol).as("id")), Seq("id"), "left_semi")
-          .select(col("id").as("__id"), col("band"), col("key"))
-        try {
-          if (!verified) {
-            // collision mode: digest = flat (band, key); any-band collision
-            // with history drops the row (see scaladoc dial)
-            val hist = bandsDigest.read(spark, survivorBands.select("band", "key").schema)
-            // digest STREAMED, batch bands built (same join-direction
-            // contract as dedupAndRecordHistory — a semi join with the
-            // digest on the right could only build the digest side, and a
-            // digest-side distinct would shuffle the whole history per
-            // batch; the inner join's matched rows are bounded by
-            // batch bands × collisions, then collapsed to ids)
-            val dupIds = hist
-              .join(survivorBands, Seq("band", "key"))
-              .select("__id").distinct()
-            val fresh = withinDeduped
-              .join(dupIds, withinDeduped(idCol) === dupIds("__id"), "left_anti")
-              .persist()
-            try {
-              sink(fresh, batchId)
-              bandsAll
-                .join(fresh.select(col(idCol).as("id")), Seq("id"), "left_semi")
-                .select("band", "key")
-                .write.mode("overwrite")
-                .parquet(batchOutputPath(historyDir, batchId))
-            } finally { fresh.unpersist(); () }
-          } else {
-            // VERIFIED modes: digest = $historyDir/bands (band, key, id) +
-            // one per-doc payload table. Band collisions only NOMINATE
-            // candidates; the drop decision re-checks similarity against
-            // the payload — minhashEstimate ≥ threshold over the k-lane
-            // signature ("estimate", ~k×8 B/doc), or exact Jaccard over
-            // the sorted shingle-hash set ("exact", ~8 B/shingle, the
-            // same decision rule as the within-batch pass) — so an
-            // unlucky band collision between dissimilar docs cannot
-            // false-drop. Payloads come straight off the cached base: the
-            // "exact" shingle-hash set IS base.hsh, the "estimate"
-            // signature IS base.sig.
-            val payloadCol = if (exact) "sh" else "sig"
-            val payload = base.select(col("id"),
-              (if (exact) col("hsh") else col("sig")).as("__pay"))
-            val histBands = bandsDigest.read(spark, survivorBands
-              .select(col("band"), col("key"), col("__id").as("id")).schema)
-            val histPayload = payloadDigest.read(spark,
-              payload.select(col("id"), col("__pay").as(payloadCol)).schema)
-            def similar(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-              if (exact) minietl.functions.vec.jaccardSorted(a, b) >= threshold
-              else Dedup.minhashEstimate(a, b) >= threshold
-            // digest bands on the STREAMED side, batch bands on the build
-            // side (join-direction contract, as in collision mode)
-            val cand = histBands
-              .join(survivorBands, Seq("band", "key"))
-              .select(col("__id"), col("id").as("__hist_id")).distinct()
-            val dupIds = cand
-              .join(payload.select(col("id").as("__id"), col("__pay")), "__id")
-              .join(histPayload.select(col("id").as("__hist_id"),
-                col(payloadCol).as("__hist_pay")), "__hist_id")
-              .where(similar(col("__pay"), col("__hist_pay")))
-              .select("__id").distinct()
-            val fresh = withinDeduped
-              .join(dupIds, withinDeduped(idCol) === dupIds("__id"), "left_anti")
-              .persist()
-            try {
-              sink(fresh, batchId)
-              bandsAll
-                .join(fresh.select(col(idCol).as("id")), Seq("id"), "left_semi")
-                .select(col("band"), col("key"), col("id"))
-                .write.mode("overwrite").parquet(batchOutputPath(bandsDir, batchId))
-              payload
-                .join(fresh.select(col(idCol).as("id")), Seq("id"), "left_semi")
-                .select(col("id"), col("__pay").as(payloadCol))
-                .write.mode("overwrite").parquet(batchOutputPath(payloadDir, batchId))
-            } finally { fresh.unpersist(); () }
-          }
-        } finally { base.unpersist(); () }
+    import minietl.dedup.Dedup
+    admitAgainstHistory(stream, nearDupDigests(historyDir, crossBatch), checkpoint,
+      trigger, sink) { batch =>
+      // seed stays the within-batch pass's own default, so the digest
+      // bands are the family that pass used
+      val base = materialize(Dedup.minhashBase(
+        batch, textCol, idCol, shingleN, k, seed = 42L, portable))
+      val dupWithin = Dedup.minhashPairsFromSigBase(
+          base, bands, k, threshold, Dedup.DefaultMaxBucket, portable)
+        .select(col("id_b").as("__dup"))
+      val within = batch.join(dupWithin, batch(idCol) === col("__dup"), "left_anti")
+      val bandRows = Dedup.bandRows(base, bands, k, portable)
+      def admitted(rows: DataFrame, of: DataFrame) =
+        rows.join(of.select(col(idCol).as("id")), Seq("id"), "left_semi")
+      val keys = admitted(bandRows, within)
+        .select(col("id").as("__id"), col("band"), col("key"))
+      if (crossBatch == "collision")
+        Admission(within, idCol, keys,
+          records = fresh => Seq(admitted(bandRows, fresh).select("band", "key")))
+      else {
+        // band collisions only NOMINATE candidates; the drop re-checks
+        // similarity against the stored payload: the signature ("estimate")
+        // or the shingle-hash set ("exact"), both straight off the base
+        val payload = base.select(col("id"),
+          col(if (crossBatch == "exact") "hsh" else "sig").as("__pay"))
+        def similar(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+          if (crossBatch == "exact") minietl.functions.vec.jaccardSorted(a, b) >= threshold
+          else Dedup.minhashEstimate(a, b) >= threshold
+        Admission(within, idCol, keys,
+          records = fresh => Seq(admitted(bandRows, fresh).select("band", "key", "id"),
+            admitted(payload, fresh)),
+          verify = (matched, history) => matched
+            .select(col("__id"), col("id").as("__hist_id"))
+            .join(payload.toDF("__id", "__pay"), "__id")
+            .join(history.head.toDF("__hist_id", "__hist_pay"), "__hist_id")
+            .where(similar(col("__pay"), col("__hist_pay"))))
       }
-      .start()
+    }
   }
 
-  /** Perceptual-hash INGEST-DEDUP loop over binary media (VERDICT r15
-    * Next #6) — the media twin of [[dedupAndRecordHistory]] /
-    * [[nearDupDedupAndRecordHistory]]: per micro-batch, hash every payload
-    * through the REAL decoder (`kind` = "image" → dHash56, "audio" →
-    * energy-contour-56), drop rows whose hash duplicates the parquet
-    * digest at `historyDir` — equality at `maxDist` 0, banded Hamming at
-    * 1..3, VERIFIED against the digest's stored 8-byte hashes, so unlike
-    * minhash collision mode a band collision alone can never false-drop —
-    * or an earlier row of the same batch (within-batch semantics =
+  /** Perceptual-hash INGEST-DEDUP loop over binary media — the media twin
+    * of [[dedupAndRecordHistory]] / [[nearDupDedupAndRecordHistory]]: per
+    * micro-batch, hash every payload through the REAL decoder (`kind` =
+    * "image" → dHash56, "audio" → energy-contour-56), drop rows whose hash
+    * duplicates the parquet digest at `historyDir` — equality at `maxDist`
+    * 0, banded Hamming at 1..3, VERIFIED against the digest's stored
+    * 8-byte hashes, so unlike minhash collision mode a band collision
+    * alone can never false-drop — or an earlier row of the same batch
+    * (within-batch semantics =
     * [[minietl.multimodal.PerceptualHash.dedupNearFromHashes]]'s exact
     * groups → banded pairs → transitive components, canonical = minimum
-    * id). Survivors go to `sink`, then their digest rows are appended so
-    * the next batch dedups against them. Undecodable payloads (null hash)
-    * are always admitted and never recorded — a dedup stage must not drop
-    * what it cannot read.
+    * id). Survivors go to `sink`, then their digest rows are recorded.
+    * Undecodable payloads (null hash) are always admitted and never
+    * recorded — a dedup stage must not drop what it cannot read.
     *
     * Digest: 4 × 16-byte (band, key, hash) rows per admitted row (near
     * mode) or one 8-byte hash (exact mode) — never payload bytes; the full
     * hash rides along precisely because it IS the similarity object, which
-    * buys exact verification at collision-mode digest prices. Compact
-    * between drains with [[compactHistoryCols]]. The history check keeps
-    * the streamed-digest/built-batch join direction contract of the text
-    * loops. REPLAY SAFETY: the identical batchId-keyed
-    * delete-then-overwrite digest contract as [[dedupAndRecordHistory]];
-    * the sink receives `batchId` and must write idempotently by it.
+    * buys exact verification at collision-mode digest prices. Replay
+    * safety, join direction and release: see `admitAgainstHistory`.
     */
   def mediaHashDedupAndRecordHistory(
       stream: DataFrame, idCol: String, contentCol: String, kind: String,
@@ -674,73 +671,37 @@ object Streaming {
     require(Set("image", "audio")(kind), s"kind must be image or audio, got '$kind'")
     require(maxDist >= 0 && maxDist <= 3,
       s"maxDist must be 0 (exact) or 1..3 (4x14-bit banded Hamming), got $maxDist")
-    val digest = new DigestReader(historyDir)
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        requireNoCompactionDebris(spark, historyDir)
-        dropBatchDelta(spark, historyDir, batchId)
-        import minietl.multimodal.{PerceptualAudio, PerceptualHash}
-        val hashFrame =
-          if (kind == "image")
-            PerceptualHash.dHashFrame(batch, idCol, contentCol)
-              .withColumnRenamed("dhash", "__mh")
-          else
-            PerceptualAudio.energyHashFrame(batch, idCol, contentCol)
-              .withColumnRenamed("ahash", "__mh")
-        val withHash = batch.join(hashFrame, Seq(idCol)).persist()
-        def bandsOf(df: DataFrame): DataFrame = df
-          .where(col("__mh").isNotNull)
+    import minietl.multimodal.{PerceptualAudio, PerceptualHash}
+    val hash = udf { (content: Array[Byte]) =>
+      (if (kind == "image") PerceptualHash.dHash56(content)
+       else PerceptualAudio.energyHash56(content)).map(Long.box).orNull
+    }
+    admitAgainstHistory(stream, mediaDigests(historyDir, maxDist), checkpoint,
+      trigger, sink) { batch =>
+      // one decode per row for every consumer in the batch
+      val withHash = materialize(batch.withColumn("__mh", hash(col(contentCol))))
+      def hashed(df: DataFrame) = df.where(col("__mh").isNotNull)
+      if (maxDist == 0) {
+        // within-batch: one row per hash value, the minimum id
+        val keep = hashed(withHash).groupBy("__mh").agg(min(col(idCol)).as(idCol))
+          .select(idCol)
+          .union(withHash.where(col("__mh").isNull).select(idCol))
+        val within = withHash.join(keep, Seq(idCol), "left_semi")
+        Admission(within, idCol,
+          keys = hashed(within).select(col(idCol).as("__id"), col("__mh").as("hash")),
+          records = fresh => Seq(hashed(fresh).select("__mh")))
+      } else {
+        def bandsOf(df: DataFrame): DataFrame = hashed(df)
           .select(col(idCol).as("__id"), col("__mh"),
-            explode(sequence(lit(0), lit(3))).as("__b"))
-          .withColumn("key", expr("shiftright(__mh, 14 * __b) & 16383"))
-          .select(col("__id"), col("__mh"), col("__b").as("band"), col("key"))
-        try {
-          // (1) within-batch: exact groups always; banded pairs + CC at
-          // maxDist >= 1 (the shared hash-agnostic fold)
-          val within =
-            if (maxDist == 0) {
-              val keep = withHash.where(col("__mh").isNotNull)
-                .groupBy("__mh").agg(min(col(idCol)).as(idCol)).select(idCol)
-                .union(withHash.where(col("__mh").isNull).select(idCol))
-              withHash.join(keep, Seq(idCol), "left_semi")
-            } else PerceptualHash.dedupNearFromHashes(withHash, idCol,
-              withHash.select(col(idCol), col("__mh")), "__mh", maxDist,
-              maxBucketSize)
-          // (2) cross-history: digest streamed, batch built
-          val dupIds =
-            if (maxDist == 0) {
-              val hist = digest.read(spark, withHash.select(col("__mh").as("hash")).schema)
-              hist.join(
-                within.where(col("__mh").isNotNull)
-                  .select(col(idCol).as("__id"), col("__mh").as("hash")),
-                Seq("hash")).select("__id").distinct()
-            } else {
-              val hist = digest.read(spark, bandsOf(withHash)
-                .select(col("band"), col("key"), col("__mh").as("hash")).schema)
-              hist.join(bandsOf(within), Seq("band", "key"))
-                .where(expr(s"bit_count(hash ^ __mh) <= $maxDist"))
-                .select("__id").distinct()
-            }
-          val fresh = within
-            .join(dupIds, within(idCol) === dupIds("__id"), "left_anti")
-            .persist()
-          try {
-            sink(fresh.drop("__mh"), batchId)
-            val digestRows =
-              if (maxDist == 0)
-                fresh.where(col("__mh").isNotNull).select(col("__mh").as("hash"))
-              else bandsOf(fresh)
-                .select(col("band"), col("key"), col("__mh").as("hash"))
-            digestRows.write.mode("overwrite")
-              .parquet(batchOutputPath(historyDir, batchId))
-          } finally { fresh.unpersist(); () }
-        } finally { withHash.unpersist(); () }
+            explode(sequence(lit(0), lit(3))).as("band"))
+          .withColumn("key", expr("shiftright(__mh, 14 * band) & 16383"))
+        val within = PerceptualHash.dedupNearFromHashes(withHash, idCol,
+          withHash.select(col(idCol), col("__mh")), "__mh", maxDist, maxBucketSize)
+        Admission(within, idCol, keys = bandsOf(within),
+          records = fresh => Seq(bandsOf(fresh).select("band", "key", "__mh")),
+          verify = (matched, _) => matched.where(expr(s"bit_count(hash ^ __mh) <= $maxDist")))
       }
-      .start()
+    }
   }
 
   /** Maintenance companion of [[dedupAndRecordHistory]]: rewrite the

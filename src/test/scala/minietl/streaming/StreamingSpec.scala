@@ -643,6 +643,190 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  /** Contour-controlled WAV whose energy-contour hash is exactly `bits`. */
+  private def bitWav(bits: Set[Int]): Array[Byte] = {
+    val samples = new Array[Short](minietl.multimodal.PerceptualAudio.Windows * 4)
+    var amp = 100
+    (0 until minietl.multimodal.PerceptualAudio.Windows).foreach { w =>
+      if (w > 0 && bits(w - 1)) amp += 10
+      (0 until 4).foreach(k => samples(w * 4 + k) = amp.toShort)
+    }
+    minietl.multimodal.Multimodal.pcm16Wav(samples, 8000)
+  }
+
+  /** One ingest-dedup loop variant over a parquet file source. `rows` turns
+    * (id, code) pairs into source rows, where rows with equal codes are
+    * duplicates and rows with different codes are far apart.
+    */
+  private final class IngestLoop(
+      val name: String, val rows: Seq[(Long, Int)] => org.apache.spark.sql.DataFrame,
+      val start: (String, String, String, Trigger) =>
+        ((org.apache.spark.sql.DataFrame, Long) => Unit) =>
+          org.apache.spark.sql.streaming.StreamingQuery)
+
+  /** Every loop and mode: exact; near-dup in collision, estimate and exact
+    * modes; media at maxDist 0 and 2.
+    */
+  private lazy val ingestLoops: Seq[IngestLoop] = {
+    def source(schema: String, in: String) = spark.readStream.schema(schema).parquet(in)
+    val exact = new IngestLoop("exact",
+      rows => rows.map { case (id, c) => (id, s"fp$c") }.toDF("id", "fp"),
+      (in, hist, chk, trigger) => sink => Streaming.dedupAndRecordHistory(
+        source("id LONG, fp STRING", in), "fp", hist, chk, trigger)(sink))
+    val nearDup = Seq("collision", "estimate", "exact").map { mode =>
+      new IngestLoop(s"near-dup $mode",
+        rows => rows.map { case (id, c) =>
+          (id, (1 to 20).map(w => s"doc${c}w$w").mkString(" "))
+        }.toDF("id", "text"),
+        (in, hist, chk, trigger) => sink => Streaming.nearDupDedupAndRecordHistory(
+          source("id LONG, text STRING", in), "id", "text", hist, chk,
+          threshold = 0.6, crossBatch = mode, trigger = trigger)(sink))
+    }
+    // code bit j sets hash bits 8j..8j+2: distinct codes are >= 3 bits apart
+    def hashBits(c: Int) = (0 until 7).filter(j => (c >> j & 1) == 1)
+      .flatMap(j => Seq(8 * j, 8 * j + 1, 8 * j + 2)).toSet
+    val media = Seq(0, 2).map { maxDist =>
+      new IngestLoop(s"media maxDist $maxDist",
+        rows => rows.map { case (id, c) => (id, bitWav(hashBits(c))) }.toDF("id", "content"),
+        (in, hist, chk, trigger) => sink => Streaming.mediaHashDedupAndRecordHistory(
+          source("id LONG, content BINARY", in), "id", "content", "audio", maxDist,
+          hist, chk, trigger = trigger)(sink))
+    }
+    exact +: (nearDup ++ media)
+  }
+
+  /** The documented idempotent sink: each batch overwrites `dir/batch=<id>`. */
+  private def batchSink(dir: String)(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit =
+    batch.write.mode("overwrite").parquet(Streaming.batchOutputPath(dir, bid))
+
+  /** Every `batch=<id>` delta directory under a digest root. */
+  private def deltaDirs(root: String, batchId: Long): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (!f.isDirectory) Nil
+      else if (f.getName == s"batch=$batchId") Seq(f)
+      else Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    walk(new java.io.File(root))
+  }
+
+  test("every ingest-dedup loop leaves no cache pins after a two-batch drain") {
+    def pins = (spark.sharedState.cacheManager.isEmpty,
+      spark.sparkContext.getPersistentRDDs.keySet.toSet)
+    ingestLoops.foreach { loop =>
+      val dir = Files.createTempDirectory("minietl-ingest-pins")
+      val in = s"$dir/in"
+      Files.createDirectories(java.nio.file.Paths.get(in))
+      val before = pins
+      val q = loop.start(in, s"$dir/digest", s"$dir/chk", Trigger.ProcessingTime(0))(
+        batchSink(s"$dir/sink"))
+      try {
+        // the second batch meets history and within-batch duplicates
+        Seq(Seq((1L, 1), (2L, 2), (3L, 3)), Seq((4L, 1), (5L, 4), (6L, 4), (7L, 5)))
+          .foreach { rows =>
+            loop.rows(rows).coalesce(1).write.mode("append").parquet(in)
+            q.processAllAvailable()
+          }
+      } finally q.stop()
+      assert(spark.read.parquet(s"$dir/sink").count() === 5L, loop.name)
+      assert(pins === before, s"${loop.name} left cache pins behind")
+    }
+  }
+
+  test("every ingest-dedup loop runs a 150-row micro-batch in its pinned " +
+    "jobs and writes one sink file") {
+    // the most steady-state jobs per batch, and the most files one digest
+    // delta may have. The near-dup deltas are cut from the signature base,
+    // which is spread over the cores. The media near-dup pass caches frames
+    // whose fill jobs can race, so its pin keeps a margin of two jobs.
+    val pinned = Map("exact" -> (6, 1), "near-dup collision" -> (17, 4),
+      "near-dup estimate" -> (22, 4), "near-dup exact" -> (21, 4),
+      "media maxDist 0" -> (8, 1), "media maxDist 2" -> (27, 1))
+    ingestLoops.foreach { loop =>
+      val dir = Files.createTempDirectory("minietl-ingest-jobs")
+      val in = s"$dir/in"
+      val hist = s"$dir/digest"
+      val out = s"$dir/sink"
+      // a file lands by rename, so every job counted is the batch's own
+      def stage(name: String, rows: Seq[(Long, Int)]): java.io.File = {
+        loop.rows(rows).coalesce(1).write.parquet(s"$dir/$name")
+        new java.io.File(s"$dir/$name").listFiles().filter(_.getName.endsWith(".parquet")).head
+      }
+      def land(file: java.io.File, name: String): Unit = {
+        Files.move(file.toPath, java.nio.file.Paths.get(in, s"$name.parquet")); ()
+      }
+      Files.createDirectories(java.nio.file.Paths.get(in))
+      land(stage("first", Seq((1L, 1), (2L, 2))), "first")
+      val steady = stage("steady", (1 to 150).map(i => (100L + i, i % 120)))
+      val q = loop.start(in, hist, s"$dir/chk", Trigger.ProcessingTime(0))(batchSink(out))
+      try {
+        q.processAllAvailable()
+        val (_, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext) {
+          land(steady, "steady")
+          q.processAllAvailable()
+        }
+        val (maxJobs, maxDigestFiles) = pinned(loop.name)
+        info(s"${loop.name}: $jobs jobs, digest files " +
+          deltaDirs(hist, 1L).map(d => parquetFilesUnder(d.getPath)).mkString(","))
+        assert(jobs <= maxJobs, s"${loop.name}: one micro-batch ran $jobs jobs")
+        assert(parquetFilesUnder(Streaming.batchOutputPath(out, 1L)) === 1, loop.name)
+        val deltas = deltaDirs(hist, 1L)
+        assert(deltas.nonEmpty, loop.name)
+        deltas.foreach { d =>
+          assert(parquetFilesUnder(d.getPath) <= maxDigestFiles, s"${loop.name}: $d")
+        }
+        // codes 0..119 are new except 1 and 2, which the first batch admitted
+        assert(spark.read.parquet(Streaming.batchOutputPath(out, 1L)).count() === 118L,
+          loop.name)
+      } finally q.stop()
+    }
+  }
+
+  test("nearDupDedupAndRecordHistory replays a crashed batch exactly once " +
+    "in every crossBatch mode") {
+    def words(prefix: String, n: Int) = (1 to n).map(i => s"$prefix$i").mkString(" ")
+    val first = Seq((1L, words("alpha", 20)), (2L, words("gamma", 20)))
+    // 3 is a near-dup of 1 (history), 5 of 4 (within the batch)
+    val second = Seq((3L, words("alpha", 19) + " changed"), (4L, words("delta", 20)),
+      (5L, words("delta", 19) + " mutated"), (6L, words("omega", 20)))
+    Seq("collision", "estimate", "exact").foreach { mode =>
+      def drain(dir: String, failOn: Set[Long]): Unit = {
+        val q = Streaming.nearDupDedupAndRecordHistory(
+          spark.readStream.schema("id LONG, text STRING").parquet(s"$dir/in"),
+          "id", "text", s"$dir/digest", s"$dir/chk", threshold = 0.6,
+          crossBatch = mode) { (batch, bid) =>
+          batchSink(s"$dir/sink")(batch, bid)
+          // a crash AFTER the sink write, before the digest writes
+          if (batch.select("id").as[Long].collect().exists(failOn))
+            sys.error("injected crash after sink write")
+        }
+        try q.processAllAvailable()
+        catch { case _: Exception => () } // the injected failure surfaces here
+        finally q.stop()
+      }
+      def land(dir: String, rows: Seq[(Long, String)]): Unit =
+        rows.toDF("id", "text").coalesce(1).write.mode("append").parquet(s"$dir/in")
+      val clean = Files.createTempDirectory(s"minietl-neardup-clean-$mode").toString
+      land(clean, first); drain(clean, Set.empty)
+      land(clean, second); drain(clean, Set.empty)
+      val crashed = Files.createTempDirectory(s"minietl-neardup-replay-$mode").toString
+      land(crashed, first); drain(crashed, Set.empty)
+      land(crashed, second); drain(crashed, Set(6L))
+      // the crashed attempt also left a torn delta: the clean run's own
+      // batch-1 rows, which would make every admitted doc its own duplicate
+      deltaDirs(s"$clean/digest", 1L).foreach { d =>
+        val torn = new java.io.File(d.getPath.replace(clean, crashed))
+        org.apache.commons.io.FileUtils.copyDirectory(d, torn)
+      }
+      drain(crashed, Set.empty) // restart: batch 1 replays under the same id
+      def rows(dir: String) = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+      assert(rows(s"$crashed/sink") === rows(s"$clean/sink"), mode)
+      Streaming.nearDupDigests("digest", mode).foreach { t =>
+        assert(rows(s"$crashed/${t.dir}") === rows(s"$clean/${t.dir}"), s"$mode ${t.dir}")
+      }
+      assert(spark.read.parquet(s"$clean/sink").select("id").as[Long].collect().sorted.toSeq
+        === Seq(1L, 2L, 4L, 6L), mode)
+    }
+  }
+
   test("compactHistory collapses the digest to deduplicated right-sized files") {
     val dir = Files.createTempDirectory("minietl-dedup-compact")
     val hist = s"$dir/digest"
