@@ -191,6 +191,24 @@ object EventAnalytics {
       .drop(xc, dev2)
   }
 
+  /** [[sigmaOutliers]] as a cleaning filter: the rows within k sigma of
+    * their group mean, without the helper columns (the `sigma_outlier_filter`
+    * stage and [[minietl.pipeline.PipelineBuilder.sigmaOutlierFilter]]).
+    */
+  def sigmaOutlierFilter(df: DataFrame, groupCols: Seq[String], valueCol: String,
+                         k: Int = 3): DataFrame =
+    sigmaOutliers(df, groupCols, valueCol, k).where(!col("is_outlier"))
+      .drop("group_n", "is_outlier")
+
+  /** [[madOutliers]] as a cleaning filter: the rows within k MADs of their
+    * group median, without the helper columns (the `mad_outlier_filter`
+    * stage and [[minietl.pipeline.PipelineBuilder.madOutlierFilter]]).
+    */
+  def madOutlierFilter(df: DataFrame, groupCols: Seq[String], valueCol: String,
+                       k: Int = 3): DataFrame =
+    madOutliers(df, groupCols, valueCol, k).where(!col("is_outlier"))
+      .drop("group_n", "median_x2_cents", "mad_x4_cents", "is_outlier")
+
   /** Day-over-day change per group (pandas `pct_change` at day grain, made
     * replay-exact): daily totals in integer cents, the previous OBSERVED
     * day's total, the exact cent delta, and the growth ratio as floored

@@ -646,6 +646,24 @@ object Ops {
     if (cumColumn.isDefined) out else out.drop(cum)
   }
 
+  /** The nucleus of each stratum taken best mass first: [[topPSelect]] in
+    * `mass desc, tieBreak asc` order, a deterministic set when the tie-break
+    * is unique. `shards` > 1 (or [[AutoShards]]) takes the
+    * [[topPSelectSalted]] per-(stratum, shard) nucleus instead, sharded on
+    * the tie-break. The `top_p_select` stage and
+    * [[minietl.pipeline.PipelineBuilder.topPSelect]] both build this.
+    */
+  def topPByMass(strataCol: String, massCol: String, pBasisPoints: Int,
+                 tieBreakCol: String, shards: Int = 1): Op = {
+    val order = Seq(col(massCol).desc, col(tieBreakCol).asc)
+    if (shards > 1 || shards == AutoShards)
+      topPSelectSalted(strataCol, massCol, pBasisPoints, order,
+        minietl.functions.PortableHash.md5Hash60(
+          concat(lit("tp-shard#"), col(tieBreakCol).cast("string"))),
+        shards)
+    else topPSelect(strataCol, massCol, pBasisPoints, order)
+  }
+
   /** Deterministic pre-training shuffle key: md5 of (seed, key). Sorting by
     * it is a uniform pseudo-random permutation of the corpus that any
     * engine reproduces bit-for-bit from the same seed. Use it as the ORDER

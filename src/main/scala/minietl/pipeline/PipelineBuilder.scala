@@ -71,13 +71,10 @@ final class PipelineBuilder(name: String = "pipeline") {
                   key: String, seed: String = "0"): PipelineBuilder =
     add(Ops.tokenBudget(strata, tokenCol, budget, Ops.shuffleKey(key, seed)),
       "token_budget")
+  /** Best-mass-first nucleus per stratum ([[Ops.topPByMass]]). */
   def topPSelect(strata: String, massCol: String, pBasisPoints: Int,
-                 tieBreakCol: String): PipelineBuilder = {
-    import org.apache.spark.sql.functions.col
-    // best-mass-first nucleus with a unique tie-break = deterministic set
-    add(Ops.topPSelect(strata, massCol, pBasisPoints,
-      Seq(col(massCol).desc, col(tieBreakCol).asc)), "top_p_select")
-  }
+                 tieBreakCol: String): PipelineBuilder =
+    add(Ops.topPByMass(strata, massCol, pBasisPoints, tieBreakCol), "top_p_select")
   def paragraphDedup(textCol: String, idCol: String, delim: String = "\n",
                      minChars: Int = 0): PipelineBuilder =
     add(df => minietl.text.ParagraphDedup.dedupParagraphs(
@@ -98,17 +95,13 @@ final class PipelineBuilder(name: String = "pipeline") {
     */
   def sigmaOutlierFilter(groupBy: Seq[String], valueCol: String,
                          k: Int = 3): PipelineBuilder =
-    add(df => minietl.events.EventAnalytics
-      .sigmaOutliers(df, groupBy, valueCol, k)
-      .where(!org.apache.spark.sql.functions.col("is_outlier"))
-      .drop("group_n", "is_outlier"), "sigma_outlier_filter")
+    add(df => minietl.events.EventAnalytics.sigmaOutlierFilter(df, groupBy, valueCol, k),
+      "sigma_outlier_filter")
 
+  /** Keeps rows within k MADs of their group median (the robust twin). */
   def madOutlierFilter(groupBy: Seq[String], valueCol: String,
                        k: Int = 3): PipelineBuilder =
-    add(df => minietl.events.EventAnalytics
-      .madOutliers(df, groupBy, valueCol, k)
-      .where(!org.apache.spark.sql.functions.col("is_outlier"))
-      .drop("group_n", "median_x2_cents", "mad_x4_cents", "is_outlier"),
+    add(df => minietl.events.EventAnalytics.madOutlierFilter(df, groupBy, valueCol, k),
       "mad_outlier_filter")
 
   def withSchema(schema: TableSchema): PipelineBuilder =
