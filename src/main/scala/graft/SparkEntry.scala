@@ -1762,14 +1762,14 @@ object SparkEntry {
         threshold = 0.4, bitsPerBand = 8, bands = 32, dim = 64,
         corpusPredicate = "id % 50 <> 0", benchPredicate = "id % 50 = 0"))),
 
-    // the PORTABLE variants are registered (md5-60-bit hashes → DuckDB
+    // the PORTABLE family is registered (md5-60-bit hashes → DuckDB
     // replays the whole signature/banding/verify pipeline); the xxhash64
-    // production variants share the plan shape and are spec-covered
+    // production family runs the same kernel body (HashFamilySpec)
     "q_minhash_neardup" -> Q(
       (s, dir) =>
-        minietl.dedup.Dedup.minhashNearDupPairsPortable(
+        minietl.dedup.Dedup.minhashNearDupPairs(
           documents(s, dir), "text", "doc_id", shingleN = 3, k = 64, bands = 16,
-          threshold = 0.5)
+          threshold = 0.5, family = minietl.functions.HashFamily.Portable)
           .orderBy("id_a", "id_b"),
       Some(minietl.dedup.Dedup.minhashPortableOracleSql(
         shingleN = 3, k = 64, bands = 16, threshold = 0.5))),
@@ -1780,9 +1780,9 @@ object SparkEntry {
     "q_dedup_clusters" -> Q(
       (s, dir) =>
         minietl.dedup.Dedup.connectedComponents(
-          minietl.dedup.Dedup.minhashNearDupPairsPortable(
+          minietl.dedup.Dedup.minhashNearDupPairs(
             documents(s, dir), "text", "doc_id", shingleN = 3, k = 64, bands = 16,
-            threshold = 0.5)
+            threshold = 0.5, family = minietl.functions.HashFamily.Portable)
             .select("id_a", "id_b"))
           .orderBy("id"),
       Some(s"""WITH RECURSIVE pairs AS (
@@ -1805,19 +1805,19 @@ object SparkEntry {
         // need more bands, whose shorter chunks collide pervasively and
         // degrade the blocking toward all-pairs (measured: bands=16 at
         // sf0.1 is ~25× slower than bands=4 for this corpus).
-        minietl.dedup.Dedup.simhashNearDupPairsPortable(documents(s, dir), "text", "doc_id",
-          maxHamming = 3, bands = 4)
+        minietl.dedup.Dedup.simhashNearDupPairs(documents(s, dir), "text", "doc_id",
+          maxHamming = 3, bands = 4, family = minietl.functions.HashFamily.Portable)
           .orderBy("id_a", "id_b"),
       Some(minietl.dedup.Dedup.simhashPortableOracleSql(maxHamming = 3, bands = 4))),
 
-    // the portable (md5 token hash) fingerprint variant is registered so the
+    // the portable (md5 token hash) fingerprint family is registered so the
     // rolling-hash fold is verifiable by DuckDB; the xxhash64 production
-    // variant shares the identical fold and is spec-covered
+    // family runs the identical fold and is spec-covered
     "q_fingerprint" -> Q(
       (s, dir) =>
         documents(s, dir)
           .select(col("doc_id"),
-            minietl.text.TextAnalysis.fingerprintPortable(col("text")).as("fp"))
+            minietl.text.TextAnalysis.fingerprint(col("text"), minietl.functions.HashFamily.Portable).as("fp"))
           .orderBy("doc_id"),
       Some(s"""SELECT doc_id,
               |  list_reduce(
@@ -1836,8 +1836,8 @@ object SparkEntry {
     // overlap join DuckDB-replayable.
     "q_winnow_fingerprints" -> Q(
       (s, dir) =>
-        minietl.dedup.Winnow.fingerprintsPortable(
-            documents(s, dir), "text", "doc_id", k = 4, w = 8)
+        minietl.dedup.Winnow.fingerprints(
+            documents(s, dir), "text", "doc_id", k = 4, w = 8, family = minietl.functions.HashFamily.Portable)
           .withColumnRenamed("id", "doc_id")
           .orderBy("doc_id", "pos"),
       Some(minietl.dedup.Winnow.fingerprintsOracleSql(k = 4, w = 8))),
@@ -1846,8 +1846,9 @@ object SparkEntry {
     // fingerprints, boilerplate values census-capped before the join
     "q_winnow_overlap" -> Q(
       (s, dir) =>
-        minietl.dedup.Winnow.overlapPairsPortable(
-            documents(s, dir), "text", "doc_id", k = 4, w = 8, minShared = 2)
+        minietl.dedup.Winnow.overlapPairs(
+            documents(s, dir), "text", "doc_id", k = 4, w = 8, minShared = 2,
+            family = minietl.functions.HashFamily.Portable)
           .orderBy("id_a", "id_b"),
       Some(minietl.dedup.Winnow.overlapOracleSql(k = 4, w = 8, minShared = 2))),
 
@@ -1856,8 +1857,9 @@ object SparkEntry {
     // the corpus carries natural shared prefixes up to ~90 tokens
     "q_shared_spans" -> Q(
       (s, dir) =>
-        minietl.dedup.Winnow.sharedSpansPortable(
-            documents(s, dir), "text", "doc_id", k = 4, minSpanTokens = 8)
+        minietl.dedup.Winnow.sharedSpans(
+            documents(s, dir), "text", "doc_id", k = 4, minSpanTokens = 8,
+            family = minietl.functions.HashFamily.Portable)
           .orderBy("id_a", "id_b", "start_a", "start_b"),
       Some(minietl.dedup.Winnow.sharedSpansOracleSql(k = 4, minSpanTokens = 8))),
 
@@ -1865,8 +1867,9 @@ object SparkEntry {
     // lowest doc_id carrying it; untouched docs round-trip byte-identical
     "q_span_dedup" -> Q(
       (s, dir) =>
-        minietl.dedup.Winnow.spanDedupPortable(
-            documents(s, dir), "text", "doc_id", k = 4, minSpanTokens = 8)
+        minietl.dedup.Winnow.spanDedup(
+            documents(s, dir), "text", "doc_id", k = 4, minSpanTokens = 8,
+            family = minietl.functions.HashFamily.Portable)
           .select("doc_id", "text")
           .orderBy("doc_id"),
       Some(minietl.dedup.Winnow.spanDedupOracleSql(k = 4, minSpanTokens = 8))),
@@ -1889,9 +1892,10 @@ object SparkEntry {
           (-2L, (1 to 8).map("zqx" + _).mkString(" ")),
           (-1L, ((1 to 6).map("zqa" + _) ++ (1 to 8).map("zqx" + _) ++
             (7 to 12).map("zqa" + _)).mkString(" ")))).toDF("doc_id", "text")
-        minietl.dedup.Winnow.spanDedupFixpointPortable(
+        minietl.dedup.Winnow.spanDedupFixpoint(
             documents(s, dir).select("doc_id", "text").union(planted),
-            "text", "doc_id", k = 4, minSpanTokens = 8, maxIter = 4)
+            "text", "doc_id", k = 4, minSpanTokens = 8, maxIter = 4,
+            family = minietl.functions.HashFamily.Portable)
           .select("doc_id", "text")
           .orderBy("doc_id")
       },
@@ -1919,11 +1923,11 @@ object SparkEntry {
         val h = (1 to 5).map("zsh" + _).mkString(" ")
         val ahb = (1 to 5).map("zsa" + _).mkString(" ") + " " + h + " " +
           (1 to 5).map("zsb" + _).mkString(" ")
-        minietl.dedup.Winnow.spanDedupFixpointPortable(
+        minietl.dedup.Winnow.spanDedupFixpoint(
             s.createDataFrame(Seq((0L, ahb), (1L, ahb), (2L, h)))
               .toDF("doc_id", "text"),
             "text", "doc_id", k = 3, minSpanTokens = 5, maxPostings = 2,
-            maxIter = 3)
+            maxIter = 3, family = minietl.functions.HashFamily.Portable)
           .select("doc_id", "text")
           .orderBy("doc_id")
       },
@@ -2928,7 +2932,7 @@ object SparkEntry {
         val q = minietl.streaming.Streaming.nearDupDedupAndRecordHistory(
           stream, "doc_id", "text", s"$work/digest", s"$work/chk",
           shingleN = 3, k = 64, bands = 16, threshold = 0.5,
-          crossBatch = "collision", portable = true) { (fresh, bid) =>
+          crossBatch = "collision", family = minietl.functions.HashFamily.Portable) { (fresh, bid) =>
           fresh.select("doc_id").write.mode("overwrite")
             .parquet(minietl.streaming.Streaming.batchOutputPath(outDir, bid))
         }

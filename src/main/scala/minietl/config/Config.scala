@@ -184,7 +184,7 @@ object Config {
                 m.getOrElse("type", "").toString.toLowerCase) =>
               s"$what api pagination type must be page or offset"
           },
-        ).flatten
+        ).flatten ++ mapErrors(cc.options, Seq("params", "headers"), s"$what api")
       case "sql" =>
         Seq(
           if (!cc.options.contains("connection_string")) Some(s"$what sql needs connection_string") else None,
@@ -227,13 +227,20 @@ object Config {
             Seq(s"$what csv mode cannot be combined with bad_records_path " +
               "(the capture read is always PERMISSIVE; drop one of the two)")
           else Nil
-        needsPath ++ modeErr ++ schemaErrs ++ brpErrs
+        needsPath ++ modeErr ++ schemaErrs ++ brpErrs ++
+          mapErrors(cc.options, Seq("options"), s"$what $t")
       case t if (if (kind == "source") sourceTypes else sinkTypes).contains(t) =>
         if (cc.options.contains("filepath") || cc.options.contains("path")) Nil
         else Seq(s"$what $t needs filepath")
       case t => Seq(s"unknown $kind type '$t' ($what)")
     }
   }
+
+  /** Errors for the keys a reader passes on with [[strMap]]: each, when
+    * present, must be a mapping with a value for every key.
+    */
+  private def mapErrors(o: Map[String, Any], keys: Seq[String], at: String): Seq[String] =
+    keys.flatMap(k => o.get(k).toSeq.flatMap(Stages.TextMap.errors(k, _, at)))
 
   /** Transformer component check, shared by the linear and DAG validators. */
   private def checkTransformer(t: ComponentConfig, at: String): Seq[String] =
@@ -722,7 +729,7 @@ object Config {
     * `aggregate` → `window_agg` — because unbounded semantics need a
     * watermark contract, not silent adoption.)
     */
-  val streamableStageTypes: Set[String] = Stages.all.flatMap { d =>
+  lazy val streamableStageTypes: Set[String] = Stages.all.flatMap { d =>
     d.form match {
       case Stages.Batch(_, true) => d.typ +: d.aliases
       case _ => Nil
@@ -788,7 +795,8 @@ object Config {
           (if (c.source.options.contains("filepath") || c.source.options.contains("path"))
              Seq("stream source rate takes no path") else Nil)
       case "socket" =>
-        val so = strMap(c.source.options.getOrElse("options", Map.empty[String, Any]))
+        val so = c.source.options.get("options")
+          .collect { case m: Map[String, Any] @unchecked => m.keySet }.getOrElse(Set.empty)
         (if (c.source.options.contains("schema"))
            Seq("stream source socket has a fixed schema (value STRING) — " +
              "remove 'schema'")
@@ -815,6 +823,7 @@ object Config {
         }
         pathErr ++ schemaErrs
     }
+    val optErrs = mapErrors(c.source.options, Seq("options"), s"stream source ${c.source.typ}")
     val stageErrs = c.stages.zipWithIndex.flatMap { case (s, i) =>
       val at = s"stream stage[$i] ${s.typ}"
       Stages.find(s.typ).map(d => (d, d.form)) match {
@@ -886,7 +895,7 @@ object Config {
           s"interval like 30s/5m/1h, got '$t'")
       }
     }
-    srcErrs ++ stageErrs ++ sinkErrs ++ modeErrs ++ triggerErrs
+    srcErrs ++ optErrs ++ stageErrs ++ sinkErrs ++ modeErrs ++ triggerErrs
   }
 
   /** StreamConfig → assembled [[StreamPipeline]]. Fails on validation

@@ -384,8 +384,8 @@ private[config] object Stages {
           df => minietl.dedup.Dedup.minhashDedupClusters(df, text, key, n, k, bands, thr)
         else df => minietl.dedup.Dedup.minhashDedup(df, text, key, n, k, bands, thr)
       },
-      // lshBandKeys requires k % bands == 0; the defaults stand in for an
-      // unset key, so overriding just one is still caught pre-run
+      // HashFamily.bandKeys requires k % bands == 0; the defaults stand in
+      // for an unset key, so overriding just one is still caught pre-run
       check = (o, at) => (o.intIfNumeric("k"), o.intIfNumeric("bands")) match {
         case (Some(k), Some(b)) if b > 0 && k % b != 0 =>
           Seq(s"$at: 'bands' ($b) must divide 'k' ($k)")
@@ -565,7 +565,10 @@ private[config] object Stages {
       Seq(req("group_by", Texts), req("value"), num("lo", 0.0, 1.0, 0.01), num("hi", 0.0, 1.0, 0.99)),
       Batch(o => Ops.winsorize(o.strs("group_by"), o.str("value"), o.num("lo"), o.num("hi"))),
       advice = percentileAdvice("percentile clipping")),
-    StageDef("impute", Seq(req("group_by", Texts), req("value"), req("strategy")),
+    StageDef("impute", Seq(req("group_by", Texts), req("value"),
+        Opt("strategy", required = true, check = (v, at) =>
+          if (Set("median", "mode")(String.valueOf(v))) Nil
+          else Seq(s"$at: strategy must be 'median' or 'mode', got '$v'"))),
       Batch(o => Ops.imputeGroup(o.str("value"), o.strs("group_by"), o.str("strategy"))),
       advice = (o, at) =>
         if (o.get("strategy").exists(String.valueOf(_) == "median")) percentileAdvice("strategy 'median'")(o, at)
@@ -726,7 +729,7 @@ private[config] object Stages {
             crossBatch = mode, trigger = r.trigger)(r.write(None))
         },
         o => Streaming.nearDupDigests(o.str("history"), crossBatch(o))),
-      // Dedup.lshBandKeys requires bands | num_hashes — a pre-run error,
+      // HashFamily.bandKeys requires bands | num_hashes — a pre-run error,
       // not a drain-time one (an unparseable value reads as -1)
       check = (o, at) => {
         val k = o.intIfNumeric("num_hashes").getOrElse(-1)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import minietl.functions.HashFamily
+
 /** Deduplication operators for training-data pipelines, each designed around
   * one shuffle on a compact key rather than any all-pairs comparison:
   *
@@ -21,9 +23,16 @@ import org.apache.spark.sql.functions._
   * array functions); signatures are computed scan-side and are tiny relative
   * to the documents, so the shuffles move kilobytes per row, not the text.
   *
+  * Hash families: the MinHash and SimHash pair functions take a
+  * [[minietl.functions.HashFamily]] value: `Production` (xxhash64, the
+  * default) or `Portable` (md5-60-bit, replayed end to end by
+  * [[minhashPortableOracleSql]] / [[simhashPortableOracleSql]]). The
+  * family supplies only the hashes and band keys; every step around them
+  * is one body for both.
+  *
   * CACHE LIFETIME CONTRACT: the pair-finding functions
-  * ([[minhashNearDupPairs]], [[minhashNearDupPairsPortable]],
-  * [[ngramJaccardPairs]], [[ngramContainmentPairs]]) `persist()` their
+  * ([[minhashNearDupPairs]], for either family, [[ngramJaccardPairs]],
+  * [[ngramContainmentPairs]]) `persist()` their
   * signature/posting frames because the returned LAZY plan references them
   * two or three times — and a lazy return cannot unpersist behind itself.
   * The caches live until the caller releases them: run one invocation to
@@ -123,46 +132,20 @@ object Dedup {
   def minhashEstimate(sigA: Column, sigB: Column): Column =
     minietl.functions.vec.minhashEstimate(sigA, sigB)
 
-  /** Explode a signature into `bands` LSH bucket keys: rows agreeing on all
-    * `k/bands` values inside any band land in the same bucket. Returns
-    * array<struct<band:int, key:bigint>> for `explode`.
-    */
-  def lshBandKeys(sig: Column, bands: Int, k: Int): Column = {
-    val rowsPerBand = k / bands
-    require(bands * rowsPerBand == k, s"bands=$bands must divide k=$k")
-    // Band key = xxhash64 fold over the band's lanes — pure long arithmetic,
-    // no per-band string building.
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.cast("int").as("band"),
-        aggregate(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-          b.cast("bigint"), (acc, v) => xxhash64(acc, v)).as("key")))
-  }
-
-  /** MinHash-LSH near-duplicate pairs: returns (idA, idB, est, jac) for
-    * candidate pairs sharing >=1 LSH bucket, verified by exact Jaccard >=
-    * `threshold`. Plan shape: scan -> signature (narrow) -> explode bands ->
-    * shuffle on (band, key) -> within-bucket self-join -> dedup pairs ->
-    * verify. The only all-pairs work happens inside buckets.
-    */
   /** The (id, hsh, sig) signature base every MinHash consumer derives from:
     * sorted distinct shingle hashes plus the k-lane signature, computed
-    * ONCE per document. `portable` selects the md5-60-bit replayable hash
-    * family (engine-replayable, slower md5); xxhash64 otherwise. NOT
-    * persisted here — the caller owns persist/release: the public pair
-    * entries persist + register with RunCaches; the streaming ingest loop
-    * checkpoints it once per micro-batch, so one batch's shingle hashing
-    * never runs twice (within-batch dedup AND digest banding both read
-    * this frame).
+    * ONCE per document. NOT persisted here — the caller owns
+    * persist/release: [[minhashNearDupPairs]] persists + registers with
+    * RunCaches; the streaming ingest loop checkpoints it once per
+    * micro-batch, so one batch's shingle hashing never runs twice
+    * (within-batch dedup AND digest banding both read this frame).
     */
   private[minietl] def minhashBase(df: DataFrame, textCol: String, idCol: String,
                                    shingleN: Int, k: Int, seed: Long,
-                                   portable: Boolean): DataFrame = {
-    val hsh =
-      if (portable) md5ShingleHashesSorted(col(textCol), shingleN)
-      else shingleHashesSorted(col(textCol), shingleN)
-    spread(df).select(col(idCol).as("id"), hsh.as("hsh"))
+                                   family: HashFamily): DataFrame =
+    spread(df).select(col(idCol).as("id"),
+        family.shingleHashes(col(textCol), shingleN).as("hsh"))
       .withColumn("sig", minhashFromHashes(col("hsh"), k, seed))
-  }
 
   /** LSH banding of a signature base: one (id, band, key) row per band for
     * the bucket shuffle — the slim proxy rows (guide §2.3: shuffle keys and
@@ -170,36 +153,57 @@ object Dedup {
     * join back per confirmed candidate only.
     */
   private[minietl] def bandRows(base: DataFrame, bands: Int, k: Int,
-                                portable: Boolean): DataFrame = {
-    val keys =
-      if (portable) lshBandKeysPortable(col("sig"), bands, k)
-      else lshBandKeys(col("sig"), bands, k)
-    base.select(col("id"), explode(keys).as("bk"))
+                                family: HashFamily): DataFrame =
+    base.select(col("id"), explode(family.bandKeys(col("sig"), bands, k)).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
 
-  /** Candidate self-join + exact-Jaccard verify over a CALLER-PERSISTED
-    * signature base — the shared tail behind [[minhashNearDupPairs]],
-    * [[minhashNearDupPairsPortable]] and the streaming ingest loop.
+  /** Candidate self-join + est/jac verify over a CALLER-PERSISTED (id, hsh,
+    * sig) signature base and its banding — the tail behind
+    * [[minhashNearDupPairs]] and the streaming ingest loop.
     */
   private[minietl] def minhashPairsFromSigBase(base: DataFrame, bands: Int, k: Int,
                                                threshold: Double, maxBucketSize: Int,
-                                               portable: Boolean): DataFrame =
-    minhashPairsFromBase(base, bandRows(base, bands, k, portable),
-      threshold, maxBucketSize)
+                                               family: HashFamily): DataFrame = {
+    val banded = dropOversizedBuckets(bandRows(base, bands, k, family),
+      Seq("band", "key"), maxBucketSize, "minhash")
+    val pairs = banded.as("a")
+      .join(banded.as("b"), col("a.band") === col("b.band") && col("a.key") === col("b.key")
+        && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+    pairs
+      .join(base.select(col("id").as("id_a"), col("sig").as("sig_a"), col("hsh").as("sh_a")), "id_a")
+      .join(base.select(col("id").as("id_b"), col("sig").as("sig_b"), col("hsh").as("sh_b")), "id_b")
+      .withColumn("est", round(minhashEstimate(col("sig_a"), col("sig_b")), 4))
+      .withColumn("jac", round(minietl.functions.vec.jaccardSorted(col("sh_a"), col("sh_b")), 4))
+      .filter(col("jac") >= threshold)
+      .select("id_a", "id_b", "est", "jac")
+  }
 
+  /** MinHash-LSH near-duplicate pairs: returns (idA, idB, est, jac) for
+    * candidate pairs sharing >=1 LSH bucket, verified by exact Jaccard >=
+    * `threshold`. Plan shape: scan -> signature (narrow) -> explode bands ->
+    * shuffle on (band, key) -> within-bucket self-join -> dedup pairs ->
+    * verify. The only all-pairs work happens inside buckets.
+    *
+    * With `family = Portable` the lane arithmetic `((x mod p) * a + b) mod
+    * p` (p = 2^31-1) never exceeds 2^62, so an engine with 64-bit integers
+    * and md5 replays the ENTIRE computation bit-for-bit —
+    * [[minhashPortableOracleSql]] generates that SQL (embed the same
+    * seed/k/bands). The plan differs from production only in the band
+    * shuffle carrying k/bands raw lanes (~8 B each) instead of one key.
+    */
   def minhashNearDupPairs(df: DataFrame, textCol: String, idCol: String,
                           shingleN: Int = 3, k: Int = 128, bands: Int = 32,
                           threshold: Double = 0.8, seed: Long = 42L,
-                          maxBucketSize: Int = DefaultMaxBucket): DataFrame = {
+                          maxBucketSize: Int = DefaultMaxBucket,
+                          family: HashFamily = HashFamily.Production): DataFrame = {
     // Persisted because the plan references it three times (banding + two
     // candidate-fetch joins); without it the signature computation — the
     // expensive scan-side work — would run three times.
-    val base = minhashBase(df, textCol, idCol, shingleN, k, seed,
-      portable = false).persist()
+    val base = minhashBase(df, textCol, idCol, shingleN, k, seed, family).persist()
     minietl.pipeline.RunCaches.register(base)
-    minhashPairsFromSigBase(base, bands, k, threshold, maxBucketSize,
-      portable = false)
+    minhashPairsFromSigBase(base, bands, k, threshold, maxBucketSize, family)
   }
 
   /** Spread a narrow scan across all cores when the input arrives in fewer
@@ -283,104 +287,13 @@ object Dedup {
     })
   }
 
-  /** Candidate self-join + est/jac verify over a persisted (id, hsh, sig)
-    * frame and its (id, band, key) banding — shared by the production and
-    * portable MinHash variants so the verify tail cannot diverge.
+  /** The CTE head every portable MinHash replay starts from, ending in
+    * `sig(id, hh, sg)`: tokens → shingles → sorted distinct md5-60-bit
+    * shingle hashes → the k-lane signature, with the same splitmix (a, b)
+    * streams as [[minhashFromHashes]] rendered as literals.
     */
-  private def minhashPairsFromBase(base: DataFrame, rawBanded: DataFrame,
-                                   threshold: Double, maxBucketSize: Int): DataFrame = {
-    val banded = dropOversizedBuckets(rawBanded, Seq("band", "key"), maxBucketSize, "minhash")
-    val pairs = banded.as("a")
-      .join(banded.as("b"), col("a.band") === col("b.band") && col("a.key") === col("b.key")
-        && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    pairs
-      .join(base.select(col("id").as("id_a"), col("sig").as("sig_a"), col("hsh").as("sh_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("sig").as("sig_b"), col("hsh").as("sh_b")), "id_b")
-      .withColumn("est", round(minhashEstimate(col("sig_a"), col("sig_b")), 4))
-      .withColumn("jac", round(minietl.functions.vec.jaccardSorted(col("sh_a"), col("sh_b")), 4))
-      .filter(col("jac") >= threshold)
-      .select("id_a", "id_b", "est", "jac")
-  }
-
-  // ------------------------------------------- portable (replayable) path
-  /** md5-derived 60-bit positive hash of each element of a string array —
-    * the ENGINE-PORTABLE hash (any SQL engine computes
-    * `CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT)`). Same role
-    * as [[hashedShingles]]' xxhash64 but slower per string (md5 + hex), so
-    * the xxhash64 variants remain the production path; this one exists so
-    * the WHOLE near-dup computation can be replayed by an independent
-    * engine (same trick as `TextAnalysis.fingerprintPortable`).
-    */
-  def md5Hashes60(arr: Column): Column =
-    transform(arr, minietl.functions.PortableHash.md5Hash60(_))
-
-  /** Sorted distinct md5-60-bit shingle hashes — the PORTABLE twin of
-    * [[shingleHashesSorted]] (any SQL engine with md5 replays it).
-    */
-  def md5ShingleHashesSorted(text: Column, n: Int): Column =
-    array_sort(array_distinct(md5Hashes60(shingles(text, n))))
-
-  /** LSH band keys for the PORTABLE signature family: the band key is the
-    * raw lane slice (array<bigint> of k/bands values) instead of
-    * [[lshBandKeys]]' xxhash64 fold — any engine replays slice equality;
-    * the fatter key is the replayability tax. Returns
-    * array<struct<band:int, key:array<bigint>>> for `explode`.
-    */
-  def lshBandKeysPortable(sig: Column, bands: Int, k: Int): Column = {
-    val rpb = k / bands
-    require(bands * rpb == k, s"bands=$bands must divide k=$k")
-    array((0 until bands).map(b =>
-      struct(lit(b).as("band"), slice(sig, b * rpb + 1, rpb).as("key"))): _*)
-  }
-
-  /** MinHash near-dup pairs, PORTABLE variant: md5-60-bit shingle hashes
-    * and array-slice band keys in place of xxhash64. The lane arithmetic
-    * `((x mod p) * a + b) mod p` with p = 2^31-1 never exceeds 2^62, so an
-    * engine with 64-bit integers and md5 replays the ENTIRE computation
-    * bit-for-bit — [[minhashPortableOracleSql]] generates that SQL (embed
-    * the same seed/k/bands). Plan shape is identical to
-    * [[minhashNearDupPairs]] except the band shuffle carries the k/bands
-    * raw lane values (~8 B each) instead of one folded key — the
-    * replayability tax. The xxhash64 variant stays the production path.
-    */
-  def minhashNearDupPairsPortable(df: DataFrame, textCol: String, idCol: String,
-                                  shingleN: Int = 3, k: Int = 64, bands: Int = 16,
-                                  threshold: Double = 0.5, seed: Long = 42L,
-                                  maxBucketSize: Int = DefaultMaxBucket): DataFrame = {
-    val base = minhashBase(df, textCol, idCol, shingleN, k, seed,
-      portable = true).persist()
-    minietl.pipeline.RunCaches.register(base)
-    minhashPairsFromSigBase(base, bands, k, threshold, maxBucketSize,
-      portable = true)
-  }
-
-  /** Keep one representative (min id) per near-dup cluster over the
-    * PORTABLE pair list — [[minhashDedup]]'s replayable twin, used by the
-    * oracle-gated ingest-dedup loop
-    * ([[minietl.streaming.Streaming.nearDupDedupAndRecordHistory]] with
-    * `portable = true`).
-    */
-  def minhashDedupPortable(df: DataFrame, textCol: String, idCol: String,
-                           shingleN: Int = 3, k: Int = 64, bands: Int = 16,
-                           threshold: Double = 0.5): DataFrame = {
-    val dupIds = minhashNearDupPairsPortable(df, textCol, idCol, shingleN, k, bands, threshold)
-      .select(col("id_b").as("__dup")).distinct()
-    df.join(dupIds, df(idCol) === col("__dup"), "left_anti")
-  }
-
-  /** ANSI SQL (DuckDB dialect) replaying [[minhashNearDupPairsPortable]]
-    * end-to-end: same md5-60-bit shingle hashes, same splitmix (a, b)
-    * streams rendered as literals, same band slicing and Jaccard verify.
-    */
-  def minhashPortableOracleSql(shingleN: Int = 3, k: Int = 64, bands: Int = 16,
-                               threshold: Double = 0.5, seed: Long = 42L,
-                               table: String = "documents", idCol: String = "doc_id",
-                               textCol: String = "text",
-                               maxBucketSize: Int = DefaultMaxBucket): String = {
-    val rpb = k / bands
-    require(bands * rpb == k, s"bands=$bands must divide k=$k")
+  private def minhashSigCtes(shingleN: Int, k: Int, seed: Long, table: String,
+                             idCol: String, textCol: String): String = {
     val (as, bs) = minietl.functions.VectorOps.hashParams(k, seed)
     val aLit = as.mkString("[", ",", "]")
     val bLit = bs.mkString("[", ",", "]")
@@ -396,7 +309,21 @@ object Dedup {
        |sig AS (SELECT id, hh, list_transform(range(1, $k + 1),
        |         i -> list_min(list_transform(hh,
        |                x -> ((x % 2147483647) * ($aLit)[i] + ($bLit)[i]) % 2147483647))) AS sg
-       |        FROM hs),
+       |        FROM hs)""".stripMargin
+  }
+
+  /** ANSI SQL (DuckDB dialect) replaying [[minhashNearDupPairs]] on the
+    * portable family end-to-end: same md5-60-bit shingle hashes, same
+    * signature lanes, same band slicing and Jaccard verify.
+    */
+  def minhashPortableOracleSql(shingleN: Int = 3, k: Int = 64, bands: Int = 16,
+                               threshold: Double = 0.5, seed: Long = 42L,
+                               table: String = "documents", idCol: String = "doc_id",
+                               textCol: String = "text",
+                               maxBucketSize: Int = DefaultMaxBucket): String = {
+    val rpb = k / bands
+    require(bands * rpb == k, s"bands=$bands must divide k=$k")
+    s"""${minhashSigCtes(shingleN, k, seed, table, idCol, textCol)},
        |bnd0 AS (SELECT id, u.b AS band, sg[u.b * $rpb + 1 : (u.b + 1) * $rpb] AS key
        |        FROM sig CROSS JOIN (SELECT unnest(range(0, $bands)) AS b) u),
        |big AS (SELECT band, key FROM bnd0 GROUP BY band, key HAVING count(*) > $maxBucketSize),
@@ -414,10 +341,10 @@ object Dedup {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
-  /** ANSI SQL (DuckDB dialect) replaying the PORTABLE collision-mode
-    * ingest-dedup loop
+  /** ANSI SQL (DuckDB dialect) replaying the collision-mode ingest-dedup
+    * loop on the portable family
     * ([[minietl.streaming.Streaming.nearDupDedupAndRecordHistory]] with
-    * `portable = true`) end to end, drain by drain: for each batch
+    * `family = Portable`) end to end, drain by drain: for each batch
     * predicate (over the id column, in order), (1) the within-batch
     * near-dup pass — signatures, capped banding, candidate pairs, exact
     * Jaccard ≥ threshold, drop the greater id; (2) the cross-batch
@@ -441,24 +368,9 @@ object Dedup {
     require(batchPreds.nonEmpty, "need at least one batch predicate")
     val rpb = k / bands
     require(bands * rpb == k, s"bands=$bands must divide k=$k")
-    val (as, bs) = minietl.functions.VectorOps.hashParams(k, seed)
-    val aLit = as.mkString("[", ",", "]")
-    val bLit = bs.mkString("[", ",", "]")
-    val gram = (0 until shingleN)
-      .map(j => if (j == 0) "toks[i]" else s"toks[i+$j]").mkString(" || ' ' || ")
     val inter = "len(list_filter(sa.hh, x -> list_contains(sb.hh, x)))"
     val head =
-      s"""WITH d AS (SELECT $idCol AS id, $textCol AS t, string_split($textCol, ' ') AS toks
-         |           FROM $table),
-         |sh AS (SELECT id, CASE WHEN len(toks) < $shingleN THEN [t]
-         |         ELSE list_transform(range(1, len(toks) - ${shingleN - 2}), i -> $gram) END AS ss
-         |       FROM d),
-         |hs AS (SELECT id, list_sort(list_distinct(list_transform(ss,
-         |         s -> ${minietl.functions.PortableHash.sql("s")}))) AS hh FROM sh),
-         |sig AS (SELECT id, hh, list_transform(range(1, $k + 1),
-         |         i -> list_min(list_transform(hh,
-         |                x -> ((x % 2147483647) * ($aLit)[i] + ($bLit)[i]) % 2147483647))) AS sg
-         |        FROM hs),
+      s"""${minhashSigCtes(shingleN, k, seed, table, idCol, textCol)},
          |bnd_all AS (SELECT id, u.b AS band, sg[u.b * $rpb + 1 : (u.b + 1) * $rpb] AS key
          |            FROM sig CROSS JOIN (SELECT unnest(range(0, $bands)) AS b) u)""".stripMargin
     val perBatch = batchPreds.zipWithIndex.map { case (pred, i) =>
@@ -517,6 +429,24 @@ object Dedup {
     df.join(dupIds, df(idCol) === col("__dup"), "left_anti")
   }
 
+  /** Above this many pairs the driver fast path is off. 2M edges ≈ 32 MB of
+    * longs — the same order of driver memory a broadcast join build side
+    * uses, and near-dup pair lists are SPARSE by construction (the LSH
+    * verify keeps only genuinely-similar pairs), so real corpora land under
+    * it unless they are pathologically duplicate-heavy.
+    *
+    * Re-probed r17 (cc_crossover, chain graphs, both paths forced): the
+    * WALL crossover sits above 8M pairs on local[32] — driver/distributed
+    * 6.7/24.4 s at 1M, 9.8/26.6 s at 2M, 17.9/37.5 s at 4M, 40.4/51.0 s
+    * at 8M — so 2M is NOT the wall optimum; it stays the default because
+    * the binding constraint is transient driver HEAP (collected Rows +
+    * boxed union-find entries ≈ 200-300 B/pair ⇒ ~0.5 GB at 2M, multi-GB
+    * at 8M), which a library must bound for the modest driver heaps real
+    * deployments run. Callers with generous drivers raise
+    * `driverPathMaxPairs` and inherit the measured win.
+    */
+  val DriverCcMaxPairs: Long = 2000000L
+
   /** Connected components over an undirected pair list (columns id_a, id_b):
     * returns (id, comp) where comp is the minimum id reachable from id.
     * The distributed path is ALTERNATING LARGE-STAR / SMALL-STAR contraction
@@ -536,24 +466,6 @@ object Dedup {
     * chains — at the default 100 it allows graphs astronomically past any
     * real corpus (rounds grow with log of the largest component).
     */
-  /** Above this many pairs the driver fast path is off. 2M edges ≈ 32 MB of
-    * longs — the same order of driver memory a broadcast join build side
-    * uses, and near-dup pair lists are SPARSE by construction (the LSH
-    * verify keeps only genuinely-similar pairs), so real corpora land under
-    * it unless they are pathologically duplicate-heavy.
-    *
-    * Re-probed r17 (cc_crossover, chain graphs, both paths forced): the
-    * WALL crossover sits above 8M pairs on local[32] — driver/distributed
-    * 6.7/24.4 s at 1M, 9.8/26.6 s at 2M, 17.9/37.5 s at 4M, 40.4/51.0 s
-    * at 8M — so 2M is NOT the wall optimum; it stays the default because
-    * the binding constraint is transient driver HEAP (collected Rows +
-    * boxed union-find entries ≈ 200-300 B/pair ⇒ ~0.5 GB at 2M, multi-GB
-    * at 8M), which a library must bound for the modest driver heaps real
-    * deployments run. Callers with generous drivers raise
-    * `driverPathMaxPairs` and inherit the measured win.
-    */
-  val DriverCcMaxPairs: Long = 2000000L
-
   def connectedComponents(pairs: DataFrame, maxIter: Int = 100,
                           driverPathMaxPairs: Long = DriverCcMaxPairs): DataFrame =
     connectedComponentsWithStats(pairs, maxIter, driverPathMaxPairs)._1
@@ -860,24 +772,20 @@ object Dedup {
     * within Hamming distance `bands - 1` shares at least one exact chunk, so
     * candidate recall is complete only when `maxHamming < bands` — enforced,
     * because silently missing pairs is worse than a bigger explode. Verify
-    * by exact Hamming <= maxHamming.
+    * by exact Hamming <= maxHamming. With `family = Portable` the token
+    * hashes are md5-60-bit, so bits 60-63 of every signature are 0 (four
+    * fewer discriminating bits, the replayability tax) and
+    * [[simhashPortableOracleSql]] replays the whole computation.
     */
   def simhashNearDupPairs(df: DataFrame, textCol: String, idCol: String,
                           maxHamming: Int = 3, bands: Int = 4,
-                          maxBucketSize: Int = DefaultMaxBucket): DataFrame = {
+                          maxBucketSize: Int = DefaultMaxBucket,
+                          family: HashFamily = HashFamily.Production): DataFrame = {
     require(Seq(1, 2, 4, 8, 16, 32, 64).contains(bands), s"bands must divide 64: $bands")
     require(maxHamming < bands,
       s"recall guarantee needs maxHamming < bands (got maxHamming=$maxHamming, bands=$bands)")
-    simhashPairsFromSigs(
-      spread(df).select(col(idCol).as("id"), simhash(split(col(textCol), " ")).as("sig")),
-      maxHamming, bands, maxBucketSize)
-  }
-
-  /** Banding + Hamming verify over a pre-computed (id, sig) frame — shared
-    * by the production and portable SimHash variants.
-    */
-  private def simhashPairsFromSigs(base: DataFrame, maxHamming: Int, bands: Int,
-                                   maxBucketSize: Int): DataFrame = {
+    val base = spread(df).select(col(idCol).as("id"), minietl.functions.vec.simhash64(
+      transform(split(col(textCol), " "), family.hash(_))).as("sig"))
     val chunkBits = 64 / bands
     val mask = if (chunkBits == 64) -1L else (1L << chunkBits) - 1
     val banded0 = base.select(col("id"), col("sig"),
@@ -896,26 +804,8 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** SimHash near-dup pairs, PORTABLE variant: md5-60-bit token hashes in
-    * place of xxhash64 (bits 60-63 of every signature are then 0 — four
-    * fewer discriminating bits, the replayability tax). Same banding and
-    * Hamming verify as [[simhashNearDupPairs]];
-    * [[simhashPortableOracleSql]] generates the replay SQL.
-    */
-  def simhashNearDupPairsPortable(df: DataFrame, textCol: String, idCol: String,
-                                  maxHamming: Int = 3, bands: Int = 4,
-                                  maxBucketSize: Int = DefaultMaxBucket): DataFrame = {
-    require(Seq(1, 2, 4, 8, 16, 32, 64).contains(bands), s"bands must divide 64: $bands")
-    require(maxHamming < bands,
-      s"recall guarantee needs maxHamming < bands (got maxHamming=$maxHamming, bands=$bands)")
-    simhashPairsFromSigs(
-      spread(df).select(col(idCol).as("id"),
-        minietl.functions.vec.simhash64(md5Hashes60(split(col(textCol), " "))).as("sig")),
-      maxHamming, bands, maxBucketSize)
-  }
-
-  /** ANSI SQL (DuckDB dialect) replaying [[simhashNearDupPairsPortable]]:
-    * same md5-60-bit token hashes, same per-bit +1/-1 vote (ties → 0, like
+  /** ANSI SQL (DuckDB dialect) replaying [[simhashNearDupPairs]] on the
+    * portable family: same md5-60-bit token hashes, same per-bit +1/-1 vote (ties → 0, like
     * the native loop's strict `> 0`), same chunk banding and bit_count
     * Hamming verify. Bits 60-63 are structurally 0 so the vote loop covers
     * bits 0-59 only.

@@ -3,7 +3,7 @@ package minietl.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import minietl.functions.PortableHash
+import minietl.functions.{HashFamily, PortableHash}
 
 /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03 —
   * the MOSS algorithm): position-local fingerprints with a coverage
@@ -31,12 +31,12 @@ import minietl.functions.PortableHash
   * degenerate fingerprints (empty-string grams, boilerplate) by
   * `maxPostings` exactly like n-gram containment.
   *
-  * Hash families follow the package convention: xxhash64 in the production
-  * entry points, an md5-60-bit portable twin ([[fingerprintsPortable]] /
-  * [[overlapPairsPortable]]) whose every step an independent SQL engine
-  * replays — [[fingerprintsOracleSql]] / [[overlapOracleSql]] generate that
-  * SQL. Both families share [[selectedOrds]], so the selection logic cannot
-  * diverge between the audited and the fast path.
+  * Hash families: every entry point takes a [[HashFamily]] value,
+  * `Production` (xxhash64, the default) or `Portable` (md5-60-bit), whose
+  * every step an independent SQL engine replays — the `*OracleSql`
+  * generators below render that SQL. The family supplies only the token
+  * hash; each kernel is one body for both, so the selection, span and
+  * excision logic cannot diverge between the audited and the fast path.
   */
 object Winnow {
 
@@ -78,45 +78,42 @@ object Winnow {
     * lambda re-evaluation made the column formulation O(n³) per document).
     */
   private def selectedFrame(df: DataFrame, textCol: String, idCol: String,
-                            k: Int, w: Int,
-                            tokenHash: Column => Column): DataFrame =
+                            k: Int, w: Int, family: HashFamily): DataFrame =
     df.select(col(idCol).as("id"),
       minietl.functions.vec.winnowOrds(
         transform(minietl.text.TextAnalysis.tokens(col(textCol)),
-          t => pmod(tokenHash(t), lit(M))), k, w).as("__s"))
+          t => pmod(family.hash(t), lit(M))), k, w).as("__s"))
 
-  private def fingerprintsWith(df: DataFrame, textCol: String, idCol: String,
-                               k: Int, w: Int,
-                               tokenHash: Column => Column): DataFrame = {
+  /** Selected fingerprints, one row per (id, pos, fp) where `pos` is the
+    * 0-based token index the winning k-gram starts at. No shuffle: project
+    * + explode only. On the portable family [[fingerprintsOracleSql]]
+    * replays it bit for bit.
+    */
+  def fingerprints(df: DataFrame, textCol: String, idCol: String,
+                   k: Int = 4, w: Int = 8,
+                   family: HashFamily = HashFamily.Production): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(w >= 1, s"w must be >= 1 (got $w)")
-    selectedFrame(df, textCol, idCol, k, w, tokenHash)
+    selectedFrame(df, textCol, idCol, k, w, family)
       .select(col("id"), explode(col("__s")).as("__ord"))
       .select(col("id"),
         pmod(col("__ord"), lit(Pos)).cast("int").as("pos"),
         ((col("__ord") - pmod(col("__ord"), lit(Pos))) / Pos).cast("long").as("fp"))
   }
 
-  /** Selected fingerprints, one row per (id, pos, fp) where `pos` is the
-    * 0-based token index the winning k-gram starts at. Production hash
-    * family (xxhash64). No shuffle: project + explode only.
+  /** Document pairs sharing at least `minShared` distinct fingerprint
+    * values — the copied-span candidate list. Fingerprint values held by
+    * more than `maxPostings` documents (boilerplate) are census-dropped
+    * before the join, the same contract as every LSH/blocking join in this
+    * package: the join is bucket-bounded, never all-pairs. On the portable
+    * family [[overlapOracleSql]] replays it end to end.
     */
-  def fingerprints(df: DataFrame, textCol: String, idCol: String,
-                   k: Int = 4, w: Int = 8): DataFrame =
-    fingerprintsWith(df, textCol, idCol, k, w, xxhash64(_))
-
-  /** [[fingerprints]] with the engine-portable md5-60-bit token hash —
-    * bit-replayable by any SQL engine via [[fingerprintsOracleSql]].
-    */
-  def fingerprintsPortable(df: DataFrame, textCol: String, idCol: String,
-                           k: Int = 4, w: Int = 8): DataFrame =
-    fingerprintsWith(df, textCol, idCol, k, w, PortableHash.md5Hash60(_))
-
-  private def overlapWith(df: DataFrame, textCol: String, idCol: String,
-                          k: Int, w: Int, minShared: Int, maxPostings: Int,
-                          tokenHash: Column => Column): DataFrame = {
+  def overlapPairs(df: DataFrame, textCol: String, idCol: String,
+                   k: Int = 4, w: Int = 8, minShared: Int = 2,
+                   maxPostings: Int = Dedup.DefaultMaxBucket,
+                   family: HashFamily = HashFamily.Production): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1 (got $minShared)")
-    val fp = fingerprintsWith(Dedup.spread(df), textCol, idCol, k, w, tokenHash)
+    val fp = fingerprints(Dedup.spread(df), textCol, idCol, k, w, family)
       .select("id", "fp").dropDuplicates("id", "fp")
     val capped = Dedup.dropOversizedBuckets(fp, Seq("fp"), maxPostings, "winnow")
     capped.as("a")
@@ -125,26 +122,6 @@ object Winnow {
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
   }
-
-  /** Document pairs sharing at least `minShared` distinct fingerprint
-    * values — the copied-span candidate list. Fingerprint values held by
-    * more than `maxPostings` documents (boilerplate) are census-dropped
-    * before the join, the same contract as every LSH/blocking join in this
-    * package: the join is bucket-bounded, never all-pairs.
-    */
-  def overlapPairs(df: DataFrame, textCol: String, idCol: String,
-                   k: Int = 4, w: Int = 8, minShared: Int = 2,
-                   maxPostings: Int = Dedup.DefaultMaxBucket): DataFrame =
-    overlapWith(df, textCol, idCol, k, w, minShared, maxPostings, xxhash64(_))
-
-  /** [[overlapPairs]] over the portable hash family (replayed end-to-end by
-    * [[overlapOracleSql]]).
-    */
-  def overlapPairsPortable(df: DataFrame, textCol: String, idCol: String,
-                           k: Int = 4, w: Int = 8, minShared: Int = 2,
-                           maxPostings: Int = Dedup.DefaultMaxBucket): DataFrame =
-    overlapWith(df, textCol, idCol, k, w, minShared, maxPostings,
-      PortableHash.md5Hash60(_))
 
   // ------------------------------------------------ exact shared spans
   /** Exact duplicated token spans across documents — the span-level dedup
@@ -167,22 +144,22 @@ object Winnow {
     * is merely rare.
     *
     * Returns (id_a, id_b, start_a, start_b, span_len) with id_a < id_b,
-    * spans of at least `minSpanTokens` tokens.
+    * spans of at least `minSpanTokens` tokens. On the portable family
+    * [[sharedSpansOracleSql]] replays it end to end.
     */
   def sharedSpans(df: DataFrame, textCol: String, idCol: String,
                   k: Int = 4, minSpanTokens: Int = 8,
-                  maxPostings: Int = Dedup.DefaultMaxBucket): DataFrame =
-    sharedSpansWith(df, textCol, idCol, k, minSpanTokens, maxPostings,
-      xxhash64(_))
-
-  /** [[sharedSpans]] over the portable md5 hash family (replayed end-to-end
-    * by [[sharedSpansOracleSql]]).
-    */
-  def sharedSpansPortable(df: DataFrame, textCol: String, idCol: String,
-                          k: Int = 4, minSpanTokens: Int = 8,
-                          maxPostings: Int = Dedup.DefaultMaxBucket): DataFrame =
-    sharedSpansWith(df, textCol, idCol, k, minSpanTokens, maxPostings,
-      PortableHash.md5Hash60(_))
+                  maxPostings: Int = Dedup.DefaultMaxBucket,
+                  family: HashFamily = HashFamily.Production): DataFrame = {
+    require(minSpanTokens >= k,
+      s"minSpanTokens must be >= k (got $minSpanTokens < $k)")
+    val fps = spanFps(df, textCol, idCol, k, family)
+    val capped = Dedup.dropOversizedBuckets(fps, Seq("fp"), maxPostings, "spans")
+    val seeds = capped.as("a")
+      .join(capped.as("b"), col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
+      .select(seedSelect("a", "b"): _*)
+    islandsToSpans(seeds, k, minSpanTokens)
+  }
 
   /** Seed fingerprints for span detection: every k-gram hash with its
     * position (w = 1 selects every gram). Docs shorter than k tokens are
@@ -195,11 +172,11 @@ object Winnow {
     * `len(toks) >= k` guard.
     */
   private def spanFps(df: DataFrame, textCol: String, idCol: String, k: Int,
-                      tokenHash: Column => Column): DataFrame =
-    fingerprintsWith(
+                      family: HashFamily): DataFrame =
+    fingerprints(
       Dedup.spread(df).where(
         size(minietl.text.TextAnalysis.tokens(col(textCol))) >= k),
-      textCol, idCol, k, w = 1, tokenHash)
+      textCol, idCol, k, w = 1, family)
 
   /** Gaps-and-islands over seed pairs: consecutive matching k-gram
     * positions on one alignment diagonal collapse to one span of
@@ -223,19 +200,6 @@ object Winnow {
     col(s"$a.pos").as("pos_a"), col(s"$b.pos").as("pos_b"),
     (col(s"$a.pos") - col(s"$b.pos")).as("diag"))
 
-  private def sharedSpansWith(df: DataFrame, textCol: String, idCol: String,
-                              k: Int, minSpanTokens: Int, maxPostings: Int,
-                              tokenHash: Column => Column): DataFrame = {
-    require(minSpanTokens >= k,
-      s"minSpanTokens must be >= k (got $minSpanTokens < $k)")
-    val fps = spanFps(df, textCol, idCol, k, tokenHash)
-    val capped = Dedup.dropOversizedBuckets(fps, Seq("fp"), maxPostings, "spans")
-    val seeds = capped.as("a")
-      .join(capped.as("b"), col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
-      .select(seedSelect("a", "b"): _*)
-    islandsToSpans(seeds, k, minSpanTokens)
-  }
-
   /** Span-level dedup: rewrite each document with every token covered by a
     * [[sharedSpans]] span REMOVED from the higher-id document (keep-first
     * by id — the id_a side always keeps its copy, so every span survives
@@ -245,28 +209,15 @@ object Winnow {
     * column of `df` passes through unchanged (pipeline-stage shape); only
     * `textCol` is rewritten. One extra shuffle over [[sharedSpans]]: the
     * anti-join of token positions against covered positions plus the
-    * per-doc rebuild aggregate.
+    * per-doc rebuild aggregate. On the portable family
+    * [[spanDedupOracleSql]] replays it end to end.
     */
   def spanDedup(df: DataFrame, textCol: String, idCol: String,
                 k: Int = 4, minSpanTokens: Int = 8,
-                maxPostings: Int = Dedup.DefaultMaxBucket): DataFrame =
-    spanDedupWith(df, textCol, idCol, k, minSpanTokens, maxPostings,
-      xxhash64(_))
-
-  /** [[spanDedup]] over the portable md5 hash family (replayed by
-    * [[spanDedupOracleSql]]).
-    */
-  def spanDedupPortable(df: DataFrame, textCol: String, idCol: String,
-                        k: Int = 4, minSpanTokens: Int = 8,
-                        maxPostings: Int = Dedup.DefaultMaxBucket): DataFrame =
-    spanDedupWith(df, textCol, idCol, k, minSpanTokens, maxPostings,
-      PortableHash.md5Hash60(_))
-
-  private def spanDedupWith(df: DataFrame, textCol: String, idCol: String,
-                            k: Int, minSpanTokens: Int, maxPostings: Int,
-                            tokenHash: Column => Column): DataFrame =
-    excise(df, sharedSpansWith(df, textCol, idCol, k, minSpanTokens,
-      maxPostings, tokenHash), textCol, idCol)
+                maxPostings: Int = Dedup.DefaultMaxBucket,
+                family: HashFamily = HashFamily.Production): DataFrame =
+    excise(df, sharedSpans(df, textCol, idCol, k, minSpanTokens,
+      maxPostings, family), textCol, idCol)
 
   /** Rewrite `textCol` with every token covered by a span (id_b side of
     * `spans`) removed. Id contract, enforced here rather than assumed:
@@ -388,7 +339,7 @@ object Winnow {
     *
     * The `maxPostings` cap is STICKY across rounds (a bucket over the cap
     * in any round stays dropped for the run — see
-    * [[spanDedupFixpointWith]]), so on a corpus whose hot buckets shrink
+    * [[fixpointLoop]]), so on a corpus whose hot buckets shrink
     * below the cap after excision this is NOT literally "[[spanDedup]]
     * applied N times" (which would re-admit them); the oracle replay
     * ([[spanDedupFixpointOracleSql]]) defines the semantics and replays
@@ -397,17 +348,10 @@ object Winnow {
   def spanDedupFixpoint(df: DataFrame, textCol: String, idCol: String,
                         k: Int = 4, minSpanTokens: Int = 8,
                         maxPostings: Int = Dedup.DefaultMaxBucket,
-                        maxIter: Int = 10): DataFrame =
-    spanDedupFixpointWith(df, textCol, idCol, k, minSpanTokens, maxPostings,
-      maxIter, xxhash64(_))._1
-
-  /** [[spanDedupFixpoint]] over the portable md5 hash family. */
-  def spanDedupFixpointPortable(df: DataFrame, textCol: String, idCol: String,
-                                k: Int = 4, minSpanTokens: Int = 8,
-                                maxPostings: Int = Dedup.DefaultMaxBucket,
-                                maxIter: Int = 10): DataFrame =
-    spanDedupFixpointWith(df, textCol, idCol, k, minSpanTokens, maxPostings,
-      maxIter, PortableHash.md5Hash60(_))._1
+                        maxIter: Int = 10,
+                        family: HashFamily = HashFamily.Production): DataFrame =
+    fixpointLoop(df, textCol, idCol, k, minSpanTokens, maxPostings,
+      maxIter, family)._1
 
   /** [[spanDedupFixpoint]] plus the rounds-to-convergence observable
     * (rounds that EXCISED something; a corpus with no duplicated spans
@@ -418,8 +362,8 @@ object Winnow {
                                  k: Int = 4, minSpanTokens: Int = 8,
                                  maxPostings: Int = Dedup.DefaultMaxBucket,
                                  maxIter: Int = 10): (DataFrame, Int) =
-    spanDedupFixpointWith(df, textCol, idCol, k, minSpanTokens, maxPostings,
-      maxIter, xxhash64(_))
+    fixpointLoop(df, textCol, idCol, k, minSpanTokens, maxPostings,
+      maxIter, HashFamily.Production)
 
   /** FULL-RESCAN fixpoint: identical semantics to [[spanDedupFixpoint]]
     * (sticky cap included) but every round seeds ALL pairs instead of only
@@ -434,8 +378,8 @@ object Winnow {
       k: Int = 4, minSpanTokens: Int = 8,
       maxPostings: Int = Dedup.DefaultMaxBucket,
       maxIter: Int = 10): (DataFrame, Int) =
-    spanDedupFixpointWith(df, textCol, idCol, k, minSpanTokens, maxPostings,
-      maxIter, xxhash64(_), incremental = false)
+    fixpointLoop(df, textCol, idCol, k, minSpanTokens, maxPostings,
+      maxIter, HashFamily.Production, incremental = false)
 
   /** The fixpoint loop is INCREMENTAL past round 1, and the maxPostings
     * cap is STICKY for the run: a fingerprint bucket that exceeds the cap
@@ -481,11 +425,10 @@ object Winnow {
     * each, so at most grams/maxPostings rows), checkpointed only when it
     * actually grows, and anti-joined into the seeds plan.
     */
-  private def spanDedupFixpointWith(df: DataFrame, textCol: String,
-                                    idCol: String, k: Int, minSpanTokens: Int,
-                                    maxPostings: Int, maxIter: Int,
-                                    tokenHash: Column => Column,
-                                    incremental: Boolean = true): (DataFrame, Int) = {
+  private def fixpointLoop(df: DataFrame, textCol: String,
+                           idCol: String, k: Int, minSpanTokens: Int,
+                           maxPostings: Int, maxIter: Int, family: HashFamily,
+                           incremental: Boolean = true): (DataFrame, Int) = {
     require(maxIter >= 1, s"maxIter must be >= 1 (got $maxIter)")
     require(minSpanTokens >= k,
       s"minSpanTokens must be >= k (got $minSpanTokens < $k)")
@@ -512,7 +455,7 @@ object Winnow {
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxIter) {
-      val fps = spanFps(cur, textCol, idCol, k, tokenHash)
+      val fps = spanFps(cur, textCol, idCol, k, family)
       // sticky-cap census — FULL in round 1, CHANGED-TOUCHED-ONLY after
       // (VERDICT r14 Next #3): unchanged docs emit identical postings
       // every round, so a bucket's count can only GROW — the only way to
@@ -538,7 +481,7 @@ object Winnow {
             // touched buckets (AQE broadcasts the tiny side)
             val changedFps = spanFps(
                 cur.join(changedIds, cur(idCol) === changedIds("id"), "left_semi"),
-                textCol, idCol, k, tokenHash)
+                textCol, idCol, k, family)
               .select("fp").distinct()
             fps.join(changedFps, Seq("fp"), "left_semi")
           }
@@ -633,90 +576,63 @@ object Winnow {
     (cur, rounds)
   }
 
-  /** The shared CTE prefix replaying token hashes → per-position gram
-    * hashes → seed join → gaps-and-islands spans in DuckDB SQL, ending in
-    * `spans(id_a, id_b, start_a, start_b, span_len)`.
+  // ------------------------------------------------ DuckDB replays
+  // Each replays a kernel above on the portable family. The CTE chains are
+  // rendered by three builders: gramCtes (token hashes → k-gram hashes),
+  // spanCtes (fingerprints → capped seed join → gaps-and-islands spans) and
+  // exciseCtes (covered positions → rebuilt text). The fixpoint replay
+  // unrolls spanCtes + exciseCtes once per round with a `$r` suffix.
+
+  /** The input documents as (id, toks) single-space token lists. */
+  private def docs(table: String, idCol: String, textCol: String): String =
+    s"SELECT $idCol AS id, string_split($textCol, ' ') AS toks FROM $table"
+
+  /** Token hashes → per-position k-gram hashes of `d$r(id, toks)`: CTEs
+    * `th$r(id, h)` and `gr$r(id, g)`. `wholeDocGram` adds winnowing's
+    * fallback of one whole-document gram for a non-empty doc shorter than
+    * k tokens (span seeding excludes such docs instead).
     */
-  private def spansCte(k: Int, minSpanTokens: Int, maxPostings: Int,
-                       table: String, idCol: String, textCol: String): String =
-    s"""WITH d AS (SELECT $idCol AS id, string_split($textCol, ' ') AS toks FROM $table),
-       |th AS (SELECT id, list_transform(toks, t -> ${PortableHash.sql("t")} % $M) AS h
-       |       FROM d),
-       |gr AS (SELECT id, CASE
-       |         WHEN len(h) >= $k THEN list_transform(range(0, len(h) - $k + 1),
-       |           i -> list_reduce(list_prepend(CAST(0 AS BIGINT), h[i+1 : i+$k]),
-       |                  (acc, x) -> (acc * $B + x) % $M))
-       |         ELSE CAST([] AS BIGINT[]) END AS g FROM th),
-       |f AS (SELECT id, i - 1 AS pos, g[i] AS fp
-       |      FROM gr, unnest(range(1, len(g) + 1)) AS u(i)),
-       |big AS (SELECT fp FROM f GROUP BY fp HAVING count(*) > $maxPostings),
-       |fc AS (SELECT f.* FROM f ANTI JOIN big USING (fp)),
-       |seeds AS (SELECT a.id AS id_a, b.id AS id_b, a.pos AS pos_a, b.pos AS pos_b,
-       |                 a.pos - b.pos AS diag
-       |          FROM fc a JOIN fc b ON a.fp = b.fp AND a.id < b.id),
-       |isl AS (SELECT id_a, id_b, diag, pos_a, pos_b,
-       |          pos_a - row_number() OVER (PARTITION BY id_a, id_b, diag
-       |                                     ORDER BY pos_a) AS grp
-       |        FROM seeds),
-       |spans AS (SELECT id_a, id_b, min(pos_a) AS start_a, min(pos_b) AS start_b,
-       |                 count(*) + $k - 1 AS span_len
-       |          FROM isl GROUP BY id_a, id_b, diag, grp
-       |          HAVING count(*) + $k - 1 >= $minSpanTokens)""".stripMargin
-
-  /** ANSI SQL (DuckDB dialect) replaying [[sharedSpansPortable]]. */
-  def sharedSpansOracleSql(k: Int = 4, minSpanTokens: Int = 8,
-                           maxPostings: Int = Dedup.DefaultMaxBucket,
-                           table: String = "documents",
-                           idCol: String = "doc_id",
-                           textCol: String = "text"): String =
-    s"""${spansCte(k, minSpanTokens, maxPostings, table, idCol, textCol)}
-       |SELECT id_a, id_b, CAST(start_a AS INT) AS start_a,
-       |       CAST(start_b AS INT) AS start_b, span_len FROM spans
-       |ORDER BY id_a, id_b, start_a, start_b""".stripMargin
-
-  /** ANSI SQL (DuckDB dialect) replaying [[spanDedupPortable]]. */
-  def spanDedupOracleSql(k: Int = 4, minSpanTokens: Int = 8,
-                         maxPostings: Int = Dedup.DefaultMaxBucket,
-                         table: String = "documents",
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): String =
-    s"""${spansCte(k, minSpanTokens, maxPostings, table, idCol, textCol)},
-       |covered AS (SELECT DISTINCT id_b AS id, start_b + u.o AS pos
-       |            FROM spans, unnest(range(0, span_len)) AS u(o)),
-       |tk AS (SELECT id, i - 1 AS pos, toks[i] AS tok
-       |       FROM d, unnest(range(1, len(toks) + 1)) AS u(i)),
-       |kept AS (SELECT tk.* FROM tk ANTI JOIN covered USING (id, pos)),
-       |rebuilt AS (SELECT id, string_agg(tok, ' ' ORDER BY pos) AS t2
-       |            FROM kept GROUP BY id)
-       |SELECT d.id AS $idCol, coalesce(rebuilt.t2, '') AS $textCol
-       |FROM d LEFT JOIN rebuilt ON d.id = rebuilt.id
-       |ORDER BY $idCol""".stripMargin
-
-  /** One unrolled detect-and-excise round for the fixpoint oracle: assumes
-    * CTE `d$r(id, toks)` exists, emits the suffixed spans + excise CTEs and
-    * ends in `out$r(id, txt)`. Same SQL as [[spansCte]]/[[spanDedupOracleSql]]
-    * modulo the `$r` suffixes — EXCEPT the maxPostings cap, which replays
-    * the engine's STICKY rule: `bigacc$r` accumulates every round's
-    * over-cap fingerprints (`bigacc1 = big1`, `bigacc$r = big$r UNION
-    * bigacc${r-1}`) and `fc$r` anti-joins the accumulated set, so a bucket
-    * dropped once stays dropped for the run.
-    */
-  private def fixpointRoundCtes(r: Int, k: Int, minSpanTokens: Int,
-                                maxPostings: Int): String =
+  private def gramCtes(r: String, k: Int, wholeDocGram: Boolean): String = {
+    val whole =
+      if (!wholeDocGram) ""
+      else s"""
+         |         WHEN len(h) > 0 THEN [list_reduce(list_prepend(CAST(0 AS BIGINT), h),
+         |                  (acc, x) -> (acc * $B + x) % $M)]""".stripMargin
     s"""th$r AS (SELECT id, list_transform(toks, t -> ${PortableHash.sql("t")} % $M) AS h
        |       FROM d$r),
        |gr$r AS (SELECT id, CASE
        |         WHEN len(h) >= $k THEN list_transform(range(0, len(h) - $k + 1),
        |           i -> list_reduce(list_prepend(CAST(0 AS BIGINT), h[i+1 : i+$k]),
-       |                  (acc, x) -> (acc * $B + x) % $M))
-       |         ELSE CAST([] AS BIGINT[]) END AS g FROM th$r),
+       |                  (acc, x) -> (acc * $B + x) % $M))$whole
+       |         ELSE CAST([] AS BIGINT[]) END AS g FROM th$r)""".stripMargin
+  }
+
+  /** [[sharedSpans]]' chain over `d$r(id, toks)`: every k-gram hash with
+    * its position → the maxPostings cap → seed join → gaps-and-islands,
+    * ending in `spans$r(id_a, id_b, start_a, start_b, span_len)`. Round 0
+    * is the single pass (no suffix, per-query cap). A fixpoint round r ≥ 1
+    * replays the engine's STICKY cap: `bigacc$r` accumulates every round's
+    * over-cap fingerprints (`bigacc1 = big1`, `bigacc$r = big$r UNION
+    * bigacc${r-1}`) and `fc$r` anti-joins the accumulated set, so a bucket
+    * dropped once stays dropped for the run.
+    */
+  private def spanCtes(round: Int, k: Int, minSpanTokens: Int,
+                       maxPostings: Int): String = {
+    val r = if (round == 0) "" else round.toString
+    val cap =
+      if (round == 0) "fc AS (SELECT f.* FROM f ANTI JOIN big USING (fp))"
+      else {
+        val acc =
+          if (round == 1) s"SELECT fp FROM big$r"
+          else s"SELECT fp FROM big$r UNION SELECT fp FROM bigacc${round - 1}"
+        s"""bigacc$r AS MATERIALIZED ($acc),
+           |fc$r AS MATERIALIZED (SELECT f$r.* FROM f$r ANTI JOIN bigacc$r USING (fp))""".stripMargin
+      }
+    s"""${gramCtes(r, k, wholeDocGram = false)},
        |f$r AS (SELECT id, i - 1 AS pos, g[i] AS fp
        |      FROM gr$r, unnest(range(1, len(g) + 1)) AS u(i)),
        |big$r AS (SELECT fp FROM f$r GROUP BY fp HAVING count(*) > $maxPostings),
-       |bigacc$r AS MATERIALIZED (${
-      if (r == 1) s"SELECT fp FROM big$r"
-      else s"SELECT fp FROM big$r UNION SELECT fp FROM bigacc${r - 1}"}),
-       |fc$r AS MATERIALIZED (SELECT f$r.* FROM f$r ANTI JOIN bigacc$r USING (fp)),
+       |$cap,
        |seeds$r AS (SELECT a.id AS id_a, b.id AS id_b, a.pos AS pos_a, b.pos AS pos_b,
        |                 a.pos - b.pos AS diag
        |          FROM fc$r a JOIN fc$r b ON a.fp = b.fp AND a.id < b.id),
@@ -727,8 +643,15 @@ object Winnow {
        |spans$r AS (SELECT id_a, id_b, min(pos_a) AS start_a, min(pos_b) AS start_b,
        |                 count(*) + $k - 1 AS span_len
        |          FROM isl$r GROUP BY id_a, id_b, diag, grp
-       |          HAVING count(*) + $k - 1 >= $minSpanTokens),
-       |cov$r AS (SELECT DISTINCT id_b AS id, start_b + u.o AS pos
+       |          HAVING count(*) + $k - 1 >= $minSpanTokens)""".stripMargin
+  }
+
+  /** [[excise]]'s chain over `d$r` and `spans$r`: every id_b-side covered
+    * position is dropped and the rest re-joined in order, ending in
+    * `out$r(id, txt)` (a fully covered doc keeps an empty text).
+    */
+  private def exciseCtes(r: String): String =
+    s"""cov$r AS (SELECT DISTINCT id_b AS id, start_b + u.o AS pos
        |            FROM spans$r, unnest(range(0, span_len)) AS u(o)),
        |tk$r AS (SELECT id, i - 1 AS pos, toks[i] AS tok
        |       FROM d$r, unnest(range(1, len(toks) + 1)) AS u(i)),
@@ -738,9 +661,38 @@ object Winnow {
        |out$r AS MATERIALIZED (SELECT d$r.id AS id, coalesce(rb$r.t2, '') AS txt
        |          FROM d$r LEFT JOIN rb$r ON d$r.id = rb$r.id)""".stripMargin
 
-  /** ANSI SQL (DuckDB dialect) replaying [[spanDedupFixpointPortable]] by
-    * UNROLLING exactly `maxIter` detect-and-excise rounds, with the
-    * engine's STICKY maxPostings rule (accumulated `bigacc$r` sets). This
+  /** ANSI SQL (DuckDB dialect) replaying [[sharedSpans]] on the portable
+    * family.
+    */
+  def sharedSpansOracleSql(k: Int = 4, minSpanTokens: Int = 8,
+                           maxPostings: Int = Dedup.DefaultMaxBucket,
+                           table: String = "documents",
+                           idCol: String = "doc_id",
+                           textCol: String = "text"): String =
+    s"""WITH d AS (${docs(table, idCol, textCol)}),
+       |${spanCtes(0, k, minSpanTokens, maxPostings)}
+       |SELECT id_a, id_b, CAST(start_a AS INT) AS start_a,
+       |       CAST(start_b AS INT) AS start_b, span_len FROM spans
+       |ORDER BY id_a, id_b, start_a, start_b""".stripMargin
+
+  /** ANSI SQL (DuckDB dialect) replaying [[spanDedup]] on the portable
+    * family.
+    */
+  def spanDedupOracleSql(k: Int = 4, minSpanTokens: Int = 8,
+                         maxPostings: Int = Dedup.DefaultMaxBucket,
+                         table: String = "documents",
+                         idCol: String = "doc_id",
+                         textCol: String = "text"): String =
+    s"""WITH d AS (${docs(table, idCol, textCol)}),
+       |${spanCtes(0, k, minSpanTokens, maxPostings)},
+       |${exciseCtes("")}
+       |SELECT id AS $idCol, txt AS $textCol FROM out
+       |ORDER BY $idCol""".stripMargin
+
+  /** ANSI SQL (DuckDB dialect) replaying [[spanDedupFixpoint]] on the
+    * portable family by UNROLLING exactly `maxIter` detect-and-excise
+    * rounds, with the engine's STICKY maxPostings rule (accumulated
+    * `bigacc$r` sets, see [[spanCtes]]). This
     * matches the engine's early-stopping loop for EVERY convergence count
     * r <= maxIter: once a round finds no span, excision is the identity
     * (the rebuild re-joins the same single-space tokens — and round 1
@@ -765,40 +717,33 @@ object Winnow {
       // 4-round unroll replayed 40x slower (measured 25.4 s -> 0.6 s at
       // sf0.001, byte-identical result)
       val feed =
-        if (r == 1)
-          s"d1 AS MATERIALIZED (SELECT $idCol AS id, string_split($textCol, ' ') AS toks FROM $table)"
-        else
-          s"d$r AS MATERIALIZED (SELECT id, string_split(txt, ' ') AS toks FROM out${r - 1})"
-      feed + ",\n" + fixpointRoundCtes(r, k, minSpanTokens, maxPostings)
+        if (r == 1) docs(table, idCol, textCol)
+        else s"SELECT id, string_split(txt, ' ') AS toks FROM out${r - 1}"
+      s"d$r AS MATERIALIZED ($feed),\n" +
+        spanCtes(r, k, minSpanTokens, maxPostings) + ",\n" + exciseCtes(r.toString)
     }.mkString("WITH ", ",\n", "")
     s"""$rounds
        |SELECT id AS $idCol, txt AS $textCol FROM out$maxIter
        |ORDER BY $idCol""".stripMargin
   }
 
-  /** The shared CTE prefix replaying token hashes → gram hashes → packed
-    * ords → winnow selection in DuckDB SQL, ending in `sel(id, s)` where
-    * `s` is the selected-ord list.
+  /** Token hashes → gram hashes → packed ords → winnow selection of
+    * `d(id, toks)`, ending in `sel(id, s)` where `s` is the selected-ord
+    * list.
     */
   private def selectionCte(k: Int, w: Int, table: String, idCol: String,
                            textCol: String): String =
-    s"""WITH d AS (SELECT $idCol AS id, string_split($textCol, ' ') AS toks FROM $table),
-       |th AS (SELECT id, list_transform(toks, t -> ${PortableHash.sql("t")} % $M) AS h
-       |       FROM d),
-       |gr AS (SELECT id, CASE
-       |         WHEN len(h) >= $k THEN list_transform(range(0, len(h) - $k + 1),
-       |           i -> list_reduce(list_prepend(CAST(0 AS BIGINT), h[i+1 : i+$k]),
-       |                  (acc, x) -> (acc * $B + x) % $M))
-       |         WHEN len(h) > 0 THEN [list_reduce(list_prepend(CAST(0 AS BIGINT), h),
-       |                  (acc, x) -> (acc * $B + x) % $M)]
-       |         ELSE CAST([] AS BIGINT[]) END AS g FROM th),
+    s"""WITH d AS (${docs(table, idCol, textCol)}),
+       |${gramCtes("", k, wholeDocGram = true)},
        |ords AS (SELECT id, list_transform(range(0, len(g)), i -> g[i+1] * $Pos + i) AS o,
        |         least($w, len(g)) AS weff FROM gr WHERE len(g) > 0),
        |sel AS (SELECT id, list_distinct(list_transform(range(0, len(o) - weff + 1),
        |          j -> list_min(o[j+1 : j+weff]))) AS s
        |        FROM ords)""".stripMargin
 
-  /** ANSI SQL (DuckDB dialect) replaying [[fingerprintsPortable]]. */
+  /** ANSI SQL (DuckDB dialect) replaying [[fingerprints]] on the portable
+    * family.
+    */
   def fingerprintsOracleSql(k: Int = 4, w: Int = 8, table: String = "documents",
                             idCol: String = "doc_id",
                             textCol: String = "text"): String =
@@ -807,8 +752,8 @@ object Winnow {
        |SELECT id AS doc_id, CAST(ord % $Pos AS INT) AS pos, ord // $Pos AS fp
        |FROM f ORDER BY doc_id, pos""".stripMargin
 
-  /** ANSI SQL (DuckDB dialect) replaying [[overlapPairsPortable]], capped
-    * postings included.
+  /** ANSI SQL (DuckDB dialect) replaying [[overlapPairs]] on the portable
+    * family, capped postings included.
     */
   def overlapOracleSql(k: Int = 4, w: Int = 8, minShared: Int = 2,
                        maxPostings: Int = Dedup.DefaultMaxBucket,

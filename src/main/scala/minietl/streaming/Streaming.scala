@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import minietl.functions.HashFamily
 import minietl.pipeline.RunCaches
 
 /** Structured Streaming surface.
@@ -554,14 +555,13 @@ object Streaming {
     * batch (shingle hashes and the k-lane signature, materialized once)
     * feeds the within-batch pass, the band keys and the payloads.
     *
-    * `portable = true` swaps the whole hash family to the replayable
-    * variants (md5-60-bit shingle hashes, raw-slice band keys —
-    * [[minietl.dedup.Dedup.minhashDedupPortable]] /
-    * [[minietl.dedup.Dedup.lshBandKeysPortable]]) so an independent SQL
-    * engine replays every drain bit-for-bit
-    * ([[minietl.dedup.Dedup.nearDupHistoryOracleSql]]); the xxhash64
-    * family stays the production default (same plan shape, cheaper
-    * hashing, one folded long per band key instead of k/bands lanes).
+    * `family` picks the [[HashFamily]] of the shingle hashes and band
+    * keys. `Portable` (md5-60-bit shingle hashes, raw-slice band keys) lets
+    * an independent SQL engine replay every drain bit-for-bit
+    * ([[minietl.dedup.Dedup.nearDupHistoryOracleSql]]); `Production`
+    * (xxhash64) stays the default (same plan shape, cheaper hashing, one
+    * folded long per band key instead of k/bands lanes). A digest holds one
+    * family's band keys: keep the family per digest.
     *
     * Cross-history check, three `crossBatch` modes — a digest-size vs
     * drop-precision dial; the layouts are not interchangeable, pick a
@@ -596,7 +596,7 @@ object Streaming {
       shingleN: Int = 3, k: Int = 128, bands: Int = 32,
       threshold: Double = 0.8,
       crossBatch: String = "collision",
-      portable: Boolean = false,
+      family: HashFamily = HashFamily.Production,
       trigger: Trigger = Trigger.AvailableNow())(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     require(Set("collision", "estimate", "exact")(crossBatch),
@@ -607,12 +607,12 @@ object Streaming {
       // seed stays the within-batch pass's own default, so the digest
       // bands are the family that pass used
       val base = materialize(Dedup.minhashBase(
-        batch, textCol, idCol, shingleN, k, seed = 42L, portable))
+        batch, textCol, idCol, shingleN, k, seed = 42L, family))
       val dupWithin = Dedup.minhashPairsFromSigBase(
-          base, bands, k, threshold, Dedup.DefaultMaxBucket, portable)
+          base, bands, k, threshold, Dedup.DefaultMaxBucket, family)
         .select(col("id_b").as("__dup"))
       val within = batch.join(dupWithin, batch(idCol) === col("__dup"), "left_anti")
-      val bandRows = Dedup.bandRows(base, bands, k, portable)
+      val bandRows = Dedup.bandRows(base, bands, k, family)
       def admitted(rows: DataFrame, of: DataFrame) =
         rows.join(of.select(col(idCol).as("id")), Seq("id"), "left_semi")
       val keys = admitted(bandRows, within)

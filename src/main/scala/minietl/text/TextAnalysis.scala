@@ -3,6 +3,8 @@ package minietl.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import minietl.functions.HashFamily
+
 /** Text-analysis operators for large-scale training-data pipelines: token
   * counting, quality scoring, heuristic language ID, and document
   * fingerprinting. All are pure `Column` expressions built from Spark's
@@ -379,25 +381,13 @@ object TextAnalysis {
     * per-token hash values, computed mod 2^31-1 so every intermediate fits a
     * long under ANSI arithmetic (Spark 4 default). Documents equal up to
     * whitespace normalization collide; any token swap changes the value.
-    * Deterministic across runs/JVMs.
+    * Deterministic across runs/JVMs. The production family's token hash is
+    * the engine-native xxhash64, the cheapest high-quality 64-bit hash in
+    * the scan path; the portable family's md5-60-bit token hash (~3x the
+    * per-token cost) is one any engine computes identically, so the value
+    * is verifiable by an independent SQL engine (battery q_fingerprint).
     */
-  private def fingerprintWith(text: Column, tokenHash: Column => Column): Column =
+  def fingerprint(text: Column, family: HashFamily = HashFamily.Production): Column =
     aggregate(tokens(text), lit(0L),
-      (acc, t) => pmod(acc * lit(31L) + tokenHash(t), lit(fpMod)))
-
-  /** Production fingerprint: token hash is the engine-native xxhash64 —
-    * the cheapest high-quality 64-bit hash in the scan path.
-    */
-  def fingerprint(text: Column): Column =
-    fingerprintWith(text, t => pmod(xxhash64(t), lit(fpMod)))
-
-  /** Cross-engine fingerprint: token hash is the top 60 bits of md5, which
-    * any engine computes identically (DuckDB:
-    * `CAST(concat('0x', substring(md5(t),1,15)) AS BIGINT)`), so the result
-    * is verifiable by an independent SQL engine. ~3x the per-token cost of
-    * [[fingerprint]]; use it where auditability across systems matters.
-    */
-  def fingerprintPortable(text: Column): Column =
-    fingerprintWith(text,
-      t => pmod(minietl.functions.PortableHash.md5Hash60(t), lit(fpMod)))
+      (acc, t) => pmod(acc * lit(31L) + pmod(family.hash(t), lit(fpMod)), lit(fpMod)))
 }

@@ -36,6 +36,7 @@ class StageRegistrySpec extends AnyFunSuite with SparkTestBase {
   private def sample(o: Opt): Any = o.key match {
     case "quantiles" => List("0.5")
     case "kind" => "image"
+    case "strategy" => "mode"
     case "fractions" => Map("a" -> "0.5")
     case _ => o.kind match {
       case Text | Texts => "x"
@@ -111,6 +112,54 @@ class StageRegistrySpec extends AnyFunSuite with SparkTestBase {
         |  sink: {type: parquet, path: out, checkpoint: chk}
         |""".stripMargin)) ===
       Seq("stream stage[0] dedup_history: 'compact_after' must be true or false, got 'maybe'"))
+  }
+
+  test("a reader's 'options', 'params' or 'headers' that is not a mapping is a " +
+    "validate error") {
+    assert(Config.validateStream(Config.parseStream(
+      """stream:
+        |  source: {type: socket, options: [a]}
+        |  stages:
+        |    - {type: filter, condition: "value > 1"}
+        |  sink: {type: parquet, path: out, checkpoint: chk}
+        |""".stripMargin)) === Seq(
+      "stream source socket needs options.host",
+      "stream source socket needs options.port",
+      "stream source socket: 'options' must be a mapping, got 'List(a)'"))
+    assert(Config.validateStream(Config.parseStream(
+      """stream:
+        |  source: {type: parquet, path: in, schema: [{name: v, dtype: long}], options: x}
+        |  stages:
+        |    - {type: filter, condition: "v > 1"}
+        |  sink: {type: parquet, path: out, checkpoint: chk}
+        |""".stripMargin)) ===
+      Seq("stream source parquet: 'options' must be a mapping, got 'x'"))
+    def batch(source: String) = Config.validate(Config.parse(
+      s"""source: $source
+         |transformers:
+         |  - {type: filter, condition: "v > 1"}
+         |sink: {type: parquet, filepath: out}
+         |""".stripMargin))
+    assert(batch("{type: csv, filepath: in, options: [a, b]}") ===
+      Seq("source csv: 'options' must be a mapping, got 'List(a, b)'"))
+    assert(batch("{type: jsonl, filepath: in, options: {sep: }}") ===
+      Seq("source jsonl: 'options' has no value for 'sep'"))
+    assert(batch("{type: api, url: u, params: [a], headers: h}") === Seq(
+      "source api: 'params' must be a mapping, got 'List(a)'",
+      "source api: 'headers' must be a mapping, got 'h'"))
+    assert(batch("{type: json, filepath: in, options: {multiLine: true}}") === Nil)
+  }
+
+  test("impute with an unknown strategy is a validate error") {
+    def errs(strategy: String) = Config.validate(Config.parse(
+      s"""source: {type: parquet, filepath: in}
+         |transformers:
+         |  - {type: impute, group_by: [g], value: v, strategy: $strategy}
+         |sink: {type: parquet, filepath: out}
+         |""".stripMargin))
+    assert(errs("bogus") ===
+      Seq("transformer[0] impute: strategy must be 'median' or 'mode', got 'bogus'"))
+    assert(errs("median") === Nil && errs("mode") === Nil)
   }
 
   test("the builder methods and the YAML stages give the same rows: " +

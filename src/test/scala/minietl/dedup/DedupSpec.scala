@@ -1,6 +1,7 @@
 package minietl.dedup
 
 import minietl.SparkTestBase
+import minietl.functions.HashFamily
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -226,8 +227,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("portable minhash finds the planted pairs with faithful jaccard") {
-    val rows = Dedup.minhashNearDupPairsPortable(docs, "text", "doc_id",
-      shingleN = 3, k = 64, bands = 16, threshold = 0.5)
+    val rows = Dedup.minhashNearDupPairs(docs, "text", "doc_id",
+      shingleN = 3, k = 64, bands = 16, threshold = 0.5, family = HashFamily.Portable)
       .select("id_a", "id_b", "jac").as[(Long, Long, Double)].collect()
     assert(rows.map(r => (r._1, r._2)).toSet === Set((0L, 1L), (2L, 3L)))
     // exact-duplicate pair has jaccard exactly 1; hash basis cannot change it
@@ -278,11 +279,13 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("portable simhash finds exact pairs; signatures keep bits 60-63 clear") {
-    val pairs = Dedup.simhashNearDupPairsPortable(docs, "text", "doc_id", maxHamming = 3)
+    val pairs = Dedup.simhashNearDupPairs(docs, "text", "doc_id", maxHamming = 3,
+      family = HashFamily.Portable)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((2L, 3L)))
     val sigs = docs.select(
-      minietl.functions.vec.simhash64(Dedup.md5Hashes60(split(col("text"), " "))).as("sig"))
+      minietl.functions.vec.simhash64(
+        transform(split(col("text"), " "), HashFamily.Portable.hash(_))).as("sig"))
       .as[Long].collect()
     sigs.foreach(s => assert((s >>> 60) === 0L, s"bits 60-63 set in $s"))
   }

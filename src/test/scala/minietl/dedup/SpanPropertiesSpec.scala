@@ -1,6 +1,7 @@
 package minietl.dedup
 
 import minietl.SparkTestBase
+import minietl.functions.HashFamily
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -106,8 +107,8 @@ class SpanPropertiesSpec extends AnyFunSuite with SparkTestBase {
 
   test("sharedSpans reports exactly the brute-force maximal shared runs (portable hash)") {
     forAll(corpusGen, 10) { (corpus, seed) =>
-      val got = Winnow.sharedSpansPortable(toDf(corpus), "text", "doc_id",
-          k = K, minSpanTokens = MinSpan)
+      val got = Winnow.sharedSpans(toDf(corpus), "text", "doc_id",
+          k = K, minSpanTokens = MinSpan, family = HashFamily.Portable)
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4)))
         .toSet
@@ -203,12 +204,13 @@ class SpanPropertiesSpec extends AnyFunSuite with SparkTestBase {
       "per-round census re-admitted a sticky-dropped bucket: E3 lost H to an unchanged-unchanged pair")
     assert(rounds === 1)
     // the portable family pins the same semantics (it is what the DuckDB
-    // oracle replays)
-    val portable = Winnow.spanDedupFixpointPortable(
-        toDf(corpus), "text", "doc_id", k = K, minSpanTokens = MinSpan,
-        maxPostings = 2)
-      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    assert(portable === got)
+    // oracle replays), on this corpus and on HashFamilySpec's planted one
+    def fixpoint(df: org.apache.spark.sql.DataFrame, family: HashFamily) =
+      Winnow.spanDedupFixpoint(df, "text", "doc_id", k = K, minSpanTokens = MinSpan,
+          maxPostings = 2, family = family)
+        .collect().map(r => r.get(0) -> r.getString(1)).toMap
+    for (df <- Seq(toDf(corpus), HashFamilySpec.planted(spark)))
+      assert(fixpoint(df, HashFamily.Portable) === fixpoint(df, HashFamily.Production))
   }
 
   test("fixpoint matches the iterated reference on random corpora (rounds too)") {

@@ -3,6 +3,7 @@ package minietl.dedup
 import scala.util.Random
 
 import minietl.SparkTestBase
+import minietl.functions.HashFamily
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,9 +55,9 @@ class WinnowSpec extends AnyFunSuite with SparkTestBase {
     refWinnow(text.split(" ", -1).toSeq.map(md5h), k, w)
 
   private def sparkFps(texts: Seq[String], k: Int, w: Int): Map[Int, Set[(Int, Long)]] =
-    Winnow.fingerprintsPortable(
+    Winnow.fingerprints(
         texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("doc_id", "text"),
-        "text", "doc_id", k, w)
+        "text", "doc_id", k, w, HashFamily.Portable)
       .collect()
       .groupBy(_.getInt(0))
       .map { case (id, rows) =>
@@ -141,8 +142,8 @@ class WinnowSpec extends AnyFunSuite with SparkTestBase {
       s"one two $span three four five six",
       "totally unrelated text with its own words here padding padding more")
     val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("doc_id", "text")
-    val pairs = Winnow.overlapPairsPortable(df, "text", "doc_id", k, w,
-        minShared = 2)
+    val pairs = Winnow.overlapPairs(df, "text", "doc_id", k, w,
+        minShared = 2, family = HashFamily.Portable)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
     assert(pairs.map(p => (p._1, p._2)).toSeq === Seq((0, 1)))
     assert(pairs.head._3 >= 2) // a 30-token span shares several fingerprints
@@ -155,8 +156,8 @@ class WinnowSpec extends AnyFunSuite with SparkTestBase {
       s"b0 $span y0 y1 y2 y3",          // span at tokens 1..20
       "no shared content in this one at all padding words here")
     val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("doc_id", "text")
-    val spans = Winnow.sharedSpansPortable(df, "text", "doc_id",
-        k = 4, minSpanTokens = 8)
+    val spans = Winnow.sharedSpans(df, "text", "doc_id",
+        k = 4, minSpanTokens = 8, family = HashFamily.Portable)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4)))
     assert(spans.toSeq === Seq((0, 1, 3, 1, 20)))
   }
@@ -180,8 +181,8 @@ class WinnowSpec extends AnyFunSuite with SparkTestBase {
       s"x0 x1 $span",                    // also loses it (vs doc0 AND doc1)
       "fully untouched text with nothing shared anywhere in the corpus")
     val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("doc_id", "text")
-    val out = Winnow.spanDedupPortable(df, "text", "doc_id",
-        k = 4, minSpanTokens = 8)
+    val out = Winnow.spanDedup(df, "text", "doc_id",
+        k = 4, minSpanTokens = 8, family = HashFamily.Portable)
       .collect().map(r => (r.getInt(0), r.getString(1))).toMap
     assert(out(0) === texts(0))                       // id_a side always keeps
     assert(out(1) === "other0 other1")
@@ -196,8 +197,8 @@ class WinnowSpec extends AnyFunSuite with SparkTestBase {
     // spanDedup still round-trips them untouched
     val df = Seq((0, "aa bb"), (1, "aa bb"), (2, (0 until 9).map("c" + _).mkString(" ")))
       .toDF("doc_id", "text")
-    assert(Winnow.sharedSpansPortable(df, "text", "doc_id",
-      k = 4, minSpanTokens = 4).count() === 0)
+    assert(Winnow.sharedSpans(df, "text", "doc_id",
+      k = 4, minSpanTokens = 4, family = HashFamily.Portable).count() === 0)
     val out = Winnow.spanDedup(df, "text", "doc_id", k = 4, minSpanTokens = 4)
       .collect().map(r => (r.getInt(0), r.getString(1))).toMap
     assert(out(0) === "aa bb" && out(1) === "aa bb")
@@ -268,8 +269,8 @@ class WinnowSpec extends AnyFunSuite with SparkTestBase {
     // list has 12 entries; with maxPostings=4 everything is censored and no
     // pair survives, instead of a 12x12 join blow-up.
     val df = (0 until 12).map(i => (i, boiler)).toDF("doc_id", "text")
-    val out = Winnow.overlapPairsPortable(df, "text", "doc_id", k, w,
-      minShared = 1, maxPostings = 4)
+    val out = Winnow.overlapPairs(df, "text", "doc_id", k, w,
+      minShared = 1, maxPostings = 4, family = HashFamily.Portable)
     assert(out.count() === 0)
   }
 }

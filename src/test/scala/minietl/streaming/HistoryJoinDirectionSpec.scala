@@ -171,7 +171,7 @@ class HistoryJoinDirectionSpec extends AnyFunSuite with SparkTestBase {
     // now come off the shared native shingle-hash base, not a second
     // string-hash signature pass)
     val doc1Bands = Seq(doc1).toDF("text")
-      .select(explode(Dedup.lshBandKeys(
+      .select(explode(minietl.functions.HashFamily.Production.bandKeys(
         Dedup.minhashFromHashes(
           Dedup.shingleHashesSorted(col("text"), 3), 128), 32, 128)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.key").as("key"))

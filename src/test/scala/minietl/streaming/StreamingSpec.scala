@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import minietl.SparkTestBase
+import minietl.functions.HashFamily
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -404,20 +405,20 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val in = s"$dir/in"
     val hist = s"$dir/bands"
     val out = s"$dir/sink"
-    def drain(rows: Seq[(Long, String)], portable: Boolean): Unit = {
+    def drain(rows: Seq[(Long, String)], family: HashFamily): Unit = {
       rows.toDF("id", "text").coalesce(1).write.mode("append").parquet(in)
       val q = Streaming.nearDupDedupAndRecordHistory(
         spark.readStream.schema("id LONG, text STRING").parquet(in),
-        "id", "text", hist, s"$dir/chk", portable = portable) { (batch, bid) =>
+        "id", "text", hist, s"$dir/chk", family = family) { (batch, bid) =>
         batch.write.mode("overwrite").parquet(Streaming.batchOutputPath(out, bid))
       }
       try q.processAllAvailable() finally q.stop()
     }
     // the portable family keys each band by its raw lanes (an array), the
     // production family by one folded long: the digest cannot be reused
-    drain(Seq((1L, "alpha beta gamma delta epsilon")), portable = true)
+    drain(Seq((1L, "alpha beta gamma delta epsilon")), HashFamily.Portable)
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-      drain(Seq((2L, "zeta eta theta iota kappa")), portable = false))
+      drain(Seq((2L, "zeta eta theta iota kappa")), HashFamily.Production))
     val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .collectFirst { case ise: IllegalStateException => ise }
     assert(cause.exists(c => c.getMessage.contains(hist) && c.getMessage.contains("`key`")),
@@ -527,8 +528,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .withColumn("jac", minietl.functions.vec.jaccardSorted(
         Dedup.shingleHashesSorted(col("t"), 3), Dedup.shingleHashesSorted(lit(base), 3)))
       .withColumn("shared", size(array_intersect(
-        Dedup.lshBandKeys(sigOf(col("t")), bands, k),
-        Dedup.lshBandKeys(sigOf(lit(base)), bands, k))))
+        HashFamily.Production.bandKeys(sigOf(col("t")), bands, k),
+        HashFamily.Production.bandKeys(sigOf(lit(base)), bands, k))))
       .select("t", "est", "jac", "shared").as[(String, Double, Double, Int)].collect()
     val found = m.find { case (_, est, jac, shared) => shared >= 1 && est >= jac + 0.1 }
     assert(found.isDefined,

@@ -2,6 +2,7 @@ package minietl.text
 // round-8 additions at the bottom: squeezeRepeats / dedupSegmentsInDoc
 
 import minietl.SparkTestBase
+import minietl.functions.HashFamily
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -105,9 +106,9 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("fingerprintPortable shares the fold but swaps the token hash") {
-    val a = one(TextAnalysis.fingerprintPortable(lit("alpha beta gamma"))).getLong(0)
-    val a2 = one(TextAnalysis.fingerprintPortable(lit("alpha beta gamma"))).getLong(0)
-    val b = one(TextAnalysis.fingerprintPortable(lit("gamma beta alpha"))).getLong(0)
+    val a = one(TextAnalysis.fingerprint(lit("alpha beta gamma"), HashFamily.Portable)).getLong(0)
+    val a2 = one(TextAnalysis.fingerprint(lit("alpha beta gamma"), HashFamily.Portable)).getLong(0)
+    val b = one(TextAnalysis.fingerprint(lit("gamma beta alpha"), HashFamily.Portable)).getLong(0)
     val native = one(TextAnalysis.fingerprint(lit("alpha beta gamma"))).getLong(0)
     assert(a === a2)
     assert(a !== b)
