@@ -1,7 +1,4 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, to_json, xxhash64}
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Untimed warm-up passes at sf0.001 AND sf0.01 first
@@ -17,9 +14,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * (q_span_dedup's rebuilt-text join benched at 0.2 s while its honest cost
   * was ~3 s — the join is count-preserving because build keys are unique),
   * so a count-timed battery silently under-times every such plan. The
-  * checksum (`bit_xor(xxhash64(c0, …, cn))`) reads every column of every
-  * row, making elision impossible while adding only a codegen'd hash to the
-  * scan — and it is the same shape a deployment's sink write would force.
+  * checksum ([[Battery.force]], `bit_xor(xxhash64(c0, …, cn))`) reads
+  * every column of every row, making elision impossible while adding only
+  * a codegen'd hash to the scan — and it is the same shape a deployment's
+  * sink write would force.
   *
   * The battery is then timed TWICE at the target scale, and both passes are
   * reported per query:
@@ -97,53 +95,20 @@ object Bench {
       s""""load_avg_1m": ${loadAvg()}, "jvm_heap_used_mb": $heapUsedMb}"""
   }
 
-  private def containsMap(dt: DataType): Boolean = dt match {
-    case _: MapType => true
-    case a: ArrayType => containsMap(a.elementType)
-    case s: StructType => s.fields.exists(f => containsMap(f.dataType))
-    case _ => false
-  }
-
-  /** Materialize the honest plan: checksum every column of every row.
-    * Columns are positionally renamed first (no quoting pitfalls), and map
-    * columns go through to_json (xxhash64 rejects MapType — maps have no
-    * canonical entry order).
-    */
-  private def force(df: DataFrame): Unit = {
-    val renamed = df.toDF(df.columns.indices.map("c" + _): _*)
-    val cols = renamed.schema.fields.map { f =>
-      if (containsMap(f.dataType)) to_json(col(f.name)) else col(f.name)
-    }
-    if (cols.isEmpty) { renamed.count(); () }
-    else {
-      renamed.select(xxhash64(cols.toIndexedSeq: _*).as("__row_h"))
-        .agg(expr("bit_xor(__row_h)")).collect()
-      ()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val stateStartup = machineState()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // tmpfs checkpoints for the streaming entries: the stream-stream join
-      // commits offsets/state for 32 partitions x 4 stores per batch, and
-      // those fsyncs against disk /tmp are fixed cost, not data work. A real
-      // cluster points this at durable storage instead (HDFS/S3); the
-      // provider/commit path is identical either way.
-      .config("spark.sql.streaming.checkpointLocation",
-        BatteryCheckpoints.freshBase("bench"))
-      .getOrCreate()
+    // tmpfs checkpoints for the streaming entries: the stream-stream join
+    // commits offsets/state for 32 partitions x 4 stores per batch, and
+    // those fsyncs against disk /tmp are fixed cost, not data work. A real
+    // cluster points this at durable storage instead (HDFS/S3); the
+    // provider/commit path is identical either way.
+    val spark = Battery.session(cpus, Some("bench"))
     spark.sparkContext.setLogLevel("WARN")
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { warmDir =>
       SparkEntry.queries.foreach { case (_, fn) =>
-        try force(fn(spark, warmDir))
+        try Battery.force(fn(spark, warmDir))
         catch { case _: Throwable => () }
         spark.catalog.clearCache()
       }
@@ -151,7 +116,7 @@ object Bench {
     def timedPass(): Map[String, Double] =
       SparkEntry.queries.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try force(fn(spark, sfDir)) catch { case _: Throwable => () }
+        try Battery.force(fn(spark, sfDir)) catch { case _: Throwable => () }
         val elapsed = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache() // release per-query persisted intermediates (untimed)
         name -> elapsed

@@ -3,10 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Throwaway dev probe for the 100 TB linearity claim (VERDICT r6 Next #3):
-  * `gen` replicates the sf0.1 documents/embeddings tables Nx with seeded
-  * per-replica perturbation, `time` runs named battery queries against a
-  * generated dir and prints wall times.
+/** Scale-curve corpus generator (VERDICT r6 Next #3): replicates a battery
+  * dir's tables Nx with seeded per-replica perturbation, so the same
+  * queries can be timed at 1×/4×/16× and split into a fixed intercept and
+  * a per-row slope. Timing is `graft.QueryBench` pointed at the output
+  * (`SPARK_GRAFT_SF_DIR=<out> … graft.QueryBench q…`), under the battery's
+  * checksum force.
+  *
+  * Usage: runMain graft.ScaleProbe gen|gen_emb|gen_docs <srcDir> <outDir> <N>
+  *  - `gen`: documents, lineitem, events and embeddings;
+  *  - `gen_emb`: embeddings only (the full `gen` writes Nx lineitem — ~600M
+  *    rows at 1000 replicas of sf0.1 — that the vector probes never read);
+  *  - `gen_docs`: documents only, for the composed-pipeline curves.
   *
   * Perturbation design — PRESERVE near-dup structure, don't amplify it:
   *  - documents: replica k > 0 suffixes every whitespace token with `rk`,
@@ -31,1354 +39,29 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
 
-  /** Per-replica id stride for every `gen`-family table; [[main]]'s
-    * `embcheck` divides by the same constant to recover the replica.
-    */
-  private val ReplicaStride = 1L << 40
+  /** Per-replica id stride for every generated table. */
+  private[graft] val ReplicaStride = 1L << 40
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length == 4 && Set("gen", "gen_emb", "gen_docs")(args(0)),
+      "usage: ScaleProbe gen|gen_emb|gen_docs <srcDir> <outDir> <replicas>")
+    val (src, out, n) = (args(1), args(2), args(3).toInt)
+    val spark = Battery.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     args(0) match {
-      case "gen" =>
-        val (src, out, n) = (args(1), args(2), args(3).toInt)
-        gen(spark, src, out, n)
-      case "gen_emb" =>
-        // embeddings-only replication (the full `gen` writes the 1000×
-        // lineitem — ~600M rows the document/vector probes never read)
-        val (src, out, n) = (args(1), args(2), args(3).toInt)
-        genEmbeddings(spark, src, out, n)
-      case "skew" =>
-        // A/B the salted join vs the plain shuffle join on a pathological
-        // key: 90% of sf0.1 lineitem lands on ONE key. Broadcast disabled so
-        // the exchange question is real (with broadcast on, Spark correctly
-        // broadcasts the 5-row dim and salting is moot — that IS the
-        // first-choice plan; salting is for dims too big to broadcast).
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", args.lift(2).forall(_ != "noaqe").toString)
-        val dir = args(1)
-        val mult = args.lift(3).map(_.toInt).getOrElse(1)
-        val l = spark.read.parquet(s"$dir/lineitem.parquet")
-          .withColumn("__m", explode(sequence(lit(1), lit(mult))))
-          .withColumn("skew_key",
-            when(pmod(col("l_orderkey"), lit(10)) < 9, 0L)
-              .otherwise(pmod(col("l_orderkey"), lit(5)))) // ~90% on key 0
-        val r = spark.read.parquet(s"$dir/region.parquet")
-          .select(col("r_regionkey").cast("long").as("skew_key"), col("r_name"))
-        def time(tag: String)(df: => org.apache.spark.sql.DataFrame): Unit =
-          (1 to 3).foreach { i =>
-            val t0 = System.nanoTime()
-            val n = df.count()
-            println(f"[skew] $tag run$i rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-          }
-        time("plain")(l.join(r, Seq("skew_key")))
-        time("salted")(minietl.ops.Skew.saltedJoin(l, r, Seq("skew_key"), factor = 8))
-      case "pagerank" =>
-        // stage-by-stage wall clock of the q_pagerank pipeline at a dir,
-        // replicating the PRODUCTION shape (edge+outdeg pre-join, one
-        // full-outer checks job, one node-sized join per iteration)
-        val dir = args(1)
-        def stamp[T](tag: String)(body: => T): T = {
-          val t0 = System.nanoTime(); val r = body
-          println(f"[pr] $tag time=${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-        }
-        (1 to 2).foreach { round =>
-          println(s"[pr] --- pass $round ---")
-          val li = spark.read.parquet(s"$dir/lineitem.parquet")
-          val edges = minietl.graph.PageRank.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-          val e = edges.select("src", "dst").persist()
-          stamp("edges-materialize")(e.count())
-          val deg = e.groupBy(col("src").as("node"))
-            .agg(count(lit(1)).as("outdeg")).persist()
-          stamp("deg-materialize")(deg.count())
-          val n = stamp("checks-fold") {
-            deg.select(col("node"), lit(1).as("has_out"))
-              .join(e.select(col("dst").as("node")).distinct()
-                  .select(col("node"), lit(1).as("has_in")),
-                Seq("node"), "full_outer")
-              .agg(count(when(col("has_out").isNull, 1)),
-                count(when(col("has_in").isNull, 1)),
-                count(col("has_out")).as("n")).head().getLong(2)
-          }
-          val e2 = e.join(deg, e("src") === deg("node"))
-            .select(col("src"), col("dst"), col("outdeg")).persist()
-          stamp("edge+outdeg-materialize")(e2.count())
-          val scale = 1000000000000L
-          val base = (15L * scale / 100L) / n
-          val init = deg.select(col("node"), lit(scale / n).as("rank_fp"))
-          val last = (1 to 3).foldLeft(init) { (r, _) =>
-            e2.join(r, e2("src") === r("node"))
-              .groupBy(col("dst").as("node"))
-              .agg((lit(base) + expr("85 * sum(rank_fp DIV outdeg) DIV 100")).as("rank_fp"))
-          }
-          stamp("3-iterations+checkpoint")(last.select("node", "rank_fp").localCheckpoint(true))
-          e.unpersist(); deg.unpersist(); e2.unpersist()
-        }
-      case "lsh" =>
-        // embedding LSH near-dup with CORPUS-SIZED band width (the dial
-        // Similarity.cosineNearDupPairs documents: 2^bitsPerBand must stay
-        // >> n or within-bucket pair volume goes quadratic — the battery's
-        // 8-bit setting is tuned for sf0.1's ~5k vectors and at 100x it
-        // floods the shuffle with ~C(cap,2)-sized buckets; measured: >40 GB
-        // of shuffle spill, disk-killed). bitsPerBand passed as arg.
-        val dir = args(1)
-        val bits = args.lift(2).map(_.toInt).getOrElse(16)
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-        (1 to 2).foreach { i =>
-          val t0 = System.nanoTime()
-          val rows = minietl.sim.Similarity.cosineNearDupPairs(
-            emb, threshold = 0.4, bitsPerBand = bits, bands = 32, dim = 64).count()
-          println(f"[lsh] dir=$dir bits=$bits run$i rows=$rows " +
-            f"time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-          spark.catalog.clearCache()
-        }
-      case "embcheck" =>
-        // classify q_emb_neardup output pairs: same-replica vs cross-replica
-        val df = SparkEntry.queries("q_emb_neardup")(spark, args(1))
-        df.printSchema()
-        val cols = df.columns
-        val a = col(cols(0)) / lit(ReplicaStride)
-        val b = col(cols(1)) / lit(ReplicaStride)
-        df.groupBy((a.cast("long") === b.cast("long")).as("same_replica"))
-          .count().show()
-      case "semdedup" =>
-        // SemDeDup at a (replicated) embeddings dir: nlist is THE scale
-        // dial — clusters must stay executor-sized or the within-cluster
-        // pairwise goes quadratic on the corpus. args: <dir> [nlist] [tau]
-        val dir = args(1)
-        val nlist = args.lift(2).map(_.toInt).getOrElse(64)
-        val tau = args.lift(3).map(_.toDouble).getOrElse(0.9)
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-        val n = emb.count()
-        (1 to 2).foreach { i =>
-          val t0 = System.nanoTime()
-          val model = minietl.sim.Ivf.train(emb, nlist = nlist, iters = 3)
-          val tTrain = (System.nanoTime() - t0) / 1e9
-          val out = minietl.sim.SemDedup.semDedup(emb, model, tau)
-          val kept = out.filter(col("keep") === 1L).count()
-          val total = (System.nanoTime() - t0) / 1e9
-          println(f"[semdedup] dir=$dir n=$n nlist=$nlist tau=$tau run$i " +
-            f"kept=$kept dropped=${n - kept} train=$tTrain%.1fs total=$total%.1fs")
-          spark.catalog.clearCache()
-        }
-      case "rp_semdedup_ab" =>
-        // VERDICT r14 Next #4: A/B project-then-semdedup vs raw-dim
-        // semdedup. Train once per representation (training is
-        // tau-independent), then per tau compare the DROPPED sets (raw-dim
-        // treated as truth: recall = |dropB ∩ dropA| / |dropA|) and the
-        // serving walls. args: <dir> [nlist] [dimOut]
-        val dir = args(1)
-        val nlist = args.lift(2).map(_.toInt).getOrElse(64)
-        val dimOut = args.lift(3).map(_.toInt).getOrElse(8)
-        val base = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        // plant ground truth: every 20th vector gets a SCALED copy
-        // (negative id). Scaling preserves cosine exactly (= 1.0 ≥ any
-        // tau) and commutes with the linear projection, so both
-        // representations SHOULD drop one of each planted pair — recall
-        // against this known set is the probe's signal (the replicated
-        // corpus itself is sign-flip-diversified, near-dup-free by
-        // construction)
-        val planted = base.where(pmod(col("vec_id"), lit(20)) === 0)
-          .select((-col("vec_id") - lit(1L)).as("vec_id"),
-            transform(col("embedding"), x => (x * lit(1.001f)).cast("float"))
-              .as("embedding"))
-        val raw = base.unionByName(planted).localCheckpoint(true)
-        val n = raw.count()
-        val nPlanted = planted.count()
-        println(s"[rp_ab] planted $nPlanted scaled near-dup pairs")
-        val dimIn = raw.select(size(col("embedding"))).head().getInt(0)
-        val t0p = System.nanoTime()
-        val proj = minietl.sim.RandomProjection
-          .projectFrame(raw, "vec_id", "embedding", seed = 7, dimIn, dimOut)
-          .localCheckpoint(true)
-        val projWall = (System.nanoTime() - t0p) / 1e9
-        println(f"[rp_ab] n=$n dimIn=$dimIn dimOut=$dimOut project_wall=$projWall%.1fs")
-        def trainT(df: org.apache.spark.sql.DataFrame, vc: String): (minietl.sim.Ivf.Model, Double) = {
-          val t0 = System.nanoTime()
-          val m = minietl.sim.Ivf.train(df, nlist = nlist, iters = 3, vecCol = vc)
-          (m, (System.nanoTime() - t0) / 1e9)
-        }
-        val (mRaw, tRaw) = trainT(raw, "embedding")
-        val (mProj, tProj) = trainT(proj, "y")
-        println(f"[rp_ab] train nlist=$nlist raw=$tRaw%.1fs proj=$tProj%.1fs")
-        Seq(0.7, 0.9, 0.95).foreach { tau =>
-          def dropped(df: org.apache.spark.sql.DataFrame, m: minietl.sim.Ivf.Model,
-                      vc: String): (Set[Long], Double) = {
-            val t0 = System.nanoTime()
-            val ids = minietl.sim.SemDedup.semDedup(df, m, tau, "vec_id", vc)
-              .where(col("keep") === 0L).select("id")
-              .collect().map(_.getLong(0)).toSet
-            val w = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            (ids, w)
-          }
-          val (dA, wA) = dropped(raw, mRaw, "embedding")
-          val (dB, wB) = dropped(proj, mProj, "y")
-          val recall = if (dA.isEmpty) 1.0 else dB.intersect(dA).size.toDouble / dA.size
-          val extra = dB.diff(dA).size
-          println(f"[rp_ab] tau=$tau raw_dropped=${dA.size} proj_dropped=${dB.size} " +
-            f"(planted=$nPlanted) recall=$recall%.3f proj_extra_drops=$extra " +
-            f"raw_wall=$wA%.1fs proj_wall=$wB%.1fs")
-        }
-      case "nb_dsir_dim" =>
-        // VERDICT r14 Next #7: hashing-dim sensitivity for the trained
-        // text operators. One table: dim in {64,256,1024} x {NB label
-        // agreement, NB pred stability vs dim=1024, DSIR top-k overlap vs
-        // dim=1024, walls}. args: <dir> [k] [target_condition]
-        val dir = args(1)
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text", "lang").localCheckpoint(true)
-        val n = docs.count()
-        val k = args.lift(2).map(_.toInt).getOrElse(math.max(1, (n / 10).toInt))
-        val cond = args.lift(3).getOrElse("lang = 'en'")
-        val dims = Seq(64, 256, 1024)
-        val preds = dims.map { d =>
-          val t0 = System.nanoTime()
-          val model = minietl.text.NaiveBayes.train(docs, "lang", "text", d)
-          val cls = minietl.text.NaiveBayes
-            .classify(docs, model, "doc_id", "text", d)
-            .select("doc_id", "pred").localCheckpoint(true)
-          val agree = cls.join(docs, "doc_id")
-            .where(col("pred") === col("lang")).count()
-          println(f"[nbdim] dim=$d n=$n agree=${agree * 100.0 / n}%.2f%% " +
-            f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
-          d -> cls
-        }.toMap
-        dims.filter(_ != 1024).foreach { d =>
-          val same = preds(d).as("a")
-            .join(preds(1024).as("b"), col("a.doc_id") === col("b.doc_id"))
-            .where(col("a.pred") === col("b.pred")).count()
-          println(f"[nbdim] pred_overlap dim=$d vs 1024: ${same * 100.0 / n}%.2f%%")
-        }
-        val sels = dims.map { d =>
-          val t0 = System.nanoTime()
-          val ratio = minietl.text.Dsir.logRatio(docs, "text", expr(cond), d)
-          val top = minietl.text.Dsir.select(docs, ratio, "doc_id", "text", d, k)
-            .select("doc_id").localCheckpoint(true)
-          println(f"[dsirdim] dim=$d k=$k " +
-            f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
-          d -> top
-        }.toMap
-        dims.filter(_ != 1024).foreach { d =>
-          val inter = sels(d).join(sels(1024), "doc_id").count()
-          println(f"[dsirdim] topk_overlap dim=$d vs 1024: ${inter * 100.0 / k}%.2f%%")
-        }
-      case "nb_separable" =>
-        // VERDICT r15 Next #7 (stretch): the r15 1M-doc probe pinned only
-        // STABILITY because the synthetic corpus argmaxes to the prior.
-        // This corpus plants a label-correlated token family (the
-        // planted-cascade trick): lang = [en,fr,de][id % 3]; text = 6
-        // hash-noise tokens from a 50k vocabulary + 3 tokens from the
-        // label's PRIVATE 20-token vocabulary. Train on even ids, measure
-        // HELD-OUT accuracy on odd ids per dim: accuracy >> the 33.3%
-        // prior proves the distributed trainer learns real signal at 1M
-        // docs; the dim sweep shows where hashing collisions erode it.
-        // args: [n]
-        val n = args.lift(1).map(_.toLong).getOrElse(1000000L)
-        val docs = spark.range(n).select(
-          col("id").as("doc_id"),
-          element_at(typedlit(Seq("en", "fr", "de")),
-            (pmod(col("id"), lit(3)) + 1).cast("int")).as("lang"),
-          concat_ws(" ",
-            (0 until 6).map(j =>
-              concat(lit("w"), pmod(xxhash64(col("id"), lit(j)), lit(50000)))) ++
-              (0 until 3).map(j => concat(lit("sig"), pmod(col("id"), lit(3)),
-                lit("x"), pmod(xxhash64(col("id"), lit(100 + j)), lit(20)))): _*
-          ).as("text")).localCheckpoint(true)
-        val train = docs.where(pmod(col("doc_id"), lit(2)) === 0).localCheckpoint(true)
-        val test = docs.where(pmod(col("doc_id"), lit(2)) === 1).localCheckpoint(true)
-        val nTest = test.count()
-        Seq(64, 256, 1024).foreach { d =>
-          val t0 = System.nanoTime()
-          val model = minietl.text.NaiveBayes.train(train, "lang", "text", d)
-          val acc = minietl.text.NaiveBayes.classify(test, model, "doc_id", "text", d)
-            .join(test.select("doc_id", "lang"), "doc_id")
-            .where(col("pred") === col("lang")).count()
-          println(f"[nbsep] dim=$d n_test=$nTest " +
-            f"acc=${acc * 100.0 / nTest}%.2f%% (prior 33.33%%) " +
-            f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
-        }
-
-      case "semdedup_adversarial" =>
-        // VERDICT r14 Next #2: the degenerate single-cluster regime — every
-        // vector sits in a tiny cone around one direction, k-means collapses
-        // the corpus into one hot cluster, and WITHOUT the census cap the
-        // within-cluster pair join emits ~n^2/2 rows no nlist dial can
-        // bound. The uncapped CONTROL runs at small doubling sizes to
-        // document the quadratic; the CAPPED run at full n must complete
-        // with zero pairs (every cluster over cap → all rows isolated
-        // keep=1). args: [n] [nlist]
-        val n = args.lift(1).map(_.toLong).getOrElse(200000L)
-        val nlist = args.lift(2).map(_.toInt).getOrElse(8)
-        def adversarial(rows: Long) = spark.range(rows).select(
-          col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(15)), d =>
-            (when(d === lit(0), lit(1.0)).otherwise(lit(0.0)) +
-              (pmod(xxhash64(col("id"), d), lit(1001)).cast("double") - lit(500.0))
-                / lit(1e7)).cast("float")).as("embedding"))
-          .localCheckpoint(true)
-        def run1(rows: Long, cap: Int, tag: String, rounds: Int): Unit = {
-          val emb = adversarial(rows)
-          val t0 = System.nanoTime()
-          val model = minietl.sim.Ivf.train(emb, nlist = nlist, iters = 3)
-          val (out, subs) = minietl.sim.SemDedup.semDedupTrace(emb, model,
-            tau = 0.99, maxClusterSize = cap, reclusterRounds = rounds)
-          val agg = out.agg(
-            sum(when(col("keep") === 1L, 1L).otherwise(0L)).as("kept"),
-            countDistinct(col("cluster")).as("clusters")).head()
-          val wall = (System.nanoTime() - t0) / 1e9
-          println(f"[semdedup_adv] $tag%-10s n=$rows cap=$cap rounds=$rounds " +
-            f"sub_models=${subs.size} kept=${agg.getLong(0)} " +
-            f"clusters=${agg.getLong(1)} wall=$wall%.1fs")
-          spark.catalog.clearCache()
-        }
-        Seq(2000L, 4000L, 8000L).foreach(m =>
-          run1(m, Int.MaxValue, "uncapped", 0))
-        // r15 guard (isolate-only: zero recall by design) vs r16 recovery
-        // (one sub-k-means round: nonzero dedup, bounded wall)
-        run1(n, minietl.dedup.Dedup.DefaultMaxBucket, "cap_iso", 0)
-        run1(n, minietl.dedup.Dedup.DefaultMaxBucket, "cap_recover", 1)
-      case "perceptual_robustness" =>
-        // VERDICT r15 Next #3: measure the robustness CLAIM both perceptual
-        // hash scaladocs make — that benign re-encodes keep the contour /
-        // gradient signs — instead of asserting it. For each synthetic
-        // clip/image, derive a transformed copy, hash BOTH through the real
-        // decode paths, and tabulate the Hamming-distance distribution:
-        // recall@d = P(dist <= d) IS the near-dup fold's pair recall at
-        // max_dist d (the 4x14 banding is exhaustive for dist <= 3).
-        // args: [n]
-        import org.apache.spark.sql.Row
-        val n = args.lift(1).map(_.toLong).getOrElse(4000L)
-        val ids = spark.range(n).select(col("id").as("doc_id"))
-        def wavBytes(samples: Array[Int], bits: Int, rate: Int): Array[Byte] = {
-          import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-          val bps = bits / 8
-          val pcm = new Array[Byte](samples.length * bps)
-          var i = 0
-          while (i < samples.length) {
-            var b = 0
-            while (b < bps) {
-              pcm(i * bps + b) = ((samples(i) >> (8 * b)) & 0xff).toByte
-              b += 1
-            }
-            i += 1
-          }
-          val fmt = new AudioFormat(rate.toFloat, bits, 1, bits > 8, false)
-          val ais = new AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, samples.length.toLong)
-          val bos = new java.io.ByteArrayOutputStream()
-          AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-          bos.toByteArray
-        }
-        // regenerate the syntheticWavs waveform closed-form, transform the
-        // SAMPLES (what a re-encoder sees), re-encode for real. `lf` = an
-        // ENVELOPE-STRUCTURED twin: the stock corpus is a STATIONARY
-        // square wave, whose loudness envelope is flat — its contour bits
-        // are window-length arithmetic noise by definition, so no
-        // resampling robustness can exist for it (measured: r@3 <= 0.17
-        // in every stationary variant tried, including band-limited
-        // carriers and 32x-longer clips). The lf family modulates a
-        // period-8 carrier by a per-RELATIVE-position amplitude step
-        // pattern (seg = i*57/n, the hash's own window grid; scale =
-        // 1 + (id*7 + seg*13) % 9), i.e. a signal whose MACRO loudness
-        // envelope varies across windows — the thing the hash actually
-        // fingerprints and the thing resampling preserves (i/n is
-        // invariant under uniform rate change)
-        def audioVariant(tag: String, lf: Boolean = false): org.apache.spark.sql.DataFrame = {
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("content",
-              org.apache.spark.sql.types.BinaryType)))
-          val rows = ids.rdd.mapPartitions { it =>
-            it.map { r =>
-              val id = r.getLong(0)
-              // lf clips are 32x longer so each of the 57 energy windows
-              // spans many carrier periods — the regime real audio lives
-              // in, where window energies average over periods instead of
-              // riding window-boundary phase
-              val nS = (300 + id % 101).toInt * (if (lf) 32 else 1)
-              val rate = (8000 + (id % 3) * 4000).toInt
-              val a1 = ((131 * id) % 20001 - 10000).toInt
-              val a2 = ((257 * id + 19) % 20001 - 10000).toInt
-              val s =
-                if (lf) Array.tabulate(nS) { i =>
-                  val seg = (i.toLong * 57 / nS).toInt
-                  val scale = 1 + ((id * 7 + seg * 13) % 9).toInt
-                  val carrier = if ((i / 4) % 2 == 0) 800 + (id % 300).toInt
-                                else -(800 + (id % 300).toInt)
-                  carrier * scale
-                }
-                else Array.tabulate(nS)(i => if (i % 2 == 0) a1 else a2)
-              val bytes = tag match {
-                case "orig" => wavBytes(s, 16, rate)
-                case "gain_half" => wavBytes(s.map(_ / 2), 16, rate)
-                case "gain_2x_clip" => wavBytes(
-                  s.map(v => math.max(-32768, math.min(32767, v * 2))), 16, rate)
-                case "bits_8" =>
-                  // 8-bit WAV is unsigned by convention; quantize 16->8
-                  wavBytes(s.map(v => (v >> 8) + 128), 8, rate)
-                case "upsample_2x" => wavBytes(
-                  Array.tabulate(nS * 2)(i => s(i / 2)), 16, rate * 2)
-                case "downsample_2x" => wavBytes(
-                  Array.tabulate(nS / 2)(i => s(i * 2)), 16, rate / 2)
-              }
-              Row(id, bytes)
-            }
-          }
-          spark.createDataFrame(rows, schema)
-        }
-        def imageVariant(tag: String): org.apache.spark.sql.DataFrame = {
-          val base = minietl.multimodal.PerceptualHash
-            .syntheticGradientImages(ids, "doc_id")
-            .select(col("media_id").as("doc_id"), col("content"))
-          if (tag == "orig") base
-          else base.sparkSession.createDataFrame(
-            base.rdd.mapPartitions { it =>
-              it.map { r =>
-                val img = javax.imageio.ImageIO.read(
-                  new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-                val (w, h) = (img.getWidth, img.getHeight)
-                def gray(v: Int) = {
-                  val c = math.max(0, math.min(255, v))
-                  (c << 16) | (c << 8) | c
-                }
-                val out = tag match {
-                  case "brightness_+24" | "contrast_1.3x" =>
-                    val o = new java.awt.image.BufferedImage(w, h,
-                      java.awt.image.BufferedImage.TYPE_INT_RGB)
-                    for (y <- 0 until h; x <- 0 until w) {
-                      val v = img.getRGB(x, y) & 0xff
-                      o.setRGB(x, y, gray(
-                        if (tag == "brightness_+24") v + 24
-                        else ((v - 128) * 13 / 10) + 128))
-                    }
-                    o
-                  case "rescale_2x" =>
-                    val o = new java.awt.image.BufferedImage(w * 2, h * 2,
-                      java.awt.image.BufferedImage.TYPE_INT_RGB)
-                    val g = o.createGraphics()
-                    g.drawImage(img, 0, 0, w * 2, h * 2, null)
-                    g.dispose()
-                    o
-                  case "jpeg_reencode" => img
-                }
-                val bos = new java.io.ByteArrayOutputStream()
-                javax.imageio.ImageIO.write(out,
-                  if (tag == "jpeg_reencode") "jpg" else "png", bos)
-                Row(r.getLong(0), bos.toByteArray)
-              }
-            }, base.schema)
-        }
-        def table(modality: String, hash: (org.apache.spark.sql.DataFrame, String, String) => org.apache.spark.sql.DataFrame,
-                  variant: String => org.apache.spark.sql.DataFrame,
-                  hashCol: String, tags: Seq[String]): Unit = {
-          val orig = hash(variant("orig"), "doc_id", "content")
-            .withColumnRenamed(hashCol, "h0").persist()
-          orig.count()
-          tags.foreach { tag =>
-            val t0 = System.nanoTime()
-            val v = hash(variant(tag), "doc_id", "content")
-            val d = orig.join(v, "doc_id")
-              .where(col("h0").isNotNull && col(hashCol).isNotNull)
-              .select(expr(s"bit_count($hashCol ^ h0)").cast("long").as("dist"))
-            val agg = d.agg(count(lit(1)).as("n"), avg("dist").as("mean"),
-              sum(when(col("dist") <= 1, 1).otherwise(0)).as("r1"),
-              sum(when(col("dist") <= 2, 1).otherwise(0)).as("r2"),
-              sum(when(col("dist") <= 3, 1).otherwise(0)).as("r3")).head()
-            val cnt = agg.getLong(0).toDouble
-            println(f"[robust] $modality%-5s ${tag}%-14s n=${agg.getLong(0)} " +
-              f"mean_dist=${agg.getDouble(1)}%.2f " +
-              f"r@1=${agg.getLong(2) / cnt}%.3f r@2=${agg.getLong(3) / cnt}%.3f " +
-              f"r@3=${agg.getLong(4) / cnt}%.3f " +
-              f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
-          }
-          orig.unpersist()
-        }
-        table("audio", minietl.multimodal.PerceptualAudio.energyHashFrame,
-          audioVariant(_), "ahash",
-          Seq("gain_half", "gain_2x_clip", "bits_8", "upsample_2x", "downsample_2x"))
-        table("audioLF", minietl.multimodal.PerceptualAudio.energyHashFrame,
-          tag => audioVariant(tag, lf = true), "ahash",
-          Seq("upsample_2x", "downsample_2x", "bits_8"))
-        table("image", minietl.multimodal.PerceptualHash.dHashFrame,
-          imageVariant, "dhash",
-          Seq("brightness_+24", "contrast_1.3x", "rescale_2x", "jpeg_reencode"))
-
-      case "recover_profile" =>
-        // phase split of the r16 recovery wall at the adversarial 200k
-        // corpus: train / assign / pairs / group-local CC. args: [n]
-        val n = args.lift(1).map(_.toLong).getOrElse(200000L)
-        val emb = spark.range(n).select(
-          col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(15)), d =>
-            (when(d === lit(0), lit(1.0)).otherwise(lit(0.0)) +
-              (pmod(xxhash64(col("id"), d), lit(1001)).cast("double") - lit(500.0))
-                / lit(1e7)).cast("float")).as("embedding"))
-          .localCheckpoint(true)
-        def t[A](tag: String)(f: => A): A = {
-          val t0 = System.nanoTime()
-          val out = f
-          println(f"[recprof] $tag%-12s ${(System.nanoTime() - t0) / 1e9}%.1fs")
-          out
-        }
-        val a = emb.select(col("vec_id").as("id"),
-            transform(col("embedding"), x => x.cast("double")).as("v"))
-          .withColumn("norm", sqrt(minietl.functions.vec.dot(col("v"), col("v"))))
-          .localCheckpoint(true)
-        val sub = t("train400") {
-          minietl.sim.Ivf.train(a, nlist = 400, iters = 3, idCol = "id", vecCol = "v")
-        }
-        val keyed = t("assign") {
-          a.withColumn("sub", minietl.sim.Ivf.assignList(col("v"), sub))
-            .localCheckpoint(true)
-        }
-        val pairs = t("pairs") {
-          val p = keyed.as("x").join(keyed.as("y"),
-              col("x.sub") === col("y.sub") && col("x.id") < col("y.id"))
-            .withColumn("cos", round(minietl.functions.vec.dot(col("x.v"), col("y.v"))
-              / (col("x.norm") * col("y.norm")), 4))
-            .where(col("cos") >= 0.99)
-            .select(col("x.sub").cast("string").as("g"),
-              col("x.id").as("id_a"), col("y.id").as("id_b"))
-            .localCheckpoint(true)
-          println(s"[recprof] n_pairs=${p.count()}")
-          p
-        }
-        t("group_cc") {
-          println("[recprof] comp_rows=" +
-            minietl.dedup.Dedup.groupLocalComponents(pairs, Seq("g")).count())
-        }
-
-      case "recover_recall" =>
-        // VERDICT r16 Next #1: GROUND-TRUTH recall / false-merge of the
-        // recovery chain at probe scale. The planted corpus makes the
-        // duplicate structure exact by construction: 32 classes on
-        // mutually orthogonal/antipodal axis directions (cross-class cos
-        // ~0 or -1 — never >= tau) with +-5e-5 per-dim noise (within-class
-        // cos >= 0.9999 — always >= tau), so the true components ARE the
-        // classes. Class mass is skewed so the census cap genuinely fires:
-        // class 0 holds 50% of rows, classes 1/2 20%/10%, 3-11 2% each,
-        // 12-31 0.1% each (under the default cap at every probed n).
-        //
-        //   false_merged_classes = classes with NO kept representative (a
-        //     component spanning two classes erases one) — must be 0;
-        //   recall = dropped / (n - 32) — with false_merge 0 every drop is
-        //     correct, since all rows of a class are mutual duplicates;
-        //   extra_kept = kept - classes_covered — the recall misses
-        //     (sub-cell boundaries keep > 1 representative per class).
-        //
-        // args: [sizes csv] [caps csv] [rounds csv] [maxNlist csv]
-        val sizes = args.lift(1).map(_.split(",").map(_.toLong).toSeq)
-          .getOrElse(Seq(50000L, 200000L, 400000L))
-        val caps = args.lift(2).map(_.split(",").map(_.toInt).toSeq)
-          .getOrElse(Seq(minietl.dedup.Dedup.DefaultMaxBucket))
-        val roundsList = args.lift(3).map(_.split(",").map(_.toInt).toSeq)
-          .getOrElse(Seq(1))
-        val maxNlists = args.lift(4).map(_.split(",").map(_.toInt).toSeq)
-          .getOrElse(Seq(65536))
-        def plantedClasses(rows: Long) = {
-          val m = pmod(col("id"), lit(1000L))
-          val cls = when(m < 500, lit(0L)).when(m < 700, lit(1L))
-            .when(m < 800, lit(2L))
-            .when(m < 980, lit(3L) + floor((m - lit(800L)) / lit(20L)).cast("long"))
-            .otherwise(lit(12L) + (m - lit(980L)))
-          spark.range(rows).select(
-            col("id").as("vec_id"), cls.as("cls"),
-            transform(sequence(lit(0), lit(15)), d =>
-              (when(d === (cls % 16),
-                when(cls < 16, lit(1.0)).otherwise(lit(-1.0)))
-                .otherwise(lit(0.0)) +
-                (pmod(xxhash64(col("id"), d), lit(1001)).cast("double") - lit(500.0))
-                  / lit(1e7)).cast("float")).as("embedding"))
-            .localCheckpoint(true)
-        }
-        for (n <- sizes; cap <- caps; rounds <- roundsList; mnl <- maxNlists) {
-          val emb = plantedClasses(n)
-          // the PRESENT class count, not the literal 32: an n below (or
-          // not covering) the 1000 id-residues leaves some classes empty,
-          // and counting against 32 would report phantom false merges
-          val nClasses = emb.select(countDistinct(col("cls"))).head().getLong(0)
-          val t0 = System.nanoTime()
-          val model = minietl.sim.Ivf.train(emb, nlist = 8, iters = 3)
-          val out = minietl.sim.SemDedup.semDedup(emb, model, tau = 0.99,
-            maxClusterSize = cap, reclusterRounds = rounds,
-            reclusterMaxNlist = mnl)
-          val agg = out.where(col("keep") === 1L).select(col("id"))
-            .join(emb.select(col("vec_id").as("id"), col("cls")), Seq("id"))
-            .agg(count(lit(1)).as("kept"),
-              countDistinct(col("cls")).as("covered")).head()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val (kept, covered) = (agg.getLong(0), agg.getLong(1))
-          val recall = (n - kept).toDouble / (n - nClasses).toDouble
-          println(f"[rec_recall] n=$n cap=$cap rounds=$rounds mnl=$mnl kept=$kept " +
-            f"extra_kept=${kept - covered} " +
-            f"false_merged_classes=${nClasses - covered} " +
-            f"recall=$recall%.4f wall=$wall%.1fs")
-          spark.catalog.clearCache()
-        }
-
-      case "dhash" =>
-        // perceptual-hash linearity: generate n gradient PNGs in-flight,
-        // time decode+hash and the banded Hamming join. args: <n>
-        val n = args.lift(1).map(_.toLong).getOrElse(100000L)
-        val ids = spark.range(n).select((col("id") * 37L).as("doc_id"))
-        (1 to 2).foreach { i =>
-          val t0 = System.nanoTime()
-          val imgs = minietl.multimodal.PerceptualHash
-            .syntheticGradientImages(ids, "doc_id")
-          val hashes = minietl.multimodal.PerceptualHash.dHashes(imgs)
-            .persist()
-          val nh = hashes.count()
-          val tHash = (System.nanoTime() - t0) / 1e9
-          val pairs = minietl.multimodal.PerceptualHash
-            .hammingPairs(hashes, "media_id", "dhash", maxDist = 3).count()
-          val total = (System.nanoTime() - t0) / 1e9
-          println(f"[dhash] n=$nh run$i hash_wall=$tHash%.1fs pairs=$pairs " +
-            f"total=$total%.1fs")
-          hashes.unpersist()
-          spark.catalog.clearCache()
-        }
-      case "cc" =>
-        // Exercise the distributed connectedComponents path PAST the 2M-pair
-        // driver gate (VERDICT r9 Next #1): synthesize `nClusters` chain
-        // clusters of sizes 2..10 (chains = worst-case diameter per size)
-        // plus one extra-long chain, force driverPathMaxPairs = 0, and
-        // verify EVERY label distributedly (node id is laid out as
-        // base + offset with base = id - id % 12, so the expected component
-        // label of every node is computable scan-side — no oracle collect).
-        val nClusters = args.lift(1).map(_.toLong).getOrElse(450000L)
-        val longChain = args.lift(2).map(_.toInt).getOrElse(40)
-        val stride = 12L
-        val chains = spark.range(nClusters)
-          .select((col("id") * stride).as("base"),
-            (pmod(col("id"), lit(9)) + 2).cast("int").as("size"))
-          .select(col("base"), explode(sequence(lit(0), col("size") - 2)).as("k"))
-          .select((col("base") + col("k")).as("id_a"),
-            (col("base") + col("k") + 1).as("id_b"))
-        val tailBase = nClusters * stride
-        val tail = spark.range(longChain - 1)
-          .select((col("id") + tailBase).as("id_a"), (col("id") + tailBase + 1).as("id_b"))
-        val edges = chains.union(tail)
-        val nEdges = edges.count()
-        val t0 = System.nanoTime()
-        val (labels, iters) = minietl.dedup.Dedup.connectedComponentsWithStats(
-          edges, driverPathMaxPairs = 0L)
-        // expected comp: cluster base for chain nodes; tailBase for the tail
-        val expected = when(col("id") >= tailBase, lit(tailBase))
-          .otherwise(col("id") - pmod(col("id"), lit(stride)))
-        val wrong = labels.filter(col("comp") =!= expected).count()
-        val nNodes = labels.count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        println(f"[cc] edges=$nEdges nodes=$nNodes iterations=$iters " +
-          f"wall=$secs%.1fs mislabeled=$wrong")
-      case "cc_crossover" =>
-        // VERDICT r16 Next #8: re-probe the 2M-pair driver union-find vs
-        // distributed star-contraction crossover (calibrated r4; the
-        // native argmin and group-local CC changed the cost balance around
-        // it). Chain graphs (worst-case diameter) at each pair count, BOTH
-        // paths forced, labels verified scan-side. args: [pairs csv]
-        val pairTargets = args.lift(1).map(_.split(",").map(_.toLong).toSeq)
-          .getOrElse(Seq(1000000L, 2000000L, 4000000L, 8000000L))
-        val strideX = 12L
-        def chainGraph(pairs: Long) = {
-          // sizes 2..10 -> avg 5 edges per cluster
-          val nClusters = pairs / 5
-          spark.range(nClusters)
-            .select((col("id") * strideX).as("base"),
-              (pmod(col("id"), lit(9)) + 2).cast("int").as("size"))
-            .select(col("base"), explode(sequence(lit(0), col("size") - 2)).as("k"))
-            .select((col("base") + col("k")).as("id_a"),
-              (col("base") + col("k") + 1).as("id_b"))
-            .localCheckpoint(true)
-        }
-        for (p <- pairTargets;
-             (tag, cap) <- Seq("driver" -> Long.MaxValue, "dist" -> 0L)) {
-          val edges = chainGraph(p)
-          val nEdges = edges.count()
-          val t0 = System.nanoTime()
-          val (labels, iters) = minietl.dedup.Dedup
-            .connectedComponentsWithStats(edges, driverPathMaxPairs = cap)
-          val expected = col("id") - pmod(col("id"), lit(strideX))
-          val wrong = labels.filter(col("comp") =!= expected).count()
-          println(f"[cc_x] pairs=$nEdges path=$tag " +
-            f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs iters=$iters " +
-            f"mislabeled=$wrong")
-          spark.catalog.clearCache()
-        }
-
-      case "dedup_history" =>
-        // two-drain replay of the self-maintaining ingest-dedup loop (the
-        // stream-YAML dedup_history stage) over a dir's documents table:
-        // drain 1 stages the even-id half, drain 2 stages ALL docs — so
-        // batch 2 is half history-dups (anti-joined against the digest
-        // drain 1 recorded) and half fresh. Prints per-drain wall time.
-        val dir = args(1)
-        val work = java.nio.file.Files.createTempDirectory("graft_dh_probe").toString
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        val yaml =
-          s"""name: dh_probe
-             |stream:
-             |  source:
-             |    type: parquet
-             |    path: $work/in
-             |    schema:
-             |      - {name: doc_id, dtype: int64}
-             |      - {name: text, dtype: string}
-             |  stages:
-             |    - type: dedup_history
-             |      history: $work/digest
-             |      columns: [text]
-             |  sink:
-             |    type: parquet
-             |    path: $work/out
-             |    checkpoint: $work/chk
-             |""".stripMargin
-        def stamp[T](tag: String)(body: => T): T = {
-          val t0 = System.nanoTime(); val r = body
-          println(f"[dh] $tag time=${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-        }
-        docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("append").parquet(s"$work/in")
-        stamp("drain1-even-half")(
-          minietl.config.Config.loadStream(yaml).runAvailableNow(spark))
-        docs.write.mode("append").parquet(s"$work/in")
-        stamp("drain2-all-docs")(
-          minietl.config.Config.loadStream(yaml).runAvailableNow(spark))
-        val admitted = spark.read.parquet(s"$work/out").count()
-        val digest = spark.read.parquet(s"$work/digest").count()
-        val distinctTexts = docs.select("text").distinct().count()
-        println(s"[dh] admitted=$admitted digest=$digest distinct_texts=$distinctTexts")
-      case "neardup_history" =>
-        // two-drain replay of the NEAR-dup ingest loop (neardup_history
-        // stream stage) over a dir's documents: drain 1 stages the even-id
-        // half, drain 2 stages ALL docs — batch 2's odd ids are fresh
-        // unless they near-dup an admitted even doc via the band digest.
-        val dir = args(1)
-        val work = java.nio.file.Files.createTempDirectory("graft_nd_probe").toString
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        val yaml =
-          s"""name: nd_probe
-             |stream:
-             |  source:
-             |    type: parquet
-             |    path: $work/in
-             |    schema:
-             |      - {name: doc_id, dtype: int64}
-             |      - {name: text, dtype: string}
-             |  stages:
-             |    - type: neardup_history
-             |      history: $work/bands
-             |      id: doc_id
-             |      column: text
-             |      threshold: 0.8
-             |  sink:
-             |    type: parquet
-             |    path: $work/out
-             |    checkpoint: $work/chk
-             |""".stripMargin
-        def stampNd[T](tag: String)(body: => T): T = {
-          val t0 = System.nanoTime(); val r = body
-          println(f"[nd] $tag time=${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-        }
-        docs.filter(col("doc_id") % 2 === 0)
-          .write.mode("append").parquet(s"$work/in")
-        stampNd("drain1-even-half")(
-          minietl.config.Config.loadStream(yaml).runAvailableNow(spark))
-        docs.write.mode("append").parquet(s"$work/in")
-        stampNd("drain2-all-docs")(
-          minietl.config.Config.loadStream(yaml).runAvailableNow(spark))
-        println(s"[nd] admitted=${spark.read.parquet(s"$work/out").count()} " +
-          s"bands=${spark.read.parquet(s"$work/bands").count()}")
-      case "ann" =>
-        // 100× probes for the ANN SERVE family (VERDICT r10 Next #3) — the
-        // one heavy family absent from the PLANS.md 100× table. Same
-        // parameters as the battery queries (q_ivf_ann, q_ann_topk_int8,
-        // q_knn_label) so the 1× numbers are the battery's own shapes.
-        val dir = args(1)
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-        def time2(tag: String)(body: => Long): Unit = (1 to 2).foreach { i =>
-          val t0 = System.nanoTime()
-          val out = body
-          println(f"[ann] $tag dir=$dir run$i out=$out " +
-            f"time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-          spark.catalog.clearCache()
-        }
-        var model: minietl.sim.Ivf.Model = null
-        time2("ivf_train") {
-          model = minietl.sim.Ivf.train(emb, nlist = 8, iters = 3)
-          model.centroids.size.toLong
-        }
-        time2("ivf_topk") {
-          minietl.sim.Ivf.topK(emb, emb.filter(col("vec_id") < 10), model,
-            k = 5, nprobe = 3).count()
-        }
-        time2("int8_rerank") {
-          minietl.sim.Quantize.int8RerankTopK(
-            emb, emb.filter(col("vec_id") < 10), k = 5, preK = 20).count()
-        }
-        time2("knn_classify") {
-          minietl.sim.Similarity.knnClassify(emb, emb.filter(col("vec_id") < 20),
-            k = 10, labelCol = "label").count()
-        }
-      case "digest_longevity" =>
-        // N-drain longevity of the near-dup ingest loop (VERDICT r10 Next
-        // #4): every drain stages a full per-drain-suffixed corpus replica
-        // (all fresh texts) plus 20% re-emissions of the PREVIOUS drain's
-        // texts under new ids (history dups the digest must drop), with
-        // compaction engaged every `compactEvery` drains. Records per-drain
-        // wall, admitted, digest rows and digest file count — the trajectory
-        // that shows whether the self-maintaining loop reaches steady state
-        // or degrades.
-        val dir = args(1)
-        val drains = args.lift(2).map(_.toInt).getOrElse(20)
-        val compactEvery = args.lift(3).map(_.toInt).getOrElse(5)
-        val work = java.nio.file.Files.createTempDirectory("graft_longevity").toString
-        val in = s"$work/in"; val digest = s"$work/digest"
-        val chk = s"$work/chk"; val out = s"$work/out"
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        def parquetFiles(p: String): Long = {
-          val base = java.nio.file.Paths.get(p)
-          if (!java.nio.file.Files.exists(base)) 0L
-          else {
-            val s = java.nio.file.Files.walk(base)
-            try s.filter(_.toString.endsWith(".parquet")).count() finally s.close()
-          }
-        }
-        (0 until drains).foreach { i =>
-          def stamped(src: org.apache.spark.sql.DataFrame, suffix: Int, idOffset: Long) =
-            src.select((col("doc_id") + lit(i * ReplicaStride) + lit(idOffset)).as("doc_id"),
-              regexp_replace(col("text"), lit("(\\S+)"),
-                concat(lit("$1d"), lit(suffix))).as("text"))
-          val fresh = stamped(docs, i, 0L)
-          val re = if (i == 0) fresh.limit(0)
-            else stamped(docs.where(pmod(col("doc_id"), lit(5)) === 1), i - 1, 5000000L)
-          fresh.unionAll(re).write.mode("append").parquet(in)
-          var admitted = 0L
-          val t0 = System.nanoTime()
-          val q = minietl.streaming.Streaming.nearDupDedupAndRecordHistory(
-            spark.readStream.schema("doc_id LONG, text STRING").parquet(in),
-            "doc_id", "text", digest, chk) { (adm, bid) =>
-            admitted = adm.count()
-            adm.select("doc_id").write.mode("overwrite")
-              .parquet(minietl.streaming.Streaming.batchOutputPath(out, bid))
-          }
-          q.awaitTermination()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val digestRows = spark.read.parquet(digest).count()
-          println(f"[longevity] drain=$i wall=$wall%.2fs admitted=$admitted " +
-            f"digest_rows=$digestRows digest_files=${parquetFiles(digest)}")
-          if ((i + 1) % compactEvery == 0) {
-            val tc = System.nanoTime()
-            val n = minietl.streaming.Streaming.compactHistoryCols(
-              spark, digest, Seq("band", "key"))
-            println(f"[longevity] compact after drain $i: distinct=$n " +
-              f"wall=${(System.nanoTime() - tc) / 1e9}%.2fs " +
-              f"digest_files=${parquetFiles(digest)}")
-          }
-          spark.catalog.clearCache()
-        }
-      case "neardup_crash" =>
-        // crash-replay at probe scale (VERDICT r10 Next #8): drain the
-        // even-id half of a dir's documents through the near-dup loop with
-        // an injected crash BETWEEN the sink write and the digest append,
-        // then restart and let the batch replay — the admitted set must be
-        // IDENTICAL (count + order-independent content checksum).
-        val dir = args(1)
-        val work = java.nio.file.Files.createTempDirectory("graft_ndcrash").toString
-        spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-          .where(pmod(col("doc_id"), lit(2)) === 0)
-          .write.mode("append").parquet(s"$work/in")
-        def drain(crash: Boolean): Double = {
-          val t0 = System.nanoTime()
-          val q = minietl.streaming.Streaming.nearDupDedupAndRecordHistory(
-            spark.readStream.schema("doc_id LONG, text STRING").parquet(s"$work/in"),
-            "doc_id", "text", s"$work/digest", s"$work/chk") { (fresh, bid) =>
-            fresh.select("doc_id", "text").write.mode("overwrite")
-              .parquet(minietl.streaming.Streaming.batchOutputPath(s"$work/out", bid))
-            if (crash) sys.error("injected crash after sink write")
-          }
-          try q.awaitTermination()
-          catch {
-            // only the INJECTED crash may be swallowed; a replay failure is
-            // a real bug and must surface
-            case e: Exception if crash => ()
-          }
-          finally {
-            q.stop()
-            // the within-batch dedup pass persists its signature base (the
-            // documented pair-function cache contract) — release it between
-            // drains or the replay competes for memory against drain 1's
-            // pinned blocks (measured: replay OOM at 250k docs without this)
-            spark.catalog.clearCache()
-          }
-          (System.nanoTime() - t0) / 1e9
-        }
-        def checksum(): (Long, Long) = {
-          // bit_xor: order-independent content digest with no ANSI overflow
-          // (sum of 250k random 64-bit hashes overflows a long)
-          val r = spark.read.parquet(s"$work/out")
-            .agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, text))")).head()
-          (r.getLong(0), r.getLong(1))
-        }
-        val w1 = drain(crash = true)
-        val c1 = checksum()
-        val digestAfterCrash = parquetCount(spark, s"$work/digest")
-        val w2 = drain(crash = false)
-        val c2 = checksum()
-        val digestRows = parquetCount(spark, s"$work/digest")
-        println(f"[ndcrash] drain1(crashed)=$w1%.1fs admitted=${c1._1} sum=${c1._2} " +
-          s"digest_rows_after_crash=$digestAfterCrash")
-        println(f"[ndcrash] replay=$w2%.1fs admitted=${c2._1} sum=${c2._2} " +
-          s"digest_rows=$digestRows " +
-          s"identical=${c1 == c2} digest_is_32x=${digestRows == 32 * c2._1}")
-      case "pagerank_ab" =>
-        // q_pagerank residual A/B (VERDICT r10 Next #6): does serving the
-        // per-iteration join from a src-partitioned persisted edge layout
-        // (the in-session analog of a bucketed table) beat the production
-        // shape? Run both under default planning AND with broadcast
-        // disabled (the 100-TB regime where the rank table cannot
-        // broadcast and the edge-side exchange question is real).
-        val dir = args(1)
-        val li = spark.read.parquet(s"$dir/lineitem.parquet")
-        val edges = minietl.graph.PageRank.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-          .persist()
-        edges.count()
-        def timeAb(tag: String)(body: => Long): Unit = (1 to 2).foreach { i =>
-          val t0 = System.nanoTime()
-          val n = body
-          println(f"[pr-ab] $tag run$i rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        }
-        def variantB(): Long = {
-          // pageRankFixedPoint's loop with e2 explicitly hash-partitioned on
-          // src and persisted: the per-iteration join then satisfies
-          // ENSURE_REQUIREMENTS from the cache — no edge-side exchange
-          val e = edges
-          val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-          val n = deg.count()
-          val scale = 1000000000000L
-          val base = (15L * scale / 100L) / n
-          val e2 = e.join(deg, e("src") === deg("node"))
-            .select(col("src"), col("dst"), col("outdeg"))
-            .repartition(col("src")).persist()
-          e2.count()
-          val init = deg.select(col("node"), lit(scale / n).as("rank_fp"))
-          val last = (1 to 3).foldLeft(init) { (r, _) =>
-            e2.join(r, e2("src") === r("node"))
-              .groupBy(col("dst").as("node"))
-              .agg((lit(base) + expr("85 * sum(rank_fp DIV outdeg) DIV 100")).as("rank_fp"))
-          }
-          val out = last.localCheckpoint(true).count()
-          e2.unpersist()
-          out
-        }
-        for (bcast <- Seq("default", "off")) {
-          if (bcast == "off")
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          timeAb(s"production_$bcast") {
-            minietl.graph.PageRank.pageRankFixedPoint(spark, edges, 3).count()
-          }
-          timeAb(s"src_partitioned_$bcast")(variantB())
-        }
-        edges.unpersist()
-      case "span_fixpoint" =>
-        // spanDedupFixpoint at a scale dir: rounds-to-convergence, wall, and
-        // how many documents the extra rounds changed vs single-pass (a real
-        // corpus converging in 1-2 rounds is itself the expected evidence).
-        // Optional [cascades]: plant that many 3-doc excision cascades
-        // (namespaced tokens — each triple reproduces the battery's planted
-        // junction pattern a single pass provably misses), forcing genuine
-        // round-2+ work at corpus scale — the regime where the per-round
-        // materialization policy (full corpus vs overlay delta) matters.
-        val dir = args(1)
-        val cascades = args.lift(2).map(_.toInt).getOrElse(0)
-        val baseDocs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        val docs = if (cascades == 0) baseDocs else {
-          val casc = spark.range(cascades).select(col("id").as("i"))
-          def tok(p: String, j: Int) =
-            concat(lit(p), col("i").cast("string"), lit(s"_$j"))
-          def words(cols: Seq[org.apache.spark.sql.Column]) =
-            concat_ws(" ", cols: _*)
-          // C must carry the LARGEST id of its triple (excision removes the
-          // higher-id side): round 1 excises B's zqx span from C, the
-          // splice leaves zqa1..12 whole, round 2 excises it against A
-          val a = casc.select((lit(-1000000002L) - col("i") * 3).as("doc_id"),
-            words((1 to 12).map(tok("zqa", _))).as("text"))
-          val b = casc.select((lit(-1000000001L) - col("i") * 3).as("doc_id"),
-            words((1 to 8).map(tok("zqx", _))).as("text"))
-          val c = casc.select((lit(-1000000000L) - col("i") * 3).as("doc_id"),
-            words((1 to 6).map(tok("zqa", _)) ++ (1 to 8).map(tok("zqx", _)) ++
-              (7 to 12).map(tok("zqa", _))).as("text"))
-          baseDocs.unionByName(a).unionByName(b).unionByName(c)
-        }
-        val t1 = System.nanoTime()
-        val single = minietl.dedup.Winnow.spanDedup(docs, "text", "doc_id",
-          k = 4, minSpanTokens = 8).localCheckpoint(true)
-        val singleWall = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        val (fixed, rounds) = minietl.dedup.Winnow.spanDedupFixpointWithStats(
-          docs, "text", "doc_id", k = 4, minSpanTokens = 8)
-        val fixedMat = fixed.localCheckpoint(true)
-        val fixWall = (System.nanoTime() - t2) / 1e9
-        val changed = single.as("a").join(fixedMat.as("b"),
-            col("a.doc_id") === col("b.doc_id"))
-          .where(col("a.text") =!= col("b.text")).count()
-        println(f"[spanfix] dir=$dir single_pass=$singleWall%.1fs " +
-          f"fixpoint=$fixWall%.1fs rounds=$rounds docs_changed_by_extra_rounds=$changed " +
-          s"n_docs=${docs.count()}")
-      case "ab_fixpoint" =>
-        // Interleaved A/B harness for the incremental-fixpoint claim
-        // (VERDICT r13 Next #4): probe numbers used to ride single runs on
-        // a noisy box (single-pass walls swung 178-500 s between r13
-        // probes). Variants now run INTERLEAVED (A,B,A,B,...), so ambient
-        // interference hits both variants symmetrically; per-variant
-        // MEDIANS are the reported numbers, and each trial is band-flagged
-        // RunValidity-style against its own variant's median (>1.5x AND
-        // >5 s over => suspect) with a median-of-clean-trials recomputed
-        // after exclusion. args: <dir> [trials=3]
-        val dir = args(1)
-        val trials = args.lift(2).map(_.toInt).getOrElse(3)
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        def trial(tag: String)(body: => (org.apache.spark.sql.DataFrame, Int)): Double = {
-          val t0 = System.nanoTime()
-          val (out, rounds) = body
-          val n = out.count()
-          val w = (System.nanoTime() - t0) / 1e9
-          println(f"[abfix] $tag wall=$w%.1fs rounds=$rounds rows=$n " +
-            f"load_avg=${loadAvg()}%.2f")
-          minietl.pipeline.RunCaches.releaseNow(out)
-          spark.catalog.clearCache()
-          w
-        }
-        val full = scala.collection.mutable.Buffer.empty[Double]
-        val inc = scala.collection.mutable.Buffer.empty[Double]
-        // COUNTERBALANCED order (A,B / B,A alternating — ABBA): measured
-        // per-trial walls trend DOWN across a session (C2 warmup + page
-        // cache: 450→318→166 s for the same variant in the r14 busy-box
-        // run), so a fixed A-then-B order systematically flatters whichever
-        // variant runs second in each pair. Alternating cancels the drift
-        // to first order; the per-variant median then compares like trials.
-        def runFull(i: Int): Unit = full += trial(s"full#$i")(
-          minietl.dedup.Winnow.spanDedupFixpointFullRescanWithStats(
-            docs, "text", "doc_id", k = 4, minSpanTokens = 8))
-        def runInc(i: Int): Unit = inc += trial(s"incremental#$i")(
-          minietl.dedup.Winnow.spanDedupFixpointWithStats(
-            docs, "text", "doc_id", k = 4, minSpanTokens = 8))
-        (1 to trials).foreach { i =>
-          if (i % 2 == 1) { runFull(i); runInc(i) }
-          else { runInc(i); runFull(i) }
-        }
-        def median(xs: Seq[Double]): Double = {
-          val s = xs.sorted; s((s.size - 1) / 2)
-        }
-        def report(tag: String, xs: Seq[Double]): Unit = {
-          val m = median(xs)
-          val suspect = xs.filter(x => x > m * 1.5 && x - m > 5.0)
-          val clean = xs.filterNot(x => x > m * 1.5 && x - m > 5.0)
-          println(f"[abfix] $tag median=$m%.1fs clean_median=${median(clean)}%.1fs " +
-            s"suspect_trials=${suspect.map(x => f"$x%.1f").mkString("[", ",", "]")} " +
-            s"all=${xs.map(x => f"$x%.1f").mkString("[", ",", "]")}")
-        }
-        report("full", full.toSeq)
-        report("incremental", inc.toSeq)
-      case "force_time" =>
-        // checksum-forced per-query timing (Bench's policy, ad hoc): the
-        // full output is materialized via bit_xor(xxhash64(cols)) so
-        // count()-pruned select lists are actually computed
-        val (dir, names) = (args(1), args(2).split(","))
-        def force(df: org.apache.spark.sql.DataFrame): Unit = {
-          val renamed = df.toDF(df.columns.indices.map("c" + _): _*)
-          renamed.select(xxhash64(renamed.columns.map(col).toIndexedSeq: _*).as("__h"))
-            .agg(expr("bit_xor(__h)")).collect()
-          ()
-        }
-        names.foreach { q =>
-          try force(SparkEntry.queries(q)(spark, "/root/testdata/sf0.01"))
-          catch { case _: Throwable => () }
-          spark.catalog.clearCache()
-        }
-        names.foreach { q =>
-          (1 to 2).foreach { i =>
-            val t0 = System.nanoTime()
-            force(SparkEntry.queries(q)(spark, dir))
-            println(f"[force] $q dir=$dir run$i " +
-              f"time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-            spark.catalog.clearCache()
-          }
-        }
-      case "winnow" =>
-        // Stretch (r11 Next #8): winnow overlap join and spanDedup at a
-        // scale dir with FORCED text materialization (a content checksum —
-        // count() provably elides spanDedup's rebuilt-text join) and a
-        // configurable window w. w=4 doubles fingerprint density vs the
-        // battery's w=8 (expected selected fraction 2/(w+1)), stressing the
-        // posting-cap census and the overlap join's shuffle the way the
-        // 16-bit-band probe stressed LSH.
-        val dir = args(1)
-        val w = args.lift(2).map(_.toInt).getOrElse(8)
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-        def t2(tag: String)(body: => Long): Unit = (1 to 2).foreach { i =>
-          val t0 = System.nanoTime()
-          val out = body
-          println(f"[winnow] $tag dir=$dir w=$w run$i out=$out " +
-            f"time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-          spark.catalog.clearCache()
-        }
-        t2(s"overlap_pairs") {
-          minietl.dedup.Winnow.overlapPairs(docs, "text", "doc_id",
-            k = 4, w = w, minShared = 2).count()
-        }
-        t2(s"span_dedup_forced") {
-          minietl.dedup.Winnow.spanDedup(docs, "text", "doc_id",
-              k = 4, minSpanTokens = 8)
-            .agg(expr("bit_xor(xxhash64(doc_id, text))")).head()
-          docs.count()
-        }
-      case "gen_docs" =>
-        // documents-only replication for the composed-pipeline probe (the
-        // full `gen` also writes the Nx lineitem + events this probe never
-        // reads — at 100 replicas of sf0.1 that is ~60M spurious rows)
-        val (src, out, n) = (args(1), args(2), args(3).toInt)
-        val k = explode(sequence(lit(0), lit(n - 1))).as("k")
-        spark.read.parquet(s"$src/documents.parquet")
-          .select(col("doc_id"), col("text"), col("lang"), col("source"), k)
-          .select(
-            (col("doc_id") + col("k") * lit(ReplicaStride)).as("doc_id"),
-            when(col("k") === 0, col("text"))
-              .otherwise(regexp_replace(col("text"), lit("(\\S+)"),
-                concat(lit("$1r"), col("k").cast("string")))).as("text"),
-            col("lang"), col("source"))
-          .withColumn("n_chars", length(col("text")).cast("long"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$out/documents.parquet")
-      case "pipeline" =>
-        // Composed-pipeline probe (VERDICT r11 Next #6/#7, r12 Next #7):
-        // drive the committed examples/training_data_pipeline.yaml END TO
-        // END at a scale dir through the Config path. The stages are
-        // individually probed; this measures their COMPOSITION —
-        // cache-pin hygiene, stage interaction, total/peak shuffle — which
-        // no per-operator probe covers. ${CORPUS_DIR}/${OUT_DIR} are
-        // substituted the same way the env would be; benchmark.parquet
-        // (the decontamination input) is synthesized as 200 corpus texts.
-        // Optional 3rd arg "fixpoint": patch the span_dedup stage to
-        // `fixpoint: true, max_iter: 5` so the probe exercises fixpoint
-        // rounds on realistic (non-planted) duplication; rounds are read
-        // back from Winnow.lastFixpointRounds.
-        val dir = args(1)
-        val fixpoint = args.drop(2).contains("fixpoint")
-        // yaml=<path> drives a different committed example through the same
-        // harness (default: the r11 training_data_pipeline; round 14 adds
-        // examples/curation_pipeline.yaml composing the trained stages)
-        val yamlPath = args.drop(2).find(_.startsWith("yaml="))
-          .map(_.stripPrefix("yaml="))
-          .getOrElse("examples/training_data_pipeline.yaml")
-        // Fail-fast heap guard (VERDICT r13 Next #5): in LOCAL mode one JVM
-        // holds every executor's cache blocks, so the composed pipeline's
-        // working set concentrates in the driver heap — the r13 1000x probe
-        // (~600 MB of snappy parquet, 5M docs) OOM'd at the 8 GB default
-        // and completed at 64 GB. Calibrated guard: require heap >= 16x the
-        // corpus's on-disk bytes (600 MB x16 ≈ 10 GB > 8 GB catches the
-        // observed OOM; the 100x probe, ~60 MB, passes at default memory as
-        // it did in r13). On a real cluster the same working set spreads
-        // over executors and this guard does not apply — it reads local-JVM
-        // maxMemory, which IS the whole world only in local mode.
-        val corpusBytes = {
-          val p = java.nio.file.Paths.get(s"$dir/documents.parquet")
-          val s = java.nio.file.Files.walk(p)
-          try s.filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size).sum
-          finally s.close()
-        }
-        val heap = Runtime.getRuntime.maxMemory
-        if (heap < corpusBytes * 16) {
-          // x75 matches the known-good point: the r13 1000x run (855 MB
-          // corpus) completed at 64 GB
-          val needGb = math.max(8L, (corpusBytes * 75 >> 30) + 1)
-          System.err.println(
-            s"[pipeline] heap ${heap >> 20} MB is too small for a " +
-              s"${corpusBytes >> 20} MB corpus in local mode (one JVM holds " +
-              s"all executors' cache blocks) — rerun with SPARK_DRIVER_MEM=" +
-              s"${needGb}g")
-          spark.stop()
-          sys.exit(2)
-        }
-        val work = java.nio.file.Files.createTempDirectory("graft_pipeline").toString
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$work/corpus"))
-        java.nio.file.Files.createSymbolicLink(
-          java.nio.file.Paths.get(s"$work/corpus/documents.parquet"),
-          java.nio.file.Paths.get(s"$dir/documents.parquet"))
-        spark.read.parquet(s"$dir/documents.parquet")
-          .where(pmod(col("doc_id"), lit(4099)) === 0).limit(200).select("text")
-          .write.mode("overwrite").parquet(s"$work/corpus/benchmark.parquet")
-        val yaml = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(yamlPath)),
-            java.nio.charset.StandardCharsets.UTF_8)
-          .replace("${CORPUS_DIR}", s"$work/corpus")
-          .replace("${OUT_DIR}", s"$work/out")
-        val yamlEff =
-          if (fixpoint)
-            yaml.replace("min_span_tokens: 50",
-              "min_span_tokens: 50\n    fixpoint: true\n    max_iter: 5")
-          else yaml
-        require(!fixpoint || yamlEff.contains("fixpoint: true"),
-          "fixpoint patch failed — span_dedup stage not found in the YAML")
-        object metrics extends org.apache.spark.scheduler.SparkListener {
-          @volatile var write = 0L
-          @volatile var read = 0L
-          @volatile var peakStageWrite = 0L
-          @volatile var spill = 0L
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val m = sc.stageInfo.taskMetrics
-            if (m != null) {
-              write += m.shuffleWriteMetrics.bytesWritten
-              read += m.shuffleReadMetrics.remoteBytesRead +
-                m.shuffleReadMetrics.localBytesRead
-              peakStageWrite = math.max(peakStageWrite,
-                m.shuffleWriteMetrics.bytesWritten)
-              spill += m.diskBytesSpilled
-            }
-          }
-        }
-        spark.sparkContext.addSparkListener(metrics)
-        val tp0 = System.nanoTime()
-        val stats = minietl.config.Config.load(yamlEff).run(spark)
-        val wall = (System.nanoTime() - tp0) / 1e9
-        Thread.sleep(2000) // let stage-completed events drain
-        val pins = spark.sparkContext.getPersistentRDDs.size
-        // the sink subdir differs per example (cleaned / curated / ...);
-        // list with the stream CLOSED (Files.list holds a directory handle
-        // until closed — ADVICE r14) and require exactly one subdir so a
-        // multi-sink example can never silently read the wrong data
-        val outDir = {
-          val s = java.nio.file.Files.list(java.nio.file.Paths.get(s"$work/out"))
-          val dirs = try {
-            import scala.jdk.CollectionConverters._
-            s.iterator().asScala.toList
-          } finally s.close()
-          require(dirs.size == 1,
-            s"expected exactly one sink subdir under $work/out, found ${dirs.size}: $dirs")
-          dirs.head.toString
-        }
-        val outRows = spark.read.parquet(outDir).count()
-        val rounds = if (fixpoint)
-          s" fixpoint_rounds=${minietl.dedup.Winnow.lastFixpointRounds.get()}" else ""
-        println(f"[pipeline] dir=$dir wall=$wall%.1fs stats_rows=${stats.rows} " +
-          f"out_rows=$outRows shuffle_write_mb=${metrics.write / 1048576} " +
-          f"shuffle_read_mb=${metrics.read / 1048576} " +
-          f"peak_stage_shuffle_write_mb=${metrics.peakStageWrite / 1048576} " +
-          f"spill_mb=${metrics.spill / 1048576} cache_pins_after_run=$pins$rounds")
-      case "hotstratum" =>
-        // Hot-stratum probe (VERDICT r11 Next #2): >=90% of rows land in ONE
-        // stratum, so the plain tokenBudget/topPSelect running-mass window
-        // serializes ~all rows onto one task. Measures the plain path vs the
-        // salted-shard path (Ops.tokenBudgetSalted/topPSelectSalted) at the
-        // given row count, and checks the salted budget invariant (kept
-        // tokens per stratum <= budget) distributedly.
-        val rows = args.lift(1).map(_.toLong).getOrElse(20000000L)
-        val shards = args.lift(2).map(_.toInt).getOrElse(32)
-        val df = spark.range(rows).select(
-            col("id"),
-            when(pmod(col("id"), lit(10)) < 9, lit("hot"))
-              .otherwise(concat(lit("s"), pmod(col("id"), lit(97)).cast("string")))
-              .as("stratum"),
-            (pmod(xxhash64(col("id")), lit(900)) + 100).as("n_tokens"))
-          .localCheckpoint(true)
-        val hotTokens = df.where(col("stratum") === "hot")
-          .agg(sum("n_tokens")).head().getLong(0)
-        val budget = hotTokens / 10
-        val order = minietl.ops.Ops.shuffleKey("id", "11")
-        val shardKey = xxhash64(col("id"), lit("shard"))
-        def stampHs(tag: String)(body: => Long): Unit = (1 to 2).foreach { i =>
-          val t0 = System.nanoTime()
-          val n = body
-          println(f"[hot] $tag rows=$rows shards=$shards run$i kept=$n " +
-            f"time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        }
-        stampHs("token_budget_plain") {
-          minietl.ops.Ops.tokenBudget("stratum", "n_tokens", budget, order)(df).count()
-        }
-        stampHs("token_budget_salted") {
-          minietl.ops.Ops.tokenBudgetSalted("stratum", "n_tokens", budget,
-            order, shardKey, shards)(df).count()
-        }
-        // budget invariant: kept tokens per stratum <= budget on BOTH paths
-        Seq(
-          "plain" -> minietl.ops.Ops.tokenBudget("stratum", "n_tokens", budget, order)(df),
-          "salted" -> minietl.ops.Ops.tokenBudgetSalted("stratum", "n_tokens",
-            budget, order, shardKey, shards)(df)
-        ).foreach { case (tag, kept) =>
-          val over = kept.groupBy("stratum").agg(sum("n_tokens").as("t"))
-            .where(col("t") > budget).count()
-          val keptHot = kept.where(col("stratum") === "hot")
-            .agg(coalesce(sum("n_tokens"), lit(0L))).head().getLong(0)
-          println(s"[hot] $tag budget=$budget hot_kept_tokens=$keptHot " +
-            s"strata_over_budget=$over fill=${keptHot.toDouble / budget}")
-        }
-        stampHs("top_p_plain") {
-          minietl.ops.Ops.topPSelect("stratum", "n_tokens", 2500,
-            Seq(col("n_tokens").desc, col("id").asc))(df).count()
-        }
-        stampHs("top_p_salted") {
-          minietl.ops.Ops.topPSelectSalted("stratum", "n_tokens", 2500,
-            Seq(col("n_tokens").desc, col("id").asc), shardKey, shards)(df).count()
-        }
-      case "time" =>
-        val (dir, names) = (args(1), args(2).split(","))
-        // warm plans + JIT on the small gate scale first, like Bench
-        names.foreach { q =>
-          try { SparkEntry.queries(q)(spark, "/root/testdata/sf0.01").count(); () }
-          catch { case _: Throwable => () }
-          spark.catalog.clearCache()
-        }
-        names.foreach { q =>
-          (1 to 2).foreach { i =>
-            val t0 = System.nanoTime()
-            val rows = SparkEntry.queries(q)(spark, dir).count()
-            println(f"[scale] $q dir=$dir run$i rows=$rows time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-            spark.catalog.clearCache()
-          }
-        }
+      case "gen" => gen(spark, src, out, n)
+      case "gen_emb" => genEmbeddings(spark, src, out, n)
+      case "gen_docs" => genDocuments(spark, src, out, n)
     }
     spark.stop()
   }
 
-  private def loadAvg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-
-  private def parquetCount(spark: SparkSession, path: String): Long =
-    try spark.read.parquet(path).count()
-    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+  private def replica(replicas: Int) =
+    explode(sequence(lit(0), lit(replicas - 1))).as("k")
 
   private def gen(spark: SparkSession, src: String, out: String, replicas: Int): Unit = {
-    val k = explode(sequence(lit(0), lit(replicas - 1))).as("k")
-
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    docs.select(col("doc_id"), col("text"), col("lang"), col("source"), k)
-      .select(
-        (col("doc_id") + col("k") * lit(ReplicaStride)).as("doc_id"),
-        when(col("k") === 0, col("text"))
-          .otherwise(regexp_replace(col("text"), lit("(\\S+)"),
-            concat(lit("$1r"), col("k").cast("string")))).as("text"),
-        col("lang"), col("source"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
+    val k = replica(replicas)
+    genDocuments(spark, src, out, replicas)
 
     // lineitem for the sketch-family probes: rows replicate verbatim with
     // order keys offset per replica (value distributions — the sketch
@@ -1406,11 +89,29 @@ object ScaleProbe {
     println(s"[scale] generated ${replicas}x corpus at $out")
   }
 
+  /** `documents` Nx: replica k's ids are offset by k × [[ReplicaStride]]
+    * and, for k > 0, every whitespace token gets the suffix `rk`.
+    */
+  private[graft] def genDocuments(spark: SparkSession, src: String, out: String,
+                                  replicas: Int): Unit = {
+    spark.read.parquet(s"$src/documents.parquet")
+      .select(col("doc_id"), col("text"), col("lang"), col("source"), replica(replicas))
+      .select(
+        (col("doc_id") + col("k") * lit(ReplicaStride)).as("doc_id"),
+        when(col("k") === 0, col("text"))
+          .otherwise(regexp_replace(col("text"), lit("(\\S+)"),
+            concat(lit("$1r"), col("k").cast("string")))).as("text"),
+        col("lang"), col("source"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .repartition(32)
+      .write.mode("overwrite").parquet(s"$out/documents.parquet")
+    println(s"[scale] generated ${replicas}x documents at $out")
+  }
+
   private def genEmbeddings(spark: SparkSession, src: String, out: String,
                             replicas: Int): Unit = {
-    val k = explode(sequence(lit(0), lit(replicas - 1))).as("k")
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
-    emb.select(col("vec_id"), col("embedding"), col("label"), k)
+    emb.select(col("vec_id"), col("embedding"), col("label"), replica(replicas))
       .select(
         (col("vec_id") + col("k") * lit(ReplicaStride)).as("vec_id"),
         expr("""CASE WHEN k = 0 THEN embedding

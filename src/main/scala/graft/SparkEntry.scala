@@ -51,8 +51,9 @@ object SparkEntry {
     * whole scan stage, including all the scan-side work Catalyst fuses
     * into it (tokenize+explode, PNG/WAV encode+decode, LSH plane dots,
     * n-gram generation), runs in ONE task while the other 31 cores idle.
-    * Measured A/B (QueryBench, sf0.1 warm): q_pii_redact 0.70 → 0.25 s,
-    * q_tfidf 1.78 → 1.07 s, q_lm_surprise 1.46 → 1.09 s.
+    * Measured A/B (sf0.1 warm, with and without the rebalance):
+    * q_pii_redact 0.70 → 0.25 s, q_tfidf 1.78 → 1.07 s, q_lm_surprise
+    * 1.46 → 1.09 s.
     *
     * Selective by design: the same A/B showed a BLANKET rebalance of the
     * wide row-heavy relational tables is a net LOSS (q1_pricing_summary
@@ -74,8 +75,6 @@ object SparkEntry {
     * every query's output is pinned by a total ORDER BY (oracle contract)
     * and the operators are partition-layout-safe by design (re-verified by
     * the full oracle sweep at all three SFs after this change).
-    * SPARK_GRAFT_NO_REBALANCE=1: dev escape hatch for honest A/B timing
-    * without a recompile (QueryBench both ways).
     *
     * The planned-partition probe derives the count from the FILE LAYOUT
     * (Spark's own FilePartition split formula over total bytes + per-file
@@ -90,22 +89,19 @@ object SparkEntry {
     * the plain read).
     */
   private def rebalanced(s: SparkSession, df: DataFrame): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_NO_REBALANCE")) df
-    else {
-      val cores = s.sparkContext.defaultParallelism
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble
-      val nFiles = df.inputFiles.length.toLong
-      def confBytes(key: String, dflt: Long): Long =
-        try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s.conf.get(key))
-        catch { case _: Throwable => dflt }
-      val maxSplit = confBytes("spark.sql.files.maxPartitionBytes", 128L << 20)
-      val openCost = confBytes("spark.sql.files.openCostInBytes", 4L << 20)
-      val padded = bytes + nFiles.toDouble * openCost
-      val bytesPerCore = padded / math.max(1, cores)
-      val split = math.min(maxSplit.toDouble, math.max(openCost.toDouble, bytesPerCore))
-      val estParts = math.ceil(padded / math.max(1.0, split)).toLong
-      if (estParts < cores) df.repartition(cores) else df
-    }
+    val cores = s.sparkContext.defaultParallelism
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble
+    val nFiles = df.inputFiles.length.toLong
+    def confBytes(key: String, dflt: Long): Long =
+      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s.conf.get(key))
+      catch { case _: Throwable => dflt }
+    val maxSplit = confBytes("spark.sql.files.maxPartitionBytes", 128L << 20)
+    val openCost = confBytes("spark.sql.files.openCostInBytes", 4L << 20)
+    val padded = bytes + nFiles.toDouble * openCost
+    val bytesPerCore = padded / math.max(1, cores)
+    val split = math.min(maxSplit.toDouble, math.max(openCost.toDouble, bytesPerCore))
+    val estParts = math.ceil(padded / math.max(1.0, split)).toLong
+    if (estParts < cores) df.repartition(cores) else df
   }
 
   /** Per-run stream staging root: keyed by the SANITIZED full data-dir path
@@ -180,9 +176,9 @@ object SparkEntry {
     * truncates to >= second granularity so the two agree.
     *
     * The nanos generation needs `spark.sql.legacy.parquet.nanosAsLong=true`
-    * at SESSION construction (Verify/Bench/Scratch set it); query functions
-    * never mutate session conf (sole scoped-and-restored exception:
-    * [[withStreamStateParts]]).
+    * at SESSION construction (every graft main sets it through
+    * [[Battery.conf]]); query functions never mutate session conf (sole
+    * scoped-and-restored exception: [[withStreamStateParts]]).
     */
   private[graft] def normalizeTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
@@ -229,7 +225,7 @@ object SparkEntry {
   /** events as an unbounded file stream: the file-stream source monitors
     * directories, so the table is staged into a temp dir via symlinks.
     * The testdata table is a single parquet FILE; a Spark-written table
-    * (e.g. a ScaleProbe-generated corpus) is a DIRECTORY of part files —
+    * (e.g. a `graft.ScaleProbe gen` corpus) is a DIRECTORY of part files —
     * symlink the part files individually in that case, because the file
     * stream lists plain files and a nested directory symlink would be
     * silently skipped (zero input, no error). Same ts normalization as
@@ -265,8 +261,8 @@ object SparkEntry {
     * (Spark ≥ 3.4), a micro-batch filters LATE ROWS with the PREVIOUS
     * batch's watermark and EVICTS/EMITS with the current one. A two-file
     * replay therefore drops nothing (the late batch filters against the
-    * initial 1970 watermark — measured via StreamProbe). The choreography
-    * that actually exercises both sides, with G = global max ts:
+    * initial 1970 watermark — measured). The choreography that actually
+    * exercises both sides, with G = global max ts:
     *
     *   batch 0 "bulk":     even event_ids with ts ≤ G - 2h;
     *   batch 1 "vanguard": all rows in (G-2h, G-1h] — its EXECUTION runs
@@ -440,15 +436,16 @@ object SparkEntry {
     * RocksDB provider at 2 parts 9.6 s (per-batch SST/snapshot overhead
     * swamps tiny state — the provider earns its keep only when state
     * outgrows executor memory). The residual is per-micro-batch machinery
-    * (query planning + addBatch + WAL commits), not state commits. A
-    * production deployment sizes this knob to its own state volume; the
-    * semantics are partition-count-invariant (verified: identical oracle
-    * results at 2 and 8).
+    * (query planning + addBatch + WAL commits), not state commits. The
+    * battery therefore always drains with 2 state partitions; a production
+    * deployment sizes its own to its state volume. The semantics are
+    * partition-count-invariant (verified: identical oracle results at 2
+    * and 8).
     */
   private def withStreamStateParts[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"))
+    s.conf.set(key, "2")
     try body finally s.conf.set(key, prev)
   }
 

@@ -42,15 +42,6 @@ object Winnow {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Rounds the most recent [[spanDedupFixpoint]]-family call took on this
-    * JVM — the operations/probe observable for runs driven through the
-    * Config path (which calls [[spanDedupFixpoint]], not the WithStats
-    * variant). Driver-side, set once per call; concurrent pipelines each
-    * see the LAST writer, so treat it as a probe hook, not an API — use
-    * [[spanDedupFixpointWithStats]] when the count matters programmatically.
-    */
-  val lastFixpointRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-
   /** Modulus 2^31-1: token and gram hashes stay below 2^31, so the
     * polynomial fold (`acc * 31 + x` < 2^36) and the position packing
     * (`gram * 2^21 + pos` < 2^52) never overflow a long under ANSI
@@ -368,10 +359,9 @@ object Winnow {
   /** FULL-RESCAN fixpoint: identical semantics to [[spanDedupFixpoint]]
     * (sticky cap included) but every round seeds ALL pairs instead of only
     * those with a changed side. Not a production entry point: it exists as
-    * (a) the A/B baseline for the incremental-rounds probe
-    * (`ScaleProbe ab_fixpoint`, which lives outside this package) and
-    * (b) the equivalence witness the incremental invariant is spec-checked
-    * against. Production callers want [[spanDedupFixpoint]].
+    * the equivalence witness the incremental invariant is spec-checked
+    * against (`SpanPropertiesSpec`). Production callers want
+    * [[spanDedupFixpoint]].
     */
   def spanDedupFixpointFullRescanWithStats(
       df: DataFrame, textCol: String, idCol: String,
@@ -568,7 +558,6 @@ object Winnow {
     }
     if (changedIds != null) release(changedIds)
     if (stickyBig != null) release(stickyBig)
-    lastFixpointRounds.set(rounds)
     log.info(s"spanDedupFixpoint: $rounds excision round(s), " +
       s"${if (converged) "converged" else s"stopped at maxIter=$maxIter"}" +
       (if (hotFpCount > 0) s"; $hotFpCount fingerprint bucket(s) over maxPostings=" +

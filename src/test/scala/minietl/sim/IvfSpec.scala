@@ -98,8 +98,9 @@ class IvfSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("training determinism: per-SF centroid digests are pinned") {
-    // golden values generated by graft.IvfDigestProbe (r18) — md5 over the
-    // 1e-6-rounded centroid doubles, rendered row-major
+    // golden values: md5 over the 1e-6-rounded centroid doubles, rendered
+    // row-major (r18). To regenerate them after a deliberate training
+    // change, run this test: each mismatch message prints the new digest.
     val expected = Map(
       ("sf0.001", 8) -> "3656015323ba4de6a27af482bbd6f2c5",
       ("sf0.001", 4) -> "e2b970df1d6db6de5b9c88ff79efb2dc",
