@@ -20,8 +20,11 @@ import scala.jdk.CollectionConverters._
   * memory-sink names, cached frames, staged stream dirs), and prints a
   * per-stage wall/task-time table of the LAST rep from a SparkListener —
   * the local stand-in for the Spark UI's Stages page, which the battery
-  * sessions disable. A scale curve is this tool pointed at a
-  * `graft.ScaleProbe gen` output dir.
+  * sessions disable. Each rep runs with the query name as its call site,
+  * so the table names every stage by its query, also the stages adaptive
+  * execution submits from its own thread pool (which inherits the local
+  * properties, the call site among them). A scale curve is this tool
+  * pointed at a `graft.ScaleProbe gen` output dir.
   *
   * SPARK_GRAFT_EXTRA_CONF="k=v;k=v" adds session settings, so a config
   * candidate is measured both ways without a recompile. Bench (the driver
@@ -119,6 +122,7 @@ object QueryBench {
         if (rep == reps) {
           table.clear(); spark.sparkContext.setLocalProperty(RecordKey, n)
         }
+        spark.sparkContext.setCallSite(n)
         val t0 = System.nanoTime()
         val sum =
           try Some(Battery.force(SparkEntry.queries(n)(spark, sfDir)))
@@ -127,6 +131,7 @@ object QueryBench {
             None
           }
         val dt = (System.nanoTime() - t0) / 1e9
+        spark.sparkContext.clearCallSite()
         spark.sparkContext.setLocalProperty(RecordKey, null)
         spark.catalog.clearCache()
         (dt, sum)

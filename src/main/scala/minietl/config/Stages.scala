@@ -575,15 +575,11 @@ private[config] object Stages {
         else Nil),
     // joins per-doc bigram-surprise scores back onto the frame (left: docs
     // without bigrams keep null scores) so a filter stage can threshold
-    // avg_millibits next. The EAGER variant: a config-driven run has no
-    // unpersist hook, so the lazy variant would leak the cached occurrence
-    // frame for the session's lifetime.
+    // avg_millibits next
     StageDef("lm_surprise", Seq(req("key"), req("column")),
       Batch { o =>
         val (key, c) = (o.str("key"), o.str("column"))
-        df => df.join(
-          minietl.text.LmScore.bigramSurpriseEager(df, key, c).withColumnRenamed("doc_id", key),
-          Seq(key), "left")
+        df => minietl.text.LmScore.withBigramSurprise(df, key, c)
       }),
     // drops docs whose distinct-shingle overlap with the benchmark file
     // exceeds max_permille; docs with no grams carry no signal and pass
@@ -623,7 +619,7 @@ private[config] object Stages {
             .select(col(benchCol).as(c))
             .withColumn(key, org.apache.spark.sql.functions.monotonically_increasing_id())
           // EAGER variant: the lazy one would pin the prepared-corpus cache
-          // for the session lifetime (the lm_surprise precedent)
+          // for the session lifetime
           minietl.sim.Similarity.semanticDecontaminateEager(
             df, bench, threshold, bpb, bands, dim, idCol = key, vecCol = c)
         }

@@ -13,8 +13,9 @@ import minietl.pipeline.RunCaches
   * the DAG compiles to DataFrame composition: node "outputs" are lazy
   * DataFrames and Catalyst plans the whole graph at once. During [[run]]
   * a frame read by several nodes is cached once instead of recomputed per
-  * reader, and transform inputs follow the pipeline's stage-input rule
-  * ([[minietl.pipeline.RunCaches.stage]]); [[frame]] persists nothing.
+  * reader; transform closures apply to their input as it is, and a kernel
+  * that re-reads its input checkpoints it
+  * ([[minietl.pipeline.RunCaches.checkpoint]]). [[frame]] caches nothing.
   *
   * Two reference stubs are implemented for real:
   *  - MergeStrategy.UNION ("concat + dedupe", declared dag.py:60 but never
@@ -135,9 +136,8 @@ final class PipelineDAG {
 
   /** Compile every node to its (lazy) output frame(s), keyed by node id and
     * output port. Inside a run scope, frames consumed by more than one
-    * downstream node are cached for the run and transform inputs go through
-    * the stage-input rule; outside one (embedding via [[frame]]) nothing is
-    * persisted.
+    * downstream node are cached for the run; outside one (embedding via
+    * [[frame]]) nothing is cached.
     */
   private def compile(spark: SparkSession): mutable.Map[String, Map[String, DataFrame]] = {
     // frame-only compilation tolerates missing sinks / unconsumed outputs
@@ -158,7 +158,7 @@ final class PipelineDAG {
         case SourceNode(f) =>
           out(id) = Map("" -> fanOut(id, f(spark)))
         case TransformNode(f) =>
-          out(id) = Map("" -> fanOut(id, RunCaches.stage(inputFrame(id))(f)))
+          out(id) = Map("" -> fanOut(id, f(inputFrame(id))))
         case MergeNode(strategy) =>
           val ins = inputsOf(id).map { case (f, p) => out(f)(p) }
           val merged = strategy match {
@@ -203,8 +203,8 @@ final class PipelineDAG {
     val errs = validate()
     require(errs.isEmpty, s"invalid DAG: ${errs.mkString("; ")}")
     // RunCaches scope covers COMPILE as well as the sink actions: fan-out
-    // caches, kept transform inputs and the eager stage closures'
-    // checkpoints (semantic_decontaminate, lm_surprise) are all tracked
+    // caches and the checkpoints the transform kernels take
+    // (semantic_decontaminate, lm_surprise, the dedup stages) are all tracked
     // inside compile(), so the scope must already be open there; it
     // releases them after every sink has consumed the data, or threw
     RunCaches.scoped {

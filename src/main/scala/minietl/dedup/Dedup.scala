@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import minietl.functions.HashFamily
+import minietl.pipeline.RunCaches
 
 /** Deduplication operators for training-data pipelines, each designed around
   * one shuffle on a compact key rather than any all-pairs comparison:
@@ -30,16 +31,19 @@ import minietl.functions.HashFamily
   * family supplies only the hashes and band keys; every step around them
   * is one body for both.
   *
-  * CACHE LIFETIME CONTRACT: the pair-finding functions
-  * ([[minhashNearDupPairs]], for either family, [[ngramJaccardPairs]],
-  * [[ngramContainmentPairs]]) `persist()` their
-  * signature/posting frames because the returned LAZY plan references them
-  * two or three times — and a lazy return cannot unpersist behind itself.
-  * The caches live until the caller releases them: run one invocation to
-  * completion and call `spark.catalog.clearCache()` (what the Verify/Bench
-  * batteries do between entries), or wrap the materialization in
-  * [[releasingCaches]]. [[minhashDedupClusters]] materializes internally and
-  * therefore cleans up its own caches.
+  * MATERIALIZATION: a kernel that re-reads a frame checkpoints it when it
+  * is called ([[RunCaches.checkpoint]]):
+  * [[minhashNearDupPairs]] its signature base, [[minhashDedup]] and
+  * [[minhashDedupClusters]] their input, [[connectedComponents]] its pair
+  * list. Inside a run scope the scope releases those checkpoints; outside
+  * one the ContextCleaner frees them once the returned frame is
+  * unreachable. [[ngramJaccardPairs]] and [[ngramContainmentPairs]] still
+  * `persist()` their signature/posting frames, because the returned LAZY
+  * plan references them two or three times and a lazy return cannot
+  * unpersist behind itself. Those caches live until the caller releases
+  * them: run one invocation to completion and call
+  * `spark.catalog.clearCache()` (what the Verify/Bench batteries do between
+  * entries), or wrap the materialization in [[releasingCaches]].
   */
 object Dedup {
 
@@ -134,16 +138,18 @@ object Dedup {
 
   /** The (id, hsh, sig) signature base every MinHash consumer derives from:
     * sorted distinct shingle hashes plus the k-lane signature, computed
-    * ONCE per document. NOT persisted here — the caller owns
-    * persist/release: [[minhashNearDupPairs]] persists + registers with
-    * RunCaches; the streaming ingest loop checkpoints it once per
-    * micro-batch, so one batch's shingle hashing never runs twice
-    * (within-batch dedup AND digest banding both read this frame).
+    * ONCE per document, in `df`'s partitions. NOT materialized here — the
+    * caller checkpoints it: [[minhashNearDupPairs]] over its [[spread]]
+    * input, the streaming ingest loop once per micro-batch (within-batch
+    * dedup AND digest banding both read this frame). The loop does not
+    * spread its batch: a file scan already splits by bytes per core, and
+    * spreading a small batch only fans its digest deltas out into one file
+    * per core.
     */
   private[minietl] def minhashBase(df: DataFrame, textCol: String, idCol: String,
                                    shingleN: Int, k: Int, seed: Long,
                                    family: HashFamily): DataFrame =
-    spread(df).select(col(idCol).as("id"),
+    df.select(col(idCol).as("id"),
         family.shingleHashes(col(textCol), shingleN).as("hsh"))
       .withColumn("sig", minhashFromHashes(col("hsh"), k, seed))
 
@@ -198,11 +204,11 @@ object Dedup {
                           threshold: Double = 0.8, seed: Long = 42L,
                           maxBucketSize: Int = DefaultMaxBucket,
                           family: HashFamily = HashFamily.Production): DataFrame = {
-    // Persisted because the plan references it three times (banding + two
-    // candidate-fetch joins); without it the signature computation — the
-    // expensive scan-side work — would run three times.
-    val base = minhashBase(df, textCol, idCol, shingleN, k, seed, family).persist()
-    minietl.pipeline.RunCaches.register(base)
+    // Checkpointed because the plan references it three times (banding +
+    // two candidate-fetch joins); without it the signature computation —
+    // the expensive scan-side work — would run three times.
+    val base = RunCaches.checkpoint(
+      minhashBase(spread(df), textCol, idCol, shingleN, k, seed, family))
     minhashPairsFromSigBase(base, bands, k, threshold, maxBucketSize, family)
   }
 
@@ -212,11 +218,15 @@ object Dedup {
     * computation, cache build) on a SINGLE thread (measured: 3.9 s → 0.95 s
     * for the sf0.1 minhash base persist). At production scale inputs carry
     * hundreds of partitions and this is a no-op, so the full-corpus shuffle
-    * it would imply never happens there.
+    * it would imply never happens there. The partition count is read off
+    * the planned physical plan: `df.rdd` would run the input's shuffle
+    * stages under adaptive execution just to count partitions.
     */
   private[minietl] def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(2, target / 2)) df.repartition(target) else df
+    if (minietl.ops.Partitioning.plannedPartitions(df) < math.max(2, target / 2))
+      df.repartition(target)
+    else df
   }
 
   /** Default bucket-size cap for the LSH candidate self-joins. A bucket with
@@ -424,9 +434,11 @@ object Dedup {
   def minhashDedup(df: DataFrame, textCol: String, idCol: String,
                    shingleN: Int = 3, k: Int = 128, bands: Int = 32,
                    threshold: Double = 0.8): DataFrame = {
-    val dupIds = minhashNearDupPairs(df, textCol, idCol, shingleN, k, bands, threshold)
+    // the signature base and the final anti-join both read the input
+    val in = RunCaches.checkpoint(df)
+    val dupIds = minhashNearDupPairs(in, textCol, idCol, shingleN, k, bands, threshold)
       .select(col("id_b").as("__dup")).distinct()
-    df.join(dupIds, df(idCol) === col("__dup"), "left_anti")
+    in.join(dupIds, in(idCol) === col("__dup"), "left_anti")
   }
 
   /** Above this many pairs the driver fast path is off. 2M edges ≈ 32 MB of
@@ -532,11 +544,12 @@ object Dedup {
   def connectedComponentsWithStats(
       pairs: DataFrame, maxIter: Int = 100,
       driverPathMaxPairs: Long = DriverCcMaxPairs): (DataFrame, Int) = {
-    // materialize the pair list before unioning it with its swap: the two
-    // union branches are the SAME (expensive — LSH banding + verify) plan,
-    // and an unmaterialized cache makes one job compute it twice
-    val p = pairs.persist()
-    val nPairs = p.count()
+    // materialize the pair list ONCE (LSH banding + verify): the count, the
+    // collect or the loop's edge and node frames all read the stored rows.
+    // The count runs over that leaf, one task per stored partition.
+    val p = RunCaches.checkpoint(pairs)
+    def releaseP(): Unit = if (!(p eq pairs)) RunCaches.releaseNow(p)
+    val nPairs = p.rdd.count()
     // size-based algorithm choice, same rationale as a broadcast join: the
     // pair count is already materialized, so when the graph fits in driver
     // memory, a local union-find replaces O(log n) star-contraction rounds
@@ -548,7 +561,7 @@ object Dedup {
         (idType == org.apache.spark.sql.types.LongType ||
          idType == org.apache.spark.sql.types.IntegerType)) {
       val edgeRows = p.select(col("id_a").cast("long"), col("id_b").cast("long")).collect()
-      p.unpersist()
+      releaseP()
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -577,20 +590,18 @@ object Dedup {
     // ROUND, and checkpointing every round costs nothing extra because the
     // convergence check must materialize the round anyway); the superseded
     // round's blocks are released immediately.
-    var edges = p.select(
+    var edges = RunCaches.checkpoint(p.select(
         greatest(col("id_a"), col("id_b")).as("src"),
         least(col("id_a"), col("id_b")).as("dst"))
       .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     var nEdges = edges.count()
     // node set checkpointed UP FRONT so the final label join never re-runs
     // the (possibly expensive — LSH banding + verify) pair plan; p can then
     // be released before the loop instead of after it
-    val nodes = p.select(col("id_a").as("id"))
-      .union(p.select(col("id_b").as("id"))).distinct()
-      .localCheckpoint(true)
-    p.unpersist()
+    val nodes = RunCaches.checkpoint(p.select(col("id_a").as("id"))
+      .union(p.select(col("id_b").as("id"))).distinct())
+    releaseP()
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -609,26 +620,25 @@ object Dedup {
       // point u itself at m. Emitted edges again satisfy left > right
       // (v ≥ m with v = m filtered; u > m always).
       val ssMin = ls.groupBy("src").agg(min("dst").as("m"))
-      val next = ls.join(ssMin, "src")
+      val next = RunCaches.checkpoint(ls.join(ssMin, "src")
         .select(col("dst").as("src"), col("m").as("dst"))
         .union(ssMin.select(col("src"), col("m").as("dst")))
         .where(col("src") =!= col("dst"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       val nNext = next.count()
       // exact set-equality convergence (both sides canonical + distinct):
       // equal counts and an empty anti-join. At a fixed point the edge set
       // IS the answer — one (node, root) edge per non-root node.
       converged = nNext == nEdges &&
         next.join(edges, Seq("src", "dst"), "left_anti").isEmpty
-      minietl.pipeline.RunCaches.releaseNow(edges)
+      RunCaches.releaseNow(edges)
       edges = next
       nEdges = nNext
       iter += 1
     }
     if (!converged) {
-      minietl.pipeline.RunCaches.releaseNow(edges)
-      minietl.pipeline.RunCaches.releaseNow(nodes)
+      RunCaches.releaseNow(edges)
+      RunCaches.releaseNow(nodes)
       throw new IllegalStateException(
         s"connectedComponents did not converge within maxIter=$maxIter " +
           "rounds: the star contraction is PARTIAL and cluster-based dedup " +
@@ -661,9 +671,12 @@ object Dedup {
     */
   def minhashDedupClusters(df: DataFrame, textCol: String, idCol: String,
                            shingleN: Int = 3, k: Int = 128, bands: Int = 32,
-                           threshold: Double = 0.8): DataFrame =
-    dropClusterDuplicates(df,
-      minhashNearDupPairs(df, textCol, idCol, shingleN, k, bands, threshold), idCol)
+                           threshold: Double = 0.8): DataFrame = {
+    // the signature base and the final anti-join both read the input
+    val in = RunCaches.checkpoint(df)
+    dropClusterDuplicates(in,
+      minhashNearDupPairs(in, textCol, idCol, shingleN, k, bands, threshold), idCol)
+  }
 
   /** Exact n-gram-Jaccard near-dup pairs with length blocking, expressed as
     * an equi-join so it scales: candidates are pairs whose `lenCol` differ by
@@ -681,7 +694,7 @@ object Dedup {
     // shingling is the expensive scan-side step.
     val base = spread(df).select(col(idCol).as("id"), col(lenCol).as("len"),
       shingleHashesSorted(col(textCol), shingleN).as("sh")).persist()
-    minietl.pipeline.RunCaches.register(base)
+    RunCaches.register(base)
     // The bucket join moves only (id, len, bucket); the shingle arrays join
     // back onto the surviving candidate pairs, so no array is copied per
     // bucket-pair — only per radius-qualified candidate.
@@ -726,7 +739,7 @@ object Dedup {
       s"threshold must be in (0, 1], got $threshold")
     val base = spread(df).select(col(idCol).as("id"),
       shingleHashesSorted(col(textCol), shingleN).as("sh")).persist()
-    minietl.pipeline.RunCaches.register(base)
+    RunCaches.register(base)
     val posts = base.select(col("id"), explode(col("sh")).as("g"))
     // posting-length census rides the window over the explode shuffle;
     // persisted because the self-join reads it twice (without it the whole
@@ -736,7 +749,7 @@ object Dedup {
       .where(col("__plen") <= maxPostingLen)
       .select("id", "g")
       .persist()
-    minietl.pipeline.RunCaches.register(kept)
+    RunCaches.register(kept)
     val cand = kept.join(kept.select(col("g"), col("id").as("id_b")), "g")
       .where(col("id") < col("id_b"))
       .select(col("id").as("id_a"), col("id_b"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import minietl.functions.{HashFamily, PortableHash}
+import minietl.pipeline.RunCaches
 
 /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03 —
   * the MOSS algorithm): position-local fingerprints with a coverage
@@ -201,14 +202,18 @@ object Winnow {
     * `textCol` is rewritten. One extra shuffle over [[sharedSpans]]: the
     * anti-join of token positions against covered positions plus the
     * per-doc rebuild aggregate. On the portable family
-    * [[spanDedupOracleSql]] replays it end to end.
+    * [[spanDedupOracleSql]] replays it end to end. The fingerprints, the
+    * token explode and the rebuild join all read `df`, so it is
+    * checkpointed first ([[RunCaches.checkpoint]]).
     */
   def spanDedup(df: DataFrame, textCol: String, idCol: String,
                 k: Int = 4, minSpanTokens: Int = 8,
                 maxPostings: Int = Dedup.DefaultMaxBucket,
-                family: HashFamily = HashFamily.Production): DataFrame =
-    excise(df, sharedSpans(df, textCol, idCol, k, minSpanTokens,
+                family: HashFamily = HashFamily.Production): DataFrame = {
+    val in = RunCaches.checkpoint(df)
+    excise(in, sharedSpans(in, textCol, idCol, k, minSpanTokens,
       maxPostings, family), textCol, idCol)
+  }
 
   /** Rewrite `textCol` with every token covered by a span (id_b side of
     * `spans`) removed. Id contract, enforced here rather than assumed:
@@ -356,21 +361,6 @@ object Winnow {
     fixpointLoop(df, textCol, idCol, k, minSpanTokens, maxPostings,
       maxIter, HashFamily.Production)
 
-  /** FULL-RESCAN fixpoint: identical semantics to [[spanDedupFixpoint]]
-    * (sticky cap included) but every round seeds ALL pairs instead of only
-    * those with a changed side. Not a production entry point: it exists as
-    * the equivalence witness the incremental invariant is spec-checked
-    * against (`SpanPropertiesSpec`). Production callers want
-    * [[spanDedupFixpoint]].
-    */
-  def spanDedupFixpointFullRescanWithStats(
-      df: DataFrame, textCol: String, idCol: String,
-      k: Int = 4, minSpanTokens: Int = 8,
-      maxPostings: Int = Dedup.DefaultMaxBucket,
-      maxIter: Int = 10): (DataFrame, Int) =
-    fixpointLoop(df, textCol, idCol, k, minSpanTokens, maxPostings,
-      maxIter, HashFamily.Production, incremental = false)
-
   /** The fixpoint loop is INCREMENTAL past round 1, and the maxPostings
     * cap is STICKY for the run: a fingerprint bucket that exceeds the cap
     * in ANY round stays dropped in every later round. Stickiness is what
@@ -414,15 +404,23 @@ object Winnow {
     * the loop body). Its hot-fp OUTPUT is tiny (> maxPostings members
     * each, so at most grams/maxPostings rows), checkpointed only when it
     * actually grows, and anti-joined into the seeds plan.
+    *
+    * `incremental = false` seeds ALL pairs every round (the full rescan,
+    * same semantics, sticky cap included). No entry point exposes it: it
+    * is the equivalence witness `SpanPropertiesSpec` checks the invariant
+    * against.
     */
-  private def fixpointLoop(df: DataFrame, textCol: String,
-                           idCol: String, k: Int, minSpanTokens: Int,
-                           maxPostings: Int, maxIter: Int, family: HashFamily,
-                           incremental: Boolean = true): (DataFrame, Int) = {
+  private[dedup] def fixpointLoop(df: DataFrame, textCol: String,
+                                  idCol: String, k: Int, minSpanTokens: Int,
+                                  maxPostings: Int, maxIter: Int, family: HashFamily,
+                                  incremental: Boolean = true): (DataFrame, Int) = {
     require(maxIter >= 1, s"maxIter must be >= 1 (got $maxIter)")
     require(minSpanTokens >= k,
       s"minSpanTokens must be >= k (got $minSpanTokens < $k)")
-    val release = minietl.pipeline.RunCaches.releaseNow _
+    val release = RunCaches.releaseNow _
+    // round 1's census, seed join and excision all read the input
+    var cur = RunCaches.checkpoint(df)
+    var curOwned = !(cur eq df) // never release the caller's frame
     // partition budget for the per-round corpus checkpoints: exciseSubset's
     // union concatenates the untouched-side partitions with the rebuild
     // aggregate's shuffle partitions, so without a cap the checkpointed
@@ -435,10 +433,8 @@ object Winnow {
     // coalesce — no shuffle, parallelism never drops below the cores).
     // The count is read off the planned physical plan: `df.rdd` would run
     // the input's shuffle stages under AQE just to count partitions.
-    val capParts = math.max(minietl.ops.Partitioning.plannedPartitions(df),
+    val capParts = math.max(minietl.ops.Partitioning.plannedPartitions(cur),
       df.sparkSession.sparkContext.defaultParallelism)
-    var cur = df
-    var curOwned = false // never release the caller's frame
     var changedIds: DataFrame = null // round r-1's changed set (null = round 1)
     var stickyBig: DataFrame = null // fps over the cap in ANY round so far
     var hotFpCount = 0L // |stickyBig|, maintained at each checkpoint
@@ -536,17 +532,16 @@ object Winnow {
                 (col("a.chg") || col("b.chg")))
             .select(seedSelect("a", "b"): _*)
         }
-      val spans = islandsToSpans(seeds, k, minSpanTokens).localCheckpoint(true)
+      val spans = RunCaches.checkpoint(islandsToSpans(seeds, k, minSpanTokens))
       if (spans.isEmpty) {
         release(spans)
         converged = true
       } else {
-        val nextChanged = spans.select(col("id_b").as("id")).distinct()
-          .localCheckpoint(true)
+        val nextChanged = RunCaches.checkpoint(spans.select(col("id_b").as("id")).distinct())
         // round 1 embeds the duplicate-id guard over the FULL frame (ids
         // never change between rounds, so one check covers the run)
-        val next = exciseSubset(cur, spans, nextChanged, textCol, idCol,
-          checkDupIds = rounds == 0).coalesce(capParts).localCheckpoint(true)
+        val next = RunCaches.checkpoint(exciseSubset(cur, spans, nextChanged, textCol, idCol,
+          checkDupIds = rounds == 0).coalesce(capParts))
         release(spans)
         if (changedIds != null) release(changedIds)
         if (curOwned) release(cur)

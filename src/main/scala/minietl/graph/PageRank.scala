@@ -139,12 +139,12 @@ object PageRank {
         .groupBy(col("dst").as("node"))
         .agg((lit(base) + expr("85 * sum(rank_fp DIV outdeg) DIV 100")).as("rank_fp"))
     }
-    // localCheckpoint (eager) materializes the result so the edge/degree
-    // caches can be dropped NOW, and — unlike a bare cache() — the
-    // checkpoint blocks are reclaimed by the ContextCleaner once the
-    // returned frame is garbage-collected, so repeated library calls do not
-    // accumulate permanently-pinned storage.
-    val out = last.select("node", "rank_fp").localCheckpoint(true)
+    // the eager checkpoint materializes the result so the edge/degree
+    // caches can be dropped NOW; a run scope releases it, and outside one
+    // the ContextCleaner reclaims its blocks once the returned frame is
+    // garbage-collected, so repeated library calls do not accumulate
+    // permanently-pinned storage
+    val out = minietl.pipeline.RunCaches.checkpoint(last.select("node", "rank_fp"))
     e.unpersist(); deg.unpersist(); e2.unpersist()
     out
   }

@@ -394,16 +394,18 @@ object Ops {
   /** [[temperatureFractions]] + [[stratifiedHashSample]] in one stage: a
     * deterministic, engine-replayable temperature sample of the corpus.
     * One bounded counts aggregate, then a scan-side filter — no shuffle of
-    * the kept data.
+    * the kept data. The counts job and the filter both read the input, so
+    * it is checkpointed first ([[minietl.pipeline.RunCaches.checkpoint]]).
     */
   def temperatureSample(keyCol: String, strataCol: String,
                         targetFraction: Double, alpha: Double = 0.5): Op = df => {
+    val in = minietl.pipeline.RunCaches.checkpoint(df)
     // normalize NULL strata into their own stratum (a NUL-prefixed sentinel
     // no real category uses) — otherwise the fraction computed for nulls
     // could never match in stratifiedHashSample's equality chain and every
     // null-stratum row would silently fall to defaultFraction = 0
-    val tmp = freshName(df, "__strata_norm")
-    val norm = df.withColumn(tmp,
+    val tmp = freshName(in, "__strata_norm")
+    val norm = in.withColumn(tmp,
       coalesce(col(strataCol).cast("string"), lit("\u0000null")))
     stratifiedHashSample(keyCol, tmp,
       temperatureFractions(norm, tmp, targetFraction, alpha))(norm).drop(tmp)

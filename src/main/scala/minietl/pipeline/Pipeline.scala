@@ -40,12 +40,11 @@ object ErrorMode {
   * pulls.
   *
   * Some stages run a Spark job while the pipeline is built (dedup stages,
-  * LM surprise scores, temperature-sample fractions). Inside [[run]], each
-  * stage's input is cached lazily and kept for the run only when the
-  * stage's own jobs filled it (the rule is in [[RunCaches.stage]]), so those
-  * jobs and the sink read the upstream stages once instead of recomputing
-  * them from the scan per job; the lazy stages between two kept inputs
-  * still fuse into one plan. [[frame]] outside a run persists nothing.
+  * LM surprise scores, temperature-sample fractions). Their kernels
+  * checkpoint the frames they re-read ([[RunCaches.checkpoint]]), so those
+  * jobs and the sink read the upstream stages once, from a leaf, instead of
+  * recomputing them from the scan per job; the lazy stages between two
+  * checkpoints fuse into one plan. Stage inputs are never persisted.
   *
   * Row counting uses `Dataset.observe`: the count is collected as a metric
   * of the sink's own action — no second pass over the data, which matters
@@ -94,7 +93,7 @@ final class Pipeline private (
     * is COMPOSED, before the stage's closure runs. A lazy stage executes
     * later, fused into the next job that reads it; a stage that runs its
     * own jobs (dedup, LM scores, sampling fractions) executes them inside
-    * the closure, on its cached input during [[run]]. Analysis-time
+    * the closure, over the input its kernel checkpointed. Analysis-time
     * failures (bad column, bad expression) are attributed to their stage
     * via [[withOnError]].
     */
@@ -126,8 +125,11 @@ final class Pipeline private (
     * and for embedding a pipeline as a stage of a larger plan. Stage hooks
     * fire here, in order; a stage that fails to compose reports through
     * [[withOnError]] with its context, then rethrows for the error-mode
-    * policy in [[run]]. Inside a run scope each stage's input goes through
-    * [[RunCaches.stage]]; outside one nothing is persisted.
+    * policy in [[run]]. Each stage closure is applied to its input as it
+    * is: a lazy stage adds to the plan, and a stage whose kernel re-reads
+    * its input checkpoints it ([[RunCaches.checkpoint]]; inside [[run]] the
+    * run scope releases it, outside one the ContextCleaner does). Nothing
+    * is persisted.
     */
   def frame(spark: SparkSession): DataFrame = {
     val src = source.getOrElse(throw new IllegalStateException("pipeline has no source"))(spark)
@@ -135,7 +137,7 @@ final class Pipeline private (
       case (df, ((label, t), i)) =>
         val ctx = Pipeline.StageContext(i, label)
         onStage.foreach(_(ctx))
-        try RunCaches.stage(df)(t)
+        try t(df)
         catch {
           case e: Throwable => onError.foreach(_(ctx, e)); throw e
         }
@@ -164,10 +166,10 @@ final class Pipeline private (
                                exception: Exception): Unit = lm.unregister(this)
       })
     }
-    // run scope: kept stage inputs and the intermediates stage closures
-    // checkpoint (semantic_decontaminate's flagged ids, lm_surprise's
-    // scores) are released here once the sink action has consumed the data,
-    // so a config-driven run leaves no session-lifetime cache pins
+    // run scope: the frames stage kernels checkpoint (dedup inputs and
+    // signature bases, lm_surprise's scores, temperature_sample's input)
+    // are released here once the sink action has consumed the data, so a
+    // config-driven run leaves no session-lifetime pins
     RunCaches.scoped {
       try {
         val obs = Observation(s"${name}_${java.util.UUID.randomUUID().toString.take(8)}")

@@ -343,8 +343,7 @@ object Similarity {
     * internally cached prepared-corpus frame before returning. For callers
     * with no unpersist hook of their own — the config/Pipeline.run path —
     * where the lazy variant would pin the full corpus vector cache for the
-    * session lifetime (the [[minietl.text.LmScore.bigramSurpriseEager]]
-    * precedent). The returned frame no longer depends on the cache.
+    * session lifetime. The returned frame no longer depends on the cache.
     */
   def semanticDecontaminateEager(corpus: DataFrame, bench: DataFrame,
                                  threshold: Double, bitsPerBand: Int, bands: Int, dim: Int,
@@ -353,13 +352,12 @@ object Similarity {
                                  maxBucketSize: Int = minietl.dedup.Dedup.DefaultMaxBucket): DataFrame = {
     val (pairs, prepC) = semanticContaminationPairsWithCache(corpus, bench,
       threshold, bitsPerBand, bands, dim, idCol, vecCol, seed, maxBucketSize)
-    val flagged = pairs.select(col("corpus_id").as(idCol)).distinct()
-      .localCheckpoint(true)
-    prepC.unpersist()
     // inside a Pipeline.run/Dag.run scope the (contamination-sized)
     // checkpoint is released when the run's sink completes; otherwise the
-    // caller owns it (spark.catalog.clearCache() as a last resort)
-    minietl.pipeline.RunCaches.register(flagged)
+    // ContextCleaner frees it once the returned frame is unreachable
+    val flagged = minietl.pipeline.RunCaches.checkpoint(
+      pairs.select(col("corpus_id").as(idCol)).distinct())
+    prepC.unpersist()
     corpus.join(flagged, Seq(idCol), "left_anti")
   }
 

@@ -392,8 +392,8 @@ object Streaming {
     * the loop's own records, without a schema-inference job; `startSchemas`
     * are checked before the query starts, the rest at the first batch.
     *
-    * The admitted rows are materialized once ([[materialize]], an eager
-    * `localCheckpoint`), and the sink and every digest delta read them.
+    * The admitted rows are materialized once (`RunCaches.checkpoint`, an
+    * eager `localCheckpoint`), and the sink and every digest delta read them.
     * Adaptive execution sizes the checkpoint's final stage from its data
     * (one partition for a small batch, so one file per output), while a
     * `persist()`ed plan keeps all `spark.sql.shuffle.partitions`
@@ -453,7 +453,7 @@ object Streaming {
             if (a.keys.columns.contains("__id"))
               a.verify(history.head.join(a.keys, on), history.tail).select("__id")
             else history.head.join(a.keys, on, "left_semi").select(col(on.head).as("__id"))
-          val fresh = materialize(
+          val fresh = RunCaches.checkpoint(
             a.within.join(dups, a.within(a.idCol) === dups("__id"), "left_anti"))
           sink(fresh.drop(fresh.columns.filterNot(batch.columns.contains): _*), batchId)
           deltas(fresh).zip(digests).foreach { case (d, t) =>
@@ -462,17 +462,6 @@ object Streaming {
         }
       }
       .start()
-  }
-
-  /** `df` computed once, for the rest of the current run scope: an eager
-    * `localCheckpoint` registered with `RunCaches`. Its consumers read the
-    * stored rows with their statistics, and adaptive execution sized its
-    * final stage.
-    */
-  private def materialize(df: DataFrame): DataFrame = {
-    val stored = df.localCheckpoint()
-    RunCaches.register(stored)
-    stored
   }
 
   /** The batchId-keyed subdirectory (`dir/batch=<id>`) used for idempotent
@@ -606,7 +595,7 @@ object Streaming {
       trigger, sink) { batch =>
       // seed stays the within-batch pass's own default, so the digest
       // bands are the family that pass used
-      val base = materialize(Dedup.minhashBase(
+      val base = RunCaches.checkpoint(Dedup.minhashBase(
         batch, textCol, idCol, shingleN, k, seed = 42L, family))
       val dupWithin = Dedup.minhashPairsFromSigBase(
           base, bands, k, threshold, Dedup.DefaultMaxBucket, family)
@@ -679,7 +668,7 @@ object Streaming {
     admitAgainstHistory(stream, mediaDigests(historyDir, maxDist), checkpoint,
       trigger, sink) { batch =>
       // one decode per row for every consumer in the batch
-      val withHash = materialize(batch.withColumn("__mh", hash(col(contentCol))))
+      val withHash = RunCaches.checkpoint(batch.withColumn("__mh", hash(col(contentCol))))
       def hashed(df: DataFrame) = df.where(col("__mh").isNotNull)
       if (maxDist == 0) {
         // within-batch: one row per hash value, the minimum id

@@ -22,13 +22,14 @@ import org.apache.spark.sql.functions._
   * boilerplate-free noise, wrong-language text); low ⇒ repetitive/templated
   * text. Both tails are the usual filtering targets.
   *
-  * Scale shape (100 TB): bigram occurrences are scanned once and persisted
-  * (two count aggregations + the per-doc join read it); the count tables
-  * are O(distinct bigrams) and join against occurrences on the bigram
-  * string (shuffle), then one groupBy(doc) with map-side combine. No
-  * driver-side materialization. Callers should release the persisted
-  * occurrence frame when done (the battery's per-query `clearCache`, or
-  * `Dedup.releasingCaches`).
+  * Scale shape (100 TB): bigram occurrences are scanned once and
+  * checkpointed (two count aggregations + the per-doc join read it;
+  * [[minietl.pipeline.RunCaches.checkpoint]]); the count tables are
+  * O(distinct bigrams) and join against occurrences on the bigram string
+  * (shuffle), then one groupBy(doc) with map-side combine. No driver-side
+  * materialization. Inside a run scope the scope releases the occurrence
+  * checkpoint; outside one the ContextCleaner frees it once the scores
+  * frame is unreachable.
   *
   * Documents with fewer than two tokens have no bigrams and are absent
   * from the output — score them separately (they are degenerate for any
@@ -40,34 +41,37 @@ object LmScore {
     * (doc_id, n_bigrams BIGINT, surprise_bits BIGINT, avg_millibits BIGINT).
     */
   def bigramSurprise(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    scoresAndOccCache(docs, idCol, textCol)._1
+    scoresAndOcc(docs, idCol, textCol)._1
 
-  /** [[bigramSurprise]] for fire-and-forget callers that have no unpersist
-    * hook (the YAML `lm_surprise` stage — a pipeline run must not leak
-    * cached occurrence blocks for the session's lifetime): materializes the
-    * scores with an EAGER localCheckpoint, releases the occurrence cache
-    * immediately, and returns the checkpointed frame — whose blocks the
-    * ContextCleaner reclaims once the frame is unreferenced (the
-    * [[minietl.graph.PageRank]] pattern). The checkpoint holds one 4-column
-    * row per scored document — bounded and far smaller than the occurrence
-    * frame it replaces. Library callers wanting full laziness use
-    * [[bigramSurprise]] and release the cache themselves.
+  /** [[bigramSurprise]] materialized: checkpoints the scores
+    * ([[minietl.pipeline.RunCaches.checkpoint]]), releases the occurrence
+    * checkpoint at once, and returns the checkpointed frame, which holds
+    * one 4-column row per scored document — bounded and far smaller than
+    * the occurrence frame it replaces.
     */
   def bigramSurpriseEager(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val (scores, occ) = scoresAndOccCache(docs, idCol, textCol)
-    val out = scores.localCheckpoint(true)
-    occ.unpersist()
-    // released at end-of-run when a Pipeline.run/Dag.run scope is open
-    minietl.pipeline.RunCaches.register(out)
+    val (scores, occ) = scoresAndOcc(docs, idCol, textCol)
+    val out = minietl.pipeline.RunCaches.checkpoint(scores)
+    minietl.pipeline.RunCaches.releaseNow(occ)
     out
   }
 
-  private def scoresAndOccCache(docs: DataFrame, idCol: String,
-                                textCol: String): (DataFrame, DataFrame) = {
-    val occ = docs
+  /** The YAML `lm_surprise` stage: [[bigramSurpriseEager]]'s scores
+    * left-joined back onto `docs` by `idCol` (docs without bigrams keep
+    * null scores), so a filter can threshold `avg_millibits` next. `docs`
+    * is checkpointed first: the scores and the join both read it.
+    */
+  def withBigramSurprise(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val in = minietl.pipeline.RunCaches.checkpoint(docs)
+    in.join(bigramSurpriseEager(in, idCol, textCol).withColumnRenamed("doc_id", idCol),
+      Seq(idCol), "left")
+  }
+
+  private def scoresAndOcc(docs: DataFrame, idCol: String,
+                           textCol: String): (DataFrame, DataFrame) = {
+    val occ = minietl.pipeline.RunCaches.checkpoint(docs
       .select(col(idCol).as("doc_id"),
-        explode(TextAnalysis.ngrams(TextAnalysis.tokens(col(textCol)), 2)).as("bigram"))
-      .persist()
+        explode(TextAnalysis.ngrams(TextAnalysis.tokens(col(textCol)), 2)).as("bigram")))
     val bigCounts = occ.groupBy("bigram").agg(count(lit(1)).as("c_bigram"))
     val prefCounts = bigCounts
       .withColumn("prefix", expr("split_part(bigram, ' ', 1)"))

@@ -20,4 +20,18 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs GCs until every persistent RDD not in `before` is gone (the
+    * ContextCleaner unpersists an RDD once it is unreachable), or until
+    * `timeoutMs` passes. True when none is left.
+    */
+  def awaitUnpinned(spark: SparkSession, before: Set[Int], timeoutMs: Long = 20000L): Boolean = {
+    def left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    left.isEmpty
+  }
 }

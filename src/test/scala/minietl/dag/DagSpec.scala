@@ -106,15 +106,20 @@ class DagSpec extends AnyFunSuite with SparkTestBase {
     assert(viz.contains("SOURCE") && viz.contains("TRANSFORM") && viz.contains("SINK"))
   }
 
-  test("a run caches fan-out and eager transform inputs for the run only") {
+  test("a run caches fan-out and releases transform checkpoints after the run") {
     spark.catalog.clearCache() // isolate from earlier suites in this JVM
     val pinned = spark.sparkContext.getPersistentRDDs.keySet
     val acc = spark.sparkContext.longAccumulator("rows_evaluated")
     val bump = udf { (_: Long) => acc.add(1); true }.asNondeterministic()
     val dag = new PipelineDAG()
       .addSource("o", _ => orders.filter(bump(col("id"))))
-      // an eager job on the transform's input, like the dedup stages
-      .addTransform("t", df => { df.count(); df.withColumn("x", lit(1)) })
+      // an eager job on the transform's input, which the transform reads
+      // again, so it checkpoints the input as the dedup kernels do
+      .addTransform("t", df => {
+        val in = minietl.pipeline.RunCaches.checkpoint(df)
+        in.count()
+        in.withColumn("x", lit(1))
+      })
       .addSink("s1", df => { df.count(); () })
       .addSink("s2", df => { df.count(); () })
       .connect("o", "t").connect("t", "s1").connect("t", "s2")
@@ -123,7 +128,7 @@ class DagSpec extends AnyFunSuite with SparkTestBase {
     assert(acc.value === 3L)
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.keySet === pinned)
-    // embedding compiles without a run scope and persists nothing
+    // embedding compiles without a run scope and caches nothing
     assert(dag.frame(spark, "t").count() === 3L)
     assert(spark.sharedState.cacheManager.isEmpty)
   }

@@ -2,6 +2,7 @@ package minietl.dedup
 
 import minietl.SparkTestBase
 import minietl.functions.HashFamily
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -227,6 +228,15 @@ class SpanPropertiesSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** The fixpoint loop seeding ALL pairs every round: the slow full rescan
+    * the incremental loop must agree with.
+    */
+  private def fullRescanWithStats(df: DataFrame, textCol: String, idCol: String,
+                                  k: Int, minSpanTokens: Int,
+                                  maxPostings: Int = Dedup.DefaultMaxBucket): (DataFrame, Int) =
+    Winnow.fixpointLoop(df, textCol, idCol, k, minSpanTokens, maxPostings, maxIter = 10,
+      HashFamily.Production, incremental = false)
+
   test("incremental fixpoint is equivalent to the full-rescan loop (invariant witness)") {
     // the incremental invariant's executable form: same texts, same round
     // count, on random corpora AND on the sticky-cap corpus where a
@@ -234,7 +244,7 @@ class SpanPropertiesSpec extends AnyFunSuite with SparkTestBase {
     forAll(corpusGen, 4) { (corpus, seed) =>
       val (inc, rInc) = Winnow.spanDedupFixpointWithStats(
         toDf(corpus), "text", "doc_id", k = K, minSpanTokens = MinSpan)
-      val (full, rFull) = Winnow.spanDedupFixpointFullRescanWithStats(
+      val (full, rFull) = fullRescanWithStats(
         toDf(corpus), "text", "doc_id", k = K, minSpanTokens = MinSpan)
       val a = inc.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
       val b = full.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
@@ -248,7 +258,7 @@ class SpanPropertiesSpec extends AnyFunSuite with SparkTestBase {
     val (inc, rInc) = Winnow.spanDedupFixpointWithStats(
       toDf(sticky), "text", "doc_id", k = K, minSpanTokens = MinSpan,
       maxPostings = 2)
-    val (full, rFull) = Winnow.spanDedupFixpointFullRescanWithStats(
+    val (full, rFull) = fullRescanWithStats(
       toDf(sticky), "text", "doc_id", k = K, minSpanTokens = MinSpan,
       maxPostings = 2)
     assert(inc.collect().map(r => r.getInt(0) -> r.getString(1)).toMap ===

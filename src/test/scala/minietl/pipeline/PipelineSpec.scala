@@ -146,7 +146,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalStateException](b.clear().run(spark))
   }
 
-  // ------------------------------------------------ run-scoped stage inputs
+  // ------------------------------------------------ run-scoped checkpoints
 
   private def corpus =
     (1 to 60).map { i =>
@@ -162,8 +162,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   /** The YAML `lm_surprise` stage: eager bigram-surprise scores joined back. */
   private val lmSurprise: DataFrame => DataFrame = df =>
-    df.join(minietl.text.LmScore.bigramSurpriseEager(df, "doc_id", "text"),
-      Seq("doc_id"), "left")
+    minietl.text.LmScore.withBigramSurprise(df, "doc_id", "text")
 
   private def eagerPipeline(name: String, src: DataFrame, acc: LongAccumulator): PipelineBuilder =
     new PipelineBuilder(name)
@@ -179,8 +178,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val acc = spark.sparkContext.longAccumulator("rows_evaluated")
     val p = eagerPipeline("once", corpus, acc).toNoop().build()
     val stats = p.run(spark)
-    // lm_surprise's checkpoint job and temperature_sample's fraction job
-    // read the cached stage inputs, and so does the sink
+    // lm_surprise checkpoints its input, and its score jobs, the
+    // temperature_sample checkpoint and the sink all read from there
     assert(acc.value === 60L)
     // the same rows as the uncached composition
     assert(stats.rows === p.frame(spark).count())
@@ -213,24 +212,61 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(cacheState === before)
   }
 
-  test("frame outside a run persists nothing") {
+  test("frame outside a run caches nothing; its checkpoints go with the frame") {
     spark.catalog.clearCache()
-    val before = cacheState
-    val f = new PipelineBuilder("embed")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def frame() = new PipelineBuilder("embed")
       .fromDataFrame(corpus)
       .add(df => { df.count(); df }, "eager")
       .temperatureSample("doc_id", "source", 0.8)
       .build().frame(spark)
-    assert(cacheState === before)
-    assert(f.count() > 0)
-    assert(cacheState === before)
+    // temperature_sample checkpoints its input: a leaf, not a cache entry
+    assert(frame().count() > 0)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // nothing holds the frame any more, so the ContextCleaner frees it
+    assert(SparkTestBase.awaitUnpinned(spark, before))
+  }
+
+  test("the training YAML on the perfbench smoke corpus caches nothing and runs its pinned jobs") {
+    // the corpus perfbench's curate_batch smoke run builds: 60 seeded base
+    // documents, one renamed replica, seed 1 (sink pinned there as well)
+    val dir = java.nio.file.Paths.get(tmp())
+    perfbench.Inputs.writeCorpus(spark, java.nio.file.Paths.get("perfbench/data"), dir,
+      seed = 1L, baseDocs = 60, replicas = 1)
+    val yaml = new String(Files.readAllBytes(
+      java.nio.file.Paths.get("examples/training_data_pipeline.yaml")), "UTF-8")
+    val env = Map("CORPUS_DIR" -> dir.toString, "OUT_DIR" -> s"$dir/out")
+    spark.catalog.clearCache()
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // CacheManager entries seen at each stage boundary and when the sink
+    // has run, all inside the run scope (which would release any entry)
+    val entries = scala.collection.mutable.Buffer.empty[(String, Boolean)]
+    def look(at: String): Unit = { entries += (at -> spark.sharedState.cacheManager.isEmpty); () }
+    val p = minietl.config.Config.load(yaml, env)
+      .withOnStage(ctx => look(ctx.label))
+      .withOnComplete(_ => look("sink"))
+    val (stats, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext)(p.run(spark))
+    info(s"$jobs jobs")
+    assert(entries.size === 12) // 11 stages and the sink
+    assert(entries.filterNot(_._2).isEmpty, s"cache entries at ${entries.filterNot(_._2)}")
+    // the most jobs one run took when pinned
+    assert(jobs <= 44, s"the run took $jobs jobs")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === pinned)
+    val sink = Readers.parquet(spark, s"$dir/out/cleaned")
+    // perfbench's sink checksum: rows, and the xxhash64 sum of every row
+    // over the columns in name order
+    val got = sink.agg(count(lit(1)), sum(xxhash64(sink.columns.sorted.map(col).toIndexedSeq: _*)
+      .cast("decimal(38,0)"))).head()
+    assert(stats.rows === 22L)
+    assert(s"${got.getLong(0)}:${got.getDecimal(1).toPlainString}" === "22:4403508001369790295")
   }
 
   test("a caller's localCheckpointed source stays readable after a run") {
     val src = corpus.localCheckpoint()
     val expected = src.collect().toSet
-    // minhash_dedup registers a persisted signature frame whose plan reads
-    // src; lm_surprise keeps its cached input, also over src
+    // src is already a checkpoint, so neither minhash_dedup nor
+    // lm_surprise checkpoints it again, and the run releases only the
+    // checkpoints they take
     new PipelineBuilder("lc")
       .fromDataFrame(src)
       .add(df => minietl.dedup.Dedup.minhashDedup(df, "text", "doc_id"), "minhash_dedup")

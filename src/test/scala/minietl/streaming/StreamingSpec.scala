@@ -736,10 +736,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     "jobs and writes one sink file") {
     // the most steady-state jobs per batch, and the most files one digest
     // delta may have. The near-dup deltas are cut from the signature base,
-    // which is spread over the cores. The media near-dup pass caches frames
-    // whose fill jobs can race, so its pin keeps a margin of two jobs.
-    val pinned = Map("exact" -> (6, 1), "near-dup collision" -> (17, 4),
-      "near-dup estimate" -> (22, 4), "near-dup exact" -> (21, 4),
+    // which keeps the batch's own partitions. The media near-dup pass
+    // caches frames whose fill jobs can race, so its pin keeps a margin of
+    // two jobs.
+    val pinned = Map("exact" -> (6, 1), "near-dup collision" -> (16, 1),
+      "near-dup estimate" -> (21, 1), "near-dup exact" -> (20, 1),
       "media maxDist 0" -> (8, 1), "media maxDist 2" -> (27, 1))
     ingestLoops.foreach { loop =>
       val dir = Files.createTempDirectory("minietl-ingest-jobs")
