@@ -2343,9 +2343,9 @@ object SparkEntry {
         // ONE decode: the same hash frame feeds the audit columns AND the
         // dedup fold (dedupNear(df, key, content) would recompute
         // energyHashFrame internally — a second full PCM decode; r17-opt).
-        // dedupNearFromHashes persists the frame, so no extra persist here.
-        val hashes = minietl.multimodal.PerceptualAudio
-          .energyHashFrame(wavs, "media_id", "content")
+        // Checkpointed here: dedupNearFromHashes reads a checkpoint as it is.
+        val hashes = minietl.pipeline.RunCaches.checkpoint(minietl.multimodal.PerceptualAudio
+          .energyHashFrame(wavs, "media_id", "content"))
         val kept = minietl.multimodal.PerceptualAudio
           .dedupNearFromHashes(wavs, "media_id", hashes)
         hashes

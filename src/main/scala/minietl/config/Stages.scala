@@ -618,9 +618,7 @@ private[config] object Stages {
           val bench = minietl.io.Readers.parquet(df.sparkSession, benchPath)
             .select(col(benchCol).as(c))
             .withColumn(key, org.apache.spark.sql.functions.monotonically_increasing_id())
-          // EAGER variant: the lazy one would pin the prepared-corpus cache
-          // for the session lifetime
-          minietl.sim.Similarity.semanticDecontaminateEager(
+          minietl.sim.Similarity.semanticDecontaminate(
             df, bench, threshold, bpb, bands, dim, idCol = key, vecCol = c)
         }
       }),

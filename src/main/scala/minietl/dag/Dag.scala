@@ -12,10 +12,11 @@ import minietl.pipeline.RunCaches
   * dict (dag.py:324) — losing the streaming property it was built for. Here
   * the DAG compiles to DataFrame composition: node "outputs" are lazy
   * DataFrames and Catalyst plans the whole graph at once. During [[run]]
-  * a frame read by several nodes is cached once instead of recomputed per
-  * reader; transform closures apply to their input as it is, and a kernel
-  * that re-reads its input checkpoints it
-  * ([[minietl.pipeline.RunCaches.checkpoint]]). [[frame]] caches nothing.
+  * a frame read by several nodes (a fan-out or a branch input) is
+  * checkpointed once instead of recomputed per reader
+  * ([[minietl.pipeline.RunCaches.checkpoint]]); transform closures apply
+  * to their input as it is, and a kernel that re-reads its input
+  * checkpoints it. [[frame]] materializes nothing itself.
   *
   * Two reference stubs are implemented for real:
   *  - MergeStrategy.UNION ("concat + dedupe", declared dag.py:60 but never
@@ -134,19 +135,21 @@ final class PipelineDAG {
     order.toSeq
   }
 
-  /** Compile every node to its (lazy) output frame(s), keyed by node id and
-    * output port. Inside a run scope, frames consumed by more than one
-    * downstream node are cached for the run; outside one (embedding via
-    * [[frame]]) nothing is cached.
+  /** Compile every node to its output frame(s), keyed by node id and
+    * output port. A frame read by more than one downstream node, and a
+    * branch node's input, go through `materialize`: [[run]] checkpoints
+    * them for its scope, and [[frame]] (embedding) passes them through, so
+    * composing a DAG runs no job.
     */
-  private def compile(spark: SparkSession): mutable.Map[String, Map[String, DataFrame]] = {
+  private def compile(spark: SparkSession,
+      materialize: DataFrame => DataFrame): mutable.Map[String, Map[String, DataFrame]] = {
     // frame-only compilation tolerates missing sinks / unconsumed outputs
     val errs = validate().filterNot(e => e.contains("sink") || e.contains("no outputs"))
     require(errs.isEmpty, s"invalid DAG: ${errs.mkString("; ")}")
 
     val out = mutable.Map.empty[String, Map[String, DataFrame]]
     def fanOut(id: String, df: DataFrame): DataFrame =
-      if (outputsOf(id).size > 1) RunCaches.cacheForRun(df) else df
+      if (outputsOf(id).size > 1) materialize(df) else df
 
     def inputFrame(id: String): DataFrame = {
       val Seq((from, port)) = inputsOf(id)
@@ -171,8 +174,8 @@ final class PipelineDAG {
           }
           out(id) = Map("" -> fanOut(id, merged))
         case BranchNode(pred) =>
-          // both splits read the same upstream; cache it once when executing
-          val src = RunCaches.cacheForRun(inputFrame(id))
+          // both splits read the same upstream
+          val src = materialize(inputFrame(id))
           out(id) = Map("true" -> src.filter(pred), "false" -> src.filter(!pred))
         case SinkNode(_) => ()
       }
@@ -190,7 +193,7 @@ final class PipelineDAG {
       case Array(i, p) => (i, p)
       case _ => throw new IllegalArgumentException(s"bad node ref: $nodeId")
     }
-    compile(spark)
+    compile(spark, identity)
       .getOrElse(id, throw new IllegalArgumentException(s"unknown node: $id"))
       .getOrElse(port, throw new IllegalArgumentException(s"unknown port '$port' on $id"))
   }
@@ -203,12 +206,12 @@ final class PipelineDAG {
     val errs = validate()
     require(errs.isEmpty, s"invalid DAG: ${errs.mkString("; ")}")
     // RunCaches scope covers COMPILE as well as the sink actions: fan-out
-    // caches and the checkpoints the transform kernels take
-    // (semantic_decontaminate, lm_surprise, the dedup stages) are all tracked
+    // checkpoints and the checkpoints the transform kernels take
+    // (semantic_decontaminate, lm_surprise, the dedup stages) are all taken
     // inside compile(), so the scope must already be open there; it
     // releases them after every sink has consumed the data, or threw
     RunCaches.scoped {
-      val out = compile(spark)
+      val out = compile(spark, RunCaches.checkpoint)
 
       def inputFrame(id: String): DataFrame = {
         val Seq((from, port)) = inputsOf(id)

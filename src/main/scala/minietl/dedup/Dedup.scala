@@ -35,29 +35,14 @@ import minietl.pipeline.RunCaches
   * is called ([[RunCaches.checkpoint]]):
   * [[minhashNearDupPairs]] its signature base, [[minhashDedup]] and
   * [[minhashDedupClusters]] their input, [[connectedComponents]] its pair
-  * list. Inside a run scope the scope releases those checkpoints; outside
-  * one the ContextCleaner frees them once the returned frame is
-  * unreachable. [[ngramJaccardPairs]] and [[ngramContainmentPairs]] still
-  * `persist()` their signature/posting frames, because the returned LAZY
-  * plan references them two or three times and a lazy return cannot
-  * unpersist behind itself. Those caches live until the caller releases
-  * them: run one invocation to completion and call
-  * `spark.catalog.clearCache()` (what the Verify/Bench batteries do between
-  * entries), or wrap the materialization in [[releasingCaches]].
+  * list, [[ngramJaccardPairs]] and [[ngramContainmentPairs]] their shingle
+  * base (and the containment kernel its capped postings). Inside a run
+  * scope the scope releases those checkpoints; outside one the
+  * ContextCleaner frees them once the returned frame is unreachable.
   */
 object Dedup {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Run `body` (which should MATERIALIZE a frame built by one of the
-    * persisting functions above — write, collect, count), then drop every
-    * cache in the session. Coarse by design: Spark offers no safe hook to
-    * unpersist a lazy plan's caches after its first job, so this trades
-    * cache granularity for a guaranteed no-leak bound. Callers managing
-    * their own unrelated caches should unpersist explicitly instead.
-    */
-  def releasingCaches[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
-    try body finally spark.catalog.clearCache()
 
   // ---------------------------------------------------------------- exact
   /** Exact dedup on a content column: keeps the row with the smallest
@@ -163,7 +148,7 @@ object Dedup {
     base.select(col("id"), explode(family.bandKeys(col("sig"), bands, k)).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
 
-  /** Candidate self-join + est/jac verify over a CALLER-PERSISTED (id, hsh,
+  /** Candidate self-join + est/jac verify over a CALLER-CHECKPOINTED (id, hsh,
     * sig) signature base and its banding — the tail behind
     * [[minhashNearDupPairs]] and the streaming ingest loop.
     */
@@ -690,11 +675,10 @@ object Dedup {
                         radius: Int = 10, shingleN: Int = 3,
                         threshold: Double = 0.5): DataFrame = {
     val width = 2 * radius + 1
-    // Persisted: the bucket join and both candidate-fetch joins read it, and
-    // shingling is the expensive scan-side step.
-    val base = spread(df).select(col(idCol).as("id"), col(lenCol).as("len"),
-      shingleHashesSorted(col(textCol), shingleN).as("sh")).persist()
-    RunCaches.register(base)
+    // the bucket join and both candidate-fetch joins read it, and shingling
+    // is the expensive scan-side step
+    val base = RunCaches.checkpoint(spread(df).select(col(idCol).as("id"),
+      col(lenCol).as("len"), shingleHashesSorted(col(textCol), shingleN).as("sh")))
     // The bucket join moves only (id, len, bucket); the shingle arrays join
     // back onto the surviving candidate pairs, so no array is copied per
     // bucket-pair — only per radius-qualified candidate.
@@ -737,19 +721,16 @@ object Dedup {
                             maxPostingLen: Int = 1000): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val base = spread(df).select(col(idCol).as("id"),
-      shingleHashesSorted(col(textCol), shingleN).as("sh")).persist()
-    RunCaches.register(base)
+    val base = RunCaches.checkpoint(spread(df).select(col(idCol).as("id"),
+      shingleHashesSorted(col(textCol), shingleN).as("sh")))
     val posts = base.select(col("id"), explode(col("sh")).as("g"))
     // posting-length census rides the window over the explode shuffle;
-    // persisted because the self-join reads it twice (without it the whole
-    // explode+census chain — the expensive part — runs once per side)
+    // checkpointed because the self-join reads it twice (without it the
+    // whole explode+census chain — the expensive part — runs once per side)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("g")
-    val kept = posts.withColumn("__plen", count(lit(1)).over(w))
+    val kept = RunCaches.checkpoint(posts.withColumn("__plen", count(lit(1)).over(w))
       .where(col("__plen") <= maxPostingLen)
-      .select("id", "g")
-      .persist()
-    RunCaches.register(kept)
+      .select("id", "g"))
     val cand = kept.join(kept.select(col("g"), col("id").as("id_b")), "g")
       .where(col("id") < col("id_b"))
       .select(col("id").as("id_a"), col("id_b"))

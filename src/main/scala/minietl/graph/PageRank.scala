@@ -3,6 +3,8 @@ package minietl.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import minietl.pipeline.RunCaches
+
 /** Integer fixed-point PageRank over an edge list — graph analytics as
   * iterated Catalyst joins, with ALL arithmetic in scaled 64-bit integers.
   *
@@ -23,7 +25,7 @@ import org.apache.spark.sql.functions._
   * edge source, the same key every iteration, so AQE/bucketing can reuse
   * the layout) followed by a groupBy(dst) with map-side combine. Nothing
   * is collected to the driver except the node count (one long — needed to
-  * seed the uniform prior). Edges and degrees are persisted once across
+  * seed the uniform prior). Edges and degrees are checkpointed once across
   * iterations; iteration count is a fixed small constant, not a
   * convergence loop, keeping lineage bounded.
   */
@@ -68,7 +70,7 @@ object PageRank {
     * with no out-edge silently leaks rank mass every iteration, and a node
     * with no in-edge vanishes from the ranking after iteration 1 — both are
     * data bugs a caller wants surfaced, not averaged away. The check is two
-    * anti-join counts over the already-persisted edges (one scan each),
+    * anti-join counts over the already-checkpointed edges (one scan each),
     * negligible next to the iterations themselves.
     *
     * Uniform prior `scale div n`; update
@@ -77,9 +79,9 @@ object PageRank {
   def pageRankFixedPoint(spark: SparkSession, edges: DataFrame,
                          iterations: Int, scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    val e = edges.select("src", "dst").persist()
-    val deg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg")).persist()
+    val e = RunCaches.checkpoint(edges.select("src", "dst"))
+    val deg = RunCaches.checkpoint(e.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg")))
     // ONE pass computes the dangling-free contract (both directions) AND the
     // node count: full-outer src-nodes vs dst-nodes, count the nulls on each
     // side. Replaces two anti-join counts + a deg.count() — three jobs → one.
@@ -94,7 +96,7 @@ object PageRank {
       .head() // single row of three longs: the model-scalar exception
     val (noOut, noIn) = (checks.getLong(0), checks.getLong(1))
     if (noOut != 0 || noIn != 0) {
-      e.unpersist(); deg.unpersist()
+      RunCaches.releaseNow(e); RunCaches.releaseNow(deg)
       throw new IllegalArgumentException(
         s"pageRankFixedPoint requires a dangling-free edge list (every node " +
           s"with outdeg >= 1 AND indeg >= 1): $noOut node(s) have no " +
@@ -108,28 +110,28 @@ object PageRank {
     // outdeg attached to each edge ONCE (deg is node-cardinality, so this
     // join broadcasts at moderate scale and AQE decides at runtime): each
     // iteration then needs only ONE join — the node-sized rank table onto
-    // the cached pre-joined edges — plus the groupBy(dst) with map-side
+    // the checkpointed pre-joined edges — plus the groupBy(dst) with map-side
     // combine, instead of the two joins per iteration of the r ⋈ deg ⋈ e
     // formulation. `rank_fp DIV outdeg` per edge equals the per-node
     // division (it is a function of (src's rank, src's outdeg) only).
-    // The cached edge frame is hash-partitioned by src BEFORE the persist:
-    // the iteration join's key is src every round, so the cache satisfies
-    // the join's required distribution and no iteration re-exchanges the
-    // (large) edge side — one exchange serves all `iterations` joins
-    // (guide §2.4 "two operations keyed the same way can share one
-    // exchange").
-    val e2 = e.join(deg, e("src") === deg("node"))
+    // The pre-joined edge frame is hash-partitioned by src into the
+    // session's shuffle partitions BEFORE the checkpoint, which keeps that
+    // partitioning: the iteration join's key is src every round, so the
+    // checkpoint satisfies the join's required distribution and no
+    // iteration re-exchanges the (large) edge side — one exchange serves
+    // all `iterations` joins (guide §2.4 "two operations keyed the same
+    // way can share one exchange").
+    val e2 = RunCaches.checkpoint(e.join(deg, e("src") === deg("node"))
       .select(col("src"), col("dst"), col("outdeg"))
-      .repartition(col("src"))
-      .persist()
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("src")))
     val init = deg.select(col("node"), lit(scale / n).as("rank_fp"))
     // SHUFFLE_HASH on the rank side (guide §3.1): the planner's default is
-    // sort-merge, which re-SORTS the cached multi-million-row edge side
+    // sort-merge, which re-SORTS the stored multi-million-row edge side
     // every iteration (verified in the r18 iteration plan dump: Sort +
     // Exchange over the InMemoryTableScan per round). The rank table is
     // node-cardinality — always far smaller per partition than the edge
     // list it joins — so building it as a per-partition hash table and
-    // STREAMING the cached edges is the right strategy at every scale
+    // STREAMING the stored edges is the right strategy at every scale
     // (broadcast would only be safe for small graphs). Probe A/B (r18,
     // sf0.1, 4 interleaved reps in one JVM): 3-iteration block 2.0-2.4 s
     // sort-merge vs 1.3-2.1 s shuffled-hash over the src-partitioned
@@ -140,12 +142,9 @@ object PageRank {
         .agg((lit(base) + expr("85 * sum(rank_fp DIV outdeg) DIV 100")).as("rank_fp"))
     }
     // the eager checkpoint materializes the result so the edge/degree
-    // caches can be dropped NOW; a run scope releases it, and outside one
-    // the ContextCleaner reclaims its blocks once the returned frame is
-    // garbage-collected, so repeated library calls do not accumulate
-    // permanently-pinned storage
-    val out = minietl.pipeline.RunCaches.checkpoint(last.select("node", "rank_fp"))
-    e.unpersist(); deg.unpersist(); e2.unpersist()
+    // checkpoints can be dropped NOW
+    val out = RunCaches.checkpoint(last.select("node", "rank_fp"))
+    Seq(e, deg, e2).foreach(RunCaches.releaseNow)
     out
   }
 }

@@ -162,13 +162,15 @@ object Writers {
   def noop(df: DataFrame): Long = df.count()
 
   /** MultiLoader (loaders.py:453-484): fan one frame out to several sinks.
-    * The frame is persisted once so the lineage is not recomputed per sink —
-    * the distributed analog of the reference's buffered replay.
+    * The frame is checkpointed once so the lineage is not recomputed per
+    * sink — the distributed analog of the reference's buffered replay —
+    * and released when the sinks finish (a frame that already was a
+    * checkpoint is the caller's, and is left alone).
     */
   def multi(df: DataFrame, sinks: Seq[DataFrame => Unit]): Unit = {
-    val cached = df.persist()
-    try sinks.foreach(s => s(cached))
-    finally { cached.unpersist(); () }
+    val stored = minietl.pipeline.RunCaches.checkpoint(df)
+    try sinks.foreach(s => s(stored))
+    finally if (stored ne df) minietl.pipeline.RunCaches.releaseNow(stored)
   }
 
   /** CallbackLoader (loaders.py:512-545): executor-side per-partition hook. */

@@ -139,8 +139,7 @@ object PerceptualAudio {
     * audio twin of [[PerceptualHash.dedupExact]].
     */
   def dedupExact(df: DataFrame, keyCol: String, contentCol: String): DataFrame = {
-    val hashes = energyHashFrame(df, keyCol, contentCol).persist()
-    minietl.pipeline.RunCaches.register(hashes)
+    val hashes = minietl.pipeline.RunCaches.checkpoint(energyHashFrame(df, keyCol, contentCol))
     val keepers = hashes.where(col("ahash").isNotNull)
       .groupBy("ahash").agg(min(col(keyCol)).as(keyCol))
       .select(keyCol)
@@ -162,10 +161,11 @@ object PerceptualAudio {
 
   /** [[dedupNear]] over an ALREADY-COMPUTED `(keyCol, ahash)` frame — for
     * callers that also consume the hashes directly (audit joins, digests):
-    * passing the same frame here makes the PCM decode run once for both
+    * checkpoint the hashes once ([[minietl.pipeline.RunCaches.checkpoint]])
+    * and pass the same frame here, so the PCM decode runs once for both
     * consumers instead of once per call (r17-opt; the decode is the
-    * dominant per-row cost, and dedupNear's internal persist can only
-    * dedup references it can see). Same fold, same output contract.
+    * dominant per-row cost, and the fold reads a checkpointed frame as it
+    * is). Same fold, same output contract.
     */
   def dedupNearFromHashes(df: DataFrame, keyCol: String, hashes: DataFrame,
       maxDist: Int = 3,

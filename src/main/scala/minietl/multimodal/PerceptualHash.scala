@@ -161,11 +161,9 @@ object PerceptualHash {
     */
   def dedupExact(df: DataFrame, keyCol: String, contentCol: String): DataFrame = {
     // the hash frame feeds the group census AND the undecodable branch —
-    // persist (released by the caller's RunCaches scope, e.g. Pipeline.run)
-    // so the media DECODE runs once; unlike the synthetic battery corpora,
-    // real media decode dominates everything downstream
-    val hashes = dHashFrame(df, keyCol, contentCol).persist()
-    minietl.pipeline.RunCaches.register(hashes)
+    // checkpoint it so the media DECODE runs once; unlike the synthetic
+    // battery corpora, real media decode dominates everything downstream
+    val hashes = minietl.pipeline.RunCaches.checkpoint(dHashFrame(df, keyCol, contentCol))
     val keepers = hashes.where(col("dhash").isNotNull)
       .groupBy("dhash").agg(min(col(keyCol)).as(keyCol))
       .select(keyCol)
@@ -199,20 +197,18 @@ object PerceptualHash {
     * the audio twin ([[PerceptualAudio.dedupNear]]): any ≤ 56-bit
     * perceptual hash in a long column plugs into the same exact-group →
     * banded-Hamming → connected-components composition. `hashes` must be
-    * `(keyCol, hashCol)` with one row per `df` row; null hashes
-    * (undecodable payloads) pass through.
+    * `(keyCol, hashCol)` (other columns are ignored) with one row per `df`
+    * row; null hashes (undecodable payloads) pass through. A `hashFrame`
+    * that already is a checkpoint is read as it is.
     */
   private[minietl] def dedupNearFromHashes(df: DataFrame, keyCol: String,
       hashFrame: DataFrame, hashCol: String, maxDist: Int,
       maxBucketSize: Int): DataFrame = {
-    val hashes = hashFrame.persist()
-    minietl.pipeline.RunCaches.register(hashes)
+    val hashes = minietl.pipeline.RunCaches.checkpoint(hashFrame)
     // one row per distinct hash value, labeled by its minimum key — feeds
-    // the band join AND the final labeling, so persist alongside
-    val groups = hashes.where(col(hashCol).isNotNull)
-      .groupBy(hashCol).agg(min(col(keyCol)).as("rep"))
-      .persist()
-    minietl.pipeline.RunCaches.register(groups)
+    // the band join AND the final labeling, so checkpoint alongside
+    val groups = minietl.pipeline.RunCaches.checkpoint(hashes.where(col(hashCol).isNotNull)
+      .groupBy(hashCol).agg(min(col(keyCol)).as("rep")))
     val nearPairs = hammingPairs(groups, "rep", hashCol, maxDist, maxBucketSize)
       .select("id_a", "id_b")
     // comp labels are the minimum reachable rep; each rep is already the

@@ -1,8 +1,9 @@
 package minietl.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.storage.StorageLevel
 
 /** Run-scoped registry for the frames a run materializes, released when the
   * run ends, and the one way a kernel materializes a frame it re-reads.
@@ -21,26 +22,17 @@ import org.apache.spark.storage.StorageLevel
   *
   * The run paths — `Pipeline.run` (what a YAML config runs) and `Dag.run` —
   * open a scope for the duration of the run, and the streaming ingest-dedup
-  * loops open one per micro-batch. Three kinds of frame join it:
-  *
-  *  - '''Checkpointed frames''' ([[checkpoint]]): eager local checkpoints.
-  *  - '''Fan-out frames''' ([[cacheForRun]]): a DAG node read by several
-  *    downstream nodes is cached once for all of them.
-  *  - '''Registered frames''' ([[register]]): operators that still
-  *    `persist()` an intermediate (their sites are listed in
-  *    `MaterializationSitesSpec`) have no after-run hook of their own.
-  *
-  * At the end of the scope every frame is released once, whether the run
-  * completed or threw, so a run leaves zero cache pins behind. A frame held
-  * in the CacheManager is released with `Dataset.unpersist` only; its plan's
-  * leaves are its inputs, not its data, and a caller's `localCheckpoint`ed
-  * source among them stays readable. A checkpointed frame's data is the RDD
-  * at the root of its plan, which is unpersisted once.
+  * loops open one per micro-batch. Every frame a kernel checkpoints inside
+  * a scope joins it, and at the end of the scope each is released once,
+  * whether the run completed or threw, so a run leaves zero pins behind.
+  * A checkpointed frame's data is the RDD at the root of its plan, which is
+  * unpersisted once; a caller's own `localCheckpoint`ed source among a
+  * kernel's inputs is never touched.
   *
   * With no scope open — library callers composing frames, `Pipeline.frame`
   * for embedding, micro-batches of a plain streaming sink — [[checkpoint]]
   * is a plain eager local checkpoint, which the ContextCleaner frees once
-  * the frame is unreachable; [[cacheForRun]] and [[register]] do nothing.
+  * the frame is unreachable. Nothing here makes a CacheManager entry.
   * ThreadLocal because a run composes and executes on one driver thread (a
   * micro-batch on its stream's thread); scopes nest innermost-wins (an
   * embedded `run` inside a stage releases its own frames when it finishes,
@@ -55,8 +47,11 @@ object RunCaches {
     override def initialValue(): List[scala.collection.mutable.Buffer[DataFrame]] = Nil
   }
 
-  /** Track a cached/checkpointed frame for release at the end of the
-    * current run scope; no-op when no scope is open.
+  /** Track a frame the caller checkpointed itself for release at the end
+    * of the current run scope; no-op when no scope is open. Kernels call
+    * [[checkpoint]], which registers for them; this is for harnesses that
+    * checkpoint stage outputs themselves (the benchmark's per-stage
+    * breakdown).
     */
   def register(df: DataFrame): Unit = scopes.get() match {
     case head :: _ => head += df; ()
@@ -67,31 +62,36 @@ object RunCaches {
     * innermost scope. Adaptive execution sizes the checkpoint's final stage
     * from its data (one partition for a small frame), its consumers plan
     * over a leaf that carries the stored rows, and no CacheManager entry is
-    * made. A frame that already is a checkpoint is returned as it is.
+    * made. A frame that already is a checkpoint is returned as it is. A
+    * frame hash-partitioned by `repartition(n, cols)` keeps that
+    * partitioning, so a join or aggregate on `cols` reads the checkpoint
+    * without an exchange (the local checkpoint alone records none under
+    * adaptive execution).
     */
   def checkpoint(df: DataFrame): DataFrame =
     if (storedRdd(df).nonEmpty) df
     else {
-      val stored = df.localCheckpoint()
+      val stored = keepPartitioning(df, df.localCheckpoint())
       register(stored)
       stored
     }
 
-  /** Cache `df` for the rest of the run scope (a frame read by several
-    * consumers). Outside a scope, or when `df` is already materialized,
-    * `df` is returned untouched.
+  /** `stored` declaring the hash partitioning of the `repartition(n, cols)`
+    * at `df`'s root, when its rows are laid out in those `n` partitions.
     */
-  def cacheForRun(df: DataFrame): DataFrame = scopes.get() match {
-    case head :: _ if df.storageLevel == StorageLevel.NONE && storedRdd(df).isEmpty =>
-      head += df.persist(); df
-    case _ => df
-  }
+  private def keepPartitioning(df: DataFrame, stored: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case r: RepartitionByExpression if r.optNumPartitions.nonEmpty => r.partitioning match {
+        case h: HashPartitioning if storedRdd(stored).exists(_.getNumPartitions == h.numPartitions) =>
+          org.apache.spark.sql.minietl.CheckpointBridge.withPartitioning(stored, h)
+        case _ => stored
+      }
+      case _ => stored
+    }
 
   /** Run `body` with a fresh registry scope; every frame tracked during it
     * is released afterward (blocking=false — the executors drop the blocks
-    * asynchronously), whether the body completed or threw. Newest first:
-    * unpersisting an entry makes Spark re-plan every unfilled entry built
-    * on it, and the newer entries are the ones built on the older.
+    * asynchronously), whether the body completed or threw.
     */
   def scoped[T](body: => T): T = {
     val buf = scala.collection.mutable.Buffer.empty[DataFrame]
@@ -99,23 +99,22 @@ object RunCaches {
     try body
     finally {
       scopes.set(scopes.get().tail)
-      buf.reverseIterator.foreach(f => try releaseNow(f) catch { case _: Throwable => () })
+      buf.foreach(f => try releaseNow(f) catch { case _: Throwable => () })
     }
   }
 
-  /** Release a frame's storage now: `Dataset.unpersist` for a frame held in
-    * the CacheManager; for a checkpointed frame (its data lives as a
-    * persisted RDD in the `LogicalRDD` at its plan root, invisible to the
-    * CacheManager) that RDD, unless it is already released, and without
-    * the lineage warning `RDD.unpersist` logs for a local checkpoint.
-    * Public for kernels that free a checkpoint before the scope ends (the
-    * LM occurrence table) and for iterative operators that truncate
-    * lineage with rolling localCheckpoints and must free the superseded
-    * checkpoint's blocks themselves (the connected-components loop).
+  /** Release a checkpointed frame's storage now: the persisted RDD in the
+    * `LogicalRDD` at its plan root (invisible to the CacheManager), unless
+    * it is already released, and without the lineage warning
+    * `RDD.unpersist` logs for a local checkpoint. Any other frame is left
+    * as it is. For kernels that free a checkpoint before the scope ends
+    * (the LM occurrence table, k-means training input, an empty SemDeDup
+    * round) and for iterative operators that truncate lineage with rolling
+    * checkpoints and must free the superseded one's blocks themselves (the
+    * connected-components loop).
     */
   def releaseNow(df: DataFrame): Unit =
-    if (df.storageLevel != StorageLevel.NONE) { df.unpersist(); () }
-    else storedRdd(df).foreach(org.apache.spark.minietl.RddRelease.release)
+    storedRdd(df).foreach(org.apache.spark.minietl.RddRelease.release)
 
   /** The stored RDD at the root of a checkpointed frame's plan, if any. */
   private def storedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =

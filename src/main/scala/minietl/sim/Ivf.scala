@@ -89,10 +89,10 @@ object Ivf {
     */
   def train(corpus: DataFrame, nlist: Int, iters: Int = 3,
             idCol: String = "vec_id", vecCol: String = "embedding"): Model = {
-    // every Lloyd iteration (and the init scan) re-reads `base`; persist it
-    // for the duration of training so the source is scanned once
-    val base = corpus.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
-      .persist()
+    // every Lloyd iteration (and the init scan) re-reads `base`; checkpoint
+    // it for the duration of training so the source is scanned once
+    val base = minietl.pipeline.RunCaches.checkpoint(
+      corpus.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v")))
     try {
       val init = base.orderBy(xxhash64(col("id")), col("id")).limit(nlist).collect()
         .map(_.getSeq[Double](1).toVector).toVector
@@ -111,7 +111,7 @@ object Ivf {
           }
         Model(model.centroids.indices.map(i => means.getOrElse(i, model.centroids(i))).toVector)
       }
-    } finally base.unpersist()
+    } finally minietl.pipeline.RunCaches.releaseNow(base)
   }
 
   /** ANN top-k via inverted lists: the corpus is scanned once to tag each

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import minietl.pipeline.RunCaches
+
 /** SemDeDup-style semantic deduplication (Abbas et al., "SemDeDup: Data-
   * efficient learning at web-scale through semantic deduplication", 2023):
   * cluster the embedding space with k-means, compare pairs ONLY inside a
@@ -110,15 +112,13 @@ object SemDedup {
     require(reclusterRounds >= 0,
       s"reclusterRounds must be >= 0 (got $reclusterRounds)")
     // the prepared frame feeds BOTH sides of the pair join plus the final
-    // labeling join — persist it (released by the caller's RunCaches scope)
-    // so the cast/norm/argmin scan runs once, not three times
-    val a = corpus
+    // labeling join — checkpoint it so the cast/norm/argmin scan runs once,
+    // not three times
+    val a = RunCaches.checkpoint(corpus
       .select(col(idCol).as("id"),
         transform(col(vecCol), x => x.cast("double")).as("v"))
       .withColumn("norm", sqrt(minietl.functions.vec.dot(col("v"), col("v"))))
-      .withColumn("cluster", Ivf.assignList(col("v"), model).cast("bigint"))
-      .persist()
-    minietl.pipeline.RunCaches.register(a)
+      .withColumn("cluster", Ivf.assignList(col("v"), model).cast("bigint")))
     var keyed: DataFrame = a
     var keyCols: Seq[String] = Seq("cluster")
     val subModels = Vector.newBuilder[Ivf.Model]
@@ -128,14 +128,13 @@ object SemDedup {
       val cnt = minietl.ops.Ops.freshName(keyed, "__group_n")
       val withN = keyed.withColumn(cnt,
         count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)))
-      val over = withN.where(col(cnt) > maxClusterSize).drop(cnt).persist()
-      // the one driver action per round: train needs to know the over-cap
+      val t0 = System.nanoTime()
+      val over = RunCaches.checkpoint(withN.where(col(cnt) > maxClusterSize).drop(cnt))
+      // the one driver count per round: train needs to know the over-cap
       // row set exists (and autoNlist sizes the sub-model from its count)
-      if (over.isEmpty) { over.unpersist(); converged = true }
+      val overN = over.count()
+      if (overN == 0) { RunCaches.releaseNow(over); converged = true }
       else {
-        minietl.pipeline.RunCaches.register(over)
-        val t0 = System.nanoTime()
-        val overN = over.count()
         // COST-BALANCED sub-cluster target (r17 800k A/B, PLANS.md): a
         // fixed cap/8 target makes the per-round assign QUADRATIC in the
         // over-cap row count (nlist = n/target grows linearly with n, and
@@ -172,8 +171,7 @@ object SemDedup {
       // the re-keyed frame feeds the final census window and both pair-join
       // sides; without this the per-round windows and sub-assignments run
       // three times
-      keyed = keyed.persist()
-      minietl.pipeline.RunCaches.register(keyed)
+      keyed = RunCaches.checkpoint(keyed)
     }
     val paired = minietl.dedup.Dedup.dropOversizedBuckets(
       keyed, keyCols, maxClusterSize, "semdedup")

@@ -181,7 +181,7 @@ object Similarity {
     * Scale shape: the signature frame carries only (id, band, sig) through
     * the band shuffle (~20 B/row/band); vectors are fetched back per
     * DISTINCT confirmed candidate, and the prepared (vec, norm) frame is
-    * computed once and persisted for the duration.
+    * computed once and checkpointed.
     */
   def cosineNearDupPairs(df: DataFrame, threshold: Double,
                          bitsPerBand: Int, bands: Int, dim: Int,
@@ -191,10 +191,10 @@ object Similarity {
     // one splitmix stream for all bands (band b gets planes [b*bpb, (b+1)*bpb))
     // — the SQL generated by lshNearDupOracleSql slices identically
     val planes = hyperplanes(bands * bitsPerBand, dim, seed)
-    // spread: a one-file corpus would build the (vec, nrm) cache on a single
+    // spread: a one-file corpus would build the (vec, nrm) frame on a single
     // thread; no-op when the input is already partitioned (see Dedup.spread)
-    val prep = prepared(minietl.dedup.Dedup.spread(df), idCol, vecCol, "id", "vec", "nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val prep = minietl.pipeline.RunCaches.checkpoint(
+      prepared(minietl.dedup.Dedup.spread(df), idCol, vecCol, "id", "vec", "nrm"))
     val bandStructs = (0 until bands).map { b =>
       val slice = planes.slice(b * bitsPerBand, (b + 1) * bitsPerBand)
       struct(lit(b).as("band"), signatureFromPlanes(col("vec"), slice).as("sig"))
@@ -269,37 +269,31 @@ object Similarity {
     *
     * Returns (corpus_id, bench_id, cos) for every flagged pair; compose
     * with a left-anti join on corpus_id to drop contaminated rows (the
-    * [[minietl.text.Decontaminate.decontaminate]] shape). Persists the
-    * prepared corpus frame for the duration — same cache-lifetime contract
-    * as the [[minietl.dedup.Dedup]] pair finders (caller releases via
-    * `clearCache`/`Dedup.releasingCaches` after materializing).
+    * [[minietl.text.Decontaminate.decontaminate]] shape). The prepared
+    * corpus frame is checkpointed: the signature scan and the verify join
+    * both read it.
     */
   def semanticContaminationPairs(corpus: DataFrame, bench: DataFrame,
                                  threshold: Double, bitsPerBand: Int, bands: Int, dim: Int,
                                  idCol: String = "vec_id", vecCol: String = "embedding",
                                  seed: Long = 42L,
                                  maxBucketSize: Int = minietl.dedup.Dedup.DefaultMaxBucket): DataFrame =
-    semanticContaminationPairsWithCache(corpus, bench, threshold, bitsPerBand,
-      bands, dim, idCol, vecCol, seed, maxBucketSize)._1
+    contaminationPairs(preparedCorpus(corpus, idCol, vecCol), bench, threshold,
+      bitsPerBand, bands, dim, idCol, vecCol, seed, maxBucketSize)
 
-  /** [[semanticContaminationPairs]] plus a handle on the internally
-    * persisted prepared-corpus frame, so an EAGER caller (the config
-    * stage, which has no unpersist hook) can release the cache itself
-    * after materializing — the [[minietl.text.LmScore.bigramSurpriseEager]]
-    * pattern.
-    */
-  private def semanticContaminationPairsWithCache(
-      corpus: DataFrame, bench: DataFrame,
+  /** The corpus side of [[semanticContaminationPairs]], checkpointed. */
+  private def preparedCorpus(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    minietl.pipeline.RunCaches.checkpoint(
+      prepared(minietl.dedup.Dedup.spread(corpus), idCol, vecCol, "id", "vec", "nrm"))
+
+  private def contaminationPairs(prepC: DataFrame, bench: DataFrame,
       threshold: Double, bitsPerBand: Int, bands: Int, dim: Int,
-      idCol: String, vecCol: String, seed: Long,
-      maxBucketSize: Int): (DataFrame, DataFrame) = {
+      idCol: String, vecCol: String, seed: Long, maxBucketSize: Int): DataFrame = {
     val planes = hyperplanes(bands * bitsPerBand, dim, seed)
     def bandStructs(vec: Column) = (0 until bands).map { b =>
       val slice = planes.slice(b * bitsPerBand, (b + 1) * bitsPerBand)
       struct(lit(b).as("band"), signatureFromPlanes(vec, slice).as("sig"))
     }
-    val prepC = prepared(minietl.dedup.Dedup.spread(corpus), idCol, vecCol, "id", "vec", "nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val prepB = prepared(bench, idCol, vecCol, "b_id", "b_vec", "b_nrm")
     val cSigs0 = prepC
       .select(col("id"), explode(array(bandStructs(col("vec")): _*)).as("bs"))
@@ -313,51 +307,32 @@ object Similarity {
       .select(col("b_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
     val cand = cSigs.join(broadcast(bSigs), Seq("band", "sig"))
       .select("id", "b_id").distinct()
-    val pairs = cand
+    cand
       .join(prepC, "id")
       .join(broadcast(prepB.select(col("b_id"), col("b_vec"), col("b_nrm"))), "b_id")
       .withColumn("cos",
         round(dotD(col("vec"), col("b_vec")) / (col("nrm") * col("b_nrm")), 4))
       .filter(col("cos") >= threshold)
       .select(col("id").as("corpus_id"), col("b_id").as("bench_id"), col("cos"))
-    (pairs, prepC)
   }
 
   /** Drop every corpus row [[semanticContaminationPairs]] flags — the
     * embedding-level twin of [[minietl.text.Decontaminate.decontaminate]].
-    * Same plan plus one left-anti join on the (distinct) flagged ids.
+    * Same plan plus one left-anti join on the flagged ids, which are
+    * checkpointed (a contamination-sized frame), so the prepared corpus
+    * checkpoint is released before this returns.
     */
   def semanticDecontaminate(corpus: DataFrame, bench: DataFrame,
                             threshold: Double, bitsPerBand: Int, bands: Int, dim: Int,
                             idCol: String = "vec_id", vecCol: String = "embedding",
                             seed: Long = 42L,
                             maxBucketSize: Int = minietl.dedup.Dedup.DefaultMaxBucket): DataFrame = {
-    val flagged = semanticContaminationPairs(corpus, bench, threshold,
-      bitsPerBand, bands, dim, idCol, vecCol, seed, maxBucketSize)
-      .select(col("corpus_id").as(idCol)).distinct()
-    corpus.join(flagged, Seq(idCol), "left_anti")
-  }
-
-  /** [[semanticDecontaminate]] with EAGER cache release: materializes the
-    * (model-sized) flagged-id set via localCheckpoint, then unpersists the
-    * internally cached prepared-corpus frame before returning. For callers
-    * with no unpersist hook of their own — the config/Pipeline.run path —
-    * where the lazy variant would pin the full corpus vector cache for the
-    * session lifetime. The returned frame no longer depends on the cache.
-    */
-  def semanticDecontaminateEager(corpus: DataFrame, bench: DataFrame,
-                                 threshold: Double, bitsPerBand: Int, bands: Int, dim: Int,
-                                 idCol: String = "vec_id", vecCol: String = "embedding",
-                                 seed: Long = 42L,
-                                 maxBucketSize: Int = minietl.dedup.Dedup.DefaultMaxBucket): DataFrame = {
-    val (pairs, prepC) = semanticContaminationPairsWithCache(corpus, bench,
-      threshold, bitsPerBand, bands, dim, idCol, vecCol, seed, maxBucketSize)
-    // inside a Pipeline.run/Dag.run scope the (contamination-sized)
-    // checkpoint is released when the run's sink completes; otherwise the
-    // ContextCleaner frees it once the returned frame is unreachable
+    val prepC = preparedCorpus(corpus, idCol, vecCol)
     val flagged = minietl.pipeline.RunCaches.checkpoint(
-      pairs.select(col("corpus_id").as(idCol)).distinct())
-    prepC.unpersist()
+      contaminationPairs(prepC, bench, threshold, bitsPerBand, bands, dim,
+        idCol, vecCol, seed, maxBucketSize)
+        .select(col("corpus_id").as(idCol)).distinct())
+    minietl.pipeline.RunCaches.releaseNow(prepC)
     corpus.join(flagged, Seq(idCol), "left_anti")
   }
 

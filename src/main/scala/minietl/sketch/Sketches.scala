@@ -133,11 +133,9 @@ object Sketches {
     // r17-opt: 2.3 s -> measured below). countMinSketch itself is
     // unchanged — streaming callers need the per-row shape (a stream
     // cannot re-aggregate a finished count frame).
-    val counts = toks
+    val counts = minietl.pipeline.RunCaches.checkpoint(toks
       .groupBy(col(tokenCol).as("token"))
-      .agg(count(lit(1)).as("exact_n"))
-      .persist()
-    minietl.pipeline.RunCaches.register(counts)
+      .agg(count(lit(1)).as("exact_n")))
     val sketch = counts
       .withColumn("lane", explode(array((0 until depth).map(lit): _*)))
       .groupBy(

@@ -406,9 +406,8 @@ object Streaming {
     * with a checkpointed one).
     *
     * RELEASE: each batch runs in one `RunCaches.scoped` scope. Every frame
-    * the batch materializes, and every frame the operators it calls cache
-    * and `RunCaches.register`, is released when the batch ends, also when
-    * it throws, so a drain leaves no cache pins behind.
+    * the batch and the operators it calls checkpoint is released when the
+    * batch ends, also when it throws, so a drain leaves no pins behind.
     *
     * REPLAY SAFETY (exactly-once under crash/restart): every digest is a
     * per-batch-keyed parquet layout (`dir/batch=<id>`), and each batch (a)
@@ -685,7 +684,7 @@ object Streaming {
             explode(sequence(lit(0), lit(3))).as("band"))
           .withColumn("key", expr("shiftright(__mh, 14 * band) & 16383"))
         val within = PerceptualHash.dedupNearFromHashes(withHash, idCol,
-          withHash.select(col(idCol), col("__mh")), "__mh", maxDist, maxBucketSize)
+          withHash, "__mh", maxDist, maxBucketSize)
         Admission(within, idCol, keys = bandsOf(within),
           records = fresh => Seq(bandsOf(fresh).select("band", "key", "__mh")),
           verify = (matched, _) => matched.where(expr(s"bit_count(hash ^ __mh) <= $maxDist")))

@@ -115,13 +115,10 @@ object Decontaminate {
       df.select(col(idCol),
         explode(TextAnalysis.ngrams(TextAnalysis.tokens(trim(col(textCol))), n))
           .as("__gram"))
-    // persisted: the sketch aggregate (materialized eagerly just below) and
-    // the exact-verify join both read the distinct bench grams; without the
-    // persist the bench-side tokenize + explode + distinct runs twice
-    // (§1.2). Cache lifecycle: released by the caller's clearCache between
-    // battery entries, like every operator-internal persist.
-    val benchGrams = grams(bench).select("__gram").distinct().persist()
-    minietl.pipeline.RunCaches.register(benchGrams)
+    // the sketch aggregate (collected just below) and the exact-verify join
+    // both read the distinct bench grams
+    val benchGrams = minietl.pipeline.RunCaches.checkpoint(
+      grams(bench).select("__gram").distinct())
     val sketch = benchGrams
       .agg(column(new BloomFilterAggregate(
         expression(xxhash64(col("__gram"))), estimatedGrams)

@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   * [[minietl.pipeline.RunCaches.checkpoint]]); the count tables are
   * O(distinct bigrams) and join against occurrences on the bigram string
   * (shuffle), then one groupBy(doc) with map-side combine. No driver-side
-  * materialization. Inside a run scope the scope releases the occurrence
-  * checkpoint; outside one the ContextCleaner frees it once the scores
-  * frame is unreachable.
+  * materialization. The occurrence checkpoint is released as soon as the
+  * scores are checkpointed; a run scope releases the scores, and outside
+  * one the ContextCleaner frees them once the frame is unreachable.
   *
   * Documents with fewer than two tokens have no bigrams and are absent
   * from the output — score them separately (they are degenerate for any
@@ -39,36 +39,13 @@ object LmScore {
 
   /** Per-document bigram-surprise score:
     * (doc_id, n_bigrams BIGINT, surprise_bits BIGINT, avg_millibits BIGINT).
+    * Materialized: the scores are checkpointed
+    * ([[minietl.pipeline.RunCaches.checkpoint]]) and the occurrence
+    * checkpoint is released at once, so the returned frame holds one
+    * 4-column row per scored document — bounded and far smaller than the
+    * occurrence frame it replaces.
     */
-  def bigramSurprise(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    scoresAndOcc(docs, idCol, textCol)._1
-
-  /** [[bigramSurprise]] materialized: checkpoints the scores
-    * ([[minietl.pipeline.RunCaches.checkpoint]]), releases the occurrence
-    * checkpoint at once, and returns the checkpointed frame, which holds
-    * one 4-column row per scored document — bounded and far smaller than
-    * the occurrence frame it replaces.
-    */
-  def bigramSurpriseEager(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val (scores, occ) = scoresAndOcc(docs, idCol, textCol)
-    val out = minietl.pipeline.RunCaches.checkpoint(scores)
-    minietl.pipeline.RunCaches.releaseNow(occ)
-    out
-  }
-
-  /** The YAML `lm_surprise` stage: [[bigramSurpriseEager]]'s scores
-    * left-joined back onto `docs` by `idCol` (docs without bigrams keep
-    * null scores), so a filter can threshold `avg_millibits` next. `docs`
-    * is checkpointed first: the scores and the join both read it.
-    */
-  def withBigramSurprise(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val in = minietl.pipeline.RunCaches.checkpoint(docs)
-    in.join(bigramSurpriseEager(in, idCol, textCol).withColumnRenamed("doc_id", idCol),
-      Seq(idCol), "left")
-  }
-
-  private def scoresAndOcc(docs: DataFrame, idCol: String,
-                           textCol: String): (DataFrame, DataFrame) = {
+  def bigramSurprise(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val occ = minietl.pipeline.RunCaches.checkpoint(docs
       .select(col(idCol).as("doc_id"),
         explode(TextAnalysis.ngrams(TextAnalysis.tokens(col(textCol)), 2)).as("bigram")))
@@ -76,14 +53,26 @@ object LmScore {
     val prefCounts = bigCounts
       .withColumn("prefix", expr("split_part(bigram, ' ', 1)"))
       .groupBy("prefix").agg(sum("c_bigram").as("c_prefix"))
-    val scores = occ
+    val scores = minietl.pipeline.RunCaches.checkpoint(occ
       .join(bigCounts, "bigram")
       .withColumn("prefix", expr("split_part(bigram, ' ', 1)"))
       .join(prefCounts, "prefix")
       .withColumn("surprise", expr("length(bin(c_prefix DIV c_bigram))").cast("long"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum("surprise").as("surprise_bits"))
-      .withColumn("avg_millibits", expr("(1000 * surprise_bits) DIV n_bigrams"))
-    (scores, occ)
+      .withColumn("avg_millibits", expr("(1000 * surprise_bits) DIV n_bigrams")))
+    minietl.pipeline.RunCaches.releaseNow(occ)
+    scores
+  }
+
+  /** The YAML `lm_surprise` stage: [[bigramSurprise]]'s scores left-joined
+    * back onto `docs` by `idCol` (docs without bigrams keep null scores),
+    * so a filter can threshold `avg_millibits` next. `docs` is checkpointed
+    * first: the scores and the join both read it.
+    */
+  def withBigramSurprise(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val in = minietl.pipeline.RunCaches.checkpoint(docs)
+    in.join(bigramSurprise(in, idCol, textCol).withColumnRenamed("doc_id", idCol),
+      Seq(idCol), "left")
   }
 }

@@ -323,13 +323,9 @@ object TextAnalysis {
     * memory, drop the hint and let the planner shuffle on term.
     */
   def tfidf(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // persisted: both the weight join and the document-frequency aggregation
-    // read it, and tokenization is the expensive scan-side step. The cache
-    // entry lives until the session drops it (LRU) or the caller runs
-    // spark.catalog.clearCache(); batch callers processing many corpora
-    // should do the latter between corpora.
-    val tf = termFrequencies(docs, idCol, textCol).persist()
-    minietl.pipeline.RunCaches.register(tf)
+    // checkpointed: both the weight join and the document-frequency
+    // aggregation read it, and tokenization is the expensive scan-side step
+    val tf = minietl.pipeline.RunCaches.checkpoint(termFrequencies(docs, idCol, textCol))
     // document count stays a lazy one-row aggregate (cross-joined like the
     // SQL formulation) — no eager job at construction time
     val n = docs.agg(count(lit(1)).as("__n"))
@@ -352,10 +348,9 @@ object TextAnalysis {
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // persisted: read by the score join, the DF aggregation, and the
-    // average-length aggregate (cache lifecycle: see tfidf)
-    val tf = termFrequencies(docs, idCol, textCol).persist()
-    minietl.pipeline.RunCaches.register(tf)
+    // checkpointed: read by the score join, the DF aggregation, and the
+    // average-length aggregate
+    val tf = minietl.pipeline.RunCaches.checkpoint(termFrequencies(docs, idCol, textCol))
     // N and the average length stay lazy one-row aggregates — no eager jobs
     // at construction, and an empty corpus yields an empty frame instead of
     // a driver-side unboxing error

@@ -132,4 +132,35 @@ class DagSpec extends AnyFunSuite with SparkTestBase {
     assert(dag.frame(spark, "t").count() === 3L)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
+
+  test("fan-out and branch inputs are checkpoints: no cache entry during or after a run, and frame runs no job") {
+    spark.catalog.clearCache()
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val seen = scala.collection.mutable.Map.empty[String, Set[(Long, Double)]]
+    def sink(name: String): DataFrame => Unit = df => {
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name ran with a CacheManager entry")
+      seen(name) = df.select("id", "amount").as[(Long, Double)].collect().toSet; ()
+    }
+    val dag = new PipelineDAG()
+      .addSource("o", _ => orders)
+      .addTransform("t", df => df.withColumn("amount", col("amount") * 2))
+      .addBranch("b", col("amount") >= 40)
+      .addSink("all", sink("all"))
+      .addSink("hi", sink("hi"))
+      .addSink("lo", sink("lo"))
+      .connect("o", "t").connect("t", "all").connect("t", "b")
+      .connect("b", "hi", port = "true").connect("b", "lo", port = "false")
+    assert(dag.run(spark) === Map("all" -> 3L, "hi" -> 2L, "lo" -> 1L))
+    assert(seen.toMap === Map(
+      "all" -> Set((1L, 20.0), (1L, 40.0), (3L, 60.0)),
+      "hi" -> Set((1L, 40.0), (3L, 60.0)),
+      "lo" -> Set((1L, 20.0))))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === pinned)
+    val (frame, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext) {
+      dag.frame(spark, "b.true")
+    }
+    assert(jobs === 0)
+    assert(frame.count() === 2L)
+  }
 }

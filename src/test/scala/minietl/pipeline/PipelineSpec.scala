@@ -274,4 +274,17 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       .toNoop().build().run(spark)
     assert(src.collect().toSet === expected)
   }
+
+  test("a checkpoint of repartition(n, cols) keeps its hash partitioning: a join on cols exchanges only the other side") {
+    val n = spark.sessionState.conf.numShufflePartitions
+    val edges = spark.range(0, 2000).select((col("id") % 97).as("src"), col("id").as("dst"))
+    val stored = RunCaches.checkpoint(edges.repartition(n, col("src")))
+    val ranks = spark.range(0, 97).select(col("id").as("node"), lit(1L).as("r"))
+    val joined = stored.join(ranks.hint("SHUFFLE_HASH"), stored("src") === ranks("node"))
+    // the planned (initial) plan, before adaptive execution rewrites it
+    val plan = joined.queryExecution.executedPlan.treeString
+    assert("Exchange hashpartitioning\\(node".r.findAllIn(plan).size === 1, plan)
+    assert("Exchange hashpartitioning\\(src".r.findAllIn(plan).isEmpty, plan)
+    assert(joined.count() === 2000L)
+  }
 }

@@ -93,19 +93,17 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(kept === Set(2L, 3L))
   }
 
-  test("semanticDecontaminateEager matches the lazy variant and releases its cache") {
-    val bench = vecs(100L -> Seq(1f, 0f, 0f), 101L -> Seq(0f, 0.7f, 0.7f))
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    val kept = Similarity.semanticDecontaminateEager(
-        corpus, bench, threshold = 0.95, bitsPerBand = 2, bands = 6, dim = 3)
-      .select("vec_id").as[Long].collect().toSet
-    assert(kept === Set(2L, 3L))
-    // the internally persisted prepared-corpus frame (full vectors) was
-    // released before returning — a config-driven run has no unpersist
-    // hook of its own. What MAY remain is the localCheckpoint of the
-    // flagged-ID frame (contamination-sized, not corpus-sized), nothing
-    // else.
-    assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore + 1)
+  test("cosineNearDupPairs inside a run scope leaves no pins once the scope ends") {
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val pairs = minietl.pipeline.RunCaches.scoped {
+      Similarity.cosineNearDupPairs(corpus, threshold = 0.999,
+          bitsPerBand = 2, bands = 4, dim = 3)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    }
+    assert(pairs === Set((0L, 4L)))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(minietl.SparkTestBase.awaitUnpinned(spark, before))
   }
 
   test("banded near-dup recall on a planted mid-threshold corpus") {

@@ -19,21 +19,6 @@ class LmScoreSpec extends AnyFunSuite with SparkTestBase {
     assert(out(1).getLong(1) === 1L && out(1).getLong(2) === 2L && out(1).getLong(3) === 2000L)
   }
 
-  test("bigramSurpriseEager matches the lazy variant and releases its cache") {
-    spark.catalog.clearCache() // isolate from earlier suites in this JVM
-    val docs = Seq((1L, "a b a b"), (2L, "a c"), (3L, "b a a c")).toDF("doc_id", "text")
-    val eager = LmScore.bigramSurpriseEager(docs, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    // the occurrence cache must be gone the moment the call returns — the
-    // YAML lm_surprise stage has no unpersist hook (this was a leak)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "bigramSurpriseEager left entries in the CacheManager")
-    val lazyOut = LmScore.bigramSurprise(docs, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    spark.catalog.clearCache() // the lazy variant's documented caller duty
-    assert(eager === lazyOut)
-  }
-
   test("bigramSurprise separates templated from rare-continuation text") {
     val repeated = ("x y " * 50).trim
     val docs = (1L to 20L).map(i => (i, repeated)).toDF("doc_id", "text")
