@@ -14,6 +14,7 @@ object ConfigErrorListSpec {
   case object Warn extends Form // the same, through warnings
   case object Stream extends Form // a whole stream config
   case object Dag extends Form // a whole dag config
+  case object Linear extends Form // a whole linear config
   final case class Case(form: Form, body: String, expected: Seq[String])
 }
 
@@ -28,6 +29,7 @@ class ConfigErrorListSpec extends AnyFunSuite {
       if (c.form == Batch) Config.validate(cfg) else Config.warnings(cfg)
     case Stream => Config.validateStream(Config.parseStream(c.body))
     case Dag => Config.validateDag(Config.parseDag(c.body))
+    case Linear => Config.validate(Config.parse(c.body))
   }
 
   private val cases = Seq(
@@ -561,7 +563,7 @@ class ConfigErrorListSpec extends AnyFunSuite {
         "node n3 minhash_dedup: 'bands' (24) must divide 'k' (128)"))
   )
 
-  test("validate, validateStream, validateDag and warnings keep their error lists") {
+  private def assertLists(cases: Seq[Case]): Unit =
     cases.zipWithIndex.foreach { case (c, i) =>
       val got = listOf(c)
       val diff = got.zipAll(c.expected, "<none>", "<none>").zipWithIndex.collect {
@@ -569,5 +571,209 @@ class ConfigErrorListSpec extends AnyFunSuite {
       }
       assert(diff.isEmpty, s"case $i (${c.form}):\n${diff.mkString("\n")}")
     }
+
+  /** Every message a source or sink check can emit, in the batch, DAG and
+    * stream forms, captured before the endpoint registry replaced the
+    * per-form parsers.
+    */
+  private val endpointCases = Seq(
+    Case(Linear,
+      """|source: {type: api, auth: {type: digest}, pagination: {type: cursor}, params: [a], headers: h}
+        |sink: {type: sql}""".stripMargin,
+      Seq(
+        "source api needs url",
+        "source api auth type must be basic or bearer",
+        "source api pagination type must be page or offset",
+        "source api: 'params' must be a mapping, got 'List(a)'",
+        "source api: 'headers' must be a mapping, got 'h'",
+        "sink sql needs connection_string",
+        "sink sql needs table")),
+    Case(Linear,
+      """|source: {type: api, url: u, auth: {type: Bearer, token: t}, pagination: {type: OFFSET}, params: {a: 1}}
+        |sink: {type: sql, connection_string: c, table: t}""".stripMargin,
+      Nil),
+    Case(Linear,
+      """|source: {type: sql, query: q, table: t}
+        |sink: {type: excel}""".stripMargin,
+      Seq(
+        "source sql needs connection_string",
+        "source sql needs exactly one of query/table",
+        "sink excel needs filepath")),
+    Case(Linear,
+      """|source: {type: sql, connection_string: c}
+        |sink: {type: api, url: u}""".stripMargin,
+      Seq(
+        "source sql needs exactly one of query/table",
+        "unknown sink type 'api' (sink)")),
+    Case(Linear,
+      """|source: {type: csv, mode: bogus, schema: [{name: a, dtype: wat}, {name: b, dtype: huh}], bad_records_path: bad, options: [x]}
+        |sink: {type: parquet}""".stripMargin,
+      Seq(
+        "source csv needs filepath",
+        "source csv mode must be permissive, dropmalformed or failfast",
+        "source csv schema: unknown dtype 'wat' for column 'a'",
+        "source csv schema: unknown dtype 'huh' for column 'b'",
+        "source csv mode cannot be combined with bad_records_path (the capture read is always PERMISSIVE; drop one of the two)",
+        "source csv: 'options' must be a mapping, got 'List(x)'",
+        "sink parquet needs filepath")),
+    Case(Linear,
+      """|source: {type: csv, filepath: in, bad_records_path: bad}
+        |sink: {type: teleport, filepath: out}""".stripMargin,
+      Seq(
+        "source csv bad_records_path requires an explicit schema (corrupt-line capture needs declared columns)",
+        "unknown sink type 'teleport' (sink)")),
+    Case(Linear,
+      """|source: {type: csv, filepath: in, schema: [{name: a, dtype: int64}], bad_records_path: bad, mode: PERMISSIVE}
+        |sink: {type: csv}""".stripMargin,
+      Seq(
+        "source csv mode cannot be combined with bad_records_path (the capture read is always PERMISSIVE; drop one of the two)",
+        "sink csv needs filepath")),
+    Case(Linear,
+      """|source: {type: json, filepath: in, schema: nope, bad_records_path: bad, options: {a: }}
+        |sink: {type: json}""".stripMargin,
+      Seq(
+        "source json schema must be a list of column mappings: nope",
+        "source json bad_records_path is only supported for csv sources",
+        "source json: 'options' has no value for 'a'",
+        "sink json needs filepath")),
+    Case(Linear,
+      """|source: {type: jsonl, path: in, mode: FailFast, schema: [a]}
+        |sink: {type: jsonl}""".stripMargin,
+      Seq(
+        "source jsonl schema column must be a mapping: a",
+        "sink jsonl needs filepath")),
+    Case(Linear,
+      """|source: {type: jsonl, schema: [{dtype: int64}]}
+        |sink: {type: orc}""".stripMargin,
+      Seq(
+        "source jsonl needs filepath",
+        "source jsonl schema column needs 'name'",
+        "sink orc needs filepath")),
+    Case(Linear,
+      """|source: {type: parquet}
+        |sink: {type: memory, query_name: q}""".stripMargin,
+      Seq(
+        "source parquet needs filepath",
+        "unknown sink type 'memory' (sink)")),
+    Case(Linear,
+      """|source: {type: orc, columns: [a]}
+        |sink: {type: csv, path: out}""".stripMargin,
+      Seq("source orc needs filepath")),
+    Case(Linear,
+      """|source: {type: excel, sheet_name: 2}
+        |sink: {type: excel, filepath: out.xlsx}""".stripMargin,
+      Seq("source excel needs filepath")),
+    Case(Linear,
+      """|source: {type: rate}
+        |sink: {type: parquet, filepath: out}""".stripMargin,
+      Seq("unknown source type 'rate' (source)")),
+    Case(Dag,
+      """|dag:
+        |  sources:
+        |    a: {type: api}
+        |    b: {type: sql, connection_string: c}
+        |    c: {type: socket}
+        |    d: {type: csv, filepath: in, mode: lenient}
+        |  nodes:
+        |    - {id: n, inputs: [a, b, c, d], merge: {strategy: union}}
+        |  sinks:
+        |    s1: {input: n, type: sql, connection_string: c}
+        |    s2: {input: n, type: kafka}
+        |    s3: {input: n, type: excel}""".stripMargin,
+      Seq(
+        "source a api needs url",
+        "source b sql needs exactly one of query/table",
+        "unknown source type 'socket' (source c)",
+        "source d csv mode must be permissive, dropmalformed or failfast",
+        "sink s1 sql needs table",
+        "unknown sink type 'kafka' (sink s2)",
+        "sink s3 excel needs filepath")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: rate, schema: [{name: v, dtype: int64}], path: in}
+        |  sink: {type: memory}""".stripMargin,
+      Seq(
+        "stream source rate has a fixed schema (timestamp TIMESTAMP, value LONG) — remove 'schema'",
+        "stream source rate takes no path",
+        "stream memory sink needs query_name")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: rate, filepath: in, options: {rowsPerSecond: }}
+        |  sink: {type: memory, query_name: q, output_mode: COMPLETE, trigger: 30s}""".stripMargin,
+      Seq(
+        "stream source rate takes no path",
+        "stream source rate: 'options' has no value for 'rowsPerSecond'")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: socket, schema: [{name: v, dtype: string}], options: {host: h}}
+        |  sink: {type: parquet}""".stripMargin,
+      Seq(
+        "stream source socket has a fixed schema (value STRING) — remove 'schema'",
+        "stream source socket needs options.port",
+        "stream sink parquet needs filepath",
+        "stream sink parquet needs a 'checkpoint' path (exactly-once progress tracking; without it every run re-ingests all input and duplicates output)")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: kafka, options: [a]}
+        |  sink: {type: teleport, output_mode: sideways, trigger: whenever}""".stripMargin,
+      Seq(
+        "stream source type 'kafka' is not a stream source (csv/json/jsonl/orc/parquet/rate/socket)",
+        "stream source kafka: 'options' must be a mapping, got 'List(a)'",
+        "unknown stream sink type 'teleport'",
+        "stream sink output_mode must be append, complete or update, got 'sideways'",
+        "stream sink trigger must be available_now or an interval like 30s/5m/1h, got 'whenever'")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: csv}
+        |  sink: {type: csv, path: out}""".stripMargin,
+      Seq(
+        "stream source needs filepath",
+        "stream source needs an explicit 'schema' (readStream never infers; an ordered column list like the batch reader schema)",
+        "stream sink csv needs a 'checkpoint' path (exactly-once progress tracking; without it every run re-ingests all input and duplicates output)")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: json, path: in, schema: [{name: a, dtype: wat}, {name: b, dtype: string}], options: x}
+        |  sink: {type: jsonl, checkpoint: chk}""".stripMargin,
+      Seq(
+        "stream source schema: unknown dtype 'wat' for column 'a'",
+        "stream source json: 'options' must be a mapping, got 'x'",
+        "stream sink jsonl needs filepath")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: jsonl, filepath: in, schema: x}
+        |  sink: {type: orc, filepath: out}""".stripMargin,
+      Seq(
+        "stream source schema must be a list of column mappings: x",
+        "stream sink orc needs a 'checkpoint' path (exactly-once progress tracking; without it every run re-ingests all input and duplicates output)")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: orc, path: in, schema: [x]}
+        |  sink: {type: json, path: out, checkpoint: chk, trigger: 5m, output_mode: Update}""".stripMargin,
+      Seq("stream source schema column must be a mapping: x")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: csv, path: in, schema: [{dtype: string}]}
+        |  sink: {type: memory, query_name: q}""".stripMargin,
+      Seq("stream source schema column needs 'name'")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: excel, path: in, schema: [{name: a, dtype: string}]}
+        |  sink: {type: excel, path: out, checkpoint: chk}""".stripMargin,
+      Seq(
+        "stream source type 'excel' is not a stream source (csv/json/jsonl/orc/parquet/rate/socket)",
+        "unknown stream sink type 'excel'")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: parquet, path: in, schema: [{name: a, dtype: string}]}
+        |  sink: {type: sql, connection_string: c, table: t}""".stripMargin,
+      Seq("unknown stream sink type 'sql'"))
+  )
+
+  test("validate, validateDag and validateStream keep their source and sink error lists") {
+    assertLists(endpointCases)
+  }
+
+  test("validate, validateStream, validateDag and warnings keep their error lists") {
+    assertLists(cases)
   }
 }
