@@ -25,51 +25,34 @@ object Main {
   def execute(args: Seq[String], spark: () => SparkSession): (Int, String) =
     args.toList match {
       case "run" :: path :: Nil =>
-        val text = new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
-        if (Config.isStreamConfig(text)) {
-          val cfg = Config.parseStream(text)
-          val errs = Config.validateStream(cfg)
-          if (errs.nonEmpty) (1, errs.mkString("invalid config:\n  ", "\n  ", ""))
-          else {
+        val cfg = Config.parseAny(new String(Files.readAllBytes(Paths.get(path)), "UTF-8"))
+        val errs = errors(cfg)
+        if (errs.nonEmpty) (1, errs.mkString("invalid config:\n  ", "\n  ", ""))
+        else cfg match {
+          case c: Config.StreamConfig =>
             // run drains what is currently staged (AvailableNow semantics —
             // the one-shot run the reference Scheduler's cron maps to); a
             // long-lived interval-trigger deployment calls
             // Config.loadStream(...).start(spark) and manages the query
-            Config.buildStream(cfg).runAvailableNow(spark())
-            (0, s"stream '${cfg.name}' drained available input")
-          }
-        } else if (Config.isDagConfig(text)) {
-          val cfg = Config.parseDag(text)
-          val errs = Config.validateDag(cfg)
-          if (errs.nonEmpty) (1, errs.mkString("invalid config:\n  ", "\n  ", ""))
-          else {
-            val counts = Config.buildDag(cfg).run(spark())
-            (0, s"dag '${cfg.name}' complete: " +
+            Config.buildStream(c).runAvailableNow(spark())
+            (0, s"stream '${c.name}' drained available input")
+          case c: Config.DagConfig =>
+            val counts = Config.buildDag(c).run(spark())
+            (0, s"dag '${c.name}' complete: " +
               counts.toSeq.sortBy(_._1).map { case (k, n) => s"$k=$n rows" }.mkString(", "))
-          }
-        } else {
-          val cfg = Config.parse(text)
-          val errs = Config.validate(cfg)
-          if (errs.nonEmpty) (1, errs.mkString("invalid config:\n  ", "\n  ", ""))
-          else {
-            val stats = Config.build(cfg).run(spark())
-            (0, f"pipeline '${cfg.name}' complete: ${stats.rows} rows in " +
+          case c: Config.PipelineConfig =>
+            val stats = Config.build(c).run(spark())
+            (0, f"pipeline '${c.name}' complete: ${stats.rows} rows in " +
               f"${stats.durationSec}%.2fs (${stats.rowsPerSecond}%.0f rows/sec)")
-          }
         }
       case "validate" :: path :: Nil =>
-        val text = new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
-        val (errs, warns) =
-          if (Config.isStreamConfig(text))
-            (Config.validateStream(Config.parseStream(text)), Nil)
-          else if (Config.isDagConfig(text))
-            (Config.validateDag(Config.parseDag(text)), Nil)
-          else {
-            val cfg = Config.parse(text)
-            (Config.validate(cfg), Config.warnings(cfg))
-          }
+        val cfg = Config.parseAny(new String(Files.readAllBytes(Paths.get(path)), "UTF-8"))
+        val errs = errors(cfg)
         // warnings never fail validation — they print, the exit code stays 0
-        val warnLines = warns.map("WARNING: " + _)
+        val warnLines = (cfg match {
+          case c: Config.PipelineConfig => Config.warnings(c)
+          case _ => Nil
+        }).map("WARNING: " + _)
         if (errs.isEmpty) (0, ("valid" +: warnLines).mkString("\n"))
         else (1, (errs ++ warnLines).mkString("\n"))
       case "init" :: path :: Nil =>
@@ -79,26 +62,27 @@ object Main {
           (0, s"wrote sample config to $path")
         }
       case "info" :: Nil =>
-        (0,
-          """minietl-spark
-            |  sources:      csv, json, jsonl, parquet, orc, excel, sql, api
-            |  transformers: filter, rename, select, drop, cast, fillna,
-            |                expression, aggregate|group, dedupe, sort,
-            |                hash_sample, stratified_sample, temperature_sample,
-            |                token_budget, top_p_select, pii_redact, quality_filter,
-            |                gopher_filter, exact_dedup, paragraph_dedup,
-            |                normalize_text, feature_hash, sigma_outlier_filter,
-            |                mad_outlier_filter, winsorize, impute, lm_surprise,
-            |                contamination_filter, semantic_decontaminate, bpe_stats,
-            |                squeeze_repeats, dedup_lines
-            |  sinks:        csv, json, jsonl, parquet, orc, excel, sql
-            |  dag form:     a `dag:` root key declares multi-source graphs
-            |                (transform/merge/branch nodes, many sinks)
-            |  stream form:  a `stream:` root key declares an unbounded
-            |                file-stream pipeline (watermark, window_agg/
-            |                session_agg/dedup stages, trigger, checkpoint)
-            |""".stripMargin)
+        val types = Config.registeredTypes.map { case (role, names) => listing(f"  ${role + ":"}%-17s", names) }
+        (0, ("minietl-spark" +: types :+
+          """  dag form:        a `dag:` root key declares multi-source graphs
+            |                   (transform/merge/branch nodes, many sinks)
+            |  stream form:     a `stream:` root key declares an unbounded pipeline
+            |                   (watermark, stream stages, trigger, checkpoint)""".stripMargin)
+          .mkString("\n"))
       case _ => (2, usage)
+    }
+
+  private def errors(cfg: Config.AnyConfig): Seq[String] = cfg match {
+    case c: Config.StreamConfig => Config.validateStream(c)
+    case c: Config.DagConfig => Config.validateDag(c)
+    case c: Config.PipelineConfig => Config.validate(c)
+  }
+
+  /** `names` after `label`, comma-separated, wrapped before column 80. */
+  private def listing(label: String, names: Seq[String]): String =
+    names.tail.foldLeft(label + names.head) { (text, name) =>
+      val full = text.length - text.lastIndexOf('\n') + name.length > 78
+      text + (if (full) ",\n" + " " * label.length else ", ") + name
     }
 
   def main(args: Array[String]): Unit = {

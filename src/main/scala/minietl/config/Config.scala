@@ -3,25 +3,26 @@ package minietl.config
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import minietl.config.Endpoints.{EndpointDef, Role, streamSinkOpts, streamSourceOpts}
 import minietl.pipeline.{Pipeline, PipelineBuilder}
 import minietl.schema.{ColumnSpec, TableSchema}
 
 /** The YAML/JSON pipeline config surface (reference: mini_etl/core/config.py).
   *
-  * Registered types mirror the reference registries:
-  *  - sources: csv, json, jsonl, parquet, orc, excel, sql, api
-  *    (config.py:72-73, 264-297)
-  *  - stages: the `transformers:` list of the linear form, the `transform:`
-  *    of a DAG node and the `stages:` of the stream form all name types of
-  *    one registry, [[Stages]]: the reference's transformers
-  *    (config.py:81-87, 299-342), the training-data curation stages and the
-  *    stream-only stages. Each type declares its options, defaults and
-  *    checks once; [[validate]], [[warnings]] and [[build]] read them there.
-  *  - sinks: csv, json, jsonl, parquet, orc, excel, sql (config.py:77-78, 344-378)
-  * `excel` is a real source AND sink via the dependency-free XLSX subset
-  * reader/writer ([[minietl.io.Excel]] — driver-buffered, like the
-  * reference's pandas path); `api` is a real source
-  * (ApiSource / RestDataSource).
+  * Types come from two registries, as the reference keeps one per component
+  * kind (config.py:72-87, 264-378):
+  *  - sources and sinks: [[Endpoints]], one definition per type with its
+  *    batch source, batch sink, stream source and stream sink forms;
+  *  - stages: [[Stages]], the `transformers:` list of the linear form, the
+  *    `transform:` of a DAG node and the `stages:` of the stream form (the
+  *    reference's transformers, the training-data curation stages and the
+  *    stream-only stages).
+  * Each type declares its options, defaults and checks once; the validate,
+  * warnings and build paths of all three forms read them there. `minietl
+  * info` lists both registries.
   *
   * Beyond the reference's single linear pipeline, a `dag:` root key
   * describes a multi-source PipelineDAG (sources / transform / merge /
@@ -34,15 +35,14 @@ import minietl.schema.{ColumnSpec, TableSchema}
 object Config {
 
   final case class ComponentConfig(typ: String, options: Map[String, Any])
+  /** A parsed config of one of the three forms. */
+  sealed trait AnyConfig { def name: String }
   final case class PipelineConfig(
       name: String,
       source: ComponentConfig,
       transformers: Seq[ComponentConfig],
       sink: ComponentConfig,
-      schema: Option[TableSchema] = None)
-
-  private val sourceTypes = Set("csv", "json", "jsonl", "parquet", "orc", "excel", "sql", "api")
-  private val sinkTypes = Set("csv", "json", "jsonl", "parquet", "orc", "excel", "sql")
+      schema: Option[TableSchema] = None) extends AnyConfig
 
   private val EnvBrace: Regex = """\$\{([A-Za-z_][A-Za-z0-9_]*)\}""".r
   private val EnvBare: Regex = """\$([A-Za-z_][A-Za-z0-9_]*)""".r
@@ -71,31 +71,48 @@ object Config {
     ComponentConfig(typ.toLowerCase, m - "type")
   }
 
-  /** Parse YAML (JSON is a YAML subset) into the config model. */
-  def parse(text: String, env: Map[String, String] = sys.env): PipelineConfig = {
-    val yaml = new org.yaml.snakeyaml.Yaml()
-    val raw = asScala(yaml.load[Any](substituteEnv(text, env))) match {
+  /** The mapping at `key`, else an error saying `message`. */
+  private def mappingAt(raw: Map[String, Any], key: String, message: String): Map[String, Any] =
+    raw.get(key) match {
+      case Some(m: Map[String, Any] @unchecked) => m
+      case _ => throw new IllegalArgumentException(message)
+    }
+
+  /** The list of components at `key` (none when absent). */
+  private def componentsAt(raw: Map[String, Any], key: String, what: String, entry: String): Seq[ComponentConfig] =
+    raw.get(key) match {
+      case Some(l: List[Any] @unchecked) => l.map {
+        case m: Map[String, Any] @unchecked => component(m, what)
+        case other => throw new IllegalArgumentException(s"$entry must be a mapping: $other")
+      }
+      case None => Nil
+      case other => throw new IllegalArgumentException(s"'$key' must be a list: $other")
+    }
+
+  /** The root mapping of YAML text (JSON is a YAML subset). */
+  private def root(text: String, env: Map[String, String]): Map[String, Any] =
+    asScala(new org.yaml.snakeyaml.Yaml().load[Any](substituteEnv(text, env))) match {
       case m: Map[String, Any] @unchecked => m
       case other => throw new IllegalArgumentException(s"config root must be a mapping, got $other")
     }
+
+  /** Parse a config of any form: a `stream:` root key is the stream form, a
+    * `dag:` one the DAG form, anything else the linear form.
+    */
+  def parseAny(text: String, env: Map[String, String] = sys.env): AnyConfig = {
+    val raw = root(text, env)
+    if (raw.contains("stream")) streamOf(raw) else if (raw.contains("dag")) dagOf(raw) else pipelineOf(raw)
+  }
+
+  /** Parse the linear form into the config model. */
+  def parse(text: String, env: Map[String, String] = sys.env): PipelineConfig =
+    pipelineOf(root(text, env))
+
+  private def pipelineOf(raw: Map[String, Any]): PipelineConfig = {
     val name = raw.getOrElse("name", "pipeline").toString
-    val source = component(raw.get("source") match {
-      case Some(m: Map[String, Any] @unchecked) => m
-      case _ => throw new IllegalArgumentException("config needs a 'source' mapping")
-    }, "source")
-    val sink = component(raw.get("sink") match {
-      case Some(m: Map[String, Any] @unchecked) => m
-      case _ => throw new IllegalArgumentException("config needs a 'sink' mapping")
-    }, "sink")
-    val transformers = raw.get("transformers") match {
-      case Some(l: List[Any] @unchecked) =>
-        l.map {
-          case m: Map[String, Any] @unchecked => component(m, "transformer")
-          case other => throw new IllegalArgumentException(s"transformer entry must be a mapping: $other")
-        }
-      case None => Nil
-      case other => throw new IllegalArgumentException(s"'transformers' must be a list: $other")
-    }
+    val source = component(mappingAt(raw, "source", "config needs a 'source' mapping"), "source")
+    val sink = component(mappingAt(raw, "sink", "config needs a 'sink' mapping"), "sink")
+    val transformers = componentsAt(raw, "transformers", "transformer", "transformer entry")
     val schema = raw.get("schema") match {
       case Some(m: Map[String, Any] @unchecked) =>
         val strict = m.get("strict").exists(_.toString.toBoolean)
@@ -121,8 +138,8 @@ object Config {
     * (config.py:63-88).
     */
   def validate(c: PipelineConfig): Seq[String] = {
-    val srcErrs = checkEndpoint(c.source, "source")
-    val sinkErrs = checkEndpoint(c.sink, "sink")
+    val srcErrs = endpointErrors(c.source, "source", _.source)
+    val sinkErrs = endpointErrors(c.sink, "sink", _.sink)
     val tErrs = c.transformers.zipWithIndex.flatMap { case (t, i) =>
       checkTransformer(t, s"transformer[$i]")
     }
@@ -138,24 +155,12 @@ object Config {
 
   /** Advisory findings a config is ALLOWED to ship with (unlike
     * [[validate]]'s errors): configurations that are semantically valid
-    * but measurably fragile.
-    *
-    *  - a `dsir_select` dim below 512 — the r15 nb_dsir_dim probe measured
-    *    DSIR's top-k overlap vs dim=1024 at only ~20-36% for dims 64/256
-    *    on a 1M-doc corpus (the hashed-feature log-ratio is dominated by
-    *    collision noise at narrow widths), so a narrow dim silently
-    *    selects a materially different corpus. NB routing is
-    *    dim-INsensitive (99.98% identical predictions 64→1024), hence no
-    *    analogous warning for `naive_bayes_filter`.
-    *  - EXACT per-group percentile stages (`winsorize`,
-    *    `impute strategy: median`, `mad_outlier_filter`, and a `median`
-    *    aggregation fn): SQL `percentile` buffers every distinct value
-    *    per group on one reducer, so a 100 TB group blows executor memory
-    *    while the mergeable sketch twin
-    *    ([[minietl.sketch.Sketches]] log-histogram / `approx_percentile`,
-    *    battery q_quantile_sketch) streams in O(buckets). Sketch-backed
-    *    aggregations (`approx_nunique`) stay silent — they ARE the
-    *    recommended shape.
+    * but measurably fragile, from each stage definition's `advice` in
+    * [[Stages]] — a `dsir_select` dim below 512 (DSIR's ranking is strongly
+    * dim-sensitive; naive Bayes routing is not, hence no warning there), and
+    * the EXACT per-group percentile stages, whose SQL `percentile` buffers
+    * every distinct value per group on one reducer where the mergeable
+    * sketch twin streams in O(buckets).
     */
   def warnings(c: PipelineConfig): Seq[String] =
     c.transformers.zipWithIndex.flatMap { case (t, i) =>
@@ -163,84 +168,14 @@ object Config {
         .flatMap(d => d.advice(d.opts(t.options), s"transformer[$i] ${t.typ}"))
     }
 
-  /** Source/sink component check, shared by the linear and DAG validators.
-    * `what` is "source" or "sink" (possibly suffixed with the node id).
+  /** Source or sink check, shared by the linear and DAG validators: `what`
+    * is "source" or "sink", suffixed with the DAG node id.
     */
-  private def checkEndpoint(cc: ComponentConfig, what: String): Seq[String] = {
-    val kind = if (what.startsWith("source")) "source" else "sink"
-    cc.typ match {
-      case "api" if kind == "source" =>
-        Seq(
-          if (!cc.options.contains("url")) Some(s"$what api needs url") else None,
-          cc.options.get("auth").collect {
-            case m: Map[String, Any] @unchecked
-              if !Set("basic", "bearer").contains(
-                m.getOrElse("type", "").toString.toLowerCase) =>
-              s"$what api auth type must be basic or bearer"
-          },
-          cc.options.get("pagination").collect {
-            case m: Map[String, Any] @unchecked
-              if !Set("page", "offset").contains(
-                m.getOrElse("type", "").toString.toLowerCase) =>
-              s"$what api pagination type must be page or offset"
-          },
-        ).flatten ++ mapErrors(cc.options, Seq("params", "headers"), s"$what api")
-      case "sql" =>
-        Seq(
-          if (!cc.options.contains("connection_string")) Some(s"$what sql needs connection_string") else None,
-          if (kind == "source" && cc.options.contains("query") == cc.options.contains("table"))
-            Some(s"$what sql needs exactly one of query/table") else None,
-          if (kind == "sink" && !cc.options.contains("table")) Some(s"$what sql needs table") else None,
-        ).flatten
-      case t @ ("csv" | "json" | "jsonl") if kind == "source" =>
-        // error-mode surface (reference's per-chunk skip story, SURVEY §7.6):
-        // mode → Spark reader PERMISSIVE/DROPMALFORMED/FAILFAST;
-        // schema (ordered column list, same shape as the top-level schema
-        // block) → explicit reader StructType, killing the inference scan;
-        // bad_records_path (csv, needs schema) → malformed-line capture.
-        val needsPath =
-          if (cc.options.contains("filepath") || cc.options.contains("path")) Nil
-          else Seq(s"$what $t needs filepath")
-        val modeErr = cc.options.get("mode").toSeq.flatMap { m =>
-          if (Set("permissive", "dropmalformed", "failfast")(m.toString.toLowerCase)) Nil
-          else Seq(s"$what $t mode must be permissive, dropmalformed or failfast")
-        }
-        val schemaErrs = cc.options.get("schema").toSeq.flatMap { v =>
-          try readerSpecs(v).flatMap { cs =>
-            try { cs.dataType; None }
-            catch { case _: Exception =>
-              Some(s"$what $t schema: unknown dtype '${cs.dtype}' for column '${cs.name}'") }
-          }
-          catch { case e: IllegalArgumentException => Seq(s"$what $t ${e.getMessage}") }
-        }
-        val brpErrs =
-          if (!cc.options.contains("bad_records_path")) Nil
-          else if (t != "csv")
-            Seq(s"$what $t bad_records_path is only supported for csv sources")
-          else if (!cc.options.contains("schema"))
-            Seq(s"$what csv bad_records_path requires an explicit schema " +
-              "(corrupt-line capture needs declared columns)")
-          else if (cc.options.contains("mode"))
-            // capture forces the PERMISSIVE read (a FAILFAST/DROPMALFORMED
-            // read never surfaces the corrupt rows to capture) — a user
-            // mode would be silently overridden, so reject the combination
-            Seq(s"$what csv mode cannot be combined with bad_records_path " +
-              "(the capture read is always PERMISSIVE; drop one of the two)")
-          else Nil
-        needsPath ++ modeErr ++ schemaErrs ++ brpErrs ++
-          mapErrors(cc.options, Seq("options"), s"$what $t")
-      case t if (if (kind == "source") sourceTypes else sinkTypes).contains(t) =>
-        if (cc.options.contains("filepath") || cc.options.contains("path")) Nil
-        else Seq(s"$what $t needs filepath")
-      case t => Seq(s"unknown $kind type '$t' ($what)")
+  private def endpointErrors(cc: ComponentConfig, what: String, role: EndpointDef => Option[Role[_]]): Seq[String] =
+    Endpoints.find(cc.typ).flatMap(role) match {
+      case Some(r) => r.errors(cc.options, s"$what ${cc.typ}")
+      case None => Seq(s"unknown ${what.takeWhile(_ != ' ')} type '${cc.typ}' ($what)")
     }
-  }
-
-  /** Errors for the keys a reader passes on with [[strMap]]: each, when
-    * present, must be a mapping with a value for every key.
-    */
-  private def mapErrors(o: Map[String, Any], keys: Seq[String], at: String): Seq[String] =
-    keys.flatMap(k => o.get(k).toSeq.flatMap(Stages.TextMap.errors(k, _, at)))
 
   /** Transformer component check, shared by the linear and DAG validators. */
   private def checkTransformer(t: ComponentConfig, at: String): Seq[String] =
@@ -250,10 +185,6 @@ object Config {
     }
 
   // ------------------------------------------------------------ building
-  private def str(o: Map[String, Any], k: String): String = o(k).toString
-  private def path(o: Map[String, Any]): String =
-    o.get("filepath").orElse(o.get("path")).map(_.toString)
-      .getOrElse(throw new IllegalArgumentException("needs filepath"))
   private[config] def strSeq(v: Any): Seq[String] = v match {
     case l: List[Any] @unchecked => l.map(_.toString)
     case s => Seq(s.toString)
@@ -262,151 +193,11 @@ object Config {
     case m: Map[String, Any] @unchecked => m.map { case (k, vv) => k -> vv.toString }
   }
 
-  /** Source-level reader schema: an ORDERED list of column mappings (the
-    * same shape as the top-level `schema.columns` block). Order is
-    * load-bearing — Spark's CSV reader matches an explicit schema to the
-    * file positionally, not by header name.
-    */
-  private def readerSpecs(v: Any): Seq[ColumnSpec] = v match {
-    case l: List[Any] @unchecked => l.map {
-      case cm: Map[String, Any] @unchecked =>
-        ColumnSpec(
-          cm.getOrElse("name",
-            throw new IllegalArgumentException("schema column needs 'name'")).toString,
-          cm.getOrElse("dtype", "string").toString,
-          cm.get("nullable").forall(_.toString.toBoolean))
-      case other => throw new IllegalArgumentException(s"schema column must be a mapping: $other")
-    }
-    case other =>
-      throw new IllegalArgumentException(s"schema must be a list of column mappings: $other")
-  }
-
-  private def readerSchema(v: Any): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(readerSpecs(v).map(_.field))
-
-  /** `mode:` key → Spark reader option (validated upstream). */
-  private def modeOpt(o: Map[String, Any]): Map[String, String] =
-    o.get("mode").map(m => "mode" -> m.toString.toUpperCase).toMap
-
-  /** Source component → reader function. Shared by the linear [[build]]
-    * and the DAG [[buildDag]] so a source means the same thing in both
-    * shapes. Assumes the component already passed validation.
-    */
-  private def sourceFn(cc: ComponentConfig): org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame = {
-    import minietl.io.Readers
-    val o = cc.options
-    cc.typ match {
-      case "csv" =>
-        val userOpts = strMap(o.getOrElse("options", Map.empty[String, Any])) ++ modeOpt(o)
-        val schema = o.get("schema").map(readerSchema)
-        o.get("bad_records_path").map(_.toString) match {
-          case Some(brp) =>
-            // Malformed-line capture (the reference's skipped-chunk error
-            // files, SURVEY §7.6): read PERMISSIVE with a corrupt-record
-            // column appended to the declared schema, OVERWRITE `brp` with
-            // the raw bad lines as JSONL, and flow clean rows on. Overwrite,
-            // not append: each source materialization captures the same bad
-            // lines, so append would duplicate them on every pipeline re-run
-            // (or a DAG reading the source twice); the capture always
-            // reflects the latest read of the file. Two scans of the source
-            // (bad-write + downstream), NO cache — the scale-safe trade; the
-            // corrupt column never escapes this function.
-            s => {
-              val corrupt = "_corrupt_record"
-              val readSchema = schema.get.add(corrupt, org.apache.spark.sql.types.StringType)
-              import org.apache.spark.sql.functions.col
-              def read() = Readers.csv(s, path(o), schema = Some(readSchema),
-                options = userOpts ++ Map(
-                  "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corrupt))
-              // rename on the way out: a literal `_corrupt_record` field
-              // would re-trigger Spark's corrupt-column-only restriction
-              // for whoever reads the capture file back
-              read().filter(col(corrupt).isNotNull)
-                .withColumnRenamed(corrupt, "bad_record")
-                .write.mode("overwrite").json(brp)
-              read().filter(col(corrupt).isNull).drop(corrupt)
-            }
-          case None =>
-            s => Readers.csv(s, path(o), schema = schema, options = userOpts)
-        }
-      case "json" => s => Readers.json(s, path(o), lines = false,
-        schema = o.get("schema").map(readerSchema),
-        options = strMap(o.getOrElse("options", Map.empty[String, Any])) ++ modeOpt(o))
-      case "jsonl" => s => Readers.json(s, path(o), lines = true,
-        schema = o.get("schema").map(readerSchema),
-        options = strMap(o.getOrElse("options", Map.empty[String, Any])) ++ modeOpt(o))
-      case "parquet" => s => Readers.parquet(s, path(o),
-        o.get("columns").map(strSeq).getOrElse(Nil))
-      case "orc" => s => Readers.orc(s, path(o),
-        o.get("columns").map(strSeq).getOrElse(Nil))
-      case "excel" =>
-        // sheet_name: Union[str, int] like the reference (extractors.py:170)
-        val sheet = o.get("sheet_name").map(_.toString)
-        val byIndex = sheet.flatMap(_.toIntOption)
-        s => minietl.io.Excel.read(s, path(o),
-          name = if (byIndex.isEmpty) sheet else None,
-          index = byIndex.getOrElse(0))
-      case "sql" => s => Readers.jdbc(s, str(o, "connection_string"),
-        o.get("table").map(_.toString), o.get("query").map(_.toString))
-      case "api" =>
-        val pagination = o.get("pagination") match {
-          case Some(m: Map[String, Any] @unchecked) =>
-            m.getOrElse("type", "").toString.toLowerCase match {
-              case "page" => minietl.io.ApiSource.Pagination.Page(
-                pageParam = m.getOrElse("page_param", "page").toString,
-                limitParam = m.getOrElse("limit_param", "limit").toString,
-                limit = m.getOrElse("limit", 100).toString.toDouble.toInt,
-                startPage = m.getOrElse("start_page", 1).toString.toDouble.toInt)
-              case "offset" => minietl.io.ApiSource.Pagination.Offset(
-                offsetParam = m.getOrElse("offset_param", "offset").toString,
-                limitParam = m.getOrElse("limit_param", "limit").toString,
-                limit = m.getOrElse("limit", 100).toString.toDouble.toInt)
-            }
-          case _ => minietl.io.ApiSource.Pagination.None_
-        }
-        val auth = o.get("auth") match {
-          case Some(m: Map[String, Any] @unchecked) =>
-            m.getOrElse("type", "").toString.toLowerCase match {
-              case "basic" => minietl.io.ApiSource.Auth.Basic(
-                str(m, "username"), str(m, "password"))
-              case "bearer" => minietl.io.ApiSource.Auth.Bearer(str(m, "token"))
-            }
-          case _ => minietl.io.ApiSource.Auth.None_
-        }
-        s => minietl.io.ApiSource.fetch(s,
-          url = str(o, "url"),
-          params = o.get("params").map(strMap).getOrElse(Map.empty),
-          headers = o.get("headers").map(strMap).getOrElse(Map.empty),
-          dataPath = o.get("data_path").map(_.toString).getOrElse(""),
-          pagination = pagination,
-          auth = auth,
-          timeoutSec = o.get("timeout").map(_.toString.toDouble.toInt).getOrElse(30))
-    }
-  }
-
-  /** Sink component → writer function. Shared by [[build]] and [[buildDag]]. */
-  private def sinkFn(cc: ComponentConfig): org.apache.spark.sql.DataFrame => Unit = {
-    import minietl.io.Writers
-    val o = cc.options
-    val mode = o.get("mode").map(_.toString).getOrElse("overwrite")
-    cc.typ match {
-      case "csv" => df => Writers.csv(df, path(o), mode)
-      case "json" | "jsonl" => df => Writers.json(df, path(o), mode)
-      case "parquet" => df => Writers.parquet(df, path(o), mode,
-        partitionBy = o.get("partition_cols").map(strSeq).getOrElse(Nil),
-        maxRecordsPerFile = o.get("max_records_per_file")
-          .map(_.toString.toDouble.toLong).getOrElse(0L))
-      case "orc" => df => Writers.orc(df, path(o), mode,
-        partitionBy = o.get("partition_cols").map(strSeq).getOrElse(Nil),
-        maxRecordsPerFile = o.get("max_records_per_file")
-          .map(_.toString.toDouble.toLong).getOrElse(0L))
-      case "excel" => df => minietl.io.Excel.write(df, path(o),
-        sheetName = o.get("sheet_name").map(_.toString).getOrElse("Sheet1"),
-        mode = if (mode == "append") "append" else "overwrite")
-      case "sql" => df => Writers.jdbc(df, str(o, "connection_string"),
-        str(o, "table"), o.get("if_exists").map(_.toString).getOrElse("append"))
-    }
-  }
+  /** A validated source's reader and sink's writer, for [[build]] and [[buildDag]]. */
+  private def reader(cc: ComponentConfig): Endpoints.Reader =
+    Endpoints.find(cc.typ).flatMap(_.source).get.make(cc.options)
+  private def writer(cc: ComponentConfig): Endpoints.Writer =
+    Endpoints.find(cc.typ).flatMap(_.sink).get.make(cc.options)
 
   /** Config → runnable [[Pipeline]] (mirrors build_pipeline,
     * config.py:231-378). Fails on validation errors.
@@ -415,13 +206,13 @@ object Config {
     val errs = validate(c)
     require(errs.isEmpty, s"invalid config: ${errs.mkString("; ")}")
     val b = new PipelineBuilder(c.name)
-    b.fromSource(sourceFn(c.source))
+    b.fromSource(reader(c.source))
     c.transformers.foreach { t =>
       val d = Stages.find(t.typ).get
       b.add(d.frame(t.options), d.stageLabel)
     }
     c.schema.foreach(b.withSchema)
-    b.toSink(sinkFn(c.sink))
+    b.toSink(writer(c.sink))
     b.build()
   }
 
@@ -446,6 +237,7 @@ object Config {
       sources: Seq[(String, ComponentConfig)],
       nodes: Seq[DagNodeConfig],
       sinks: Seq[(String, String, ComponentConfig)]) // (id, input ref, sink)
+      extends AnyConfig
 
   /** Parse the `dag:` YAML form:
     * {{{
@@ -471,17 +263,12 @@ object Config {
     * Node order in the YAML is declaration order only — execution order is
     * the DAG's topological sort.
     */
-  def parseDag(text: String, env: Map[String, String] = sys.env): DagConfig = {
-    val yaml = new org.yaml.snakeyaml.Yaml()
-    val raw = asScala(yaml.load[Any](substituteEnv(text, env))) match {
-      case m: Map[String, Any] @unchecked => m
-      case other => throw new IllegalArgumentException(s"config root must be a mapping, got $other")
-    }
+  def parseDag(text: String, env: Map[String, String] = sys.env): DagConfig =
+    dagOf(root(text, env))
+
+  private def dagOf(raw: Map[String, Any]): DagConfig = {
     val name = raw.getOrElse("name", "dag").toString
-    val dag = raw.get("dag") match {
-      case Some(m: Map[String, Any] @unchecked) => m
-      case _ => throw new IllegalArgumentException("dag config needs a 'dag' mapping")
-    }
+    val dag = mappingAt(raw, "dag", "dag config needs a 'dag' mapping")
     def section(key: String): Seq[(String, Map[String, Any])] = dag.get(key) match {
       case Some(m: Map[String, Any] @unchecked) => m.toSeq.sortBy(_._1).map {
         case (id, mm: Map[String, Any] @unchecked) => id -> mm
@@ -546,7 +333,7 @@ object Config {
         s"dag node id may not contain '.': '$id' ('.' separates a branch " +
           "port in input refs)"
     }
-    val srcErrs = c.sources.flatMap { case (id, cc) => checkEndpoint(cc, s"source $id") }
+    val srcErrs = c.sources.flatMap { case (id, cc) => endpointErrors(cc, s"source $id", _.source) }
     val nodeErrs = c.nodes.flatMap { n =>
       val kinds = Seq(n.transform.isDefined, n.merge.isDefined, n.branch.isDefined).count(identity)
       val shape =
@@ -570,12 +357,12 @@ object Config {
         else Nil
       shape ++ tErrs ++ mErrs ++ inErrs
     }
-    val sinkErrs = c.sinks.flatMap { case (id, _, cc) => checkEndpoint(cc, s"sink $id") }
+    val sinkErrs = c.sinks.flatMap { case (id, _, cc) => endpointErrors(cc, s"sink $id", _.sink) }
     dupErrs ++ dotErrs ++ srcErrs ++ nodeErrs ++ sinkErrs
   }
 
   /** DagConfig → assembled [[minietl.dag.PipelineDAG]]. Component semantics
-    * are identical to the linear build (same sourceFn, [[Stages]], sinkFn);
+    * are identical to the linear build (same [[Endpoints]] and [[Stages]]);
     * the DAG contributes topology: merges (concat / union / equi-join fold),
     * true/false branch ports, many sources, many sinks. Run with
     * `dag.run(spark)` or embed one node via `dag.frame(spark, "id")`.
@@ -584,7 +371,7 @@ object Config {
     val errs = validateDag(c)
     require(errs.isEmpty, s"invalid dag config: ${errs.mkString("; ")}")
     val dag = new minietl.dag.PipelineDAG
-    c.sources.foreach { case (id, cc) => dag.addSource(id, sourceFn(cc)) }
+    c.sources.foreach { case (id, cc) => dag.addSource(id, reader(cc)) }
     c.nodes.foreach { n =>
       n.transform.foreach(t => dag.addTransform(n.id, Stages.find(t.typ).get.frame(t.options)))
       n.merge.foreach { m =>
@@ -600,7 +387,7 @@ object Config {
         dag.addBranch(n.id, org.apache.spark.sql.functions.expr(
           minietl.ops.ExpressionDialect.translate(cond))))
     }
-    c.sinks.foreach { case (id, _, cc) => dag.addSink(id, sinkFn(cc)) }
+    c.sinks.foreach { case (id, _, cc) => dag.addSink(id, writer(cc)) }
     def connectRef(ref: String, to: String): Unit = ref.split('.') match {
       case Array(from) => dag.connect(from, to); ()
       case Array(from, port) if port == "true" || port == "false" =>
@@ -630,8 +417,8 @@ object Config {
     * name: clicks
     * stream:
     *   source:
-    *     type: parquet              # csv | json | jsonl | parquet | orc
-    *                                #  | rate | socket (non-file: fixed
+    *     type: parquet              # a stream source of [[Endpoints]]: a
+    *                                #  file format, or rate | socket (fixed
     *                                #  schema, no path/schema keys; rate
     *                                #  options e.g. {rowsPerSecond: 100},
     *                                #  socket needs {host, port})
@@ -648,44 +435,26 @@ object Config {
     *       keys: [event_type]
     *       aggregations: {value: [sum, count]}
     *   sink:
-    *     type: parquet              # csv | json | jsonl | parquet | orc | memory
+    *     type: parquet              # a file format, or memory
     *     path: /data/out            # memory: query_name instead
     *     checkpoint: /chk/clicks    # optional (scratch default)
     *     output_mode: append        # append | complete | update
     *     trigger: available_now     # or an interval: "30s", "5m"
     * }}}
-    * Streaming stage types: `window_agg` (tumbling; with `slide:` sliding),
-    * `session_agg` (gap-merged), `dedup` (watermark-bounded exact dedup) —
-    * each requires the `watermark:` block — and `dedup_history` /
-    * `neardup_history` (the self-maintaining ingest-dedup loops over a
-    * durable parquet digest: `history:` path plus `key:` XOR `columns:`
-    * for exact, or `id:`/`column:`/`threshold:` for near-dup with an
-    * optional `verify:` digest mode — false = band-collision drops,
-    * true/estimate = k-lane-signature estimate re-check, exact = stored
-    * shingle hashes re-checked with true Jaccard; must be the last stage,
-    * file sinks only; optional `compact_after: true` rewrites the digest
-    * as one deduplicated file set after each one-shot drain — see
-    * [[minietl.streaming.Streaming.dedupAndRecordHistory]] /
-    * [[minietl.streaming.Streaming.compactHistory]]) and
-    * `media_hash_history` (`id:`/`content:`/`kind:` image|audio plus
-    * `max_dist:` 0 = exact hash, 1..3 = hash-verified banded Hamming —
-    * the perceptual-media twin, same structural rules; see
-    * [[minietl.streaming.Streaming.mediaHashDedupAndRecordHistory]]).
-    * History-stage sinks
-    * are written idempotently per micro-batch as `path/batch=<id>`
-    * subdirectories (exactly-once under crash/replay), so reading the
-    * sink directory surfaces an extra `batch` partition column;
-    * `output_mode` does not apply to them and is rejected at validation.
-    * Stateless scan-side batch stages
-    * ([[streamableStageTypes]]) apply verbatim — the `DataFrame =>
-    * DataFrame` contract is source-agnostic by design.
+    * Stream stages are the stream-only [[Stages]] (the watermarked ones
+    * need the `watermark:` block; a history stage must be the last one and
+    * needs a file sink, which it writes idempotently per micro-batch as
+    * `path/batch=<id>` subdirectories, so reading the sink directory
+    * surfaces an extra `batch` partition column) and the stateless
+    * scan-side batch stages ([[streamableStageTypes]]), which apply
+    * verbatim — the `DataFrame => DataFrame` contract is source-agnostic.
     */
   final case class StreamConfig(
       name: String,
       source: ComponentConfig,
       watermark: Option[(String, String)], // (column, delay)
       stages: Seq[ComponentConfig],
-      sink: ComponentConfig)
+      sink: ComponentConfig) extends AnyConfig
 
   /** An assembled streaming pipeline: `frame` is the unstarted transformed
     * stream (compose further, or test its plan); `start` launches the
@@ -695,16 +464,14 @@ object Config {
     */
   final case class StreamPipeline(
       name: String,
-      frame: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame,
-      startWith: (org.apache.spark.sql.SparkSession,
-        Option[org.apache.spark.sql.streaming.Trigger]) => org.apache.spark.sql.streaming.StreamingQuery,
-      afterDrain: Option[org.apache.spark.sql.SparkSession => Unit] = None) {
+      frame: SparkSession => DataFrame,
+      startWith: (SparkSession, Option[Trigger]) => StreamingQuery,
+      afterDrain: Option[SparkSession => Unit] = None) {
     /** Launch the writeStream with the CONFIG's trigger. `afterDrain`
       * maintenance (digest compaction) does NOT run on this path — it is
       * only safe once the query has terminated.
       */
-    def start(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.streaming.StreamingQuery =
-      startWith(spark, None)
+    def start(spark: SparkSession): StreamingQuery = startWith(spark, None)
     /** Drain everything currently staged and block until done — the
       * bounded-replay path the reference Scheduler's one-shot runs map to.
       * OVERRIDES the config's trigger with AvailableNow: an interval
@@ -713,16 +480,12 @@ object Config {
       * (e.g. `dedup_history`'s `compact_after`) once the drain has
       * terminated — the single-writer window compaction requires.
       */
-    def runAvailableNow(spark: org.apache.spark.sql.SparkSession): Unit = {
-      val q = startWith(spark,
-        Some(minietl.streaming.Streaming.availableNowTrigger))
-      q.awaitTermination()
+    def runAvailableNow(spark: SparkSession): Unit = {
+      startWith(spark, Some(minietl.streaming.Streaming.availableNowTrigger)).awaitTermination()
       afterDrain.foreach(f => f(spark))
     }
   }
 
-  private val streamSourceTypes = Set("csv", "json", "jsonl", "parquet", "orc")
-  private val streamSinkTypes = Set("csv", "json", "jsonl", "parquet", "orc", "memory")
   /** Batch transformer types that apply verbatim to an unbounded frame:
     * scan-side, stateless, no global sort/window/aggregate. (The stateful
     * ones have streaming-specific spellings — e.g. `dedupe` → `dedup`,
@@ -739,25 +502,14 @@ object Config {
   private def isHistory(typ: String): Boolean = Stages.find(typ).exists(_.history)
 
   /** Parse the `stream:` YAML form (see [[StreamConfig]]). */
-  def parseStream(text: String, env: Map[String, String] = sys.env): StreamConfig = {
-    val yaml = new org.yaml.snakeyaml.Yaml()
-    val raw = asScala(yaml.load[Any](substituteEnv(text, env))) match {
-      case m: Map[String, Any] @unchecked => m
-      case other => throw new IllegalArgumentException(s"config root must be a mapping, got $other")
-    }
+  def parseStream(text: String, env: Map[String, String] = sys.env): StreamConfig =
+    streamOf(root(text, env))
+
+  private def streamOf(raw: Map[String, Any]): StreamConfig = {
     val name = raw.getOrElse("name", "stream").toString
-    val st = raw.get("stream") match {
-      case Some(m: Map[String, Any] @unchecked) => m
-      case _ => throw new IllegalArgumentException("stream config needs a 'stream' mapping")
-    }
-    val source = component(st.get("source") match {
-      case Some(m: Map[String, Any] @unchecked) => m
-      case _ => throw new IllegalArgumentException("stream config needs a 'source' mapping")
-    }, "stream source")
-    val sink = component(st.get("sink") match {
-      case Some(m: Map[String, Any] @unchecked) => m
-      case _ => throw new IllegalArgumentException("stream config needs a 'sink' mapping")
-    }, "stream sink")
+    val st = mappingAt(raw, "stream", "stream config needs a 'stream' mapping")
+    val source = component(mappingAt(st, "source", "stream config needs a 'source' mapping"), "stream source")
+    val sink = component(mappingAt(st, "sink", "stream config needs a 'sink' mapping"), "stream sink")
     val watermark = st.get("watermark").map {
       case m: Map[String, Any] @unchecked =>
         (m.getOrElse("column",
@@ -766,64 +518,20 @@ object Config {
             throw new IllegalArgumentException("watermark needs 'delay'")).toString)
       case other => throw new IllegalArgumentException(s"'watermark' must be a mapping: $other")
     }
-    val stages = st.get("stages") match {
-      case Some(l: List[Any] @unchecked) => l.map {
-        case m: Map[String, Any] @unchecked => component(m, "stream stage")
-        case other => throw new IllegalArgumentException(s"stream stage must be a mapping: $other")
-      }
-      case None => Nil
-      case other => throw new IllegalArgumentException(s"'stages' must be a list: $other")
-    }
+    val stages = componentsAt(st, "stages", "stream stage", "stream stage")
     StreamConfig(name, source, watermark, stages, sink)
   }
 
   /** Error list for the stream form (same contract as [[validate]]). */
   def validateStream(c: StreamConfig): Seq[String] = {
-    val srcErrs = c.source.typ match {
-      // non-file sources — the streaming surface is not file-format-bound:
-      // `rate` is Spark's built-in generator (fixed schema: timestamp
-      // TIMESTAMP, value LONG; rows_per_second etc. under `options:`) and
-      // `socket` reads lines from a TCP endpoint (fixed schema: value
-      // STRING; needs options.host/options.port). Both stand in for a
-      // message-bus source in environments without a broker — the
-      // readStream plumbing is identical, only the format string changes.
-      case "rate" =>
-        (if (c.source.options.contains("schema"))
-           Seq("stream source rate has a fixed schema (timestamp TIMESTAMP, " +
-             "value LONG) — remove 'schema'")
-         else Nil) ++
-          (if (c.source.options.contains("filepath") || c.source.options.contains("path"))
-             Seq("stream source rate takes no path") else Nil)
-      case "socket" =>
-        val so = c.source.options.get("options")
-          .collect { case m: Map[String, Any] @unchecked => m.keySet }.getOrElse(Set.empty)
-        (if (c.source.options.contains("schema"))
-           Seq("stream source socket has a fixed schema (value STRING) — " +
-             "remove 'schema'")
-         else Nil) ++
-          Seq("host", "port").filterNot(so.contains)
-            .map(k => s"stream source socket needs options.$k")
-      case t if !streamSourceTypes.contains(t) =>
-        Seq(s"stream source type '$t' is not a stream source " +
-          s"(${(streamSourceTypes + "rate" + "socket").toSeq.sorted.mkString("/")})")
-      case _ =>
-        val pathErr =
-          if (c.source.options.contains("filepath") || c.source.options.contains("path")) Nil
-          else Seq("stream source needs filepath")
-        val schemaErrs = c.source.options.get("schema") match {
-          case None => Seq("stream source needs an explicit 'schema' " +
-            "(readStream never infers; an ordered column list like the batch reader schema)")
-          case Some(v) =>
-            try readerSpecs(v).flatMap { cs =>
-              try { cs.dataType; None }
-              catch { case _: Exception =>
-                Some(s"stream source schema: unknown dtype '${cs.dtype}' for column '${cs.name}'") }
-            }
-            catch { case e: IllegalArgumentException => Seq(s"stream source ${e.getMessage}") }
-        }
-        pathErr ++ schemaErrs
+    val (src, sink) = (c.source, c.sink)
+    val srcErrs = Endpoints.find(src.typ).flatMap(_.streamSource) match {
+      case Some(r) => r.errors(src.options, "stream source", streamSourceOpts)
+      case None => Seq(s"stream source type '${src.typ}' is not a stream source " +
+        s"(${Endpoints.types(_.streamSource).sorted.mkString("/")})")
     }
-    val optErrs = mapErrors(c.source.options, Seq("options"), s"stream source ${c.source.typ}")
+    val optErrs = Stages.valueErrors(streamSourceOpts, src.options, s"stream source ${src.typ}")
+    val sinkRole = Endpoints.find(sink.typ).flatMap(_.streamSink)
     val stageErrs = c.stages.zipWithIndex.flatMap { case (s, i) =>
       val at = s"stream stage[$i] ${s.typ}"
       Stages.find(s.typ).map(d => (d, d.form)) match {
@@ -849,7 +557,7 @@ object Config {
                  Seq(s"$at: must be the LAST stage (it couples the sink write " +
                    "with recording the admitted digest rows per micro-batch)")
                else Nil) ++
-              (if (c.sink.typ == "memory")
+              (if (sinkRole.exists(!_.needsPath))
                  Seq(s"$at: requires a file sink (each micro-batch's survivors " +
                    "and their digest append are written together)")
                else Nil) ++
@@ -864,38 +572,11 @@ object Config {
         case None => Seq(s"$at: unknown type '${s.typ}'")
       }
     }
-    val sinkErrs = c.sink.typ match {
-      case "memory" =>
-        if (c.sink.options.contains("query_name")) Nil
-        else Seq("stream memory sink needs query_name")
-      case t if !streamSinkTypes.contains(t) =>
-        Seq(s"unknown stream sink type '$t'")
-      case _ =>
-        (if (c.sink.options.contains("filepath") || c.sink.options.contains("path")) Nil
-         else Seq(s"stream sink ${c.sink.typ} needs filepath")) ++
-          // without a durable checkpoint every run starts from a fresh
-          // offset log and REPROCESSES all input — silent duplication into
-          // a file sink. Memory sinks are per-session scratch, so only
-          // they get a generated default.
-          (if (c.sink.options.contains("checkpoint")) Nil
-           else Seq(s"stream sink ${c.sink.typ} needs a 'checkpoint' path " +
-             "(exactly-once progress tracking; without it every run " +
-             "re-ingests all input and duplicates output)"))
+    val sinkErrs = sinkRole match {
+      case Some(r) => r.errors(sink.options, s"stream sink ${sink.typ}", streamSinkOpts)
+      case None => Seq(s"unknown stream sink type '${sink.typ}'")
     }
-    val modeErrs = c.sink.options.get("output_mode").toSeq.flatMap { m =>
-      if (Set("append", "complete", "update")(m.toString.toLowerCase)) Nil
-      else Seq(s"stream sink output_mode must be append, complete or update, got '$m'")
-    }
-    val triggerErrs = c.sink.options.get("trigger").toSeq.flatMap { t =>
-      val s = t.toString.toLowerCase
-      if (s == "available_now") Nil
-      else scala.util.Try(minietl.scheduler.IntervalParser.toMillis(s)).toOption match {
-        case Some(_) => Nil
-        case None => Seq(s"stream sink trigger must be available_now or an " +
-          s"interval like 30s/5m/1h, got '$t'")
-      }
-    }
-    srcErrs ++ optErrs ++ stageErrs ++ sinkErrs ++ modeErrs ++ triggerErrs
+    srcErrs ++ optErrs ++ stageErrs ++ sinkErrs ++ Stages.valueErrors(streamSinkOpts, sink.options, "stream sink")
   }
 
   /** StreamConfig → assembled [[StreamPipeline]]. Fails on validation
@@ -907,19 +588,19 @@ object Config {
     val errs = validateStream(c)
     require(errs.isEmpty, s"invalid stream config: ${errs.mkString("; ")}")
     import minietl.streaming.Streaming
-    val o = c.source.options
-    // generator/endpoint sources carry their own fixed schema and no path
-    val generatorSource = c.source.typ == "rate" || c.source.typ == "socket"
-    val schema = if (generatorSource) null else readerSchema(o("schema"))
-    val fmt = c.source.typ match {
-      case "jsonl" => "json"
-      case t => t
+    val read = Endpoints.find(c.source.typ).get.streamSource.get.make(c.source.options, streamSourceOpts)
+    val target = Endpoints.find(c.sink.typ).get.streamSink.get.make(c.sink.options, streamSinkOpts)
+    val so = new Stages.Opts(streamSinkOpts, c.sink.options)
+    val (mode, pcols) = (so.str("output_mode").toLowerCase, so.strs("partition_cols"))
+    val trigger = so.str("trigger").toLowerCase match {
+      case "available_now" => Streaming.availableNowTrigger
+      case interval => Streaming.intervalTrigger(interval)
     }
     val wmCol = c.watermark.map(_._1).getOrElse("")
     // a history stage is not a frame transform: it compiles to the terminal
     // foreachBatch sink below; everything before it folds as usual
     val (historyStages, frameStages) = c.stages.partition(t => isHistory(t.typ))
-    val stageFns: Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] =
+    val stageFns: Seq[DataFrame => DataFrame] =
       frameStages.map { s =>
         val d = Stages.find(s.typ).get
         d.form match {
@@ -932,26 +613,17 @@ object Config {
       (d.opts(s.options), d.form.asInstanceOf[Stages.History])
     }
     val historyLoop = history.map { case (ho, h) => h.start(ho) }
-    val frame = (spark: org.apache.spark.sql.SparkSession) => {
-      val r0 = spark.readStream.format(fmt)
-        .options(strMap(o.getOrElse("options", Map.empty[String, Any])))
-      val src0 = if (generatorSource) r0.load() else r0.schema(schema).load(path(o))
+    val frame = (spark: SparkSession) => {
+      val src0 = read(spark)
       val src = c.watermark match {
         case Some((wc, delay)) => src0.withWatermark(wc, delay)
         case None => src0
       }
       stageFns.foldLeft(src)((df, f) => f(df))
     }
-    val start = (spark: org.apache.spark.sql.SparkSession,
-                 triggerOverride: Option[org.apache.spark.sql.streaming.Trigger]) => {
-      val so = c.sink.options
-      val trigger = triggerOverride.getOrElse(
-        so.get("trigger").map(_.toString.toLowerCase) match {
-          case None | Some("available_now") => Streaming.availableNowTrigger
-          case Some(ivl) => Streaming.intervalTrigger(ivl)
-        })
-      val mode = so.get("output_mode").map(_.toString.toLowerCase).getOrElse("append")
-      val checkpoint = so.get("checkpoint").map(_.toString).getOrElse(
+    val start = (spark: SparkSession, triggerOverride: Option[Trigger]) => {
+      val trig = triggerOverride.getOrElse(trigger)
+      val checkpoint = so.strOpt("checkpoint").getOrElse(
         java.nio.file.Files.createTempDirectory(s"minietl_stream_${c.name}_").toString)
       historyLoop match {
         case Some(loop) =>
@@ -960,37 +632,21 @@ object Config {
           // appending duplicates — the sink half of the loop's exactly-once
           // contract (the digest half lives in the loop's kernel).
           // Readers of the sink directory see a `batch` partition column.
-          def writeBatch(dropCol: Option[String])(
-              fresh: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
-            val out = dropCol.fold(fresh)(fresh.drop(_))
-            val pcols = so.get("partition_cols").map(strSeq).getOrElse(Nil)
-            val target = Streaming.batchOutputPath(path(so), batchId)
-            val w0 = out.write.mode("overwrite")
+          def writeBatch(dropCol: Option[String])(fresh: DataFrame, batchId: Long): Unit = {
+            val w0 = dropCol.fold(fresh)(fresh.drop(_)).write.mode("overwrite")
             val w = if (pcols.nonEmpty) w0.partitionBy(pcols: _*) else w0
-            c.sink.typ match {
-              case "csv" => w.option("header", "true").csv(target)
-              case "json" | "jsonl" => w.json(target)
-              case "orc" => w.orc(target)
-              case _ => w.parquet(target)
-            }
+            w.format(target.format).options(target.options)
+              .save(Streaming.batchOutputPath(target.path.get, batchId))
           }
-          loop(Stages.HistoryRun(frame(spark), checkpoint, trigger, writeBatch))
+          loop(Stages.HistoryRun(frame(spark), checkpoint, trig, writeBatch))
         case None =>
           val w0 = frame(spark).writeStream
             .outputMode(mode)
-            .trigger(trigger)
+            .trigger(trig)
             .option("checkpointLocation", checkpoint)
-          // partition_cols: same layout control as the batch parquet/orc sink
-          val w = so.get("partition_cols").map(strSeq) match {
-            case Some(cols) if cols.nonEmpty => w0.partitionBy(cols: _*)
-            case _ => w0
-          }
-          c.sink.typ match {
-            case "memory" =>
-              w.format("memory").queryName(str(so, "query_name")).start()
-            case "jsonl" => w.format("json").start(path(so))
-            case t => w.format(t).start(path(so))
-          }
+          val w = (if (pcols.nonEmpty) w0.partitionBy(pcols: _*) else w0)
+            .format(target.format).options(target.options)
+          target.path.fold(w.start())(w.start)
       }
     }
     // compact_after: collapse the digest's per-batch appends once a
@@ -998,7 +654,7 @@ object Config {
     // table the loop writes (the verified near-dup modes write two)
     val afterDrain = history.filter(_._1.flag("compact_after")).map { case (ho, h) =>
       val digests = h.digests(ho)
-      (spark: org.apache.spark.sql.SparkSession) => {
+      (spark: SparkSession) => {
         digests.foreach(t => Streaming.compactHistoryCols(spark, t.dir, t.columns))
         ()
       }
@@ -1011,18 +667,24 @@ object Config {
     buildStream(parseStream(text, env))
 
   /** True when the YAML's root has a `stream:` mapping (the unbounded form). */
-  def isStreamConfig(text: String, env: Map[String, String] = sys.env): Boolean =
-    asScala(new org.yaml.snakeyaml.Yaml().load[Any](substituteEnv(text, env))) match {
-      case m: Map[String, Any] @unchecked => m.contains("stream")
-      case _ => false
-    }
+  def isStreamConfig(text: String, env: Map[String, String] = sys.env): Boolean = hasRootKey(text, env, "stream")
 
   /** True when the YAML's root has a `dag:` mapping (the multi-source form). */
-  def isDagConfig(text: String, env: Map[String, String] = sys.env): Boolean =
-    asScala(new org.yaml.snakeyaml.Yaml().load[Any](substituteEnv(text, env))) match {
-      case m: Map[String, Any] @unchecked => m.contains("dag")
-      case _ => false
-    }
+  def isDagConfig(text: String, env: Map[String, String] = sys.env): Boolean = hasRootKey(text, env, "dag")
+
+  private def hasRootKey(text: String, env: Map[String, String], key: String): Boolean =
+    try root(text, env).contains(key) catch { case _: IllegalArgumentException => false }
+
+  /** The registered type names by role, in registry order; a stage alias
+    * follows its type after '|'. Transformers also serve as DAG transforms.
+    */
+  def registeredTypes: Seq[(String, Seq[String])] = {
+    def stages(batch: Boolean) =
+      Stages.all.filter(_.batch == batch).map(d => (d.typ +: d.aliases).mkString("|"))
+    Seq("sources" -> Endpoints.types(_.source), "transformers" -> stages(batch = true),
+      "sinks" -> Endpoints.types(_.sink), "stream sources" -> Endpoints.types(_.streamSource),
+      "stream stages" -> stages(batch = false), "stream sinks" -> Endpoints.types(_.streamSink))
+  }
 
   /** Sample config (reference: config.py:381-416 generate_sample_config). */
   val sample: String =

@@ -75,7 +75,7 @@ private[config] object Stages {
     v != null && (v.toString.equalsIgnoreCase("true") || v.toString.equalsIgnoreCase("false"))
 
   type Check = (Opts, String) => Seq[String]
-  private val noCheck: Check = (_, _) => Nil
+  val noCheck: Check = (_, _) => Nil
   /** For an [[Opt]] whose value is checked elsewhere, or not at all. */
   private val anyValue: (Any, String) => Seq[String] = (_, _) => Nil
 
@@ -118,10 +118,9 @@ private[config] object Stages {
       val missing = options.filter(o => o.required && !raw.contains(o.key)).map { o =>
         s"$at: missing '${o.key}'" + (if (o.hint.isEmpty) "" else s" (${o.hint})")
       }
-      val bad = options.flatMap(o => raw.get(o.key).toSeq.flatMap(o.errors(_, at)))
-      missing ++ bad ++ check(opts(raw), at)
+      missing ++ valueErrors(options, raw, at) ++ check(opts(raw), at)
     }
-    def opts(raw: Map[String, Any]): Opts = new Opts(this, raw)
+    def opts(raw: Map[String, Any]): Opts = new Opts(options, raw)
     def batch: Boolean = form.isInstanceOf[Batch]
     def history: Boolean = form.isInstanceOf[History]
     /** The [[minietl.pipeline.Pipeline]] stage label. */
@@ -133,12 +132,17 @@ private[config] object Stages {
     }
   }
 
-  /** A stage's options read through its declarations: each accessor falls
-    * back to the declared default, and reading an undeclared key throws.
+  /** The errors of each given value, in declaration order. */
+  def valueErrors(options: Seq[Opt], raw: Map[String, Any], at: String): Seq[String] =
+    options.flatMap(o => raw.get(o.key).toSeq.flatMap(o.errors(_, at)))
+
+  /** Options read through their declarations (a stage's, or an endpoint
+    * role's): each accessor falls back to the declared default, and reading
+    * an undeclared key throws.
     */
-  final class Opts(d: StageDef, raw: Map[String, Any]) {
-    private def decl(key: String): Opt = d.options.find(_.key == key).getOrElse(
-      throw new IllegalArgumentException(s"${d.typ} declares no option '$key'"))
+  final class Opts(options: Seq[Opt], raw: Map[String, Any]) {
+    private def decl(key: String): Opt = options.find(_.key == key).getOrElse(
+      throw new IllegalArgumentException(s"no option '$key' is declared"))
     /** The value as written, else the declared default. */
     def get(key: String): Option[Any] = {
       val o = decl(key)

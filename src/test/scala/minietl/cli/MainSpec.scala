@@ -3,6 +3,7 @@ package minietl.cli
 import java.nio.file.Files
 
 import minietl.SparkTestBase
+import minietl.config.Config
 import minietl.io.{Readers, Writers}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -256,7 +257,11 @@ class MainSpec extends AnyFunSuite with SparkTestBase {
 
   test("info lists registered types; unknown command prints usage") {
     val (c, out) = Main.execute(Seq("info"), () => spark)
-    assert(c === 0 && out.contains("transformers"))
+    val listed = out.split("[\\s,:|]+").toSet
+    val names = Config.registeredTypes.flatMap(_._2).flatMap(_.split('|'))
+    assert(c === 0 && names.nonEmpty && names.filterNot(listed).isEmpty, out)
+    assert(Seq("minhash_dedup", "quantile_sketch", "rate", "socket", "memory", "dedup_history",
+      "group").forall(listed))
     val (cu, usage) = Main.execute(Seq("wat"), () => spark)
     assert(cu === 2 && usage.contains("usage"))
   }

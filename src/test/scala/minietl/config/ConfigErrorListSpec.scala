@@ -773,6 +773,66 @@ class ConfigErrorListSpec extends AnyFunSuite {
     assertLists(endpointCases)
   }
 
+  /** Source and sink values that validate once passed and that failed
+    * later: in build, or inside the read or write after every stage ran.
+    */
+  private val endpointValueCases = Seq(
+    Case(Linear,
+      """|source: {type: api, url: u, timeout: soon, auth: {type: basic}, pagination: {type: page, limit: many, start_page: first}}
+        |sink: {type: csv, filepath: out, mode: bogus}""".stripMargin,
+      Seq(
+        "source api auth basic needs username",
+        "source api auth basic needs password",
+        "source api pagination limit must be numeric, got 'many'",
+        "source api pagination start_page must be numeric, got 'first'",
+        "source api: 'timeout' must be numeric, got 'soon'",
+        "sink csv: 'mode' must be overwrite, append, error or ignore, got 'bogus'")),
+    Case(Linear,
+      """|source: {type: api, url: u, auth: {type: bearer, token: }, pagination: {type: offset, limit: 1e3, start_page: x}}
+        |sink: {type: parquet, filepath: out, max_records_per_file: lots, partition_cols: }""".stripMargin,
+      Seq(
+        "source api: 'auth' has no value for 'token'",
+        "sink parquet: 'partition_cols' has no value",
+        "sink parquet: 'max_records_per_file' must be numeric, got 'lots'")),
+    Case(Linear,
+      """|source: {type: csv, filepath: , mode: }
+        |sink: {type: sql, connection_string: c, table: t, if_exists: sometimes}""".stripMargin,
+      Seq(
+        "source csv: 'filepath' has no value",
+        "source csv mode must be permissive, dropmalformed or failfast",
+        "sink sql: 'if_exists' must be overwrite, append, error or ignore, got 'sometimes'")),
+    Case(Dag,
+      """|dag:
+        |  sources:
+        |    a: {type: parquet, path: in, columns: }
+        |  nodes:
+        |    - {id: n, input: a, transform: {type: filter, condition: "x > 1"}}
+        |  sinks:
+        |    s1: {input: n, type: excel, path: out.xlsx, mode: ignore}
+        |    s2: {input: n, type: orc, path: out, mode: A, max_records_per_file: "1e6"}""".stripMargin,
+      Seq(
+        "source a parquet: 'columns' has no value",
+        "sink s1 excel: 'mode' must be overwrite or append, got 'ignore'")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: parquet, path: in, schema: [{name: a, dtype: string}]}
+        |  sink: {type: parquet, path: out, checkpoint: , output_mode: , trigger: , partition_cols: }""".stripMargin,
+      Seq(
+        "stream sink: 'checkpoint' has no value",
+        "stream sink output_mode must be append, complete or update, got 'null'",
+        "stream sink trigger must be available_now or an interval like 30s/5m/1h, got 'null'",
+        "stream sink: 'partition_cols' has no value")),
+    Case(Stream,
+      """|stream:
+        |  source: {type: socket, options: {host: h, port: 1}}
+        |  sink: {type: memory, query_name: }""".stripMargin,
+      Seq("stream sink memory: 'query_name' has no value"))
+  )
+
+  test("source and sink values that failed after validate are validate errors") {
+    assertLists(endpointValueCases)
+  }
+
   test("validate, validateStream, validateDag and warnings keep their error lists") {
     assertLists(cases)
   }

@@ -80,6 +80,67 @@ class StageRegistrySpec extends AnyFunSuite with SparkTestBase {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  /** Each endpoint form: its role, the options the form checks itself, and
+    * validate's errors plus a build thunk for a config with the endpoint in it.
+    */
+  private val endpointForms: Seq[(String, Endpoints.EndpointDef => Option[Endpoints.Role[_]], Seq[Opt],
+      ComponentConfig => (Seq[String], () => Any))] = Seq(
+    ("source", _.source, Nil, cc => {
+      val c = PipelineConfig("t", cc, Nil, sink); (Config.validate(c), () => Config.build(c))
+    }),
+    ("sink", _.sink, Nil, cc => {
+      val c = PipelineConfig("t", source, Nil, cc); (Config.validate(c), () => Config.build(c))
+    }),
+    ("stream source", _.streamSource, Endpoints.streamSourceOpts, cc => {
+      val c = StreamConfig("t", cc, None, Nil, streamSink); (Config.validateStream(c), () => Config.buildStream(c))
+    }),
+    ("stream sink", _.streamSink, Endpoints.streamSinkOpts, cc => {
+      val c = StreamConfig("t", streamSource, None, Nil, cc); (Config.validateStream(c), () => Config.buildStream(c))
+    }))
+
+  /** What an endpoint form needs to validate: its required keys, a path,
+    * and what its cross-key check asks for.
+    */
+  private def minimal(form: String, typ: String, r: Endpoints.Role[_]): Map[String, Any] =
+    r.options.filter(_.required).map(_.key -> "x").toMap ++
+      (if (r.needsPath) Map("path" -> "p") else Map.empty) ++ ((form, typ) match {
+        case ("source", "sql") => Map("table" -> "t")
+        case ("stream source", "socket") => Map("options" -> Map("host" -> "h", "port" -> "1"))
+        case ("stream source", _) if r.needsPath => Map("schema" -> List(Map("name" -> "a", "dtype" -> "string")))
+        case ("stream sink", "memory") => Map("query_name" -> "q")
+        case ("stream sink", _) => Map("checkpoint" -> "c")
+        case _ => Map.empty
+      })
+
+  test("endpoint type names are registered once, and info's type list is both registries") {
+    val names = Endpoints.all.map(_.typ)
+    assert(names.distinct === names)
+    val listed = Config.registeredTypes.flatMap(_._2).flatMap(_.split('|')).toSet
+    assert(listed === (names ++ Stages.all.flatMap(d => d.typ +: d.aliases)).toSet)
+  }
+
+  test("an endpoint config validate passes builds: every form of every source " +
+    "and sink type, then each option given a value of the wrong kind") {
+    val wrong: Seq[Any] = Seq(List("a", "b"), "maybe", Map("a" -> List("b")), null)
+    val failures = for {
+      d <- Endpoints.all
+      (form, role, shared, config) <- endpointForms
+      r <- role(d).toSeq
+      base = minimal(form, d.typ, r)
+      _ = {
+        val (errs, build) = config(ComponentConfig(d.typ, base))
+        assert(errs === Nil, s"${d.typ} $form's minimal config: $errs")
+        build()
+      }
+      o <- r.options ++ shared
+      v <- wrong
+      (wrongErrs, wrongBuild) = config(ComponentConfig(d.typ, base + (o.key -> v)))
+      if wrongErrs.isEmpty
+      err <- Try(wrongBuild()).failed.toOption
+    } yield s"${d.typ} $form ${o.key}=$v: validate clean, build threw $err"
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   test("wrong-kind values that once passed validate and threw in build are " +
     "validate errors") {
     def batch(stage: String) = Config.validate(Config.parse(
